@@ -3,7 +3,9 @@ package graft.sources
 import java.util.zip.ZipFile
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, GenericInternalRow}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable.ArrayBuffer
 
 /** Excel (.xlsx) ingestion (SURVEY.md §2.1 S3) — the reference reads
@@ -33,7 +35,7 @@ import scala.collection.mutable.ArrayBuffer
   */
 object XlsxSource {
 
-  final case class Sheet(header: Seq[String], rows: Seq[Array[String]])
+  final case class Sheet(header: Seq[String], rows: IndexedSeq[Array[String]])
 
   private def colIndex(ref: String): Int = {
     var i = 0
@@ -88,16 +90,20 @@ object XlsxSource {
       val rows = ArrayBuffer.empty[ArrayBuffer[(Int, String)]]
       var cur: ArrayBuffer[(Int, String)] = null
       var cellCol = -1
+      var lastCol = -1
       var cellType = ""
       try {
         while (r.hasNext) {
           r.next() match {
             case XMLStreamConstants.START_ELEMENT =>
               r.getLocalName match {
-                case "row" => cur = ArrayBuffer.empty
+                case "row" => cur = ArrayBuffer.empty; lastCol = -1
                 case "c" =>
-                  cellCol = Option(r.getAttributeValue(null, "r"))
-                    .map(colIndex).getOrElse(if (cur == null) -1 else cur.length)
+                  // a cell without `r` sits right after the previous <c>,
+                  // valued or not (SpreadsheetML §18.3.1.4)
+                  cellCol = if (cur == null) -1 else
+                    Option(r.getAttributeValue(null, "r")).map(colIndex).getOrElse(lastCol + 1)
+                  lastCol = cellCol
                   cellType = Option(r.getAttributeValue(null, "t")).getOrElse("")
                 case "v" | "t" if cur != null && cellCol >= 0 =>
                   val raw = r.getElementText
@@ -132,15 +138,16 @@ object XlsxSource {
         cells.foreach { case (i, v) => if (i < width) a(i) = v }
         a
       }
-      Sheet(dense(headerCells).toSeq, rows.tail.map(dense).toSeq)
+      Sheet(dense(headerCells).toSeq, rows.iterator.drop(1).map(dense).toIndexedSeq)
     } finally zip.close()
   }
 
   /** S3 as a DataFrame source: all-string schema-on-read (header row as
     * column names), like the raw pandas frame before dtype inference.
     */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val sheet = readRaw(path)
+  def read(spark: SparkSession, path: String): DataFrame = frame(spark, readRaw(path))
+
+  private def frame(spark: SparkSession, sheet: Sheet): DataFrame = {
     val schema = StructType(sheet.header.map(c => StructField(c, StringType)))
     spark.createDataFrame(
       java.util.Arrays.asList(sheet.rows.map(r => Row(r.toIndexedSeq: _*)): _*),
@@ -151,28 +158,58 @@ object XlsxSource {
     * produces and the reference persists): a column is int64 only when
     * it has NO nulls and every value parses as an integer (pandas
     * promotes nullable ints to float64), float64 when every non-null
-    * value parses numerically, else it stays a string column. Decided
-    * with one aggregate over try_cast probes — NULL-on-garbage, ANSI-safe.
+    * value parses numerically, else it stays a string column.
+    *
+    * The types are decided on the driver from the parsed sheet, in one
+    * row-major pass: each cell is judged with Spark's own `Cast` in TRY
+    * mode (the expression `try_cast` builds, so the semantics are
+    * Spark's), and a column stops being checked once both its BIGINT and
+    * DOUBLE probes have failed. Running the same probes as a Spark
+    * aggregate cost four jobs, and the string→double cast signals each
+    * bad value with a thrown NumberFormatException — about 0.6 M of them
+    * per read of the 62,580-row Skills sheet, one per text cell. Here a
+    * text column costs one failed cast, and the read launches no job.
     */
   def readTyped(spark: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val raw = read(spark, path)
-    val probes = raw.columns.flatMap { c =>
-      Seq(
-        count(col(c)).as(s"nn_$c"),
-        count(expr(s"try_cast(`$c` AS BIGINT)")).as(s"lg_$c"),
-        count(expr(s"try_cast(`$c` AS DOUBLE)")).as(s"db_$c"))
-    }
-    val stats = raw.agg(probes.head, probes.tail: _*).collect()(0)
-    val total = raw.count()
-    val cols = raw.columns.map { c =>
-      val nn = stats.getAs[Long](s"nn_$c")
-      val lg = stats.getAs[Long](s"lg_$c")
-      val db = stats.getAs[Long](s"db_$c")
-      if (nn == total && nn > 0 && lg == nn) expr(s"CAST(`$c` AS BIGINT)").as(c)
-      else if (nn > 0 && db == nn) expr(s"CAST(`$c` AS DOUBLE)").as(c)
-      else col(c)
+    val sheet = readRaw(path)
+    val raw = frame(spark, sheet)
+    val types = inferTypes(sheet, spark.sessionState.conf.sessionLocalTimeZone)
+    val cols = raw.columns.zip(types).map {
+      case (c, LongType) => expr(s"CAST(`$c` AS BIGINT)").as(c)
+      case (c, DoubleType) => expr(s"CAST(`$c` AS DOUBLE)").as(c)
+      case (c, _) => col(c)
     }
     raw.select(cols.toIndexedSeq: _*)
+  }
+
+  /** Per column: LongType, DoubleType or StringType by readTyped's rule. */
+  private def inferTypes(sheet: Sheet, timeZone: String): Array[DataType] = {
+    val width = sheet.header.length
+    val nonNull = new Array[Int](width)
+    val allLong = Array.fill(width)(true)
+    val allDouble = Array.fill(width)(true)
+    val cell = new GenericInternalRow(1)
+    val input = BoundReference(0, StringType, nullable = true)
+    val toLong = Cast(input, LongType, Some(timeZone), EvalMode.TRY)
+    val toDouble = Cast(input, DoubleType, Some(timeZone), EvalMode.TRY)
+    sheet.rows.foreach { row =>
+      var i = 0
+      while (i < width) {
+        val v = row(i)
+        if (v != null && (allLong(i) || allDouble(i))) {
+          nonNull(i) += 1
+          cell.update(0, UTF8String.fromString(v))
+          if (allLong(i)) allLong(i) = toLong.eval(cell) != null
+          if (allDouble(i)) allDouble(i) = toDouble.eval(cell) != null
+        }
+        i += 1
+      }
+    }
+    Array.tabulate(width) { i =>
+      if (nonNull(i) == sheet.rows.length && nonNull(i) > 0 && allLong(i)) LongType
+      else if (nonNull(i) > 0 && allDouble(i)) DoubleType
+      else StringType
+    }
   }
 }
