@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import scala.jdk.CollectionConverters._
 
 /** Benchmark main (driver contract): runs every SparkEntry query against
@@ -75,34 +75,35 @@ object Bench {
     }
   }
 
+  /** [[resolveCpus]] applied to SPARK_GRAFT_CPUS (default
+    * [[PhysicalCores]]): the thread regime of every session-building
+    * main that times or explains queries.
+    */
+  def cpusFromEnv(): (Int, Int) = {
+    val env = sys.env.get("SPARK_GRAFT_CPUS")
+    resolveCpus(env.map(_.toInt).getOrElse(PhysicalCores), explicit = env.isDefined)
+  }
+
+  /** parity_sec's reference-equivalent surface — the apples-to-apples
+    * number against BASELINE.md. WHITELIST, not a prefix match: the
+    * etl_ namespace keeps growing additive operators the reference
+    * lacks (profiling, constraints, imputation, sharding, ...) and a
+    * prefix rule silently inflated parity_sec as they landed (round 6:
+    * 19 s reported vs ~7 s for the actual reference surface). The
+    * reference surface is exactly its nine query shapes plus the four
+    * transform-layer restatements and the props-JSON extraction.
+    */
+  val ReferenceSurface: Set[String] = Set(
+    "q1_split_part", "q2_cte", "q3_group_avg", "q4_round",
+    "q5_join_inner", "q6_view", "q7_group_avg_over_join", "q8_topk",
+    "q9_full_select",
+    "etl_cell_scrub", "etl_date_parse", "etl_drop_last_n",
+    "etl_full_clean", "etl_json_extract")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val envCpus = sys.env.get("SPARK_GRAFT_CPUS")
-    val (cpusN, cpusRequested) = resolveCpus(
-      envCpus.map(_.toInt).getOrElse(PhysicalCores),
-      explicit = envCpus.isDefined)
-    val cpus = cpusN.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries INT64 TIMESTAMP(NANOS) — see Verify.scala.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The generated-class cache defaults to 100 entries; a session
-      // serving 315 distinct queries in interleaved passes evicts
-      // every query's classes between its own samples, so each timed
-      // run re-pays Janino compilation (~0.1-0.3 s/query — measured as
-      // a uniform ~1.5× gap between in-sweep and isolated times). A
-      // long-lived analytics session serving hundreds of distinct
-      // plans wants the cache sized to its working set: bounded driver
-      // memory (generated classes, ~tens of MB at 10k entries) traded
-      // for not recompiling hot queries — the same reasoning a 128 GiB
-      // production driver would apply. Static conf: must be set before
-      // the session is built.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val (cpus, cpusRequested) = cpusFromEnv()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def exec(df: DataFrame): Unit =
@@ -154,7 +155,7 @@ object Bench {
       // Guarded like every benched query: a transient calibration
       // failure must cost one sample, never the whole sweep's record.
       try {
-        exec(spark.range(0L, 200000000L, 1L, cpus.toInt)
+        exec(spark.range(0L, 200000000L, 1L, cpus)
           .select(org.apache.spark.sql.functions.bit_xor(
             org.apache.spark.sql.functions.xxhash64(
               org.apache.spark.sql.functions.col("id"))).as("h")))
@@ -210,22 +211,8 @@ object Bench {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    // parity_sec: the reference-equivalent surface — the apples-to-apples
-    // number against BASELINE.md. WHITELIST, not a prefix match: the
-    // etl_ namespace keeps growing additive operators the reference
-    // lacks (profiling, constraints, imputation, sharding, ...) and a
-    // prefix rule silently inflated parity_sec as they landed (round 6:
-    // 19 s reported vs ~7 s for the actual reference surface). The
-    // reference surface is exactly its nine query shapes plus the four
-    // transform-layer restatements and the props-JSON extraction.
-    val referenceSurface = Set(
-      "q1_split_part", "q2_cte", "q3_group_avg", "q4_round",
-      "q5_join_inner", "q6_view", "q7_group_avg_over_join", "q8_topk",
-      "q9_full_select",
-      "etl_cell_scrub", "etl_date_parse", "etl_drop_last_n",
-      "etl_full_clean", "etl_json_extract")
     val parity = results.collect {
-      case (k, v) if referenceSurface(k) => v
+      case (k, v) if ReferenceSurface(k) => v
     }.sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val calib = {
@@ -303,7 +290,7 @@ object Bench {
     // the slowest 15 — so the tail always ends with one parseable
     // record. (Full per-query map: target/bench_full.json + the long
     // line when the tail is big enough.)
-    val compactKeys = referenceSurface ++
+    val compactKeys = ReferenceSurface ++
       results.toSeq.sortBy(-_._2).take(15).map(_._1)
     val qsCompact = results.collect {
       case (k, v) if compactKeys(k) =>

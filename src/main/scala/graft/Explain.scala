@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit diagnostic: prints the formatted physical plan for the
   * named queries (or all). Used to check that scans carry PushedFilters
   * and pruned ReadSchema, small joins broadcast, and operators sit inside
-  * WholeStageCodegen spans.
+  * WholeStageCodegen spans. Plans at the bench's thread count
+  * ([[Bench.cpusFromEnv]]), so they match the regime the bench measures.
   *
   * Usage: runMain graft.Explain [sfDir] [queryName ...]
   */
@@ -13,13 +12,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(Bench.cpusFromEnv()._1).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n========== $name ==========")

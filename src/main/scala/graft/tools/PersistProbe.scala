@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{Bench, GraftSession, SparkEntry}
 import graft.ops.Persist
 
 /** Measurement diagnostic (r20): per-query A/B of the
@@ -18,17 +17,7 @@ object PersistProbe {
     val runs = args(1).toInt
     val modes = args(2).split(',').toSeq
     val names = args.drop(3).toSeq
-    val cpus = graft.Bench.resolveCpus(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt,
-      explicit = sys.env.contains("SPARK_GRAFT_CPUS"))._1
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(Bench.cpusFromEnv()._1).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def exec(name: String): Double = {
       val t0 = System.nanoTime()

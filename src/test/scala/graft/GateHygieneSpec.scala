@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.util.regex.Pattern
+import scala.jdk.CollectionConverters._
 
 /** Twin-doctrine enforcement (round 14): DuckDB inlines CTEs by
   * default, so a non-materialized CTE referenced more than once is
@@ -799,5 +800,27 @@ class GateHygieneSpec extends AnyFunSuite {
       "ABA verdict mirror disagrees with the shared fixtures (run " +
         "python3 tools/aba_bench.py --selftest for the other side):\n" +
         disagreements.mkString("\n"))
+  }
+
+  /** Every session in src/main is built by GraftSession.builder, so the
+    * conf (time zone, nanosAsLong, codegen cache) cannot fork again.
+    * Test sources are exempt: GraftExtensionsSpec and
+    * PersistDynAllocSpec test session-level settings on purpose.
+    */
+  test("SparkSession.builder() occurs in src/main only in GraftSession.scala") {
+    val root = java.nio.file.Paths.get("src", "main", "scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"$root missing — run sbt test from the repo root")
+    val s = java.nio.file.Files.walk(root)
+    val offenders =
+      try s.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          p.getFileName.toString != "GraftSession.scala")
+        .filter(p => new String(java.nio.file.Files.readAllBytes(p),
+          java.nio.charset.StandardCharsets.UTF_8).contains("SparkSession.builder()"))
+        .map(_.toString).toSeq.sorted
+      finally s.close()
+    assert(offenders.isEmpty,
+      s"build sessions with GraftSession.builder instead: $offenders")
   }
 }

@@ -5,16 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** One shared session for the whole forked test JVM. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
+    val s = GraftSession.builder(8)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // testdata events.parquet and the reference's cleaned O*NET parquet
-      // carry INT64 TIMESTAMP(NANOS) which Spark cannot read natively;
-      // read them as nano-longs and convert explicitly (see Tables.scala)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
       .getOrCreate()
