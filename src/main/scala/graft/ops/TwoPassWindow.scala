@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Descending
+import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -69,6 +71,15 @@ object TwoPassWindow {
         col(Pid)),
       orElse)
 
+  /** A running sum from its cross-partition offset and local prefix,
+    * NULL-carried like SQL's: the offset is NULL until the first
+    * non-null value before this partition (the local prefix stands
+    * alone), and once it exists an all-NULL local prefix carries it
+    * (NULL + offset would wrongly revert to NULL).
+    */
+  private def plusOffset(off: Column, local: Column): Column =
+    when(off.isNull, local).otherwise(off + coalesce(local, lit(0L)))
+
   /** Exact global `row_number()` over a strict total order, as LONG. */
   def withRowNumber(df: DataFrame, sortCols: Seq[Column],
       out: String): DataFrame =
@@ -132,9 +143,6 @@ object TwoPassWindow {
         // offset = NONE until the first non-null per-partition sum —
         // SQL's running sum is NULL while the prefix holds no non-null
         // value, and a 0L offset would wrongly turn those rows into 0
-        // (or mask the carried sum when the LOCAL prefix is all-NULL:
-        // NULL + 0 stays NULL where the global spelling carries the
-        // earlier partitions' sum)
         var run: Option[Long] = None
         val offs = rows.flatMap { r =>
           val entry = run.map(r.getInt(0) -> _)
@@ -142,11 +150,8 @@ object TwoPassWindow {
             run = Some(math.addExact(run.getOrElse(0L), r.getLong(i + 1)))
           entry
         }
-        val off = offsetExpr(offs.toSeq, nullLong)
-        val local = sum(v).over(w)
         acc.withColumn(out,
-          when(off.isNull, local)
-            .otherwise(off + coalesce(local, lit(0L))))
+          plusOffset(offsetExpr(offs.toSeq, nullLong), sum(v).over(w)))
     }
     withCums.drop(Pid)
   }
@@ -195,7 +200,8 @@ object TwoPassWindow {
     * INCLUSIVE cum at each row covers exactly the rows ≤ it.
     *
     * Group keys are matched null-safely (`<=>`): a NULL group is a
-    * group, exactly as `partitionBy` treats it.
+    * group, exactly as `partitionBy` treats it. NULL values carry as
+    * in [[withRunningSums]] (`plusOffset`), per group.
     */
   def withGroupedRunningSumAndTotal(df: DataFrame, groupCols: Seq[String],
       sortCols: Seq[Column], value: Column, cum: String,
@@ -207,7 +213,7 @@ object TwoPassWindow {
       .rowsBetween(Window.unboundedPreceding, -1)
     val wTot = Window.partitionBy(gc: _*)
     val offs = pg
-      .withColumn("__tp_off", coalesce(sum("__tp_s").over(wOff), lit(0L)))
+      .withColumn("__tp_off", sum("__tp_s").over(wOff))
       .withColumn(total, sum("__tp_s").over(wTot))
       .drop("__tp_s")
       .withColumnRenamed(Pid, s"${Pid}_o")
@@ -218,7 +224,7 @@ object TwoPassWindow {
     val w = Window.partitionBy((col(Pid) +: gc): _*).orderBy(sortCols: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     p.join(broadcast(offKeyed), joinCond)
-      .withColumn(cum, sum(value).over(w) + col("__tp_off"))
+      .withColumn(cum, plusOffset(col("__tp_off"), sum(value).over(w)))
       .drop((Pid +: s"${Pid}_o" +: "__tp_off" +:
         groupCols.map(c => s"${c}__o")): _*)
   }
@@ -226,10 +232,16 @@ object TwoPassWindow {
   /** Exact `lag(value, 1)` of a LONG column over a strict total order
     * of ASCENDING sort keys — NULL for the global first row. The
     * cross-partition boundary is patched with each partition's
-    * predecessor's LAST value (`max_by` over the ascending key).
+    * predecessor's LAST value (`max_by` over the ascending key), so a
+    * descending key is rejected rather than patched wrongly.
     */
   def withLag1(df: DataFrame, sortCols: Seq[Column], value: Column,
       out: String): DataFrame = {
+    val descending = df.sortWithinPartitions(sortCols: _*)
+      .queryExecution.analyzed.collectFirst { case s: Sort => s.order }
+      .getOrElse(Nil).filter(_.direction == Descending).map(_.sql)
+    require(descending.isEmpty,
+      s"withLag1 needs ascending sort keys; got ${descending.mkString(", ")}")
     val p = pidded(df, sortCols)
     // count(1) distinguishes "no rows in this partition" from "the
     // last row's value is NULL" — lag(1) must surface the predecessor

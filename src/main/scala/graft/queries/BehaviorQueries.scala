@@ -104,7 +104,7 @@ object BehaviorQueries {
       .agg(sum(col("n_events")).as("tot_n"), sum(col("sum_c")).as("tot_c"))
     byDow.join(broadcast(tot), "event_type")
       // ×1000 over SUMMED cents routes through DECIMAL(38,0) — the
-      // analytics_pareto overflow class (tools/audit_overflow.py):
+      // analytics_pareto overflow class (GateHygieneSpec):
       // tot_c·10³ clears 2⁶³ around ~10³× the sf1 event volume. The
       // DIV lands back in LONG, so downstream algebra is unchanged.
       .withColumn("dow_avg_mc",
@@ -229,7 +229,7 @@ object BehaviorQueries {
         col("day_offset"), col("n_cohort_users"), col("period_rev_c"),
         col("cum_rev_c"),
         // cumulative cents ×10³ → DECIMAL(38,0): the analytics_pareto
-        // overflow class (tools/audit_overflow.py); DIV returns LONG
+        // overflow class (GateHygieneSpec); DIV returns LONG
         expr("CAST(cum_rev_c AS DECIMAL(38,0)) * 1000 DIV n_cohort_users")
           .as("ltv_mc"))
       .orderBy("cohort_date", "day_offset")

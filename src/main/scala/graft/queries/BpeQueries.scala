@@ -299,7 +299,7 @@ object BpeQueries {
         // token-count sums beat the row-count ×10⁶ headroom (~10³
         // tokens/doc): n_subwords·10⁶ clears 2⁶³ near a 100 TB corpus,
         // so the ppm scale widens through DECIMAL(38,0) — the
-        // analytics_pareto overflow class (tools/audit_overflow.py)
+        // analytics_pareto overflow class (GateHygieneSpec)
         expr("CAST(n_subwords AS DECIMAL(38,0)) * 1000000 DIV n_words")
           .as("fertility_ppm"))
       .orderBy("lang")

@@ -2227,7 +2227,7 @@ object GraphQueries {
         // m is the TOTAL edge count, so 4·m² (and d_c²·10⁶) clears 2⁶³
         // on a ~10⁹-edge graph — whole contribution widened through
         // DECIMAL(38,0), the analytics_pareto overflow class
-        // (tools/audit_overflow.py); DIV returns LONG either way
+        // (GateHygieneSpec); DIV returns LONG either way
         expr("(CAST(4 AS DECIMAL(38,0)) * m * coalesce(m_c, 0L)" +
           " - CAST(coalesce(d_c, 0L) AS DECIMAL(38,0)) * coalesce(d_c, 0L))" +
           " * 1000000 DIV (CAST(4 AS DECIMAL(38,0)) * m * m)")

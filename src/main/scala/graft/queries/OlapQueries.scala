@@ -179,16 +179,22 @@ object OlapQueries {
     * built-in's exact op sequence, incl. its lowerKey shortcuts) — the
     * same bits, no per-group buffer anywhere.
     */
-  def olapPercentile(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = table(spark, sfDir, "lineitem")
+  def olapPercentile(spark: SparkSession, sfDir: String): DataFrame =
+    percentilesByReturnFlag(table(spark, sfDir, "lineitem"))
+
+  /** The [[olapPercentile]] body over any lineitem-shaped frame. The
+    * two quantile frames are joined null-safely (`<=>`), so a NULL
+    * l_returnflag group survives, as under the built-in `groupBy`.
+    */
+  private[graft] def percentilesByReturnFlag(li: DataFrame): DataFrame = {
     val qty = exactQuantilesCont(
       li.select(col("l_returnflag"), col("l_quantity")),
       "l_returnflag", "l_quantity",
       Seq(0.5 -> "p50_qty", 0.9 -> "p90_qty"))
     val price = exactQuantilesCont(
-      li.select(col("l_returnflag"), col("l_extendedprice")),
-      "l_returnflag", "l_extendedprice", Seq(0.5 -> "p50_price"))
-    qty.join(price, "l_returnflag")
+      li.select(col("l_returnflag").as("__rf"), col("l_extendedprice")),
+      "__rf", "l_extendedprice", Seq(0.5 -> "p50_price"))
+    qty.join(price, col("l_returnflag") <=> col("__rf"))
       .select("l_returnflag", "p50_qty", "p90_qty", "p50_price")
       .orderBy("l_returnflag")
   }

@@ -645,7 +645,7 @@ object SketchQueries {
       |), regsum AS (
       |  -- hoisted like the engine's est stage: sp <= 64 registers x 2^26
       |  -- and nreg <= 64 are REGISTER-bounded (never corpus-sized), and
-      |  -- the hoist lets the overflow auditor (tools/audit_overflow.py)
+      |  -- the hoist lets the overflow check (GateHygieneSpec)
       |  -- see bounded plain identifiers instead of an inline SUM
       |  SELECT wend,
       |         SUM(CAST(1 AS BIGINT) << CAST(26 - mj AS INTEGER)) AS reg_min_sp,

@@ -963,7 +963,7 @@ object StatQueries {
     * meaning). Widening through DECIMAL would buy exactness the metric
     * cannot use at the cost of decimal division in the hot window —
     * documented horizon over respell, unlike the integer-overflow
-    * class (tools/audit_overflow.py) where the narrow spelling ERRORS
+    * class (GateHygieneSpec) where the narrow spelling ERRORS
     * under ANSI mode instead of drifting.
     *
     * Scale: one monthly hash aggregate + one lag window per flag.
@@ -1530,7 +1530,7 @@ object StatQueries {
         max(col("tot_k")).as("tot_k"),
         // rev_k²·10⁶ (and tot_k²) are squared SUMMED-revenue magnitudes
         // — widened through DECIMAL(38,0) per the analytics_pareto
-        // overflow class (tools/audit_overflow.py); the r16 verdict
+        // overflow class (GateHygieneSpec); the r16 verdict
         // accepted the documented per-customer bound, but the r17
         // doctrine widens the whole class rather than carrying
         // per-site headroom arguments. DIV lands back in LONG.
@@ -2667,7 +2667,7 @@ object StatQueries {
     val b = daily.select(col("d").as("d2"), col("rev").as("r2"))
     val slopes0 = a.crossJoin(b).where(col("d1") < col("d2"))
       // the INTERMEDIATE ×10⁶ runs on the DOUBLE route (overflow-free
-      // per tools/audit_overflow.py's float exemption): Δrev is a safe
+      // per the float exemption in GateHygieneSpec): Δrev is a safe
       // LONG subtraction, its →double cast is correctly rounded, and
       // ×1e6 (an exactly-representable constant) is one IEEE multiply
       // — so below 2⁵³ the product is EXACT (identical to the r17

@@ -17,7 +17,7 @@ class TwoPassWindowSpec extends AnyFunSuite {
   import spark.implicits._
 
   /** 997 rows with duplicate v values (strict order via k), plus
-    * negatives — enough rows that the 32 range partitions are real.
+    * negatives.
     */
   private def frame(): DataFrame =
     spark.range(0, 997).select(
@@ -27,6 +27,18 @@ class TwoPassWindowSpec extends AnyFunSuite {
 
   private def sorted(df: DataFrame, cols: String*): Array[String] =
     df.orderBy(cols.map(col): _*).collect().map(_.toString)
+
+  /** Runs `body` with AQE partition coalescing off, so a small frame
+    * keeps several range partitions (8 here) and cross-partition
+    * offsets are actually exercised. The helpers freeze the row→pid
+    * binding when they are called, so the call goes inside `body`.
+    */
+  private def uncoalesced[T](body: => T): T = {
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 
   test("withRowNumber equals the global row_number window") {
     val df = frame()
@@ -104,29 +116,87 @@ class TwoPassWindowSpec extends AnyFunSuite {
 
   test("withRunningSums carries the cross-partition offset over " +
       "all-NULL prefixes and stays NULL before the first value") {
-    // leading rows NULL (global cum must be NULL there), then values,
-    // then a long NULL tail spanning whole range partitions (global
-    // cum must CARRY the earlier sum, not revert to NULL)
-    val df = spark.range(0, 997).select(col("id").as("k"),
-      when(col("id") < 5 || col("id") > 300, lit(null).cast("long"))
-        .otherwise(col("id")).as("v"))
-    val w = Window.orderBy(col("k"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val expected = df.withColumn("c", sum(col("v")).over(w))
-    val got = TwoPassWindow.withRunningSums(df, Seq(col("k")),
-      Seq(col("v") -> "c"))
-    assert(sorted(got, "k").sameElements(sorted(expected, "k")))
+    uncoalesced {
+      // leading rows NULL (global cum must be NULL there), then values,
+      // then a long NULL tail spanning whole range partitions (global
+      // cum must CARRY the earlier sum, not revert to NULL)
+      val df = spark.range(0, 997).select(col("id").as("k"),
+        when(col("id") < 5 || col("id") > 300, lit(null).cast("long"))
+          .otherwise(col("id")).as("v"))
+      val w = Window.orderBy(col("k"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val expected = df.withColumn("c", sum(col("v")).over(w))
+      val got = TwoPassWindow.withRunningSums(df, Seq(col("k")),
+        Seq(col("v") -> "c"))
+      assert(sorted(got, "k").sameElements(sorted(expected, "k")))
+    }
   }
 
   test("withLag1 surfaces a NULL predecessor value at partition heads " +
       "(not a stale earlier non-null)") {
-    val df = spark.range(0, 997).select(col("id").as("k"),
-      when(col("id") % 3 === 0, lit(null).cast("long"))
-        .otherwise(col("id")).as("v"))
+    uncoalesced {
+      val df = spark.range(0, 997).select(col("id").as("k"),
+        when(col("id") % 3 === 0, lit(null).cast("long"))
+          .otherwise(col("id")).as("v"))
+      val expected = df.withColumn("p",
+        lag(col("v"), 1).over(Window.orderBy(col("k"))))
+      val got = TwoPassWindow.withLag1(df, Seq(col("k")), col("v"), "p")
+      assert(sorted(got, "k").sameElements(sorted(expected, "k")))
+    }
+  }
+
+  test("withGroupedRunningSumAndTotal carries NULL values like the " +
+      "group-partitioned window (all-NULL first and later partitions)") {
+    // per group: a NULL head filling the group's first range
+    // partition, values, then a NULL tail that fills whole later
+    // partitions (their cum must CARRY the earlier sum, not turn NULL)
+    uncoalesced {
+      val df = spark.range(0, 997).select(col("id").as("k"),
+        (col("id") / 500).cast("long").as("g"),
+        when(col("id") % 500 < 150 || col("id") % 500 > 350,
+          lit(null).cast("long")).otherwise(col("id")).as("v"))
+      val w = Window.partitionBy("g").orderBy("k")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val expected = df
+        .withColumn("c", sum(col("v")).over(w))
+        .withColumn("t", sum(col("v")).over(Window.partitionBy("g")))
+      val got = TwoPassWindow.withGroupedRunningSumAndTotal(
+        df, Seq("g"), Seq(col("k")), col("v"), "c", "t")
+      val cols = Seq("k", "g", "v", "c", "t").map(col)
+      assert(sorted(got.select(cols: _*), "k")
+        .sameElements(sorted(expected.select(cols: _*), "k")))
+    }
+  }
+
+  test("withLag1 rejects a descending sort key and leaves ascending " +
+      "input unchanged") {
+    val df = frame()
+    val e = intercept[IllegalArgumentException](
+      TwoPassWindow.withLag1(df, Seq(col("k").desc), col("v"), "p"))
+    assert(e.getMessage.contains("k DESC"), e.getMessage)
     val expected = df.withColumn("p",
       lag(col("v"), 1).over(Window.orderBy(col("k"))))
     val got = TwoPassWindow.withLag1(df, Seq(col("k")), col("v"), "p")
     assert(sorted(got, "k").sameElements(sorted(expected, "k")))
+  }
+
+  test("olap_percentile keeps a NULL l_returnflag group, as the " +
+      "built-in percentile groupBy does") {
+    val li = frame().select(
+      when(col("k") % 5 === 0, lit(null).cast("string"))
+        .when(col("k") % 5 < 3, lit("A")).otherwise(lit("N"))
+        .as("l_returnflag"),
+      (col("v") % 17).cast("double").as("l_quantity"),
+      (col("w") * 1.5).cast("double").as("l_extendedprice"))
+    val expected = li.groupBy("l_returnflag").agg(
+      percentile(col("l_quantity"), lit(0.5)).as("p50_qty"),
+      percentile(col("l_quantity"), lit(0.9)).as("p90_qty"),
+      percentile(col("l_extendedprice"), lit(0.5)).as("p50_price"))
+      .orderBy("l_returnflag").collect()
+    val got = graft.queries.OlapQueries.percentilesByReturnFlag(li).collect()
+    assert(expected.exists(_.isNullAt(0)))
+    assert(got.map(_.toString).sameElements(expected.map(_.toString)),
+      s"${got.mkString(",")} vs ${expected.mkString(",")}")
   }
 
   test("exactQuantilesCont is bit-identical to the built-in percentile " +

@@ -28,11 +28,11 @@ What it does:
   4. prints per-query new1/old/new2 medians, the min(new)/old ratio,
      each phase's calib_sec, and (r20) an explicit VERDICT per query —
      ok / too-noisy / regressed / missing, the reading rule as code
-     (see verdict(); fixtures in aba_verdict_fixtures.tsv, mirrored by
-     GateHygieneSpec). Exit codes are disjoint decisions: 0 clean or
-     too-noisy (rerun, don't act), 1 regression(s) confirmed, 2 a
-     requested query was missing from a phase, 3 a phase produced no
-     record (infrastructure failure).
+     (see verdict(); fixtures in aba_verdict_fixtures.tsv, checked by
+     --selftest, which GateHygieneSpec runs). Exit codes are disjoint
+     decisions: 0 clean or too-noisy (rerun, don't act), 1
+     regression(s) confirmed, 2 a requested query was missing from a
+     phase, 3 a phase produced no record (infrastructure failure).
 
 CHECK CODE IDENTITY FIRST (git diff old..HEAD -- <query's files>): a
 byte-identical execution path settles the question without any
@@ -110,8 +110,6 @@ def verdict(n1, o, n2) -> str:
         return "missing"
     # multiplicative form, not `ratio - 1 <= threshold`: 1.10/1.0 - 1.0
     # is 0.10000000000000009 in floats and would flag the boundary.
-    # GateHygieneSpec's Scala mirror copies this arithmetic verbatim so
-    # the two implementations agree bit-for-bit on the fixtures.
     if min(news) <= o * (1.0 + REGRESS_THRESHOLD):
         return "ok"
     if len(news) < 2:
@@ -122,8 +120,8 @@ def verdict(n1, o, n2) -> str:
 
 
 def selftest() -> int:
-    """Check verdict() against the shared fixture table (also mirrored
-    in Scala by GateHygieneSpec — the audit_* double-entry pattern)."""
+    """Check verdict() against aba_verdict_fixtures.tsv; GateHygieneSpec
+    runs this at test time, so the rule has one implementation."""
     bad = 0
     path = Path(__file__).resolve().parent / "aba_verdict_fixtures.tsv"
     for ln in path.read_text().splitlines():
