@@ -56,6 +56,20 @@ case class LongArrayMmr(child: Expression, k: Int, relW: Int, penW: Int)
 
   override def prettyName: String = "long_array_mmr"
 
+  /** The pool's struct field names, for naming a NULL in the error. */
+  @transient private lazy val fieldNames: Array[String] =
+    child.dataType.asInstanceOf[ArrayType].elementType
+      .asInstanceOf[StructType].fieldNames
+
+  /** The pool type admits NULLs (the real query's fields are nullable
+    * parquet columns and expressions), but the selection has no NULL
+    * semantics: getLong/toLongArray would read a NULL as 0 and rank it.
+    * A NULL candidate, field or `cv` element fails the query instead.
+    */
+  private def nullInput(what: String, i: Int): Nothing =
+    throw new IllegalArgumentException(
+      s"$prettyName: NULL $what in candidate $i of the pool")
+
   override def nullSafeEval(c: Any): Any = {
     val arr = c.asInstanceOf[ArrayData]
     val n = arr.numElements()
@@ -64,10 +78,22 @@ case class LongArrayMmr(child: Expression, k: Int, relW: Int, penW: Int)
     val vecs = new Array[Array[Long]](n)
     var i = 0
     while (i < n) {
+      if (arr.isNullAt(i)) nullInput("candidate", i)
       val row = arr.getStruct(i, 3)
+      var f = 0
+      while (f < 3) {
+        if (row.isNullAt(f)) nullInput(s"field ${fieldNames(f)}", i)
+        f += 1
+      }
+      val cv = row.getArray(2)
+      var j = 0
+      while (j < cv.numElements()) {
+        if (cv.isNullAt(j)) nullInput(s"${fieldNames(2)} element $j", i)
+        j += 1
+      }
       ids(i) = row.getLong(0)
       rels(i) = row.getLong(1)
-      vecs(i) = row.getArray(2).toLongArray()
+      vecs(i) = cv.toLongArray()
       i += 1
     }
     val picked = new Array[Boolean](n)

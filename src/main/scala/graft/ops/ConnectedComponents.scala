@@ -43,24 +43,18 @@ object ConnectedComponents {
   def resolve(pairs: DataFrame, aCol: String, bCol: String,
       maxIters: Int = 50,
       localThreshold: Long = LocalEdgeThreshold): DataFrame = {
-    // ONE job decides the path AND (when short) delivers the data:
-    // limit(threshold+1) either returns the complete edge list — closed
-    // locally, no cache ever built — or proves it exceeds the bound.
+    // ONE bounded fetch decides the path AND (when short) delivers the
+    // data: it either returns the complete edge list — closed locally,
+    // no cache ever built — or proves it exceeds the bound.
     // Both id columns are cast to long HERE so the two paths accept
     // the same input types (the local getLong would ClassCastException
-    // on int/string ids the distributed join path happily coerced);
-    // the min() guards toInt overflow for thresholds near Int.MaxValue.
+    // on int/string ids the distributed join path happily coerced).
     val fwd0 = pairs.select(col(aCol).cast("long").as("n"),
       col(bCol).cast("long").as("m"))
-    val localLimit = math.min(localThreshold, Int.MaxValue - 1L).toInt
-    val grabbed = fwd0.limit(localLimit + 1).collect()
-    // compare against the CLAMPED bound, not localThreshold: for a
-    // threshold past Int.MaxValue the limit() truncates, and an
-    // at-limit collect would otherwise take the local path on an
-    // INCOMPLETE edge list — fall through to the distributed loop
-    if (grabbed.length <= localLimit) {
+    val grabbed = Bounded.rowsAtMost(fwd0, localThreshold)
+    if (grabbed.isDefined) {
       return resolveLocal(pairs.sparkSession,
-        grabbed.map(r => (r.getLong(0), r.getLong(1))))
+        grabbed.get.map(r => (r.getLong(0), r.getLong(1))))
     }
     // persist the forward edges BEFORE the self-union: union branches get
     // no common-subexpression elimination, so an unpersisted `pairs` plan

@@ -364,15 +364,16 @@ object Dedup {
       maxVocab: Int = 1 << 16): DataFrame = {
     val sh = shingles(docs, n).persistHotIntermediate
     val exploded = sh.select(col("doc_id"), explode(col("shingle_set")).as("g"))
-    // ONE vocabulary job decides the spelling AND feeds the bitmap id
-    // assignment: collect at most maxVocab+1 sorted shingles — the
-    // limit caps driver memory, and an overflow row proves the vocab
-    // doesn't fit without counting it
-    val vocab = exploded.select("g").distinct().orderBy("g")
-      .limit(maxVocab + 1).collect().map(_.getString(0))
+    // ONE bounded vocabulary fetch decides the spelling AND feeds the
+    // bitmap id assignment: at most maxVocab sorted shingles reach the
+    // driver, and an overflow row proves the vocab doesn't fit without
+    // counting it
+    val vocab = Bounded.rowsAtMost(
+      exploded.select("g").distinct().orderBy("g"), maxVocab)
     val unordered =
-      if (vocab.length <= maxVocab)
-        bitmapPairIntersections(sh, exploded, blocks, maxVocab, Some(vocab))
+      if (vocab.isDefined)
+        bitmapPairIntersections(sh, exploded, blocks, maxVocab,
+          Some(vocab.get.map(_.getString(0))))
       else {
         val sizes = sh.select(col("doc_id"), size(col("shingle_set")).as("n_sh"))
         exploded.as("a")

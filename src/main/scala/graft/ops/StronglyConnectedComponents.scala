@@ -53,7 +53,7 @@ object StronglyConnectedComponents {
     * driver — one linear pass instead of the FB-coloring loop's
     * per-round fixed job overhead (measured ~4–5 s of tiny jobs on the
     * ≤625-edge nation trade graph). The bound is MEASURED via
-    * limit(threshold+1), never assumed; larger graphs run the
+    * [[Bounded.rowsAtMost]], never assumed; larger graphs run the
     * distributed peeling loop unchanged. Only edge-endpoint labels are
     * computed locally — isolated nodes keep `scc_id = node` through a
     * left join, so the node set itself is never collected.
@@ -68,25 +68,19 @@ object StronglyConnectedComponents {
       maxOuter: Int = 40, maxInner: Int = 50,
       localThreshold: Long = LocalEdgeThreshold): DataFrame = {
     val spark = nodes.sparkSession
-    // ONE job: grab threshold+1 deduped edges; a short read means we
-    // already hold the complete edge list and can close it locally (no
-    // cache — the distributed loop re-derives its per-round edge set
-    // from `edges` anyway)
-    // long casts + toInt-overflow guard: the [[ConnectedComponents]]
+    // ONE bounded fetch of the deduped edges; a complete read means we
+    // already hold the edge list and can close it locally (no cache —
+    // the distributed loop re-derives its per-round edge set from
+    // `edges` anyway). Long casts: the [[ConnectedComponents]]
     // fast-path contract — both paths accept whatever id types the
-    // distributed joins coerce, and a threshold near Int.MaxValue
-    // can't wrap the limit
-    val localLimit = math.min(localThreshold, Int.MaxValue - 1L).toInt
-    val grabbed = edges
-      .select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .where(col("src") =!= col("dst")).distinct()
-      .limit(localLimit + 1).collect()
-    // compare against the CLAMPED bound (the ConnectedComponents fix):
-    // an at-limit collect under a >Int.MaxValue threshold is a
-    // truncated edge list and must fall through to the distributed loop
-    if (grabbed.length <= localLimit) {
-      val lab = tarjanLabels(grabbed.map(r => (r.getLong(0), r.getLong(1))))
+    // distributed joins coerce.
+    val grabbed = Bounded.rowsAtMost(
+      edges.select(col("src").cast("long").as("src"),
+          col("dst").cast("long").as("dst"))
+        .where(col("src") =!= col("dst")).distinct(),
+      localThreshold)
+    if (grabbed.isDefined) {
+      val lab = tarjanLabels(grabbed.get.map(r => (r.getLong(0), r.getLong(1))))
       import scala.jdk.CollectionConverters._
       val labDf = spark.createDataFrame(
         lab.toArray.sortBy(_._1)

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.Bounded
 import graft.ops.Persist.PersistOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -353,7 +354,7 @@ object GraphQueries {
     * paths: the trade graph is SCHEMA-bounded (≤ |nations|² edges
     * derived by one distributed hash-agg from lineitem — the 100 TB
     * side), so the fixed point is a bounded model artifact; each
-    * caller guards the bound with a measured limit(bound+1) grab.
+    * caller fetches the edge list through [[Bounded]].
     */
   private def dampedRankLocal(edges: Array[(Long, Long, Long)],
       init: Long => Long, base: Long => Long,
@@ -387,20 +388,33 @@ object GraphQueries {
           org.apache.spark.sql.types.LongType, nullable = false))))
   }
 
-  /** Bound for the damped-rank local fast paths — measured per call
-    * via limit(bound+1), never assumed (the graphBowtie guard
-    * doctrine).
+  /** Driver bound for an edge list closed on the driver.
+    *
+    * The trade graph never comes near it: [[tradeEdges]] and
+    * [[tradeEdgesWeighted]] keep an edge only when `cnt * 550 >= tot`,
+    * where `tot` is the sum of `cnt` over all counted pairs. Summed over
+    * the k surviving edges, `k * tot <= 550 * (their cnt sum) <=
+    * 550 * tot`, and `tot > 0` whenever an edge exists, so `k <= 550`
+    * at every scale factor. `graph_pagerank_weighted`, `graph_hits`,
+    * `graph_katz`, `graph_eigenvector`, `graph_ppr` and the all-pairs
+    * hop closure therefore run on the driver only, fetching through
+    * [[Bounded.rows]], which fails loudly should the invariant ever
+    * break. The parameterised helpers ([[pagerank]], [[betweenness]],
+    * [[lpaLabels]], [[kcoreSurvivors]], [[corenessLabels]]) take any
+    * graph, so for them it is the default split between the driver
+    * replay and the distributed loop, measured per call through
+    * [[Bounded.rowsAtMost]].
     */
   private val LocalRankEdgeBound = 500000
 
-  /** Node-count bound for the distributed damped-rank loops'
+  /** Node-count bound for the distributed [[pagerank]] loop's
     * per-round NODE-SIZED broadcasts (contrib/sums/rank frames): two
     * longs per node is ~100 MB of hash relation at this bound — a safe
     * executor-memory footprint. Above it the same joins run as plain
     * shuffle joins (AQE still upgrades them back if runtime stats
-    * allow). The guard is MEASURED per call via limit(bound+1), never
-    * assumed (the LocalRankEdgeBound doctrine) — a generic caller with
-    * a billion-node graph must not broadcast O(nodes) every round.
+    * allow). The guard is MEASURED per call ([[Bounded.atMost]]), never
+    * assumed — a generic caller with a billion-node graph must not
+    * broadcast O(nodes) every round.
     */
   private val BroadcastNodeBound = 2000000
 
@@ -409,9 +423,7 @@ object GraphQueries {
     * per distributed-loop invocation — negligible next to the loop.
     */
   private def nodeSideHint(nodeIds: DataFrame): DataFrame => DataFrame =
-    if (nodeIds.limit(BroadcastNodeBound + 1).count() <= BroadcastNodeBound)
-      broadcast
-    else identity
+    if (Bounded.atMost(nodeIds, BroadcastNodeBound)) broadcast else identity
 
   /** Shared-neighbor hub cap for the co-occurrence link-prediction
     * family (neighbor_overlap / resource_alloc / adamic_adar): the
@@ -463,13 +475,10 @@ object GraphQueries {
   private[graft] def pagerank(nodes: DataFrame, edges: DataFrame, iters: Int,
       localBound: Int = LocalRankEdgeBound): DataFrame = {
     val nodeIds = nodes.select(col("node").cast("long").as("node"))
-    val grabbed =
-      if (localBound > 0)
-        edges.select(col("src").cast("long"), col("dst").cast("long"))
-          .limit(localBound + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    if (localBound > 0 && grabbed.length <= localBound) {
-      val es = grabbed.map(r => (r.getLong(0), r.getLong(1), 1L))
+    val grabbed = Bounded.rowsAtMost(
+      edges.select(col("src").cast("long"), col("dst").cast("long")), localBound)
+    if (grabbed.isDefined) {
+      val es = grabbed.get.map(r => (r.getLong(0), r.getLong(1), 1L))
       val lab = localRankDf(nodes.sparkSession,
         dampedRankLocal(es, _ => 1000000L, _ => 150000L, iters))
       return nodeIds
@@ -808,53 +817,29 @@ object GraphQueries {
     *
     * Same doctrine as the uniform spelling: integral arithmetic
     * throughout (the per-EDGE quotient is the one difference — no
-    * per-node pre-divide exists when weights differ per edge), the
-    * rank vector localCheckpoint'd per round with nothing collected,
-    * each round one broadcast-join + partial+final aggregate.
+    * per-node pre-divide exists when weights differ per edge).
+    *
+    * Scale: the weighted trade graph has at most 550 edges (see
+    * [[LocalRankEdgeBound]]), so the rounds run on the driver in
+    * [[dampedRankLocal]] over the fetched edge list, and non-endpoint
+    * nations keep the 150000 floor. A graph-sized weighted PageRank
+    * would take [[pagerank]]'s distributed shape with the per-edge
+    * quotient.
     */
   def graphPagerankWeighted(spark: SparkSession, sfDir: String): DataFrame = {
     val wedges = tradeEdgesWeighted(spark, sfDir)
     val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
-    // driver-local fast path: the weighted generalization of the
-    // pagerank one — per-edge mass (rank·cnt) DIV totw (see
-    // dampedRankLocal); measured bound, distributed loop unchanged
-    // above it
-    val grabbedW = wedges
-      .select(col("src").cast("long"), col("dst").cast("long"), col("cnt"))
-      .limit(LocalRankEdgeBound + 1).collect()
-    if (grabbedW.length <= LocalRankEdgeBound) {
-      val es = grabbedW.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val lab = localRankDf(spark,
-        dampedRankLocal(es, _ => 1000000L, _ => 150000L, Iters))
-      return nodes
-        .join(broadcast(lab), Seq("node"), "left")
-        .select(col("node").as("nationkey"),
-          coalesce(col("lrank"), lit(150000L)).as("rank"))
-        .orderBy(desc("rank"), col("nationkey"))
-    }
-    val nodeIds = nodes.truncateLineage(true)
-    val totw = wedges.groupBy("src").agg(sum(col("cnt")).as("tw"))
-      .truncateLineage(true)
-    // node-sized broadcast guard — see nodeSideHint
-    val side = nodeSideHint(nodeIds)
-    var rank = nodeIds.withColumn("rank", lit(1000000L)).truncateLineage(true)
-    for (_ <- 1 to Iters) {
-      val sums = wedges
-        .join(side(rank.join(totw, rank("node") === totw("src"))
-          .select(col("src"), col("rank"), col("tw"))), "src")
-        .select(col("dst").as("node"), expr("(rank * cnt) DIV tw").as("c"))
-        .groupBy("node").agg(sum(col("c")).as("s"))
-      val next = nodeIds
-        .join(side(sums), Seq("node"), "left")
-        .select(col("node"),
-          expr("150000L + (850L * coalesce(s, 0L)) DIV 1000L").as("rank"))
-        .truncateLineage(true)
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(rank)
-      rank = next
-    }
-    org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(totw)
-    rank.select(col("node").as("nationkey"), col("rank"))
+    val es = Bounded.rows(
+      wedges.select(col("src").cast("long"), col("dst").cast("long"), col("cnt")),
+      LocalRankEdgeBound, "graph_pagerank_weighted trade edges")
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val lab = localRankDf(spark,
+      dampedRankLocal(es, _ => 1000000L, _ => 150000L, Iters))
+    nodes
+      .join(broadcast(lab), Seq("node"), "left")
+      .select(col("node").as("nationkey"),
+        coalesce(col("lrank"), lit(150000L)).as("rank"))
       .orderBy(desc("rank"), col("nationkey"))
   }
 
@@ -904,128 +889,73 @@ object GraphQueries {
     * same doctrine as graphPagerank. Nodes without in-(out-)edges hold
     * score 0 via the left join + coalesce.
     *
-    * Scale: each half-step is one broadcast-join of the edge list with
-    * the node-sized score vector + one partial+final aggregate; the max
-    * used for rescaling is folded in as a broadcast 1-row aggregate,
-    * never collected. Same co-partitioned upgrade path as pagerank when
-    * scores outgrow a broadcast.
+    * Scale: the trade graph has at most 550 edges (see
+    * [[LocalRankEdgeBound]]), so the half-steps run on the driver in
+    * [[hitsScores]] over the fetched edge list.
     */
   def graphHits(spark: SparkSession, sfDir: String): DataFrame = {
     val edges = tradeEdges(spark, sfDir)
-    val nodes0 = table(spark, sfDir, "nation")
+    val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
-    // driver-local fast path (the dampedRankLocal doctrine): the exact
-    // integer half-steps — auth(d) = Σ hub(s) then ×1e6 DIV max, hub
-    // symmetric — replayed over the bounded edge list. Non-endpoint
-    // nodes hold 0 after the first half-step (propagate's left-join
-    // coalesce), so only endpoint scores are computed and the output
-    // coalesces the rest to 0; the max over endpoints IS the global
-    // max (scores are non-negative).
-    val grabbedH = edges
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .limit(LocalRankEdgeBound + 1).collect()
-    // nonEmpty guard: an empty edge list would make half()'s
-    // raw.values.max throw on an empty endpoint map — fall through to
-    // the distributed spelling, whose normalizeMax handles the
-    // null/zero-max case gracefully (all scores 0)
-    if (grabbedH.nonEmpty && grabbedH.length <= LocalRankEdgeBound &&
-        HitsIters > 0) {
-      val es = grabbedH.map(r => (r.getLong(0), r.getLong(1)))
-      val endpoints = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-      def half(from: Map[Long, Long], rev: Boolean): Map[Long, Long] = {
-        val sums = scala.collection.mutable.Map.empty[Long, Long]
-          .withDefaultValue(0L)
-        for ((s, d) <- es) {
-          if (rev) sums(s) += from(d) else sums(d) += from(s)
-        }
-        val raw = endpoints.map(n => n -> sums(n)).toMap
-        val mx = raw.values.max
-        if (mx > 0) raw.view.mapValues(v => v * 1000000L / mx).toMap
-        else raw
-      }
-      var hub = endpoints.map(n => n -> 1000000L).toMap
-      var auth = Map.empty[Long, Long]
-      for (_ <- 1 to HitsIters) {
-        auth = half(hub, rev = false)
-        hub = half(auth, rev = true)
-      }
-      import scala.jdk.CollectionConverters._
-      val lab = spark.createDataFrame(
-        endpoints.map(n =>
-          org.apache.spark.sql.Row(n, hub(n), auth(n))).toSeq.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("lhub",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("lauth",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-      return nodes0
-        .join(broadcast(lab), Seq("node"), "left")
-        .select(col("node").as("nationkey"),
-          coalesce(col("lhub"), lit(0L)).as("hub_1e6"),
-          coalesce(col("lauth"), lit(0L)).as("auth_1e6"))
-        .orderBy(desc("hub_1e6"), col("nationkey"))
-    }
-    val nodes = nodes0.truncateLineage(true)
-    val side = nodeSideHint(nodes)
-    // CHECKPOINT each half-step (the pagerank doctrine): every
-    // half-step references its input vector twice (the rescale's max
-    // aggregate + the join side), so without lineage truncation the
-    // plan DOUBLES per half-step — 2^6 subplan executions by round 3,
-    // measured 151 s at sf0.1 vs ~2 s checkpointed. The replaced
-    // vector's blocks drop as soon as the next one is materialized.
-    var hub = nodes.withColumn("score", lit(1000000L)).truncateLineage(true)
-    var auth: DataFrame = null
-    for (_ <- 1 to HitsIters) {
-      val nextAuth = normalizeMax(propagate(nodes, edges, hub, "src", "dst", side))
-        .truncateLineage(true)
-      if (auth != null)
-        org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(auth)
-      auth = nextAuth
-      val nextHub = normalizeMax(propagate(nodes, edges, auth, "dst", "src", side))
-        .truncateLineage(true)
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(hub)
-      hub = nextHub
-    }
-    // the FINAL hub/auth checkpoints stay — the returned plan reads them
+    val es = Bounded.rows(
+      edges.select(col("src").cast("long"), col("dst").cast("long")),
+      LocalRankEdgeBound, "graph_hits trade edges")
+      .map(r => (r.getLong(0), r.getLong(1)))
+    import scala.jdk.CollectionConverters._
+    val lab = spark.createDataFrame(
+      hitsScores(es).map { case (n, h, a) =>
+        org.apache.spark.sql.Row(n, h, a) }.toSeq.asJava,
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("node",
+          org.apache.spark.sql.types.LongType, nullable = false),
+        org.apache.spark.sql.types.StructField("lhub",
+          org.apache.spark.sql.types.LongType, nullable = false),
+        org.apache.spark.sql.types.StructField("lauth",
+          org.apache.spark.sql.types.LongType, nullable = false))))
     nodes
-      .join(broadcast(hub.select(col("node"), col("score").as("hub_1e6"))),
-        Seq("node"))
-      .join(broadcast(auth.select(col("node"), col("score").as("auth_1e6"))),
-        Seq("node"))
-      .select(col("node").as("nationkey"), col("hub_1e6"), col("auth_1e6"))
+      .join(broadcast(lab), Seq("node"), "left")
+      .select(col("node").as("nationkey"),
+        coalesce(col("lhub"), lit(0L)).as("hub_1e6"),
+        coalesce(col("lauth"), lit(0L)).as("auth_1e6"))
       .orderBy(desc("hub_1e6"), col("nationkey"))
   }
 
-  /** One HITS half-step: sum `scores` over edges from `from`-side into
-    * `to`-side, left-joined back to the full node set (0 for nodes with
-    * no incident edge). `side` hints the node-sized score/sum frames:
-    * callers pass the measured [[nodeSideHint]] guard (as [[pagerank]]
-    * does), so a generic-graph invocation past [[BroadcastNodeBound]]
-    * degrades to plain shuffle joins instead of broadcasting O(nodes)
-    * per half-step.
+  /** [[HitsIters]] rounds of integer HITS over a directed edge list:
+    * (node, hub, auth) for every edge endpoint, ascending by node. Each
+    * half-step is auth(d) = Σ hub(s) (hub symmetric) and then
+    * [[rescaleToMax]]. A node that is no endpoint scores 0 after the
+    * first half-step, so it is left out and the caller coalesces it to
+    * 0; the max over endpoints is the global max, since scores are
+    * non-negative. An empty edge list gives no endpoints.
     */
-  private def propagate(nodes: DataFrame, edges: DataFrame,
-      scores: DataFrame, from: String, to: String,
-      side: DataFrame => DataFrame): DataFrame = {
-    val summed = edges
-      .join(side(scores.select(col("node").as(from), col("score"))), from)
-      .groupBy(col(to).as("node")).agg(sum(col("score")).as("s"))
-    nodes.join(side(summed), Seq("node"), "left")
-      .select(col("node"), coalesce(col("s"), lit(0L)).as("score"))
+  private[graft] def hitsScores(
+      es: Array[(Long, Long)]): Array[(Long, Long, Long)] = {
+    val endpoints = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+    def half(from: Map[Long, Long], rev: Boolean): Map[Long, Long] = {
+      val sums = scala.collection.mutable.Map.empty[Long, Long]
+        .withDefaultValue(0L)
+      for ((s, d) <- es) {
+        if (rev) sums(s) += from(d) else sums(d) += from(s)
+      }
+      rescaleToMax(endpoints.map(n => n -> sums(n)).toMap)
+    }
+    var hub = endpoints.map(n => n -> 1000000L).toMap
+    var auth = endpoints.map(n => n -> 0L).toMap
+    for (_ <- 1 to HitsIters) {
+      auth = half(hub, rev = false)
+      hub = half(auth, rev = true)
+    }
+    endpoints.map(n => (n, hub(n), auth(n)))
   }
 
-  /** Rescale a score vector to max 1e6 by integral division; all-zero
-    * vectors pass through unchanged (NULL max guard).
+  /** Rescale non-negative scores to a 1e6 max by integral division;
+    * an all-zero or empty vector passes through unchanged.
     */
-  private def normalizeMax(scores: DataFrame): DataFrame =
-    scores
-      .crossJoin(broadcast(scores.agg(max(col("score")).as("__mx"))))
-      .select(col("node"),
-        when(col("__mx") > 0,
-          expr("(score * 1000000L) DIV __mx")).otherwise(col("score"))
-          .as("score"))
+  private def rescaleToMax(raw: Map[Long, Long]): Map[Long, Long] =
+    raw.values.maxOption.filter(_ > 0) match {
+      case Some(mx) => raw.view.mapValues(v => v * 1000000L / mx).toMap
+      case None => raw
+    }
 
   private val BetweennessRounds = 6
 
@@ -1124,27 +1054,20 @@ object GraphQueries {
           s"CAST((CAST(btw_1e6 AS DECIMAL(38,0)) * ${n * (n - 1)}L) " +
             s"DIV ${k * (k - 1)}L AS BIGINT)"))
       }
-    val grabbedB =
-      if (localBound > 0)
-        bidir.select(col("u").cast("long"), col("v").cast("long"))
-          .limit(localBound + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
+    val grabbedB = Bounded.rowsAtMost(
+      bidir.select(col("u").cast("long"), col("v").cast("long")), localBound)
     // the source set must also fit the driver for the local replay —
-    // same measured limit(bound+1) probe as the edge list
-    val grabbedS =
-      if (localBound > 0 && grabbedB.length <= localBound)
-        srcFrame.limit(localBound + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    if (localBound > 0 && grabbedB.length <= localBound &&
-        grabbedS.length <= localBound && grabbedS.nonEmpty) {
-      val es = grabbedB.map(r => (r.getLong(0), r.getLong(1)))
+    // same measured bound as the edge list
+    val grabbedS = grabbedB.flatMap(_ => Bounded.rowsAtMost(srcFrame, localBound))
+    if (grabbedB.isDefined && grabbedS.exists(_.nonEmpty)) {
+      val es = grabbedB.get.map(r => (r.getLong(0), r.getLong(1)))
       val nbrs = es.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
       val endpoints = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
       // BFS from exactly the source set — the same seeds as the
       // distributed loop, so both paths compute the identical
       // pair-restricted estimator (an isolated source reaches only
       // itself and contributes no pair terms)
-      val srcs = grabbedS.map(_.getLong(0)).distinct.sorted
+      val srcs = grabbedS.get.map(_.getLong(0)).distinct.sorted
       // per-source BFS with path counts (dist, sigma)
       val aps = srcs.map { s =>
         val dist = scala.collection.mutable.Map(s -> 0)
@@ -1334,57 +1257,35 @@ object GraphQueries {
     * every partner. Integral arithmetic throughout (β = 1e6 scaled,
     * α·s = (30·s) DIV 1000), the pagerank fixed-iteration doctrine.
     *
-    * Scale: identical shape to [[pagerank]] minus the degree
-    * pre-divide — per round one edge ⋈ node-sized-score join (guarded
-    * by [[nodeSideHint]]) and one partial+final aggregate; the
-    * driver-local fast path replays the same integer rounds under the
-    * measured [[LocalRankEdgeBound]].
+    * Scale: the trade graph has at most 550 edges (see
+    * [[LocalRankEdgeBound]]), so the integer rounds run on the driver
+    * over the fetched edge list. A graph-sized Katz would take
+    * [[pagerank]]'s distributed shape minus the degree pre-divide.
     */
   def graphKatz(spark: SparkSession, sfDir: String): DataFrame = {
     val edges = tradeEdges(spark, sfDir)
     val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
-    val grabbedZ = edges
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .limit(LocalRankEdgeBound + 1).collect()
-    if (grabbedZ.length <= LocalRankEdgeBound) {
-      val es = grabbedZ.map(r => (r.getLong(0), r.getLong(1)))
-      val endpoints = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-      var x = endpoints.map(_ -> 1000000L).toMap
-      for (_ <- 1 to Iters) {
-        val sums = scala.collection.mutable.Map.empty[Long, Long]
-          .withDefaultValue(0L)
-        for ((u, v) <- es) sums(v) += x(u)
-        // non-negative longs: / == DIV
-        x = endpoints.map(n =>
-          n -> (1000000L + KatzAlphaNum * sums(n) / 1000L)).toMap
-      }
-      return nodes
-        .join(broadcast(localRankDf(spark,
-          endpoints.map(n => (n, x(n))))), Seq("node"), "left")
-        .select(col("node").as("nationkey"),
-          // a node with no in-edges holds exactly β forever
-          coalesce(col("lrank"), lit(1000000L)).as("katz"))
-        .orderBy(desc("katz"), col("nationkey"))
-    }
-    val nodeIds = nodes.truncateLineage(true)
-    val side = nodeSideHint(nodeIds)
-    var x = nodeIds.withColumn("katz", lit(1000000L)).truncateLineage(true)
+    val es = Bounded.rows(
+      edges.select(col("src").cast("long"), col("dst").cast("long")),
+      LocalRankEdgeBound, "graph_katz trade edges")
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val endpoints = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+    var x = endpoints.map(_ -> 1000000L).toMap
     for (_ <- 1 to Iters) {
-      val sums = edges.select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("node"))
-        .join(side(x.select(col("node").as("src"), col("katz"))), "src")
-        .groupBy("node").agg(sum(col("katz")).as("s"))
-      val next = nodeIds
-        .join(side(sums), Seq("node"), "left")
-        .select(col("node"),
-          expr(s"1000000L + ($KatzAlphaNum * coalesce(s, 0L)) DIV 1000L")
-            .as("katz"))
-        .truncateLineage(true)
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(x)
-      x = next
+      val sums = scala.collection.mutable.Map.empty[Long, Long]
+        .withDefaultValue(0L)
+      for ((u, v) <- es) sums(v) += x(u)
+      // non-negative longs: / == DIV
+      x = endpoints.map(n =>
+        n -> (1000000L + KatzAlphaNum * sums(n) / 1000L)).toMap
     }
-    x.select(col("node").as("nationkey"), col("katz"))
+    nodes
+      .join(broadcast(localRankDf(spark,
+        endpoints.map(n => (n, x(n))))), Seq("node"), "left")
+      .select(col("node").as("nationkey"),
+        // a node with no in-edges holds exactly β forever
+        coalesce(col("lrank"), lit(1000000L)).as("katz"))
       .orderBy(desc("katz"), col("nationkey"))
   }
 
@@ -1420,11 +1321,9 @@ object GraphQueries {
     * rounds on this diameter-2 graph; [[Iters]] fixed rounds keep both
     * engines on the identical prefix.
     *
-    * Scale: each round is one broadcast-or-shuffle join (the
-    * [[nodeSideHint]] guard) of the bidirected edge list with the
-    * node-sized score vector + one aggregate + a 1-row max rescale —
-    * identical to a HITS half-step; the driver-local replay runs under
-    * the measured edge bound.
+    * Scale: the undirected trade graph has at most 550 edges (see
+    * [[LocalRankEdgeBound]]), so the rounds run on the driver in
+    * [[eigenvectorScores]] over the fetched bidirected edge list.
     */
   def graphEigenvector(spark: SparkSession, sfDir: String): DataFrame = {
     val edges = tradeEdges(spark, sfDir)
@@ -1436,43 +1335,35 @@ object GraphQueries {
       .distinct()
     val bidir = und.select(col("a").as("u"), col("b").as("v"))
       .unionByName(und.select(col("b").as("u"), col("a").as("v")))
-    // nonEmpty: the replay's max() needs at least one endpoint (the
-    // graphHits guard); empty graphs fall through to the distributed
-    // spelling whose normalizeMax handles the zero-max case
-    val grabbedE = bidir
-      .select(col("u").cast("long"), col("v").cast("long"))
-      .limit(LocalRankEdgeBound + 1).collect()
-    if (grabbedE.nonEmpty && grabbedE.length <= LocalRankEdgeBound) {
-      val es = grabbedE.map(r => (r.getLong(0), r.getLong(1)))
-      val endpoints = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-      var x = endpoints.map(_ -> 1000000L).toMap
-      for (_ <- 1 to Iters) {
-        val sums = scala.collection.mutable.Map.empty[Long, Long]
-          .withDefaultValue(0L)
-        for ((u, v) <- es) sums(v) += x(u)
-        val raw = endpoints.map(n => n -> sums(n)).toMap
-        val mx = raw.values.max
-        x = if (mx > 0) raw.view.mapValues(v => v * 1000000L / mx).toMap
-        else raw
-      }
-      return nodes
-        .join(broadcast(localRankDf(spark,
-          endpoints.map(n => (n, x(n))))), Seq("node"), "left")
-        .select(col("node").as("nationkey"),
-          coalesce(col("lrank"), lit(0L)).as("eig"))
-        .orderBy(desc("eig"), col("nationkey"))
-    }
-    val nodeIds = nodes.truncateLineage(true)
-    val side = nodeSideHint(nodeIds)
-    var x = nodeIds.withColumn("score", lit(1000000L)).truncateLineage(true)
-    for (_ <- 1 to Iters) {
-      val next = normalizeMax(propagate(nodeIds, bidir, x, "u", "v", side))
-        .truncateLineage(true)
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(x)
-      x = next
-    }
-    x.select(col("node").as("nationkey"), col("score").as("eig"))
+    val es = Bounded.rows(
+      bidir.select(col("u").cast("long"), col("v").cast("long")),
+      LocalRankEdgeBound, "graph_eigenvector trade edges")
+      .map(r => (r.getLong(0), r.getLong(1)))
+    nodes
+      .join(broadcast(localRankDf(spark, eigenvectorScores(es))),
+        Seq("node"), "left")
+      .select(col("node").as("nationkey"),
+        coalesce(col("lrank"), lit(0L)).as("eig"))
       .orderBy(desc("eig"), col("nationkey"))
+  }
+
+  /** [[Iters]] rounds of x ← A·x then [[rescaleToMax]] over a
+    * bidirected edge list: (node, score) for every edge endpoint,
+    * ascending by node. A node that is no endpoint scores 0 after the
+    * first round, so it is left out and the caller coalesces it to 0.
+    * An empty edge list gives no endpoints.
+    */
+  private[graft] def eigenvectorScores(
+      es: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val endpoints = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+    var x = endpoints.map(_ -> 1000000L).toMap
+    for (_ <- 1 to Iters) {
+      val sums = scala.collection.mutable.Map.empty[Long, Long]
+        .withDefaultValue(0L)
+      for ((u, v) <- es) sums(v) += x(u)
+      x = rescaleToMax(endpoints.map(n => n -> sums(n)).toMap)
+    }
+    endpoints.map(n => (n, x(n)))
   }
 
   val graphEigenvectorSql: String = {
@@ -1515,11 +1406,6 @@ object GraphQueries {
        |ORDER BY eig DESC, nationkey""".stripMargin
   }
 
-  /** DuckDB twin: the three rounds unrolled, each half-step a
-    * join+sum+left-join mirroring [[propagate]] and a `// max` rescale
-    * mirroring [[normalizeMax]] (max via a scalar subquery — nonempty
-    * edge set in this corpus, so the NULL-max guard is not needed).
-    */
   private val LpaIters = 4
 
   /** `graph_label_propagation` — community detection by synchronous
@@ -1579,13 +1465,10 @@ object GraphQueries {
     // driver-local fast path (the dampedRankLocal doctrine): replay the
     // argmax rounds over the bounded edge list; non-endpoint nodes
     // never receive a vote and keep their own id
-    val grabbedL =
-      if (localBound > 0)
-        bidir0.select(col("u").cast("long"), col("v").cast("long"))
-          .limit(localBound + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    if (localBound > 0 && grabbedL.length <= localBound) {
-      val es = grabbedL.map(r => (r.getLong(0), r.getLong(1)))
+    val grabbedL = Bounded.rowsAtMost(
+      bidir0.select(col("u").cast("long"), col("v").cast("long")), localBound)
+    if (grabbedL.isDefined) {
+      val es = grabbedL.get.map(r => (r.getLong(0), r.getLong(1)))
       val endpoints = es.flatMap(p => Seq(p._1, p._2)).distinct.sorted
       var lbl = endpoints.map(n => n -> n).toMap
       for (_ <- 1 to iters) {
@@ -1663,6 +1546,11 @@ object GraphQueries {
        |FROM l$LpaIters ORDER BY nationkey""".stripMargin
   }
 
+  /** DuckDB twin: the three rounds unrolled, each half-step a
+    * join+sum+left-join over all nodes and a `// max` rescale mirroring
+    * [[rescaleToMax]] (max via a scalar subquery; GREATEST(max, 1)
+    * leaves an all-zero half-step at 0).
+    */
   val graphHitsSql: String = {
     def half(prev: String, out: String, from: String, to: String): String =
       s"""${out}_raw AS MATERIALIZED (
@@ -1818,13 +1706,10 @@ object GraphQueries {
     val spark = adj0.sparkSession
     // driver-local fast path (the dampedRankLocal doctrine): replay the
     // peels over the bounded undirected adjacency
-    val grabbedK =
-      if (localBound > 0)
-        adj0.select(col("x").cast("long"), col("nbr").cast("long"))
-          .limit(localBound + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    if (localBound > 0 && grabbedK.length <= localBound) {
-      val es = grabbedK.map(r => (r.getLong(0), r.getLong(1)))
+    val grabbedK = Bounded.rowsAtMost(
+      adj0.select(col("x").cast("long"), col("nbr").cast("long")), localBound)
+    if (grabbedK.isDefined) {
+      val es = grabbedK.get.map(r => (r.getLong(0), r.getLong(1)))
       var surv = es.map(_._1).distinct.toSet
       var degL = Map.empty[Long, Long]
       for (_ <- 1 to rounds) {
@@ -2011,13 +1896,10 @@ object GraphQueries {
     // driver-local fast path: the h-index iteration — neighbors sorted
     // by (coreness desc, id), c(x) = max_i min(i, nc_i) — replayed over
     // the bounded adjacency, identical tie order to the window spelling
-    val grabbedC =
-      if (localBound > 0)
-        adj0.select(col("x").cast("long"), col("nbr").cast("long"))
-          .limit(localBound + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    if (localBound > 0 && grabbedC.length <= localBound) {
-      val es = grabbedC.map(r => (r.getLong(0), r.getLong(1)))
+    val grabbedC = Bounded.rowsAtMost(
+      adj0.select(col("x").cast("long"), col("nbr").cast("long")), localBound)
+    if (grabbedC.isDefined) {
+      val es = grabbedC.get.map(r => (r.getLong(0), r.getLong(1)))
       val nbrs = es.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
       var coreL = nbrs.view.mapValues(_.length.toLong).toMap
       for (_ <- 1 to rounds) {
@@ -2807,68 +2689,34 @@ object GraphQueries {
     * tele(seed) = 150000·n DIV |S|, 0 elsewhere. The seed start vector
     * equals tele, the standard PPR initialization.
     *
-    * Scale: identical shape to [[pagerank]] — per round one node-sized
-    * broadcast join against the edge list plus one aggregate; n is a
-    * 1-row broadcast scalar, nothing collected.
+    * Scale: the trade graph has at most 550 edges (see
+    * [[LocalRankEdgeBound]]), so the rounds run on the driver in
+    * [[dampedRankLocal]] with init = base = the teleport vector, and
+    * non-endpoint nations keep exactly their teleport mass. A
+    * graph-sized PPR would take [[pagerank]]'s distributed shape with
+    * the teleport vector as its base.
     */
   def graphPpr(spark: SparkSession, sfDir: String): DataFrame = {
     val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
     val edges = tradeEdges(spark, sfDir)
     val seeds = Seq(0L, 7L)
-    // driver-local fast path (dampedRankLocal): init = base = the
-    // teleport vector — seeds split 15% of n·1e6, everyone else 0;
-    // non-endpoint nodes keep exactly their teleport mass
-    val grabbedP = edges
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .limit(LocalRankEdgeBound + 1).collect()
-    if (grabbedP.length <= LocalRankEdgeBound) {
-      val es = grabbedP.map(r => (r.getLong(0), r.getLong(1), 1L))
-      val nTotL = nodes.count()
-      val teleOf = (n: Long) =>
-        if (seeds.contains(n)) 150000L * nTotL / seeds.size else 0L
-      val lab = localRankDf(spark,
-        dampedRankLocal(es, teleOf, teleOf, Iters))
-      return nodes
-        .join(broadcast(lab), Seq("node"), "left")
-        .select(col("node").as("nationkey"),
-          coalesce(col("lrank"),
-            when(col("node").isin(seeds: _*),
-              lit(150000L * nTotL / seeds.size)).otherwise(lit(0L)))
-            .as("rank"))
-        .orderBy(desc("rank"), col("nationkey"))
-    }
-    val nTot = nodes.agg(count(lit(1)).as("n"))
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      .select(col("src").cast("long").as("src"), col("deg"))
-      .truncateLineage(true)
-    val tele = nodes.crossJoin(broadcast(nTot))
-      .select(col("node"),
-        when(col("node").isin(seeds: _*),
-          expr(s"(150000L * n) DIV ${seeds.size}")).otherwise(lit(0L))
-          .as("tele"))
-      .truncateLineage(true)
-    // node-sized broadcast guard — see nodeSideHint
-    val side = nodeSideHint(nodes)
-    var rank = tele.select(col("node"), col("tele").as("rank"))
-      .truncateLineage(true)
-    for (_ <- 1 to Iters) {
-      val contrib = rank.join(deg, rank("node") === deg("src"))
-        .select(col("src"), expr("rank DIV deg").as("c"))
-      val sums = edges.select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("node"))
-        .join(side(contrib), "src")
-        .groupBy("node").agg(sum(col("c")).as("s"))
-      val next = tele
-        .join(side(sums), Seq("node"), "left")
-        .select(col("node"),
-          expr("tele + (850L * coalesce(s, 0L)) DIV 1000L").as("rank"))
-        .truncateLineage(true)
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(rank)
-      rank = next
-    }
-    org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(deg)
-    rank.select(col("node").as("nationkey"), col("rank"))
+    val es = Bounded.rows(
+      edges.select(col("src").cast("long"), col("dst").cast("long")),
+      LocalRankEdgeBound, "graph_ppr trade edges")
+      .map(r => (r.getLong(0), r.getLong(1), 1L))
+    // seeds split 15% of n·1e6, everyone else 0
+    val nTot = nodes.count()
+    val teleOf = (n: Long) =>
+      if (seeds.contains(n)) 150000L * nTot / seeds.size else 0L
+    val lab = localRankDf(spark, dampedRankLocal(es, teleOf, teleOf, Iters))
+    nodes
+      .join(broadcast(lab), Seq("node"), "left")
+      .select(col("node").as("nationkey"),
+        coalesce(col("lrank"),
+          when(col("node").isin(seeds: _*),
+            lit(150000L * nTot / seeds.size)).otherwise(lit(0L)))
+          .as("rank"))
       .orderBy(desc("rank"), col("nationkey"))
   }
 
@@ -2905,107 +2753,66 @@ object GraphQueries {
 
   // ---- closeness centrality -------------------------------------------
 
+  /** All-pairs min-hop closure (root, node, dist) of the trade graph —
+    * the shared state behind closeness / harmonic / eccentricity (one
+    * spelling, so the three centralities cannot drift on BFS
+    * semantics; previously each carried its own copy of the loop).
+    *
+    * Scale: the trade graph has at most 550 edges over the nation set
+    * (see [[LocalRankEdgeBound]]), so plain per-root BFS runs on the
+    * driver over the fetched edge and node lists and builds the
+    * ≤ |nations|²-row answer as a LocalRelation. A graph-sized closure
+    * is graph_reachability's frontier-expansion loop with one frontier
+    * per root.
+    */
+  private def allPairsHops(nodes: DataFrame, edges: DataFrame): DataFrame = {
+    val spark = nodes.sparkSession
+    val adj = Bounded.rows(
+      edges.select(col("src").cast("long"), col("dst").cast("long")),
+      LocalRankEdgeBound, "all-pairs hop closure trade edges")
+      .map(r => (r.getLong(0), r.getLong(1)))
+      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    val ns = Bounded.rows(nodes.select(col("node").cast("long")),
+      LocalRankEdgeBound, "all-pairs hop closure nodes")
+      .map(_.getLong(0)).sorted
+    val rows = scala.collection.mutable.ArrayBuffer
+      .empty[org.apache.spark.sql.Row]
+    for (root <- ns) {
+      val dist = scala.collection.mutable.Map(root -> 0L)
+      var frontier = Seq(root)
+      while (frontier.nonEmpty) {
+        val next = frontier.flatMap(v => adj.getOrElse(v, Array.empty[Long])
+          .filterNot(dist.contains)).distinct
+        next.foreach(w => dist(w) = dist(frontier.head) + 1)
+        frontier = next
+      }
+      for ((nd, d) <- dist.toSeq.sortBy(_._1))
+        rows += org.apache.spark.sql.Row(root, nd, d)
+    }
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava,
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("root",
+          org.apache.spark.sql.types.LongType, nullable = false),
+        org.apache.spark.sql.types.StructField("node",
+          org.apache.spark.sql.types.LongType, nullable = false),
+        org.apache.spark.sql.types.StructField("dist",
+          org.apache.spark.sql.types.LongType, nullable = false))))
+  }
+
   /** `graph_closeness` — out-closeness centrality of every nation on the
     * directed trade graph: reach count, total hop distance, and the
     * Wasserman–Faust-normalized closeness
     * (r−1)/Σd · (r−1)/(n−1) — the standard form that stays comparable
     * on disconnected graphs (r = nodes reached incl. self).
     *
-    * Spelling: MULTI-SOURCE BFS — one frontier per root, all roots in
-    * the same DataFrame: state is the REACHED (root, node, dist)
-    * triples only (never the n² matrix of unreached pairs); each round
-    * propagates the whole state across the edge list in ONE join + one
-    * (root, node) min-aggregate, and convergence is read off a
-    * (count, Σdist) fingerprint — min-propagation is monotone (pairs
-    * only appear, distances only shrink), so the fingerprint is a
-    * fixpoint iff the state is. localCheckpoint per round as
-    * everywhere. Exact all-pairs closeness is O(n·m) work by
-    * definition; at corpus scale the SAME loop runs with a sampled
-    * landmark set as `roots` (Eppstein–Wang estimation) — the state
-    * shape and round structure don't change, only |roots|.
+    * Spelling: one BFS per root over the trade graph ([[allPairsHops]]);
+    * the state is the REACHED (root, node, dist) triples only (never
+    * the n² matrix of unreached pairs). Exact all-pairs closeness is
+    * O(n·m) work by definition; at corpus scale a frontier-expansion
+    * loop runs from a sampled landmark set of roots instead
+    * (Eppstein–Wang estimation).
     */
-  /** All-pairs min-hop closure (root, node, dist) of the trade graph —
-    * the shared state behind closeness / harmonic / eccentricity (one
-    * spelling, so the three centralities cannot drift on BFS
-    * semantics; previously each carried its own copy of the loop).
-    *
-    * Driver-local fast path under the dampedRankLocal doctrine: when
-    * BOTH the edge list and the node list prove bounded (measured
-    * limit(bound+1) grabs), plain per-root BFS on the driver builds
-    * the LocalRelation directly — the distributed frontier loop paid
-    * ~40 tiny fingerprint-checked rounds (~2.5 s each query) for a
-    * ≤ |nations|²-row answer. Above either bound: the same
-    * min-aggregate frontier-expansion loop as before (the
-    * graph_reachability doctrine — graph_bfs keeps the anchored
-    * distributed single-source spelling).
-    */
-  private def allPairsHops(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    val spark = nodes.sparkSession
-    val grabbedE = edges
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .limit(LocalRankEdgeBound + 1).collect()
-    val grabbedN =
-      if (grabbedE.length <= LocalRankEdgeBound)
-        nodes.select(col("node").cast("long"))
-          .limit(LocalRankEdgeBound + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    if (grabbedE.length <= LocalRankEdgeBound &&
-        grabbedN.nonEmpty && grabbedN.length <= LocalRankEdgeBound) {
-      val adj = grabbedE.map(r => (r.getLong(0), r.getLong(1)))
-        .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      val ns = grabbedN.map(_.getLong(0)).sorted
-      val rows = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.sql.Row]
-      for (root <- ns) {
-        val dist = scala.collection.mutable.Map(root -> 0L)
-        var frontier = Seq(root)
-        while (frontier.nonEmpty) {
-          val next = frontier.flatMap(v => adj.getOrElse(v, Array.empty[Long])
-            .filterNot(dist.contains)).distinct
-          next.foreach(w => dist(w) = dist(frontier.head) + 1)
-          frontier = next
-        }
-        for ((nd, d) <- dist.toSeq.sortBy(_._1))
-          rows += org.apache.spark.sql.Row(root, nd, d)
-      }
-      import scala.jdk.CollectionConverters._
-      return spark.createDataFrame(rows.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("root",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("node",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("dist",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-    }
-    var reach = nodes
-      .select(col("node").as("root"), col("node"), lit(0L).as("dist"))
-      .truncateLineage(true)
-    var fingerprint = (-1L, -1L)
-    var converged = false
-    var it = 0
-    while (!converged && it < 40) {
-      val cand = reach
-        .join(edges.withColumnRenamed("src", "node"), "node")
-        .select(col("root"), col("dst").as("node"),
-          (col("dist") + 1L).as("dist"))
-      val next = reach.unionByName(cand)
-        .groupBy("root", "node").agg(min("dist").as("dist"))
-        // truncation-purpose, NOT knob-subject (Persist.intermediate)
-        .truncateLineage(false)
-      val fp = next.agg(count(lit(1)).as("c"), sum("dist").as("s")).head
-      val nfp = (fp.getLong(0), fp.getLong(1))
-      converged = nfp == fingerprint
-      fingerprint = nfp
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(reach)
-      reach = next
-      it += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      "multi-source BFS did not converge in 40 rounds")
-    reach
-  }
-
   def graphCloseness(spark: SparkSession, sfDir: String): DataFrame = {
     val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
@@ -3244,20 +3051,15 @@ object GraphQueries {
     val lab2 = scc.withColumnRenamed("node", "dst")
       .withColumnRenamed("scc_id", "s2")
     // guard the driver-bounded assumption instead of just documenting
-    // it (round-11 advice): grab bound+1 rows in ONE job — a short read
-    // proves the condensation is complete and collectable; overflow
-    // fails loudly with the doctrine pointer rather than silently
-    // ballooning the driver
-    val condBound = 1000000
-    val condRows = edges.join(lab, "src").join(lab2, "dst")
-      .where(col("s1") =!= col("s2"))
-      .select("s1", "s2").distinct()
-      .limit(condBound + 1).collect()
-    if (condRows.length > condBound) throw new IllegalStateException(
-      s"graph_bowtie: SCC condensation exceeds $condBound edges — not " +
-        "driver-bounded; close reachability with the frontier-BFS " +
-        "spelling of graph_reachability instead")
-    val condensation = condRows.map(r => (r.getLong(0), r.getLong(1)))
+    // it: overflow fails loudly rather than silently ballooning the
+    // driver (past it, close reachability with graph_reachability's
+    // frontier-BFS spelling instead)
+    val condensation = Bounded.rows(
+      edges.join(lab, "src").join(lab2, "dst")
+        .where(col("s1") =!= col("s2"))
+        .select("s1", "s2").distinct(),
+      1000000, "graph_bowtie SCC condensation")
+      .map(r => (r.getLong(0), r.getLong(1)))
     // core scc: most members, ties to the smaller id — one tiny agg
     val coreId = scc.groupBy("scc_id").agg(count(lit(1)).as("n"))
       .orderBy(desc("n"), col("scc_id")).limit(1)

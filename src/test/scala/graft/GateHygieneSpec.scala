@@ -874,4 +874,36 @@ class GateHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"build sessions with GraftSession.builder instead: $offenders")
   }
+
+  /** A bounded driver fetch goes through graft.ops.Bounded, the one
+    * owner of the `limit(max + 1)` probe, its Int clamp and the no-job
+    * `max <= 0` case. A `.limit(… + 1)` feeding an action anywhere else
+    * in src/main is a hand-rolled copy of that rule. A top-(k+1)
+    * selection that stays a DataFrame (no action on the limit) is not a
+    * probe and passes.
+    */
+  test("a limit(n + 1) probe occurs in src/main only in Bounded.scala") {
+    val probe = ("""\.limit\((?:[^()]|\([^()]*\))*\+\s*1\)\s*""" +
+      """\.(?:collect|collectAsList|count|take|head|first|isEmpty|toLocalIterator)\b""").r
+    assert(probe.findFirstIn("df.limit(n + 1).collect()").isDefined &&
+      probe.findFirstIn("df.limit(math.min(b, 9) + 1)\n  .count()").isDefined &&
+      probe.findFirstIn("df.limit(k + 1).persistIntermediate").isEmpty,
+      "the probe pattern no longer matches its own spellings")
+    val root = Paths.get("src", "main", "scala")
+    assert(Files.isDirectory(root),
+      s"$root missing — run sbt test from the repo root")
+    val s = Files.walk(root)
+    val offenders =
+      try s.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          p.getFileName.toString != "Bounded.scala")
+        .flatMap { p =>
+          val text = repoText(p)
+          probe.findAllMatchIn(text).map(m =>
+            (p.toString, text.substring(0, m.start).count(_ == '\n') + 1))
+        }.toSeq.sorted.map { case (p, line) => s"$p:$line" }
+      finally s.close()
+    assert(offenders.isEmpty,
+      s"fetch through graft.ops.Bounded instead: $offenders")
+  }
 }

@@ -27,6 +27,19 @@ class GraphProfileSpec extends AnyFunSuite {
     assert(cyc(0L) >= 850000L && cyc(0L) <= 1000000L)
   }
 
+  test("hits and eigenvector scores: a hand trace, and an empty edge " +
+      "list scores no endpoint") {
+    // one edge 0 -> 1: 0 is the whole hub mass, 1 the whole authority
+    assert(GraphQueries.hitsScores(Array((0L, 1L))).toSeq ==
+      Seq((0L, 1000000L, 0L), (1L, 0L, 1000000L)))
+    assert(GraphQueries.eigenvectorScores(Array((0L, 1L), (1L, 0L))).toSeq ==
+      Seq((0L, 1000000L), (1L, 1000000L)))
+    // no edges, no endpoints: graph_hits / graph_eigenvector then read
+    // every nation as 0 through their coalesce, as the twins do
+    assert(GraphQueries.hitsScores(Array.empty).isEmpty)
+    assert(GraphQueries.eigenvectorScores(Array.empty).isEmpty)
+  }
+
   test("pagerank distributed spelling keeps the rank vector off the driver") {
     // The DISTRIBUTED loop (localBound = 0 disables the bounded fast
     // path) must keep the rank vector in executor storage

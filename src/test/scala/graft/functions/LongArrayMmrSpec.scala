@@ -52,4 +52,31 @@ class LongArrayMmrSpec extends AnyFunSuite {
       (2L, 50L, Seq(0L, 0L, 1L))), k = 3)
     assert(got.map(_._1) == Seq(1L, 2L, 3L))
   }
+
+  /** The kernel's error for a pool with one NULL, as the caller sees it. */
+  private def nullError(cands: Seq[(Long, Option[Long], Seq[Option[Long]])])
+      : String = {
+    import spark.implicits._
+    val df = cands.toDF("n_id", "rel", "cv")
+      .agg(collect_list(struct(col("n_id"), col("rel"), col("cv")))
+        .as("cands"))
+      .select(LongArrayMmr.mmrSelect(col("cands"), 2, 7, 3))
+    val e = intercept[Exception](df.collect())
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+  }
+
+  test("a NULL struct field fails the selection instead of reading as 0") {
+    val msg = nullError(Seq(
+      (1L, Some(100L), Seq(Some(1L), Some(0L))),
+      (2L, None, Seq(Some(0L), Some(1L)))))
+    assert(msg.contains("long_array_mmr: NULL field rel in candidate"), msg)
+  }
+
+  test("a NULL cv element fails the selection instead of reading as 0") {
+    val msg = nullError(Seq(
+      (1L, Some(100L), Seq(Some(1L), Some(0L))),
+      (2L, Some(90L), Seq(Some(0L), None))))
+    assert(msg.contains("long_array_mmr: NULL cv element 1 in candidate"), msg)
+  }
 }

@@ -1,0 +1,110 @@
+package graft.ops
+
+import graft.TestSpark
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
+/** Pins [[Bounded]]'s fetch rule: complete at exactly `max` rows, None
+  * (or a named failure) past it, no job at all for a bound of 0 or
+  * less, one job otherwise, and completeness judged against the
+  * Int-clamped limit.
+  */
+class BoundedSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  /** `n` rows in ONE partition: Spark's incremental take then scans
+    * everything in its first job, so the job count is the helper's own.
+    */
+  private def frame(n: Long): DataFrame =
+    spark.range(0, n, 1, 1).toDF("id")
+
+  /** The result of `body` and the jobs launched while it ran. A marker
+    * job launched afterwards bounds the count: the listener bus
+    * delivers events in order, so once the marker's start arrives every
+    * earlier job start has too.
+    */
+  private def withJobs[T](body: => T): (T, Int) = {
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobGroup("bounded-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!groups.contains("bounded-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("bounded-marker"), "marker job never reached the listener")
+      (out, groups.asScala.count(_ != "bounded-marker"))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def ids(rows: Array[org.apache.spark.sql.Row]): Seq[Long] =
+    rows.map(_.getLong(0)).toSeq.sorted
+
+  test("exactly max rows come back complete, in one job") {
+    val (got, jobs) = withJobs(Bounded.rowsAtMost(frame(5), 5))
+    assert(got.map(ids).contains(0L until 5L))
+    assert(jobs == 1, s"jobs=$jobs")
+    val (all, jobsRows) = withJobs(Bounded.rows(frame(5), 5, "five ids"))
+    assert(ids(all) == (0L until 5L))
+    assert(jobsRows == 1, s"jobs=$jobsRows")
+  }
+
+  test("max + 1 rows is None, and rows() names what overflowed") {
+    val (got, jobs) = withJobs(Bounded.rowsAtMost(frame(6), 5))
+    assert(got.isEmpty)
+    assert(jobs == 1, s"jobs=$jobs")
+    val e = intercept[IllegalStateException](
+      Bounded.rows(frame(6), 5, "the probe frame"))
+    assert(e.getMessage.contains("the probe frame") &&
+      e.getMessage.contains("5"), e.getMessage)
+  }
+
+  test("a bound of 0 or less is None without starting a job") {
+    for (max <- Seq(0L, -1L, Long.MinValue)) {
+      val (got, jobs) = withJobs(Bounded.rowsAtMost(frame(0), max))
+      assert(got.isEmpty, s"max=$max")
+      assert(jobs == 0, s"max=$max jobs=$jobs")
+      val (fits, countJobs) = withJobs(Bounded.atMost(frame(0), max))
+      assert(!fits, s"max=$max")
+      assert(countJobs == 0, s"max=$max jobs=$countJobs")
+    }
+  }
+
+  test("a Long bound above Int.MaxValue is clamped, and filling the " +
+      "clamped limit is never complete") {
+    // limit() takes an Int: the bound clamps so that the probe row
+    // (limit + 1) still fits, at Int.MaxValue and beyond it
+    for (max <- Seq(Int.MaxValue.toLong, Int.MaxValue + 1L, Long.MaxValue))
+      assert(Bounded.fetchLimit(max) == Int.MaxValue - 1, s"max=$max")
+    // a read that filled the clamped limit (limit + 1 rows) is a
+    // truncated frame, even though it is below the requested bound
+    val filled = Bounded.fetchLimit(Long.MaxValue) + 1L
+    assert(!Bounded.complete(filled, Long.MaxValue))
+    assert(Bounded.complete(filled - 1, Long.MaxValue))
+    // an unclamped Long.MaxValue would wrap the limit; the clamped one
+    // fetches a small frame whole, in one job
+    val (got, jobs) = withJobs(Bounded.rowsAtMost(frame(3), Long.MaxValue))
+    assert(got.map(ids).contains(Seq(0L, 1L, 2L)))
+    assert(jobs == 1, s"jobs=$jobs")
+    assert(Bounded.atMost(frame(3), Long.MaxValue))
+  }
+
+  test("atMost agrees with rowsAtMost(...).isDefined on 0, max and " +
+      "max + 1 rows") {
+    for (n <- Seq(0L, 4L, 5L)) {
+      val (fits, jobs) = withJobs(Bounded.atMost(frame(n), 4))
+      assert(fits == Bounded.rowsAtMost(frame(n), 4).isDefined, s"n=$n")
+      assert(fits == (n <= 4), s"n=$n")
+      assert(jobs == 1, s"n=$n jobs=$jobs")
+    }
+  }
+}

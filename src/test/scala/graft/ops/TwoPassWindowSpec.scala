@@ -41,77 +41,89 @@ class TwoPassWindowSpec extends AnyFunSuite {
   }
 
   test("withRowNumber equals the global row_number window") {
-    val df = frame()
-    val expected = df.withColumn("rn",
-      row_number().over(Window.orderBy(col("v"), col("k"))).cast("long"))
-    val got = TwoPassWindow.withRowNumber(df, Seq(col("v"), col("k")), "rn")
-    assert(sorted(got, "k").sameElements(sorted(expected, "k")))
+    uncoalesced {
+      val df = frame()
+      val expected = df.withColumn("rn",
+        row_number().over(Window.orderBy(col("v"), col("k"))).cast("long"))
+      val got = TwoPassWindow.withRowNumber(df, Seq(col("v"), col("k")), "rn")
+      assert(sorted(got, "k").sameElements(sorted(expected, "k")))
+    }
   }
 
   test("withNtile equals the global ntile window, k over and under n") {
-    val df = frame()
-    for (k <- Seq(5, 10, 1000, 997, 1)) {
-      val expected = df.withColumn("t",
-        ntile(k).over(Window.orderBy(col("v").desc, col("k"))).cast("long"))
-      val got = TwoPassWindow.withNtile(df, k, Seq(col("v").desc, col("k")), "t")
-      assert(sorted(got, "k").sameElements(sorted(expected, "k")), s"k=$k")
+    uncoalesced {
+      val df = frame()
+      for (k <- Seq(5, 10, 1000, 997, 1)) {
+        val expected = df.withColumn("t",
+          ntile(k).over(Window.orderBy(col("v").desc, col("k"))).cast("long"))
+        val got = TwoPassWindow.withNtile(df, k, Seq(col("v").desc, col("k")), "t")
+        assert(sorted(got, "k").sameElements(sorted(expected, "k")), s"k=$k")
+      }
     }
   }
 
   test("withRunningSums equals the inclusive running-sum window, " +
       "two values at once") {
-    val df = frame()
-    val w = Window.orderBy(col("k"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val expected = df
-      .withColumn("cv", sum(col("v")).over(w))
-      .withColumn("cw", sum(col("w")).over(w))
-    val got = TwoPassWindow.withRunningSums(df, Seq(col("k")),
-      Seq(col("v") -> "cv", col("w") -> "cw"))
-    assert(sorted(got, "k").sameElements(sorted(expected, "k")))
+    uncoalesced {
+      val df = frame()
+      val w = Window.orderBy(col("k"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val expected = df
+        .withColumn("cv", sum(col("v")).over(w))
+        .withColumn("cw", sum(col("w")).over(w))
+      val got = TwoPassWindow.withRunningSums(df, Seq(col("k")),
+        Seq(col("v") -> "cv", col("w") -> "cw"))
+      assert(sorted(got, "k").sameElements(sorted(expected, "k")))
+    }
   }
 
   test("withRunningMaxExclusive equals the exclusive running-max window " +
       "(global first row NULL)") {
-    val df = frame()
-    val w = Window.orderBy(col("k"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val expected = df.withColumn("m", max(col("v")).over(w))
-    val got = TwoPassWindow.withRunningMaxExclusive(
-      df, Seq(col("k")), col("v"), "m")
-    assert(sorted(got, "k").sameElements(sorted(expected, "k")))
-    assert(got.where(col("m").isNull).count() == 1) // exactly the first row
+    uncoalesced {
+      val df = frame()
+      val w = Window.orderBy(col("k"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val expected = df.withColumn("m", max(col("v")).over(w))
+      val got = TwoPassWindow.withRunningMaxExclusive(
+        df, Seq(col("k")), col("v"), "m")
+      assert(sorted(got, "k").sameElements(sorted(expected, "k")))
+      assert(got.where(col("m").isNull).count() == 1) // exactly the first row
+    }
   }
 
   test("withLag1 equals lag(v, 1) over the global order " +
       "(global first row NULL)") {
-    val df = frame()
-    val expected = df.withColumn("p",
-      lag(col("v"), 1).over(Window.orderBy(col("k"))))
-    val got = TwoPassWindow.withLag1(df, Seq(col("k")), col("v"), "p")
-    assert(sorted(got, "k").sameElements(sorted(expected, "k")))
+    uncoalesced {
+      val df = frame()
+      val expected = df.withColumn("p",
+        lag(col("v"), 1).over(Window.orderBy(col("k"))))
+      val got = TwoPassWindow.withLag1(df, Seq(col("k")), col("v"), "p")
+      assert(sorted(got, "k").sameElements(sorted(expected, "k")))
+    }
   }
 
   test("withGroupedRunningSumAndTotal equals the group-partitioned " +
       "running-sum + total windows, including a NULL group") {
-    val df = frame().withColumn("g",
-      when(col("k") % 11 === 0, lit(null).cast("string"))
-        .otherwise(concat(lit("g"), col("k") % 3)))
-    val w = Window.partitionBy("g").orderBy("k")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wt = Window.partitionBy("g")
-    val expected = df
-      .withColumn("cv", sum(col("v")).over(w))
-      .withColumn("tv", sum(col("v")).over(wt))
-    val got = TwoPassWindow.withGroupedRunningSumAndTotal(
-      df, Seq("g"), Seq(col("k")), col("v"), "cv", "tv")
-    // fixed column order — the helper appends cum/total in a different
-    // position than withColumn does
-    val cols = Seq("k", "v", "w", "g", "cv", "tv").map(col)
-    assert(sorted(got.select(cols: _*), "k")
-      .sameElements(sorted(expected.select(cols: _*), "k")))
-    val plan = got.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange SinglePartition"), plan)
+    uncoalesced {
+      val df = frame().withColumn("g",
+        when(col("k") % 11 === 0, lit(null).cast("string"))
+          .otherwise(concat(lit("g"), col("k") % 3)))
+      val w = Window.partitionBy("g").orderBy("k")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val wt = Window.partitionBy("g")
+      val expected = df
+        .withColumn("cv", sum(col("v")).over(w))
+        .withColumn("tv", sum(col("v")).over(wt))
+      val got = TwoPassWindow.withGroupedRunningSumAndTotal(
+        df, Seq("g"), Seq(col("k")), col("v"), "cv", "tv")
+      // fixed column order — the helper appends cum/total in a different
+      // position than withColumn does
+      val cols = Seq("k", "v", "w", "g", "cv", "tv").map(col)
+      assert(sorted(got.select(cols: _*), "k")
+        .sameElements(sorted(expected.select(cols: _*), "k")))
+      val plan = got.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange SinglePartition"), plan)
+    }
   }
 
   test("withRunningSums carries the cross-partition offset over " +
