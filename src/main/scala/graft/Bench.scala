@@ -75,6 +75,16 @@ object Bench {
     }
   }
 
+  /** The shared end of both stdout lines: the thread regime, then
+    * calib_sec/parity_sec LAST (the driver records a tail of stdout,
+    * and trailing keys survive any prefix truncation). `oversubscribed`
+    * says the sweep ran more threads than [[PhysicalCores]], where
+    * absolute seconds compare only through calib_sec.
+    */
+  def lineTail(cpus: Int, cpusRequested: Int, calib: Double, parity: Double): String =
+    s""""cpus":$cpus,"cpus_requested":$cpusRequested,"physical_cores":$PhysicalCores,""" +
+      s""""oversubscribed":${cpus > PhysicalCores},"calib_sec":$calib,"parity_sec":$parity}"""
+
   /** [[resolveCpus]] applied to SPARK_GRAFT_CPUS (default
     * [[PhysicalCores]]): the thread regime of every session-building
     * main that times or explains queries.
@@ -223,7 +233,7 @@ object Bench {
     // of stdout, and with these keys at the front BENCH_r06 truncated
     // them away — trailing keys survive any prefix truncation.
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"failed":$failedJson,"queries":$qs,"sf":"$sfDir","cpus":$cpus,"cpus_requested":$cpusRequested,"calib_sec":$calib,"parity_sec":$parity}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"failed":$failedJson,"queries":$qs,"sf":"$sfDir",${lineTail(cpus, cpusRequested, calib, parity)}"""
     // The driver keeps only a TAIL of stdout, which has truncated away
     // parity_sec and half the per-query map in EVERY round so far
     // (BENCH_r* all carry "parsed": null with ~25-29 of the sweep's
@@ -297,7 +307,7 @@ object Bench {
         "\"" + k + "\":" + BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)
     }.mkString("{", ",", "}")
     println(
-      s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"n_queries":${results.size},"failed":$failedJson,"queries":$qsCompact,"sf":"$sfDir","cpus":$cpus,"cpus_requested":$cpusRequested,"calib_sec":$calib,"parity_sec":$parity}""")
+      s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"n_queries":${results.size},"failed":$failedJson,"queries":$qsCompact,"sf":"$sfDir",${lineTail(cpus, cpusRequested, calib, parity)}""")
     spark.stop()
   }
 }

@@ -47,7 +47,7 @@ object Pipeline {
     df.write.mode(SaveMode.Overwrite).parquet(cfg.stageDir(name))
 
   def readStage(spark: SparkSession, cfg: PipelineConfig, name: String): DataFrame =
-    spark.read.parquet(cfg.stageDir(name))
+    graft.sources.ParquetRead.read(spark, cfg.stageDir(name))
 
   /** extract_oews_data (load_data.py:256-263): scraped page HTML →
     * target-table parse (header from thead, drop-last-2 footer) → raw

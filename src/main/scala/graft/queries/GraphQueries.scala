@@ -37,15 +37,16 @@ object GraphQueries {
 
   private val Iters = 5
 
-  /** Memo for the cached edge DataFrames, keyed (session, sfDir,
-    * weighted). Without it every call cached a FRESH copy of the same
+  /** Memo for the cached weighted edge DataFrame, keyed (session,
+    * sfDir). Without it every call cached a FRESH copy of the same
     * ≤625-row derivation and never unpersisted it, so bench sweeps and
     * repeated query runs accumulated dead cached RDDs. One retained
     * entry per live (session, sfDir) pair is bounded and tiny, and it
-    * lets all seven graph queries share one materialization per sweep.
+    * lets every graph query, weighted or not, share one
+    * materialization per sweep.
     */
   private val edgeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Boolean), DataFrame]()
+    (SparkSession, String), DataFrame]()
 
   /** One eviction listener per session with live memo entries, so the
     * static map is bounded by LIVE sessions: on application end
@@ -97,13 +98,13 @@ object GraphQueries {
     n
   }
 
-  /** Memoize one derived edge frame per (session, sfDir, weighted),
+  /** Memoize the derived edge frame per (session, sfDir),
     * installing the session's eviction listener on first use and
     * sweeping entries whose context already stopped (covers a session
     * stopped before its listener registration completed).
     */
-  private def memoEdges(spark: SparkSession, sfDir: String,
-      weighted: Boolean)(derive: => DataFrame): DataFrame = {
+  private def memoEdges(spark: SparkSession, sfDir: String)(
+      derive: => DataFrame): DataFrame = {
     memoListeners.computeIfAbsent(spark, s => {
       val l = new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
@@ -120,7 +121,7 @@ object GraphQueries {
     // a dropped AsyncEventQueue event — would otherwise pin the
     // session object here for the JVM lifetime)
     memoListeners.keySet.removeIf(s => s.sparkContext.isStopped)
-    val frame = edgeMemo.computeIfAbsent((spark, sfDir, weighted), _ => derive)
+    val frame = edgeMemo.computeIfAbsent((spark, sfDir), _ => derive)
     // re-cache on hit: harness sweeps (Verify/Bench run clearCache per
     // query) uncache the memo's one sanctioned CacheManager entry, and
     // without this every later graph query would re-run the 4-way
@@ -140,17 +141,12 @@ object GraphQueries {
     n
   }
 
-  /** Shared edge derivation: line-level trade rolled up to
-    * (customer_nation → supplier_nation), thresholded to keep the
-    * graph sparse (see object scaladoc). Cached, never unpersisted:
-    * the returned plans reference it from several joins deep, so
-    * dropping the blocks would force the 4-way join to re-run per
-    * reference when the caller finally executes. <= 625 rows — the
-    * session keeps it (one copy per (session, sfDir) via [[edgeMemo]],
-    * evicted when the session's context ends).
+  /** The directed trade edges: [[tradeEdgesWeighted]] without the
+    * weight, a projection of the same cached frame, so the unweighted
+    * and weighted graph queries share one derivation per session.
     */
   private[graft] def tradeEdges(spark: SparkSession, sfDir: String): DataFrame =
-    memoEdges(spark, sfDir, weighted = false)(deriveTradeEdges(spark, sfDir))
+    tradeEdgesWeighted(spark, sfDir).select("src", "dst")
 
   /** Spec access to the directed edge list (bounded ≤625 rows) so
     * brute-force graph recomputes pin the SAME derivation the
@@ -161,58 +157,38 @@ object GraphQueries {
     tradeEdges(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
 
-  private def deriveTradeEdges(spark: SparkSession, sfDir: String): DataFrame = {
-    val orders = table(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"))
-    val cust = table(spark, sfDir, "customer")
-      .select(col("c_custkey"), col("c_nationkey").cast("long").as("src"))
-    val li = table(spark, sfDir, "lineitem")
-      .select(col("l_orderkey"), col("l_suppkey"))
-    val supp = table(spark, sfDir, "supplier")
-      .select(col("s_suppkey"), col("s_nationkey").cast("long").as("dst"))
-
-    val counted = li
-      .join(orders, li("l_orderkey") === orders("o_orderkey"))
-      .join(broadcast(cust), orders("o_custkey") === cust("c_custkey"))
-      .join(broadcast(supp), li("l_suppkey") === supp("s_suppkey"))
-      .groupBy("src", "dst").agg(count(lit(1)).as("cnt"))
-    // total via a 1-row cross join: never collected to the driver
-    val total = counted.agg(sum("cnt").as("tot"))
-    counted.crossJoin(broadcast(total))
-      .where(col("cnt") * 550 >= col("tot"))
-      .select("src", "dst")
-      .cache()
-  }
-
-  /** [[tradeEdges]] with the trade count kept as the edge WEIGHT —
-    * same derivation, same threshold, for the weighted-propagation
-    * operators. Cached for the same multi-reference reason, memoized
-    * per (session, sfDir) like the unweighted variant.
+  /** Shared edge derivation: line-level trade rolled up to
+    * (customer_nation → supplier_nation) with the trade count kept as
+    * the edge WEIGHT, thresholded to keep the graph sparse (see object
+    * scaladoc). Cached, never unpersisted: the returned plans reference
+    * it from several joins deep, so dropping the blocks would force the
+    * 4-way join to re-run per reference when the caller finally
+    * executes. <= 625 rows — the session keeps it (one copy per
+    * (session, sfDir) via [[edgeMemo]], evicted when the session's
+    * context ends).
     */
-  private def tradeEdgesWeighted(spark: SparkSession, sfDir: String): DataFrame =
-    memoEdges(spark, sfDir, weighted = true)(
-      deriveTradeEdgesWeighted(spark, sfDir))
-
-  private def deriveTradeEdgesWeighted(spark: SparkSession, sfDir: String): DataFrame = {
-    val orders = table(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"))
-    val cust = table(spark, sfDir, "customer")
-      .select(col("c_custkey"), col("c_nationkey").cast("long").as("src"))
-    val li = table(spark, sfDir, "lineitem")
-      .select(col("l_orderkey"), col("l_suppkey"))
-    val supp = table(spark, sfDir, "supplier")
-      .select(col("s_suppkey"), col("s_nationkey").cast("long").as("dst"))
-    val counted = li
-      .join(orders, li("l_orderkey") === orders("o_orderkey"))
-      .join(broadcast(cust), orders("o_custkey") === cust("c_custkey"))
-      .join(broadcast(supp), li("l_suppkey") === supp("s_suppkey"))
-      .groupBy("src", "dst").agg(count(lit(1)).as("cnt"))
-    val total = counted.agg(sum("cnt").as("tot"))
-    counted.crossJoin(broadcast(total))
-      .where(col("cnt") * 550 >= col("tot"))
-      .select("src", "dst", "cnt")
-      .cache()
-  }
+  private[graft] def tradeEdgesWeighted(spark: SparkSession, sfDir: String): DataFrame =
+    memoEdges(spark, sfDir) {
+      val orders = table(spark, sfDir, "orders")
+        .select(col("o_orderkey"), col("o_custkey"))
+      val cust = table(spark, sfDir, "customer")
+        .select(col("c_custkey"), col("c_nationkey").cast("long").as("src"))
+      val li = table(spark, sfDir, "lineitem")
+        .select(col("l_orderkey"), col("l_suppkey"))
+      val supp = table(spark, sfDir, "supplier")
+        .select(col("s_suppkey"), col("s_nationkey").cast("long").as("dst"))
+      val counted = li
+        .join(orders, li("l_orderkey") === orders("o_orderkey"))
+        .join(broadcast(cust), orders("o_custkey") === cust("c_custkey"))
+        .join(broadcast(supp), li("l_suppkey") === supp("s_suppkey"))
+        .groupBy("src", "dst").agg(count(lit(1)).as("cnt"))
+      // total via a 1-row cross join: never collected to the driver
+      val total = counted.agg(sum("cnt").as("tot"))
+      counted.crossJoin(broadcast(total))
+        .where(col("cnt") * 550 >= col("tot"))
+        .select("src", "dst", "cnt")
+        .cache()
+    }
 
   /** The counted/edges CTE pair shared by every graph oracle.
     *

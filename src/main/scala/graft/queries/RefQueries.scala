@@ -23,13 +23,17 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   */
 object RefQueries {
 
+  /** The shared reader behind every query and Verify: `<sfDir>/<name>.parquet`
+    * through [[graft.sources.ParquetRead]], whose schema comes from the
+    * file's footer on the driver, so building a query starts no Spark job.
+    */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // defensively set per-session: events.parquet (and the reference's
-    // cleaned O*NET parquet) carry TIMESTAMP(NANOS), which the reader
-    // rejects without this; the conf is runtime-settable, so queries
-    // survive a harness session that didn't configure it at build time
+    // set per session before the footer is converted: events.parquet (and
+    // the reference's cleaned O*NET parquet) carry TIMESTAMP(NANOS), which
+    // the reader rejects without it; the conf is runtime-settable, so
+    // queries survive a harness session that didn't set it at build time
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = graft.sources.ParquetRead.read(spark, s"$sfDir/$name.parquet")
     // The driver has shipped events.ts as BOTH INT64 TIMESTAMP(NANOS)
     // (surfaced as a nano-long under nanosAsLong — rounds 1-8) and plain
     // timestamp[us] (surfaced as TIMESTAMP_NTZ — round 9 regeneration).

@@ -567,7 +567,7 @@ object SimilarityQueries {
     // the shared JVM-exit hook — the index must not leak per process
     val indexDir = SourceQueries.stagingDir("minhash-index")
     MinHashDedup.bandIndex(prior).write.mode("overwrite").parquet(indexDir)
-    val index = spark.read.parquet(indexDir)
+    val index = graft.sources.ParquetRead.read(spark, indexDir)
     MinHashDedup.incrementalNearDupPairs(batch, index, prior, threshold = 0.7)
       .orderBy("d1", "d2")
   }

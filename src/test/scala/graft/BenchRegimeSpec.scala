@@ -47,4 +47,24 @@ class BenchRegimeSpec extends AnyFunSuite {
     assert(Bench.resolveCpus(-4, explicit = true) == (1, -4))
     assert(Bench.resolveCpus(0, explicit = false) == (1, 0))
   }
+
+  test("both stdout lines end with the regime fields, then calib_sec " +
+      "and parity_sec last") {
+    assert(Bench.lineTail(16, 16, 0.08, 5.5) ==
+      """"cpus":16,"cpus_requested":16,"physical_cores":16,""" +
+      """"oversubscribed":false,"calib_sec":0.08,"parity_sec":5.5}""")
+    assert(Bench.lineTail(32, 32, 0.15, 6.0) ==
+      """"cpus":32,"cpus_requested":32,"physical_cores":16,""" +
+      """"oversubscribed":true,"calib_sec":0.15,"parity_sec":6.0}""")
+    // the regime is the RESOLVED thread count: a clamped default runs
+    // at the physical cores, not oversubscribed
+    assert(Bench.lineTail(16, 32, 0.1, 5.0).contains(
+      """"physical_cores":16,"oversubscribed":false,"""))
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/Bench.scala")),
+      java.nio.charset.StandardCharsets.UTF_8)
+    val end = "${lineTail(cpus, cpusRequested, calib, parity)}\"\"\""
+    assert(src.split(java.util.regex.Pattern.quote(end), -1).length - 1 == 2,
+      "both of Bench's JSON lines must end with lineTail")
+  }
 }

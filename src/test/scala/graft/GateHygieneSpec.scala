@@ -906,4 +906,50 @@ class GateHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"fetch through graft.ops.Bounded instead: $offenders")
   }
+
+  /** Every parquet read in src/main goes through graft.sources.ParquetRead,
+    * which takes the schema from one footer on the driver; a
+    * `spark.read…parquet(` elsewhere infers it with a Spark job per read.
+    * The pattern follows option chains, so `spark.read.option(…).parquet(`
+    * counts too. The ledger names, by file and enclosing def, the reads
+    * that need Spark's own inference, each with its reason.
+    */
+  private val inferringParquetReadExempt = Map(
+    ("SourceQueries.scala", "sourcePartitionPruning") -> "reads back a Hive day= layout: needs partition discovery",
+    ("SourceQueries.scala", "sourceMergeSchema") -> "mergeSchema unions every file's footer, which one footer cannot give")
+
+  test("a parquet read occurs in src/main only in ParquetRead.scala") {
+    val read = """\.read(?:\s*\.\w+\((?:[^()]|\([^()]*\))*\))*\s*\.parquet\(""".r
+    assert(read.findFirstIn("spark.read.parquet(p)").isDefined &&
+      read.findFirstIn("spark.read.option(\"mergeSchema\", \"true\")\n  .parquet(a, b)").isDefined &&
+      read.findFirstIn("spark.readStream.schema(s).parquet(dir)").isEmpty &&
+      read.findFirstIn("spark.read.schema(s).csv(dir)").isEmpty &&
+      read.findFirstIn("df.write.mode(\"overwrite\").parquet(dir)").isEmpty,
+      "the read pattern no longer matches its own spellings")
+    val root = Paths.get("src", "main", "scala")
+    assert(Files.isDirectory(root),
+      s"$root missing — run sbt test from the repo root")
+    val defName = """\bdef\s+(\w+)""".r
+    val s = Files.walk(root)
+    val sites =
+      try s.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          p.getFileName.toString != "ParquetRead.scala")
+        .flatMap { p =>
+          val text = repoText(p)
+          read.findAllMatchIn(text).map { m =>
+            val before = text.substring(0, m.start)
+            val enclosing = defName.findAllMatchIn(before).toSeq.lastOption
+              .map(_.group(1)).getOrElse("")
+            ((p.getFileName.toString, enclosing),
+              s"$p:${before.count(_ == '\n') + 1} ($enclosing)")
+          }
+        }.toSeq.sortBy(_._2)
+      finally s.close()
+    val offenders = sites.filterNot(x => inferringParquetReadExempt.contains(x._1)).map(_._2)
+    assert(offenders.isEmpty,
+      s"read parquet through graft.sources.ParquetRead instead: $offenders")
+    val stale = inferringParquetReadExempt.keySet -- sites.map(_._1)
+    assert(stale.isEmpty, s"exemption ledger names reads that are gone: $stale")
+  }
 }

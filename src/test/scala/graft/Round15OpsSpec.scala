@@ -87,8 +87,9 @@ class Round15OpsSpec extends AnyFunSuite {
     spark.catalog.clearCache()
     // warm the documented session-lifetime memo first so its own entry
     // is accounted for, then run a query whose per-query frames were
-    // migrated to localCheckpoint this round
-    val edges = graft.queries.GraphQueries.tradeEdges(spark, TestSpark.Sf0001)
+    // migrated to localCheckpoint this round (the memo holds the
+    // weighted frame; tradeEdges is a projection of it)
+    val edges = graft.queries.GraphQueries.tradeEdgesWeighted(spark, TestSpark.Sf0001)
     edges.count()
     val rows = SparkEntry.queries("graph_clustering_coeff")(
       spark, TestSpark.Sf0001).collect()
