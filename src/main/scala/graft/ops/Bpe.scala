@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.ops.Persist.PersistOps
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding subword tokenization (Sennrich, Haddow & Birch
@@ -119,15 +120,12 @@ object Bpe {
 
   /** Subword vocabulary of a learned types table: every distinct final
     * symbol, densely id'd by lexicographic rank — a bounded vocab-sized
-    * frame (|base chars| + one per learned merge at most). r21: the
-    * rank runs as the two-pass [[TwoPassWindow]] construction, not an
-    * unpartitioned window, so there is no single-partition stage at
-    * any vocab size (§2).
+    * frame (|base chars| + one per learned merge at most), so the rank
+    * is a plain window ([[TwoPassWindow]]'s size rule).
     */
   def vocab(types: DataFrame): DataFrame =
-    TwoPassWindow.withRowNumber(
-      types.select(explode(col("syms")).as("sym")).distinct(),
-      Seq(col("sym")), "id")
+    types.select(explode(col("syms")).as("sym")).distinct()
+      .withColumn("id", row_number().over(Window.orderBy("sym")).cast("long"))
 
   /** Encode documents with a learned segmentation: one row per subword
     * occurrence — (doc_id, pos, sp, sym, id) with pos the word

@@ -1,8 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.Descending
-import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -18,8 +16,8 @@ import org.apache.spark.sql.types.LongType
   * Partition Defined ... this can cause serious performance
   * degradation"), which is exactly the shape that stops scaling first
   * at 100 TB. The two-pass replacement is the classic distributed
-  * prefix construction (already proven in this repo by
-  * analyticsTheilSen's rank-median selection):
+  * prefix construction (used by analyticsTheilSen's above-bound
+  * rank-median selection):
   *
   *   1. `repartitionByRange(sortCols)` spreads the frame across range
   *      partitions in sort order; the row→partition binding is FROZEN
@@ -45,12 +43,22 @@ import org.apache.spark.sql.types.LongType
   * (scale-adaptive, guide §2.5): an explicit N marks the exchange
   * user-specified and BLOCKS AQE partition coalescing, so every
   * helper round paid shuffle.partitions-wide task waves even on a
-  * 100-row calendar histogram (measured: the fixed-width spelling
-  * slowed the tiny-frame sites 1.4–3.4× at sf0.1). Without it the
+  * 100-row frame (measured: the fixed-width spelling slowed the
+  * tiny-frame sites 1.4–3.4× at sf0.1). Without it the
   * exchange starts at `spark.sql.shuffle.partitions` and AQE
   * coalesces by size — tiny frames collapse to one or two bounded
   * tasks, fact-sized frames keep the full width; the frozen pid keeps
   * the offsets exact either way.
+  *
+  * The rule: these helpers are for frames that GROW WITH THE DATA (fact
+  * rows, per-customer rollups, a histogram whose bucket count scales
+  * with the corpus). A frame whose row count is FIXED BY CONSTRUCTION —
+  * a calendar series, a fixed-width histogram, a top-k, a categorical
+  * domain — uses Spark's plain `Window` (with `rowsBetween` where a
+  * frame is needed), exactly as its DuckDB twin spells it: the single
+  * partition then holds a few thousand rows at any scale, and the
+  * helpers' range shuffle, checkpoint and build-time offsets collect
+  * would cost more than the window they replace.
   */
 object TwoPassWindow {
   private val Pid = "__tp_pid"
@@ -80,13 +88,9 @@ object TwoPassWindow {
   private def plusOffset(off: Column, local: Column): Column =
     when(off.isNull, local).otherwise(off + coalesce(local, lit(0L)))
 
-  /** Exact global `row_number()` over a strict total order, as LONG. */
-  def withRowNumber(df: DataFrame, sortCols: Seq[Column],
-      out: String): DataFrame =
-    withRowNumberAndTotal(df, sortCols, out)._1
-
-  /** [[withRowNumber]] plus the total row count (free from the same
-    * offsets job — callers needing n avoid a second pass).
+  /** Exact global `row_number()` over a strict total order, as LONG,
+    * plus the total row count (free from the same offsets job — callers
+    * needing n avoid a second pass).
     */
   def withRowNumberAndTotal(df: DataFrame, sortCols: Seq[Column],
       out: String): (DataFrame, Long) = {
@@ -227,46 +231,5 @@ object TwoPassWindow {
       .withColumn(cum, plusOffset(col("__tp_off"), sum(value).over(w)))
       .drop((Pid +: s"${Pid}_o" +: "__tp_off" +:
         groupCols.map(c => s"${c}__o")): _*)
-  }
-
-  /** Exact `lag(value, 1)` of a LONG column over a strict total order
-    * of ASCENDING sort keys — NULL for the global first row. The
-    * cross-partition boundary is patched with each partition's
-    * predecessor's LAST value (`max_by` over the ascending key), so a
-    * descending key is rejected rather than patched wrongly.
-    */
-  def withLag1(df: DataFrame, sortCols: Seq[Column], value: Column,
-      out: String): DataFrame = {
-    val descending = df.sortWithinPartitions(sortCols: _*)
-      .queryExecution.analyzed.collectFirst { case s: Sort => s.order }
-      .getOrElse(Nil).filter(_.direction == Descending).map(_.sql)
-    require(descending.isEmpty,
-      s"withLag1 needs ascending sort keys; got ${descending.mkString(", ")}")
-    val p = pidded(df, sortCols)
-    // count(1) distinguishes "no rows in this partition" from "the
-    // last row's value is NULL" — lag(1) must surface the predecessor
-    // ROW's value even when that value is NULL, so a NULL-valued last
-    // row patches the next head with NULL (no map entry → orElse),
-    // never with a stale earlier non-null
-    val rows = p.groupBy(col(Pid))
-      .agg(count(lit(1)).as("n"), max_by(value, struct(sortCols: _*)).as("v"))
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1),
-        if (r.isNullAt(2)) None else Some(r.getLong(2))))
-      .sortBy(_._1)
-    // last = None before any row exists; Some(None) = predecessor row
-    // exists with NULL value; Some(Some(x)) = predecessor value x
-    var last: Option[Option[Long]] = None
-    val offs = rows.flatMap { case (q, n, v) =>
-      val entry = last.flatten.map(q -> _)
-      if (n > 0) last = Some(v)
-      entry
-    }
-    val w = Window.partitionBy(col(Pid)).orderBy(sortCols: _*)
-    val nullLong = lit(null).cast(LongType)
-    p.withColumn(out,
-      when(row_number().over(w) === 1, offsetExpr(offs.toSeq, nullLong))
-        .otherwise(lag(value, 1).over(w)))
-      .drop(Pid)
   }
 }

@@ -57,11 +57,11 @@ object BehaviorQueries {
     val days = byDay.select("day").distinct()
       .join(newPerDay, Seq("day"), "left")
       .withColumn("new_users", coalesce(col("new_users"), lit(0L)))
-    // r21: the running sum is calendar-bounded but was spelled as an
-    // unpartitioned window (Exchange SinglePartition); the two-pass
-    // prefix sum is the same integers with no single-task stage (§2)
-    graft.ops.TwoPassWindow.withRunningSums(days, Seq(col("day")),
-        Seq(col("new_users") -> "cum_users"))
+    // the day table is calendar-bounded (the event span), so the running
+    // sum is the twin's plain window (TwoPassWindow's size rule)
+    days.withColumn("cum_users", sum(col("new_users")).over(
+        Window.orderBy("day")
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .orderBy("day")
   }
 
@@ -626,13 +626,7 @@ object BehaviorQueries {
     * map-side-combined aggregate: the canonical clickstream shape.
     */
   def analyticsMarkov(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    val pairs = eventsUs(spark, sfDir)
-      .select(col("user_id"), col("us"), col("event_id"), col("event_type"))
-      .withColumn("next_type", lead(col("event_type"), 1).over(w))
-      .where(col("next_type").isNotNull)
-      .groupBy(col("event_type").as("from_type"), col("next_type").as("to_type"))
-      .agg(count(lit(1)).as("n"))
+    val pairs = transitionCounts(spark, sfDir)
     val totals = pairs.groupBy("from_type").agg(sum("n").as("n_from"))
     pairs.join(broadcast(totals), "from_type")
       .select(col("from_type"), col("to_type"), col("n"),
@@ -640,7 +634,27 @@ object BehaviorQueries {
       .orderBy("from_type", "to_type")
   }
 
+  /** (from_type, to_type, n): each user's consecutive event-type pairs
+    * counted per cell — the chain both [[analyticsMarkov]] and
+    * [[analyticsMarkovStationary]] read.
+    */
+  private def transitionCounts(spark: SparkSession, sfDir: String): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy("us", "event_id")
+    eventsUs(spark, sfDir)
+      .select(col("user_id"), col("us"), col("event_id"), col("event_type"))
+      .withColumn("next_type", lead(col("event_type"), 1).over(w))
+      .where(col("next_type").isNotNull)
+      .groupBy(col("event_type").as("from_type"), col("next_type").as("to_type"))
+      .agg(count(lit(1)).as("n"))
+  }
+
   private val StationaryRounds = 6
+
+  /** The most transition cells [[analyticsMarkovStationary]] fetches to
+    * the driver: the chain is |event types|² cells (25 on every corpus
+    * here), so more than this is a broken categorical domain.
+    */
+  private val StationaryCellBound = 100000L
 
   /** `analytics_markov_stationary` — the stationary distribution of
     * [[analyticsMarkov]]'s event-type chain by fixed-round power
@@ -653,42 +667,37 @@ object BehaviorQueries {
     * gate is exact; the ≤ n_states ppm mass leak per round is the
     * documented price of integer determinism.
     *
-    * Scale: the chain is O(event types)² — everything after the one
-    * fact-table lead-window pass is dimension-sized.
+    * Scale: the chain is O(event types)² — after the one fact-table
+    * lead-window pass, the cell counts are fetched once under
+    * [[StationaryCellBound]], and the ppm matrix and the rounds run on
+    * the driver in `Long` arithmetic: `multiplyExact`/`addExact` keep
+    * ANSI's loud overflow, and the floor DIVs are the twin's (every
+    * operand is non-negative). A NULL from-type drops out, as in the
+    * twin's equi-join with the totals.
     */
   def analyticsMarkovStationary(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    val pairs = eventsUs(spark, sfDir)
-      .select(col("user_id"), col("us"), col("event_id"), col("event_type"))
-      .withColumn("next_type", lead(col("event_type"), 1).over(w))
-      .where(col("next_type").isNotNull)
-      .groupBy(col("event_type").as("from_type"), col("next_type").as("to_type"))
-      .agg(count(lit(1)).as("n"))
-    val totals = pairs.groupBy("from_type").agg(sum("n").as("n_from"))
-    val trans = pairs.join(broadcast(totals), "from_type")
-      .select(col("from_type"), col("to_type"),
-        expr("n * 1000000L div n_from").as("p_ppm"))
-      .truncateLineage(true)
-    val states = trans.select(col("from_type").as("state"))
-      .unionByName(trans.select(col("to_type").as("state")))
-      .distinct().truncateLineage(true)
-    val k = states.agg(count(lit(1)).as("k"))
-    var pi = states.crossJoin(broadcast(k))
-      .select(col("state"), expr("1000000L div k").as("pi_ppm"))
-      .truncateLineage(true)
+    val cells = graft.ops.Bounded.rows(transitionCounts(spark, sfDir),
+        StationaryCellBound, "analytics_markov_stationary transitions")
+      .filter(!_.isNullAt(0))
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    val nFrom = cells.groupMapReduce(_._1)(_._3)(math.addExact)
+    val trans = cells.map { case (f, t, n) =>
+      (f, t, math.multiplyExact(n, 1000000L) / nFrom(f)) }
+    val states = (trans.map(_._1) ++ trans.map(_._2)).distinct
+    var pi = states.map(_ -> 1000000L / states.length).toMap
     for (_ <- 1 to StationaryRounds) {
-      val next = trans
-        .join(broadcast(pi.select(col("state").as("from_type"),
-          col("pi_ppm").as("p_in"))), "from_type")
-        .groupBy(col("to_type").as("state"))
-        .agg(expr("CAST(sum(p_in * p_ppm) div 1000000L AS BIGINT)").as("s"))
-      val updated = states.join(next, Seq("state"), "left")
-        .select(col("state"), coalesce(col("s"), lit(0L)).as("pi_ppm"))
-        .truncateLineage(true)
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(pi)
-      pi = updated
+      val s = trans.groupMapReduce(_._2)(t => math.multiplyExact(pi(t._1), t._3))(
+        math.addExact)
+      pi = states.map(j => j -> s.get(j).fold(0L)(_ / 1000000L)).toMap
     }
-    pi.select(col("state").as("event_type"), col("pi_ppm"))
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(
+      states.map(j => org.apache.spark.sql.Row(j, pi(j))).toList.asJava,
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("event_type",
+          org.apache.spark.sql.types.StringType, nullable = true),
+        org.apache.spark.sql.types.StructField("pi_ppm",
+          org.apache.spark.sql.types.LongType, nullable = false))))
       .orderBy("event_type")
   }
 

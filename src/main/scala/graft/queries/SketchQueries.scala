@@ -219,16 +219,18 @@ object SketchQueries {
     * the exact column.
     */
   def olapQuantileSketch(spark: SparkSession, sfDir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     val prices = table(spark, sfDir, "orders").select(col("o_totalprice"))
     val hist = prices
       .select(floor(col("o_totalprice") / 500).cast("long").as("b"))
       .groupBy("b").agg(count(lit(1)).as("c"))
-    // r21: the cumulative bucket walk ran as an unpartitioned window;
-    // the two-pass prefix sum is the same integers with no
-    // single-partition stage at any histogram size (§2)
-    val cum = graft.ops.TwoPassWindow.withRunningSums(hist, Seq(col("b")),
-      Seq(col("c") -> "cum"))
+    // the fixed-width histogram has at most range/width buckets, so the
+    // cumulative walk is the twin's plain window (TwoPassWindow's size
+    // rule)
+    val cum = hist.withColumn("cum", sum(col("c")).over(
+      Window.orderBy("b")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     val n = prices.agg(count(lit(1)).as("n"))
     val sel = Seq(50L, 90L, 99L).toDF("pctl")
       .crossJoin(broadcast(n))

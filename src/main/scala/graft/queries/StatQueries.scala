@@ -1658,6 +1658,7 @@ object StatQueries {
     * observation span in days), never over users.
     */
   def analyticsSurvival(spark: SparkSession, sfDir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val perUser = table(spark, sfDir, "events")
       .groupBy("user_id")
       .agg(
@@ -1672,13 +1673,14 @@ object StatQueries {
     val byDur = perUser.groupBy("dur")
       .agg(sum(col("ev")).as("d"), count(lit(1)).as("leaving"))
       .persistIntermediate // scanned by the prefix sum AND the total
-    // r21: the exclusive "already gone" prefix ran as an unpartitioned
-    // window; spelled as the two-pass INCLUSIVE running sum minus the
-    // row's own count — identical integers (first row: leaving −
-    // leaving = 0, exactly the old coalesce), no single-task stage (§2)
-    val steps = graft.ops.TwoPassWindow
-      .withRunningSums(byDur, Seq(col("dur")),
-        Seq(col("leaving") -> "cum_leaving"))
+    // the exclusive "already gone" prefix is the INCLUSIVE running sum
+    // minus the row's own count (first row: leaving − leaving = 0), over
+    // O(distinct durations) rows — the observation span in days, so a
+    // plain window (TwoPassWindow's size rule)
+    val steps = byDur
+      .withColumn("cum_leaving", sum(col("leaving")).over(
+        Window.orderBy("dur")
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .crossJoin(broadcast(byDur.agg(sum(col("leaving")).as("total"))))
       .withColumn("gone", col("cum_leaving") - col("leaving"))
       .select(col("dur").as("t"), col("d"),
@@ -1986,23 +1988,12 @@ object StatQueries {
         (col("l_extendedprice").cast(DecimalType(18, 2)) * 100).cast("long")
           .as("cents"))
       .groupBy("day").agg(sum("cents").as("rev_c"))
-    // r21: the centered 7-row window ran unpartitioned (whole series
-    // through ONE task). Equivalent shuffle-agg spelling: with the
-    // two-pass global row index rn, row r's ROWS(-3,3) frame is exactly
-    // the source rows whose index lands in [r−3, r+3] — so each source
-    // row CONTRIBUTES to targets rn−3..rn+3 (a 7-element sequence
-    // explode), one tiny groupBy collects count/sum per target, and the
-    // inner join back drops the out-of-range targets. Same integers,
-    // no single-partition stage (§2).
-    val rnd = graft.ops.TwoPassWindow
-      .withRowNumber(daily, Seq(col("day")), "rn")
-      .persistIntermediate // scanned by the contributions AND the re-attach
-    val win = rnd
-      .select(explode(sequence(col("rn") - 3, col("rn") + 3)).as("rn"),
-        col("rev_c"))
-      .groupBy("rn")
-      .agg(count(lit(1)).as("n7"), sum("rev_c").as("s7"))
-    val trended = rnd.join(win, "rn")
+    // the series is calendar-bounded, so the centered 7-row frame is the
+    // twin's plain window (TwoPassWindow's size rule)
+    val w7 = Window.orderBy("day").rowsBetween(-3, 3)
+    val trended = daily
+      .withColumn("n7", count(lit(1)).over(w7))
+      .withColumn("s7", sum("rev_c").over(w7))
       .withColumn("trend_c", when(col("n7") === 7, expr("s7 DIV 7")))
       .withColumn("det_c", col("rev_c") - col("trend_c"))
       .withColumn("weekday", expr("(day + 4) % 7"))
@@ -2309,21 +2300,20 @@ object StatQueries {
     * Scale: the daily rollup is one partial+final hash aggregate over
     * the fact table; the series is calendar-bounded (O(days), not
     * O(rows)), so the lag self-join and per-lag aggregate run on a
-    * dimension-sized frame; all four lags share one checkpointed series.
+    * dimension-sized frame; all four lags share one persisted series.
     */
   def analyticsAutocorr(spark: SparkSession, sfDir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val daily0 = table(spark, sfDir, "lineitem")
       .select(col("l_shipdate").as("day"),
         (col("l_extendedprice").cast(DecimalType(18, 2)) * 100).cast("long")
           .as("cents"))
       .groupBy("day").agg(expr("sum(cents) DIV 100000L").as("rev"))
-    // r21: the series index ran as an unpartitioned row_number window;
-    // the two-pass rank is the same values with no single-task stage
-    // (§2). rn widens int→long — an internal join key only, not output.
-    val daily = graft.ops.TwoPassWindow
-      .withRowNumber(daily0, Seq(col("day")), "rn")
-      .select("rn", "rev")
-      .truncateLineage(true)
+    // the series index over the calendar-bounded rollup is the twin's
+    // plain row_number window (TwoPassWindow's size rule)
+    val daily = daily0
+      .select(row_number().over(Window.orderBy("day")).as("rn"), col("rev"))
+      .persistIntermediate // scanned by every lag's two join sides
     val lagged = AcfLags.map { k =>
       val x = daily.select(col("rn"), col("rev").as("x"))
       val y = daily.select((col("rn") - k).as("rn"), col("rev").as("y"))
@@ -2489,45 +2479,41 @@ object StatQueries {
           .as("yc"))
       .groupBy("g", "day")
       .agg(sum("xc").as("x"), sum("yc").as("y"))
-      .truncateLineage(true)
     // r20 calendar-bounded fast path (the theil_sen doctrine): the
     // concordance counts need Ω(days²) pair comparisons, but over the
     // CALENDAR-bounded daily rollup — ~8.7e6 pairs at 7 TPC-H years,
     // invariant under row-count scale-up. The distributed spelling
     // expanded ~17e6 join rows through a 3-key hash aggregate to get
     // them; below the bound (measured BEFORE anything quadratic runs,
-    // from the already-materialized daily frame) the O(days) rollup is
-    // collected instead and the pairs counted locally — pure integer
-    // sign comparisons (no arithmetic that can overflow; the one local
-    // multiply under the sqrt keeps the ANSI loud-overflow contract
-    // via multiplyExact), so the counts and the final fixed double op
-    // sequence are bit-identical to the Catalyst spelling. Same-window
-    // A/B at sf0.1/16 cpus: 2.29 → 1.48 s. The distributed spelling
-    // stays, unchanged, above the bound.
-    val gCountsAll = daily.groupBy("g").agg(count(lit(1)).as("n_days"))
-      .collect().map(r =>
-        ((if (r.isNullAt(0)) null else r.getString(0)), r.getLong(1)))
-    // r21 (advice): the distributed spelling's inner pair-join emits NO
-    // row for a single-day group (zero d1<d2 pairs) or a NULL key (an
-    // equi-join never matches null), so the fast path must omit them
-    // too — the branches otherwise return different row sets on inputs
-    // no test SF has (the agreement pin runs on pairs-bearing groups).
-    val gCounts = gCountsAll
-      .filter { case (g, n) => g != null && n >= 2 }.sortBy(_._1)
-    val totalPairs = gCounts.map { case (_, n) => n * (n - 1) / 2 }.sum
-    // bound the COLLECT as well as the pair count (advice): the pair
-    // bound alone admits unboundedly many small groups — 3e7 pairs can
-    // hide 1e9 one-day rows that would all land on the driver.
-    val totalRows = gCountsAll.map(_._2).sum
-    if (totalPairs <= 30000000L && totalRows <= 1000000L) {
-      val dr = daily.collect()
+    // on the fetched rollup) the pairs are counted locally — pure
+    // integer sign comparisons (no arithmetic that can overflow; the
+    // one local multiply under the sqrt keeps the ANSI loud-overflow
+    // contract via multiplyExact), so the counts and the final fixed
+    // double op sequence are bit-identical to the Catalyst spelling.
+    // Same-window A/B at sf0.1/16 cpus: 2.29 → 1.48 s. The distributed
+    // spelling stays, unchanged, above the bound.
+    //
+    // ONE bounded fetch of at most 1e6 rollup rows both carries the
+    // data and bounds the COLLECT as well as the pair count (advice):
+    // the pair bound alone admits unboundedly many small groups — 3e7
+    // pairs can hide 1e9 one-day rows. The checkpoint belongs to the
+    // distributed spelling, which scans the rollup three times.
+    val local = graft.ops.Bounded.rowsAtMost(daily, 1000000L).flatMap { dr =>
+      // r21 (advice): the distributed spelling's inner pair-join emits
+      // NO row for a single-day group (zero d1<d2 pairs) or a NULL key
+      // (an equi-join never matches null), so the fast path must omit
+      // them too — the branches otherwise return different row sets on
+      // inputs no test SF has (the agreement pin runs on pairs-bearing
+      // groups).
+      val groups = dr.filter(!_.isNullAt(0)).groupBy(_.getString(0))
+        .filter(_._2.length >= 2).toArray.sortBy(_._1)
+      val totalPairs = groups.map { case (_, rows) =>
+        rows.length.toLong * (rows.length - 1) / 2 }.sum
       // null x/y sums need the distributed spelling's SQL three-valued
       // comparisons — don't re-implement them locally, just defer
-      if (dr.exists(r => r.isNullAt(2) || r.isNullAt(3)))
-        return kendallTauDistributed(daily)
-      val byG = dr.filter(r => !r.isNullAt(0)).groupBy(_.getString(0))
-      val out = gCounts.map { case (g, nd) =>
-        val rows = byG.getOrElse(g, Array.empty[org.apache.spark.sql.Row])
+      if (totalPairs > 30000000L ||
+          dr.exists(r => r.isNullAt(2) || r.isNullAt(3))) None
+      else Some(groups.map { case (g, rows) =>
         val xs = rows.map(_.getLong(2))
         val ys = rows.map(_.getLong(3))
         var n0 = 0L; var nc = 0L; var ndis = 0L; var tx = 0L; var ty = 0L
@@ -2548,23 +2534,26 @@ object StatQueries {
         }
         val tauB = (nc - ndis).toDouble /
           math.sqrt(math.multiplyExact(n0 - tx, n0 - ty).toDouble)
-        org.apache.spark.sql.Row(g, nd, nc, ndis, tauB)
-      }
-      import scala.jdk.CollectionConverters._
-      return spark.createDataFrame(out.toList.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("returnflag",
-            org.apache.spark.sql.types.StringType, nullable = true),
-          org.apache.spark.sql.types.StructField("n_days",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("nc",
-            org.apache.spark.sql.types.LongType, nullable = true),
-          org.apache.spark.sql.types.StructField("nd",
-            org.apache.spark.sql.types.LongType, nullable = true),
-          org.apache.spark.sql.types.StructField("tau_b",
-            org.apache.spark.sql.types.DoubleType, nullable = true))))
+        org.apache.spark.sql.Row(g, rows.length.toLong, nc, ndis, tauB)
+      })
     }
-    kendallTauDistributed(daily)
+    local match {
+      case Some(out) =>
+        import scala.jdk.CollectionConverters._
+        spark.createDataFrame(out.toList.asJava,
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("returnflag",
+              org.apache.spark.sql.types.StringType, nullable = true),
+            org.apache.spark.sql.types.StructField("n_days",
+              org.apache.spark.sql.types.LongType, nullable = false),
+            org.apache.spark.sql.types.StructField("nc",
+              org.apache.spark.sql.types.LongType, nullable = true),
+            org.apache.spark.sql.types.StructField("nd",
+              org.apache.spark.sql.types.LongType, nullable = true),
+            org.apache.spark.sql.types.StructField("tau_b",
+              org.apache.spark.sql.types.DoubleType, nullable = true))))
+      case None => kendallTauDistributed(daily.truncateLineage(true))
+    }
   }
 
   /** The distributed Kendall pair-count spelling — the branch
@@ -2649,10 +2638,10 @@ object StatQueries {
     * Scale: identical contract to [[analyticsKendallTau]] — Ω(days²)
     * pairs over the CALENDAR-bounded daily aggregate (~2.9e6 pairs at
     * 7 years, invariant under row-count scale-up), after one hash
-    * aggregate over the fact table. The exact median runs as a
-    * DISTRIBUTED rank selection (range partition + parallel local
-    * sorts + an O(partitions) offset collect), never a single-reducer
-    * percentile buffer — see the inline note.
+    * aggregate over the fact table. Up to 2828 days the median is
+    * taken on the driver; above that it runs as a DISTRIBUTED rank
+    * selection ([[theilSenMedian]]), never a single-reducer percentile
+    * buffer.
     */
   def analyticsTheilSen(spark: SparkSession, sfDir: String): DataFrame = {
     val daily = table(spark, sfDir, "lineitem")
@@ -2662,10 +2651,81 @@ object StatQueries {
         (col("l_extendedprice").cast(DecimalType(18, 2)) * 100)
           .cast(LongType).as("cents"))
       .groupBy("d").agg(sum("cents").as("rev"))
-      .truncateLineage(true)
+    // driver-local fast path: the slope multiset is CALENDAR-bounded —
+    // nDays·(nDays−1)/2 pairs regardless of row count (the property
+    // that makes this operator scale-invariant at 100 TB). ONE bounded
+    // fetch of at most 2828 days (the largest n with n(n−1)/2 ≤ 4e6
+    // pairs) decides the path before anything quadratic runs and
+    // carries the data. Below it, a local sort replaces the range-
+    // shuffle rank selection (the distributed spelling stays,
+    // unchanged, above the bound).
+    graft.ops.Bounded.rowsAtMost(daily, 2828L) match {
+      case Some(dr) =>
+        // the O(days) rollup is ~400× smaller than the pair frame, so
+        // the pairs are expanded here: the slope is the same three IEEE
+        // ops (exact long subtraction → one multiply by the exactly-
+        // representable 1e6 → one divide → floor), bit-identical to
+        // the Catalyst spelling at every magnitude, and the loud-
+        // overflow contract is kept (subtractExact replaces the ANSI
+        // long subtraction; an explicit range check replaces the ANSI
+        // double→long cast error). Same-window A/B at sf0.1/16 cpus:
+        // 2.57 → 1.26 s.
+        val ds = dr.map(_.getLong(0))
+        val rs = dr.map(_.getLong(1))
+        val arr = new Array[Long](ds.length * (ds.length - 1) / 2)
+        var k = 0
+        var i = 0
+        while (i < ds.length) {
+          var j = i + 1
+          while (j < ds.length) {
+            val s = math.floor(
+              math.subtractExact(rs(j), rs(i)).toDouble * 1000000.0d /
+                (ds(j) - ds(i)).toDouble)
+            if (s < -9.223372036854776e18d || s >= 9.223372036854776e18d)
+              throw new ArithmeticException(
+                s"slope_sc overflow: $s — rescale the slope unit")
+            arr(k) = s.toLong
+            k += 1
+            j += 1
+          }
+          i += 1
+        }
+        java.util.Arrays.sort(arr)
+        val n = arr.length.toLong
+        val median: java.lang.Double =
+          if (n == 0) null
+          else {
+            val lo = arr(((n + 1) / 2 - 1).toInt)
+            val hi = arr((n / 2).toInt)
+            // addExact, not `+` (advice): the distributed spelling's ANSI
+            // long addition throws on overflow near ±2^63 — plain Scala
+            // `+` would wrap silently and break the loud-overflow contract
+            math.addExact(lo, hi).toDouble / 2.0d
+          }
+        import scala.jdk.CollectionConverters._
+        spark.createDataFrame(
+          List(org.apache.spark.sql.Row(n, median)).asJava,
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("n_pairs",
+              org.apache.spark.sql.types.LongType, nullable = false),
+            org.apache.spark.sql.types.StructField("median_slope_sc",
+              org.apache.spark.sql.types.DoubleType, nullable = true))))
+      case None =>
+        // materialized once each: both pair sides scan the rollup, and
+        // the range partitioner's sampling pass and the shuffle itself
+        // would otherwise EACH re-run the pair join
+        theilSenMedian(
+          theilSenSlopes(daily.truncateLineage(true)).truncateLineage(true))
+    }
+  }
+
+  /** Theil–Sen's scaled integer slope `slope_sc` for every day pair
+    * d1 < d2 of a (d, rev) daily rollup — the above-bound pair frame.
+    */
+  private[graft] def theilSenSlopes(daily: DataFrame): DataFrame = {
     val a = daily.select(col("d").as("d1"), col("rev").as("r1"))
     val b = daily.select(col("d").as("d2"), col("rev").as("r2"))
-    val slopes0 = a.crossJoin(b).where(col("d1") < col("d2"))
+    a.crossJoin(b).where(col("d1") < col("d2"))
       // the INTERMEDIATE ×10⁶ runs on the DOUBLE route (overflow-free
       // per the float exemption in GateHygieneSpec): Δrev is a safe
       // LONG subtraction, its →double cast is correctly rounded, and
@@ -2693,107 +2753,29 @@ object StatQueries {
         (col("r2") - col("r1")).cast(DoubleType) * lit(1000000.0d) /
           (col("d2") - col("d1")).cast(DoubleType)).cast(LongType)
         .as("slope_sc"))
-    // driver-local fast path: the slope multiset is CALENDAR-bounded —
-    // nDays·(nDays−1)/2 pairs regardless of row count (the property
-    // that makes this operator scale-invariant at 100 TB), and nDays is
-    // known from the checkpointed daily rollup, so the bound is
-    // measured before anything quadratic runs. Below it, one collect +
-    // local sort replaces the range-shuffle rank selection (the
-    // distributed spelling stays, unchanged, above the bound).
-    val nDays = daily.count()
-    if (nDays * (nDays - 1) / 2 <= 4000000L) {
-      // r20: below the bound the pairs were previously expanded
-      // DISTRIBUTED — a ~2.9e6-row crossJoin shuffled and collected
-      // (~23 MB) only to be sorted on the driver anyway. Collect the
-      // O(days) daily rollup instead (a 400× smaller transfer) and
-      // expand the pairs locally: the slope is the same three IEEE ops
-      // (exact long subtraction → one multiply by the exactly-
-      // representable 1e6 → one divide → floor), bit-identical to the
-      // Catalyst spelling at every magnitude, and the loud-overflow
-      // contract is kept (subtractExact replaces the ANSI long
-      // subtraction; an explicit range check replaces the ANSI
-      // double→long cast error). Same-window A/B at sf0.1/16 cpus:
-      // 2.57 → 1.26 s.
-      val dr = daily.collect()
-      val ds = dr.map(_.getLong(0))
-      val rs = dr.map(_.getLong(1))
-      val arr = new Array[Long]((nDays * (nDays - 1) / 2).toInt)
-      var k = 0
-      var i = 0
-      while (i < ds.length) {
-        var j = i + 1
-        while (j < ds.length) {
-          val s = math.floor(
-            math.subtractExact(rs(j), rs(i)).toDouble * 1000000.0d /
-              (ds(j) - ds(i)).toDouble)
-          if (s < -9.223372036854776e18d || s >= 9.223372036854776e18d)
-            throw new ArithmeticException(
-              s"slope_sc overflow: $s — rescale the slope unit")
-          arr(k) = s.toLong
-          k += 1
-          j += 1
-        }
-        i += 1
-      }
-      java.util.Arrays.sort(arr)
-      val n = arr.length.toLong
-      val median: java.lang.Double =
-        if (n == 0) null
-        else {
-          val lo = arr(((n + 1) / 2 - 1).toInt)
-          val hi = arr((n / 2).toInt)
-          // addExact, not `+` (advice): the distributed spelling's ANSI
-          // long addition throws on overflow near ±2^63 — plain Scala
-          // `+` would wrap silently and break the loud-overflow contract
-          math.addExact(lo, hi).toDouble / 2.0d
-        }
-      import scala.jdk.CollectionConverters._
-      return spark.createDataFrame(
-        List(org.apache.spark.sql.Row(n, median)).asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("n_pairs",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("median_slope_sc",
-            org.apache.spark.sql.types.DoubleType, nullable = true))))
-    }
-    // materialized once: the range partitioner's sampling pass and
-    // the shuffle itself would otherwise EACH re-run the pair join
-    val slopes = slopes0.truncateLineage(true)
-    // Exact DISTRIBUTED median via rank-based selection: a plain
-    // percentile aggregate funnels every pair slope into ONE reducer's
-    // sort buffer (measured 10.7 s on the 2.9e6-pair frame — the whole
-    // query's cost); here the frame is range-partitioned and sorted IN
-    // PARALLEL, per-partition counts (one bounded O(partitions) collect)
-    // turn local row_numbers into global ranks, and the two middle
-    // order statistics come back from whichever partitions own them.
-    // The middle-pair mean (a+b)/2 over exact integer doubles is
-    // bit-identical to the oracle median()'s interpolation.
-    import org.apache.spark.sql.expressions.Window
-    val parts = 32
-    val ranked = slopes
-      .repartitionByRange(parts, col("slope_sc"))
-      .withColumn("pid", spark_partition_id())
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("pid").orderBy("slope_sc")))
-      .truncateLineage(true)
-    val counts = ranked.groupBy("pid").count().collect()
-      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets = counts.scanLeft(0L)(_ + _._2).init
-    val offByPid = counts.map(_._1).zip(offsets).toMap
-    val n = counts.map(_._2).sum
+  }
+
+  /** Exact DISTRIBUTED median of `slopes.slope_sc` as (n_pairs,
+    * median_slope_sc) via rank selection: a plain percentile aggregate
+    * funnels every pair slope into ONE reducer's sort buffer (measured
+    * 10.7 s on the 2.9e6-pair frame — the whole query's cost); here the
+    * global ranks come from [[graft.ops.TwoPassWindow]]'s range-
+    * partitioned row number, and the two middle order statistics come
+    * back from whichever partitions own them. Tied slopes may trade
+    * ranks, but tied ranks hold the same value, so the middle pair is
+    * exact. Its mean (a+b)/2 over exact integer doubles is bit-identical
+    * to the oracle median()'s interpolation.
+    */
+  private[graft] def theilSenMedian(slopes: DataFrame): DataFrame = {
+    val (ranked, n) = graft.ops.TwoPassWindow
+      .withRowNumberAndTotal(slopes, Seq(col("slope_sc")), "grank")
     val kLo = (n + 1) / 2
     val kHi = n / 2 + 1
-    val offCol = coalesce(
-      element_at(
-        map(offByPid.toSeq.flatMap { case (p, o) => Seq(lit(p), lit(o)) }: _*),
-        col("pid")), lit(0L))
-    val mid = ranked
-      .withColumn("grank", offCol + col("rn"))
-      .where(col("grank") === kLo || col("grank") === kHi)
+    ranked.where(col("grank") === kLo || col("grank") === kHi)
       .agg(min("slope_sc").as("lo"), max("slope_sc").as("hi"))
-    mid.select(lit(n).as("n_pairs"),
-      ((col("lo") + col("hi")).cast(DoubleType) / lit(2.0d))
-        .as("median_slope_sc"))
+      .select(lit(n).as("n_pairs"),
+        ((col("lo") + col("hi")).cast(DoubleType) / lit(2.0d))
+          .as("median_slope_sc"))
   }
 
   val analyticsTheilSenSql: String =
@@ -2919,7 +2901,7 @@ object StatQueries {
       .withColumn("sg2n_milli",
         floor((col("s") * col("s")).cast(DoubleType) /
           col("n").cast(DoubleType) * lit(1000.0d)).cast(LongType))
-      .truncateLineage(true)
+      .persistIntermediate
     val tot = groups.agg(
       count(lit(1)).as("k"), sum("n").as("n_total"),
       sum("ss").as("ss_total"), sum("sg2n_milli").as("sg2n_milli"))
@@ -3347,20 +3329,19 @@ object StatQueries {
     * rows, and a broadcast-scalar tail rollup.
     */
   def analyticsVar(spark: SparkSession, sfDir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val daily = table(spark, sfDir, "lineitem")
       .select(col("l_shipdate").as("day"),
         (col("l_extendedprice").cast(DecimalType(18, 2)) * 100)
           .cast(LongType).as("cents"))
       .groupBy("day").agg(sum("cents").as("rev"))
-    // r21: lag(1) ran as an unpartitioned window (whole series through
-    // ONE task); the two-pass spelling patches partition heads with the
-    // predecessor partition's last value — same rows, no single-task
-    // stage (§2)
-    val deltas = graft.ops.TwoPassWindow
-      .withLag1(daily, Seq(col("day")), col("rev"), "prev")
+    // lag(1) over the calendar-bounded series is the twin's plain
+    // window (TwoPassWindow's size rule)
+    val deltas = daily
+      .withColumn("prev", lag(col("rev"), 1).over(Window.orderBy("day")))
       .where(col("prev").isNotNull)
       .select((col("rev") - col("prev")).as("delta_c"))
-      .truncateLineage(true)
+      .persistIntermediate // scanned by the percentile AND the tail
     val q = deltas.agg(
       count(lit(1)).as("n_days"),
       percentile(col("delta_c"), lit(0.05)).as("var95_c"))
@@ -3587,7 +3568,7 @@ object StatQueries {
         (col("l_extendedprice").cast(DecimalType(18, 2)) * 100)
           .cast(LongType).as("cents"))
       .groupBy("d").agg(sum("cents").as("rev"))
-      .truncateLineage(true)
+      .persistIntermediate
     val a = daily.select(col("d").as("d1"), col("rev").as("r1"))
     val b = daily.select(col("d").as("d2"), col("rev").as("r2"))
     val s = a.crossJoin(b).where(col("d1") < col("d2"))
@@ -3661,6 +3642,7 @@ object StatQueries {
     * domain (2.5e3 rows), not a row-count scan.
     */
   def analyticsChangepoint(spark: SparkSession, sfDir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val daily = table(spark, sfDir, "lineitem")
       .select(
         expr("CAST(unix_millis(CAST(l_shipdate AS TIMESTAMP)) DIV 86400000 AS BIGINT)")
@@ -3668,11 +3650,11 @@ object StatQueries {
         (col("l_extendedprice").cast(DecimalType(18, 2)) * 100)
           .cast(LongType).as("cents"))
       .groupBy("d").agg(sum("cents").as("rev"))
-    // r21: the prefix count/sum ran as an unpartitioned window; the
-    // two-pass construction is the same integers with no single-task
-    // stage (§2)
-    val cum = graft.ops.TwoPassWindow.withRunningSums(daily, Seq(col("d")),
-      Seq(lit(1L) -> "k", col("rev") -> "p"))
+    val w = Window.orderBy("d")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val cum = daily
+      .withColumn("k", count(lit(1)).over(w))
+      .withColumn("p", sum(col("rev")).over(w))
     val tot = cum.agg(max("k").as("n"), max("p").as("s"))
     val scored = cum.crossJoin(broadcast(tot))
       .where(col("k") < col("n"))

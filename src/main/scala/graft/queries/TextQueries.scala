@@ -1238,25 +1238,25 @@ object TextQueries {
     *
     * Scale: token counting is one hash-agg shuffle (map-side partial
     * combine does the heavy lifting — there are far fewer distinct
-    * tokens than occurrences). The rank window runs on the AGGREGATED
-    * token table, which is vocabulary-sized (bounded, e.g. 100 k for a
-    * real BPE vocab), never on occurrences; the vocab then broadcasts
-    * into a narrow encode join. Reassembly is one doc-keyed shuffle
-    * with in-group sort — same shape as dedup_lines.
+    * tokens than occurrences). A top-k over the AGGREGATED token table
+    * keeps the vocab, and the rank window runs on those k rows, never
+    * on occurrences; the vocab then broadcasts into a narrow encode
+    * join. Reassembly is one doc-keyed shuffle with in-group sort —
+    * same shape as dedup_lines.
     */
   def textVocabEncode(spark: SparkSession, sfDir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val vocabSize = 20
     val toks = docs(spark, sfDir)
       .select(col("doc_id"), posexplode(TextOps.tokens(col("text"))))
       .withColumnRenamed("col", "tok").withColumnRenamed("pos", "pos")
     val counts = toks.groupBy("tok").agg(count(lit(1)).as("c"))
-    // r21: the vocab rank is bounded (31 rows here) but ran as an
-    // unpartitioned window; the two-pass rank is the same ids with no
-    // single-partition stage at ANY vocab size (§2)
-    val vocab = graft.ops.TwoPassWindow
-      .withRowNumber(counts, Seq(desc("c"), asc("tok")), "id")
-      .where(col("id") <= vocabSize)
-      .select("tok", "id")
+    // the top-k comes first (TakeOrderedAndProject), so the rank is a
+    // plain window over vocabSize rows (TwoPassWindow's size rule) —
+    // the same ids as ranking the whole vocabulary and keeping id ≤ k
+    val vocab = counts.orderBy(desc("c"), asc("tok")).limit(vocabSize)
+      .select(col("tok"), row_number().over(
+        Window.orderBy(desc("c"), asc("tok"))).cast("long").as("id"))
     toks.join(broadcast(vocab), Seq("tok"), "left")
       .groupBy("doc_id")
       .agg(
@@ -2042,15 +2042,16 @@ object TextQueries {
     * quadratic anything.
     */
   def textZipfFit(spark: SparkSession, sfDir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.DoubleType
     val topTf = docs(spark, sfDir)
       .select(explode(TextOps.tokens(col("text"))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("freq"))
       .orderBy(desc("freq"), col("tok")).limit(ZipfTopN)
-    // r21: two-pass rank over the top-k frame — same ranks, no
-    // unpartitioned window stage (§2)
-    val tf = graft.ops.TwoPassWindow
-      .withRowNumber(topTf, Seq(desc("freq"), col("tok")), "rank")
+    // the rank over the top-k frame is a plain window (TwoPassWindow's
+    // size rule)
+    val tf = topTf.withColumn("rank", row_number().over(
+      Window.orderBy(desc("freq"), col("tok"))).cast("long"))
     val lg = graft.functions.IntegerLog2.log2s _
     val scaled = tf
       .select(lg(col("rank")).as("lgr"), lg(col("freq")).as("lgf"))

@@ -69,6 +69,24 @@ class Round10dOpsSpec extends AnyFunSuite {
       s"distributed $dist != fast-path $fast — the two spellings diverged")
   }
 
+  test("theil_sen above-bound median agrees with the driver path") {
+    // every test SF sits below the 2828-day bound, so the gated query
+    // always takes the driver path; this pin keeps the above-bound rank
+    // selection value-locked to it on sf0.001's daily frame
+    val sf0001 = TestSpark.Sf0001
+    val dailyDf = graft.queries.RefQueries.table(spark, sf0001, "lineitem")
+      .selectExpr(
+        "CAST(unix_millis(CAST(l_shipdate AS TIMESTAMP)) DIV 86400000 AS BIGINT) AS d",
+        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents")
+      .groupBy("d").agg(sum("cents").as("rev"))
+    val dist = graft.queries.StatQueries.theilSenMedian(
+      graft.queries.StatQueries.theilSenSlopes(dailyDf)).collect().toSeq
+    val local = graft.queries.StatQueries.analyticsTheilSen(spark, sf0001)
+      .collect().toSeq
+    assert(dist == local,
+      s"distributed $dist != driver path $local — the two spellings diverged")
+  }
+
   test("analytics_theil_sen median slope sits inside the slope range") {
     val row = graft.queries.StatQueries.analyticsTheilSen(spark, sf).collect()(0)
     val revByDay = graft.queries.RefQueries.table(spark, sf, "lineitem")

@@ -1,11 +1,9 @@
 package graft.ops
 
 import graft.TestSpark
-import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.TestSpark.withJobs
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** Pins [[Bounded]]'s fetch rule: complete at exactly `max` rows, None
   * (or a named failure) past it, no job at all for a bound of 0 or
@@ -21,30 +19,6 @@ class BoundedSpec extends AnyFunSuite {
   private def frame(n: Long): DataFrame =
     spark.range(0, n, 1, 1).toDF("id")
 
-  /** The result of `body` and the jobs launched while it ran. A marker
-    * job launched afterwards bounds the count: the listener bus
-    * delivers events in order, so once the marker's start arrives every
-    * earlier job start has too.
-    */
-  private def withJobs[T](body: => T): (T, Int) = {
-    val groups = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setJobGroup("bounded-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!groups.contains("bounded-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains("bounded-marker"), "marker job never reached the listener")
-      (out, groups.asScala.count(_ != "bounded-marker"))
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def ids(rows: Array[org.apache.spark.sql.Row]): Seq[Long] =
     rows.map(_.getLong(0)).toSeq.sorted

@@ -45,8 +45,10 @@ class TwoPassWindowSpec extends AnyFunSuite {
       val df = frame()
       val expected = df.withColumn("rn",
         row_number().over(Window.orderBy(col("v"), col("k"))).cast("long"))
-      val got = TwoPassWindow.withRowNumber(df, Seq(col("v"), col("k")), "rn")
+      val (got, n) =
+        TwoPassWindow.withRowNumberAndTotal(df, Seq(col("v"), col("k")), "rn")
       assert(sorted(got, "k").sameElements(sorted(expected, "k")))
+      assert(n == 997)
     }
   }
 
@@ -88,17 +90,6 @@ class TwoPassWindowSpec extends AnyFunSuite {
         df, Seq(col("k")), col("v"), "m")
       assert(sorted(got, "k").sameElements(sorted(expected, "k")))
       assert(got.where(col("m").isNull).count() == 1) // exactly the first row
-    }
-  }
-
-  test("withLag1 equals lag(v, 1) over the global order " +
-      "(global first row NULL)") {
-    uncoalesced {
-      val df = frame()
-      val expected = df.withColumn("p",
-        lag(col("v"), 1).over(Window.orderBy(col("k"))))
-      val got = TwoPassWindow.withLag1(df, Seq(col("k")), col("v"), "p")
-      assert(sorted(got, "k").sameElements(sorted(expected, "k")))
     }
   }
 
@@ -144,19 +135,6 @@ class TwoPassWindowSpec extends AnyFunSuite {
     }
   }
 
-  test("withLag1 surfaces a NULL predecessor value at partition heads " +
-      "(not a stale earlier non-null)") {
-    uncoalesced {
-      val df = spark.range(0, 997).select(col("id").as("k"),
-        when(col("id") % 3 === 0, lit(null).cast("long"))
-          .otherwise(col("id")).as("v"))
-      val expected = df.withColumn("p",
-        lag(col("v"), 1).over(Window.orderBy(col("k"))))
-      val got = TwoPassWindow.withLag1(df, Seq(col("k")), col("v"), "p")
-      assert(sorted(got, "k").sameElements(sorted(expected, "k")))
-    }
-  }
-
   test("withGroupedRunningSumAndTotal carries NULL values like the " +
       "group-partitioned window (all-NULL first and later partitions)") {
     // per group: a NULL head filling the group's first range
@@ -178,18 +156,6 @@ class TwoPassWindowSpec extends AnyFunSuite {
       assert(sorted(got.select(cols: _*), "k")
         .sameElements(sorted(expected.select(cols: _*), "k")))
     }
-  }
-
-  test("withLag1 rejects a descending sort key and leaves ascending " +
-      "input unchanged") {
-    val df = frame()
-    val e = intercept[IllegalArgumentException](
-      TwoPassWindow.withLag1(df, Seq(col("k").desc), col("v"), "p"))
-    assert(e.getMessage.contains("k DESC"), e.getMessage)
-    val expected = df.withColumn("p",
-      lag(col("v"), 1).over(Window.orderBy(col("k"))))
-    val got = TwoPassWindow.withLag1(df, Seq(col("k")), col("v"), "p")
-    assert(sorted(got, "k").sameElements(sorted(expected, "k")))
   }
 
   test("olap_percentile keeps a NULL l_returnflag group, as the " +
@@ -239,27 +205,24 @@ class TwoPassWindowSpec extends AnyFunSuite {
   test("empty and single-row frames survive every helper") {
     for (n <- Seq(0, 1)) {
       val df = spark.range(0, n).select(col("id").as("k"), col("id").as("v"))
-      assert(TwoPassWindow.withRowNumber(df, Seq(col("k")), "rn")
-        .count() == n)
+      assert(TwoPassWindow.withRowNumberAndTotal(df, Seq(col("k")), "rn")
+        ._1.count() == n)
       assert(TwoPassWindow.withNtile(df, 5, Seq(col("k")), "t")
         .count() == n)
       assert(TwoPassWindow.withRunningSums(df, Seq(col("k")),
         Seq(col("v") -> "c")).count() == n)
       assert(TwoPassWindow.withRunningMaxExclusive(df, Seq(col("k")),
         col("v"), "m").count() == n)
-      assert(TwoPassWindow.withLag1(df, Seq(col("k")), col("v"), "p")
-        .count() == n)
     }
   }
 
   test("no helper plan contains a single-partition window") {
     val df = frame()
     val plans = Seq(
-      TwoPassWindow.withRowNumber(df, Seq(col("v"), col("k")), "rn"),
+      TwoPassWindow.withRowNumberAndTotal(df, Seq(col("v"), col("k")), "rn")._1,
       TwoPassWindow.withNtile(df, 5, Seq(col("v"), col("k")), "t"),
       TwoPassWindow.withRunningSums(df, Seq(col("k")), Seq(col("v") -> "c")),
       TwoPassWindow.withRunningMaxExclusive(df, Seq(col("k")), col("v"), "m"),
-      TwoPassWindow.withLag1(df, Seq(col("k")), col("v"), "p"),
       TwoPassWindow.withGroupedRunningSumAndTotal(
         df.withColumn("g", col("k") % 3), Seq("g"), Seq(col("k")),
         col("v"), "c", "t")

@@ -1,14 +1,12 @@
 package graft.sources
 
 import graft.TestSpark
+import graft.TestSpark.withJobs
 import graft.queries.RefQueries
 import java.nio.file.{Files, Path}
-import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.AnalysisException
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** Pins [[ParquetRead]]: the footer schema equals `spark.read.parquet`'s
   * inferred one (fields, nullability, metadata) on every gate table and
@@ -19,28 +17,6 @@ import scala.jdk.CollectionConverters._
 class ParquetReadSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  /** The result of `body` and the jobs it launched, bounded by a marker
-    * job as in BoundedSpec: the listener bus delivers events in order.
-    */
-  private def withJobs[T](body: => T): (T, Int) = {
-    val groups = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setJobGroup("parquet-read-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!groups.contains("parquet-read-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains("parquet-read-marker"), "marker job never reached the listener")
-      (out, groups.asScala.count(_ != "parquet-read-marker"))
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def tempDir(): Path = Files.createTempDirectory("parquet-read")
 
