@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one place a SparkSession's conf is set. Every entry point (Bench,
-  * Verify, Explain, PersistProbe, the shared test session) starts here,
+  * Verify, Explain, the shared test session) starts here,
   * choosing only its thread count and adding what is its own before
   * `getOrCreate()`.
   */

@@ -73,8 +73,7 @@ object ConnectedComponents {
     // data moved). Persist.truncate materializes the round's rows and
     // truncates lineage — localCheckpoint here, reliable checkpoint()
     // for executor-loss recovery once a dynamic-allocation deployment
-    // points spark.checkpoint.dir at durable storage (the conf IS read:
-    // truncateAutoResolve).
+    // points spark.checkpoint.dir at durable storage (Persist.resolve).
     var labels = edges.select(col("n")).distinct()
       .withColumn("label", col("n"))
       .truncateLineage(true)
@@ -100,8 +99,8 @@ object ConnectedComponents {
         .select(col("n"),
           least(col("label"), coalesce(col("nbrMin"), col("label"))).as("label"),
           (coalesce(col("nbrMin"), col("label")) < col("label")).as("changed"))
-        // truncation-purpose, NOT knob-subject (Persist.intermediate's
-        // scope note): cache mode would nest every round's plan
+        // truncation-purpose, not reuse (Persist's scope note): a
+        // cached frame would nest every round's plan
         .truncateLineage(false)
       converged = next
         .agg(count(when(col("changed"), lit(1))).as("c"))
@@ -254,7 +253,7 @@ object ConnectedComponents {
       // the next round (or the final join) reads it. A test that could
       // short-circuit on a narrow plan (e.g. where+isEmpty with no
       // exchange) would leave a partial checkpoint — keep the barrier.
-      // truncation-purpose, NOT knob-subject (see Persist.intermediate)
+      // truncation-purpose, not reuse (see Persist's scope note)
       val next = smallStar(largeStar(edges)).truncateLineage(false)
       // Fixpoint test in ONE aggregate job, not count+count+exceptAll
       // (the except alone was a wide shuffle over both edge sets every

@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
 /** Deduplication operators for training-data pipelines.
   *
   * Persistence: the pairwise operators persist their shingle frame for
-  * reuse within one invocation via [[Persist.intermediate]] — in the
-  * default (static-executor / local) mode a LAZY
-  * `localCheckpoint(false)`, never `cache()`. The blocks are owned by
+  * reuse within one invocation via [[Persist.intermediate]] — on
+  * static executors (and `local[n]`) a `localCheckpoint(false)`, never
+  * `cache()`. The blocks are owned by
   * the checkpointed RDD — the ContextCleaner frees them once the
   * returned plan's frames are garbage-collected — so long-lived
   * sessions accumulate nothing and owe no `clearCache()` (the capHubs
@@ -19,17 +19,16 @@ import org.apache.spark.sql.functions._
   * executor loss — and in particular a dynamic-allocation
   * decommission, which Spark's docs call out as unsafe with
   * localCheckpoint — fails the query instead of recomputing. That is
-  * why the mechanism is a knob, not a constant: under
-  * `spark.dynamicAllocation.enabled` the `auto` mode switches to
-  * reliable `checkpoint()` (when `spark.checkpoint.dir` is set) or to
+  * why the mechanism follows the session, not a constant: under
+  * `spark.dynamicAllocation.enabled` it switches to reliable
+  * `checkpoint()` (when `spark.checkpoint.dir` is set) or to
   * lineage-preserving `cache()` — see [[Persist]] for the full
   * contract. Every reuse-purpose persist in the engine routes through
   * that one helper; in-loop lineage TRUNCATION sites (iterative
-  * operators) route through the sibling [[Persist.truncate]], whose
-  * mode space has no cache leg (caching never cuts the per-round plan
-  * growth) and whose `auto` honors `spark.checkpoint.dir` under
-  * dynamic allocation — the conf-only loss-safety contract PORTING.md
-  * documents.
+  * operators) route through the sibling [[Persist.truncate]], which
+  * has no cache leg (caching never cuts the per-round plan growth)
+  * and honors `spark.checkpoint.dir` under dynamic allocation — the
+  * conf-only loss-safety contract PORTING.md documents.
   *
   * Exact dedup is a hash aggregate on the content key — one shuffle,
   * map-side combined, AQE-skew-safe. N-gram Jaccard is the exact

@@ -1,16 +1,20 @@
 package graft.ops
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.storage.StorageLevel
 
 /** Intermediate-result persistence policy — the ONE place the engine
-  * decides how a reused per-query frame is pinned.
+  * decides how a reused per-query frame is pinned. The mechanism is
+  * worked out from the session alone, by [[resolve]] over two facts:
+  * `spark.dynamicAllocation.enabled` and whether `spark.checkpoint.dir`
+  * is set. There is no engine conf key to override it.
   *
   * The doctrine (settled rounds 14/15): per-query reused frames persist
-  * via LAZY `localCheckpoint(false)`. The blocks belong to the
-  * checkpointed RDD, so the ContextCleaner frees them when the plan's
-  * frames are garbage-collected — long-lived sessions accumulate
-  * nothing and owe no `clearCache()`. What that buys in hygiene it
-  * costs in TWO documented ways:
+  * via `localCheckpoint(false)`. The blocks belong to the checkpointed
+  * RDD, so the ContextCleaner frees them when the plan's frames are
+  * garbage-collected — long-lived sessions accumulate nothing and owe
+  * no `clearCache()`. What that buys in hygiene it costs in TWO
+  * documented ways:
   *
   *   1. '''Fault tolerance''': a locally-checkpointed RDD has truncated
   *      lineage stored on the executors that computed it. An executor
@@ -19,101 +23,105 @@ import org.apache.spark.sql.Dataset
   *      instead of recomputing the lost partitions. On a static-executor
   *      cluster (and in `local[n]`, where executor loss is process
   *      death) this risk is zero-to-moot; under
-  *      `spark.dynamicAllocation.enabled` it is real.
+  *      `spark.dynamicAllocation.enabled` it is real, so there the
+  *      helpers switch to reliable `checkpoint()` when a checkpoint dir
+  *      is set, else to lineage-preserving `cache()` (decommissioned
+  *      blocks recompute; the caller owns `clearCache`, which re-accepts
+  *      the r13 leak class in exchange for not failing on decommission).
   *   2. '''Re-scan speed''': checkpoint blocks hold row-format
   *      partitions, while `cache()` stores codegen-friendly columnar
   *      batches — measured on `graph_copurchase` (round 16, isolated
   *      5-run medians at matched calibration): 2.7–3.0 s cached vs
   *      3.4–3.7 s locally checkpointed at sf0.1, a ~20 % tax on that
-  *      re-scan-heavy self-join.
+  *      re-scan-heavy self-join. [[intermediateHot]] is the per-site
+  *      answer.
   *
-  * [[intermediate]] makes the trade config-gated instead of hard-coded:
-  * `spark.graft.persist.intermediate` picks the mechanism, and the
-  * default `auto` resolves by environment — reliable `checkpoint()`
-  * when dynamic allocation is on and a checkpoint dir is set, `cache()`
-  * when dynamic allocation is on without one (lineage stays intact, so
-  * decommissioned blocks recompute; the caller owns `clearCache`), and
-  * the doctrine's `localCheckpoint(false)` everywhere else — which
-  * keeps every existing single-JVM deployment (gate, bench, tests)
-  * byte-identical in behavior.
+  * BUILD-TIME JOBS: no helper runs the frame's final stage while the
+  * DataFrame is built (except an eager [[truncate]]), but the checkpoint
+  * legs are not free to build either. `localCheckpoint(false)` and
+  * `checkpoint(false)` create the frame's RDD at once, and under
+  * adaptive execution creating it runs every shuffle stage below the
+  * frame as its own job — one job per shuffle, before any action
+  * (PersistSpec pins it; BuildJobsSpec shows it per query:
+  * `analytics_survival` 2, `analytics_posthoc_pairs` and
+  * `analytics_mann_kendall` 1 each). Only the `cache()` leg defers all
+  * work to the plan's first execution.
   *
-  * SCOPE: reuse-purpose persistence only. The EAGER
-  * `localCheckpoint(true)` calls inside iterative operators
-  * (ConnectedComponents, SCC, MST, label propagation …) are
-  * lineage-TRUNCATION, not reuse — `cache()` is not a valid substitute
-  * there (a cached plan still nests every prior round's lineage, and
-  * the plan blow-up returns), so truncation has its own helper,
-  * [[truncate]], with its own smaller mode space (local | reliable —
-  * no cache leg, because caching does not truncate). Its `auto`
-  * upgrades to reliable `checkpoint()` exactly when dynamic allocation
-  * is on AND `spark.checkpoint.dir` points at durable storage — the
-  * conf-only contract PORTING.md promises (r17: before [[truncate]],
-  * the in-loop sites called `localCheckpoint` unconditionally and the
-  * promised conf was never read, so dynamic-allocation deployments
-  * following the doc still failed on decommission). Everywhere else —
-  * every static-executor deployment, the gate, the bench, the tests —
-  * it resolves to the doctrine's `localCheckpoint(eager)`,
-  * byte-identical to the pre-r17 spelling.
+  * SCOPE: reuse-purpose persistence ([[intermediate]],
+  * [[intermediateHot]]) and the iterative operators' in-loop lineage
+  * TRUNCATION ([[truncate]]). `cache()` is never a truncation — a
+  * cached plan still nests every prior round's lineage and the plan
+  * blow-up returns — so truncation under dynamic allocation without a
+  * dir stays local and keeps the decommission risk: no loss-safe
+  * truncation exists without durable storage.
   */
 object Persist {
 
-  /** Conf key selecting the [[intermediate]] mechanism:
-    * `auto` (default) | `local` | `cache` | `reliable` | `none`.
+  /** How a frame is pinned. */
+  private[ops] sealed trait Mechanism
+  private[ops] case object Local extends Mechanism
+  private[ops] case object Cache extends Mechanism
+  private[ops] case object Reliable extends Mechanism
+
+  /** The mechanism of each helper on one session. */
+  private[ops] final case class Mechanisms(intermediate: Mechanism,
+      hot: Mechanism, truncate: Mechanism)
+
+  /** The one rule, as data (PersistSpec pins all four rows):
+    *   - static executors → the doctrine's localCheckpoint, except the
+    *     per-site hot frames, which take columnar `cache()`;
+    *   - dynamic allocation with a checkpoint dir → reliable
+    *     `checkpoint()` everywhere;
+    *   - dynamic allocation without one → lineage-preserving `cache()`
+    *     for reuse, localCheckpoint for truncation (nowhere durable to
+    *     write, and caching does not truncate).
+    * `dyn` is a launch-time core conf that RuntimeConfig cannot change
+    * on a live session, which is why the rule is a pure function.
     */
-  val ModeKey = "spark.graft.persist.intermediate"
+  private[ops] def resolve(dyn: Boolean,
+      hasCheckpointDir: Boolean): Mechanisms =
+    if (!dyn) Mechanisms(intermediate = Local, hot = Cache, truncate = Local)
+    else if (hasCheckpointDir) Mechanisms(Reliable, Reliable, Reliable)
+    else Mechanisms(intermediate = Cache, hot = Cache, truncate = Local)
+
+  private def resolved(ds: Dataset[_]): Mechanisms = {
+    val spark = ds.sparkSession
+    resolve(
+      dyn = spark.conf.get("spark.dynamicAllocation.enabled", "false")
+        .toBoolean,
+      hasCheckpointDir = spark.sparkContext.getCheckpointDir.isDefined)
+  }
+
+  private def pin[T](ds: Dataset[T], m: Mechanism,
+      eager: Boolean): Dataset[T] = m match {
+    case Local => ds.localCheckpoint(eager)
+    case Cache => ds.cache()
+    case Reliable if eager =>
+      // persist-before-checkpoint: the materializing job fills the
+      // cache, the checkpoint-write job reads it back instead of
+      // recomputing the round's whole plan ([[truncate]] cost 2)
+      ds.persist(StorageLevel.MEMORY_AND_DISK)
+      val out = ds.checkpoint(eager = true)
+      ds.unpersist(blocking = false)
+      out
+    case Reliable => ds.checkpoint(eager = false)
+  }
 
   /** Persist a frame that the returned plan will scan more than once.
-    * Lazy in every mode: materialization happens on the plan's first
-    * execution, never here.
+    * The reliable leg pays Spark's standard checkpoint costs as the
+    * price of loss-safety: the checkpoint-write job recomputes the
+    * upstream once beyond the first action, and the written files are
+    * owned by `spark.checkpoint.dir` retention (set
+    * `spark.cleaner.referenceTracking.cleanCheckpoints`, or purge the
+    * dir) — [[release]] cannot and does not delete them.
     */
-  def intermediate[T](ds: Dataset[T]): Dataset[T] = {
-    val spark = ds.sparkSession
-    val mode = spark.conf.get(ModeKey, "auto")
-    val resolved = mode match {
-      case "auto" =>
-        // dynamicAllocation.enabled is a core (launch-time) conf —
-        // readable here, but never mutable through RuntimeConfig, which
-        // is why the resolution rule is the separate pure
-        // [[autoResolve]] (spec-pinned without a dynamic cluster)
-        autoResolve(
-          dyn = spark.conf
-            .get("spark.dynamicAllocation.enabled", "false").toBoolean,
-          hasCheckpointDir =
-            spark.sparkContext.getCheckpointDir.isDefined)
-      case m => m
-    }
-    resolved match {
-      case "local" => ds.localCheckpoint(eager = false)
-      case "cache" => ds.cache()
-      case "reliable" =>
-        if (spark.sparkContext.getCheckpointDir.isEmpty)
-          throw new IllegalStateException(
-            s"$ModeKey=reliable needs spark.checkpoint.dir (durable " +
-              "storage) — set it, or use cache/local")
-        // Spark's standard checkpoint costs apply and are the
-        // deliberate price of loss-safety here: the checkpoint-write
-        // job recomputes the upstream once beyond the first action
-        // (the classic persist-before-checkpoint advice — a caller
-        // that wants to amortize it pre-caches and clears explicitly),
-        // and the written files are owned by spark.checkpoint.dir
-        // retention (set spark.cleaner.referenceTracking
-        // .cleanCheckpoints, or purge the dir) — release() cannot and
-        // does not delete them.
-        ds.checkpoint(eager = false)
-      case "none" => ds
-      case other =>
-        throw new IllegalArgumentException(
-          s"$ModeKey=$other — expected auto|local|cache|reliable|none")
-    }
-  }
+  def intermediate[T](ds: Dataset[T]): Dataset[T] =
+    pin(ds, resolved(ds).intermediate, eager = false)
 
   /** Persist a HOT RE-SCAN frame — one whose stored blocks the same
     * plan scans two or more times (both sides of a self-join, a
     * verify pass over candidate pairs re-reading the indexed frame).
-    * Same contract and ModeKey as [[intermediate]] — an EXPLICIT
-    * (non-`auto`) mode wins for both helpers, so a deployment can
-    * still force the whole engine onto one mechanism — but `auto` on
-    * STATIC executors resolves `cache()` instead of the doctrine's
+    * On STATIC executors it takes `cache()` instead of the doctrine's
     * `localCheckpoint(false)`: cache stores codegen-friendly COLUMNAR
     * batches while local-checkpoint blocks hold row-format partitions
     * (the 20% copurchase tax measured in r16, scaladoc above), and on
@@ -132,68 +140,25 @@ object Persist {
     * 2.45 → 3.22 s, dedup_cross_source 2.65 → 3.31 s), hot is a
     * PER-SITE, measurement-backed choice — never a blanket one; sites
     * stay on [[intermediate]] unless the cache spelling measured
-    * faster there. Dynamic-allocation resolution is unchanged
-    * (reliable with a checkpoint dir, else cache).
+    * faster there. Under dynamic allocation it resolves exactly like
+    * [[intermediate]].
     */
-  def intermediateHot[T](ds: Dataset[T]): Dataset[T] = {
-    val spark = ds.sparkSession
-    spark.conf.get(ModeKey, "auto") match {
-      case "auto" =>
-        val resolved = hotAutoResolve(
-          dyn = spark.conf
-            .get("spark.dynamicAllocation.enabled", "false").toBoolean,
-          hasCheckpointDir =
-            spark.sparkContext.getCheckpointDir.isDefined)
-        resolved match {
-          case "cache" => ds.cache()
-          case "local" => ds.localCheckpoint(eager = false)
-          case "reliable" => ds.checkpoint(eager = false)
-        }
-      case _ => intermediate(ds) // explicit mode: one rule for all sites
-    }
-  }
+  def intermediateHot[T](ds: Dataset[T]): Dataset[T] =
+    pin(ds, resolved(ds).hot, eager = false)
 
-  /** The [[intermediateHot]] `auto` rule, as data: static executors →
-    * columnar `cache()` (re-scan speed; caller/session owns cleanup);
-    * dynamic allocation → exactly [[autoResolve]]'s legs.
-    */
-  private[ops] def hotAutoResolve(dyn: Boolean,
-      hasCheckpointDir: Boolean): String =
-    if (!dyn) "cache" else autoResolve(dyn, hasCheckpointDir)
-
-  /** The `auto` rule, as data: static executors → the doctrine's
-    * localCheckpoint; dynamic allocation → reliable checkpoint when
-    * durable storage is configured, else lineage-preserving cache()
-    * (decommissioned blocks recompute; the caller owns `clearCache`).
-    *
-    * The cache() leg re-accepts the obligation the doctrine was built
-    * to remove: most reuse sites' frames outlive the operator call (the
-    * returned plan references them), so the engine cannot release them
-    * itself, and a long-lived dynamic-allocation session that never
-    * clears the cache accumulates one entry per query invocation
-    * (exactly the r13 leak class). That is the documented trade against
-    * failing queries on decommission — a deployment that wants neither
-    * sets `spark.checkpoint.dir` (→ reliable) or accepts recompute with
-    * mode=none.
-    */
-  private[ops] def autoResolve(dyn: Boolean,
-      hasCheckpointDir: Boolean): String =
-    if (!dyn) "local"
-    else if (hasCheckpointDir) "reliable"
-    else "cache"
-
-  /** Free the storage behind a frame returned by [[intermediate]],
-    * whatever mechanism the knob picked. `Dataset.unpersist` alone is
-    * NOT enough: it goes through the CacheManager and never releases
-    * checkpoint blocks (they belong to the underlying `LogicalRDD`'s
-    * RDD), while the Bridge checkpoint-block path never sees a
-    * CacheManager entry — so a caller that pairs its persist with an
-    * explicit free must release through this helper or leak under the
-    * other mode. Covers `local` (block-manager RDD blocks), `cache`
-    * (CacheManager entry), and is a safe no-op for `none`/`reliable`
-    * (reliable-checkpoint files are owned by `spark.checkpoint.dir`
-    * retention, not the block manager). Caller contract is inherited
-    * from both mechanisms: the frame must never be evaluated again.
+  /** Free the storage behind a frame returned by [[intermediate]] or
+    * [[intermediateHot]], whatever mechanism the session resolved.
+    * `Dataset.unpersist` alone is NOT enough: it goes through the
+    * CacheManager and never releases checkpoint blocks (they belong to
+    * the underlying `LogicalRDD`'s RDD), while the Bridge
+    * checkpoint-block path never sees a CacheManager entry — so a
+    * caller that pairs its persist with an explicit free must release
+    * through this helper or leak under the other mechanism. Covers
+    * local (block-manager RDD blocks), cache (CacheManager entry), and
+    * is a safe no-op for reliable (its files are owned by
+    * `spark.checkpoint.dir` retention, not the block manager). Caller
+    * contract is inherited from both mechanisms: the frame must never
+    * be evaluated again.
     */
   def release[T](ds: Dataset[T]): Unit = {
     org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(ds)
@@ -201,91 +166,40 @@ object Persist {
     ()
   }
 
-  /** Conf key selecting the [[truncate]] mechanism:
-    * `auto` (default) | `local` | `reliable`.
-    */
-  val TruncateModeKey = "spark.graft.persist.truncate"
-
   /** Truncate a frame's lineage — the iterative operators' in-loop
     * mechanism (each round's plan must not nest every prior round's).
     * `eager = true` materializes now (the loop-body contract: the
     * round's rows exist before the next round plans over them);
-    * `eager = false` is the lazy variant for loop-internal frames whose
-    * first action materializes them.
+    * `eager = false` defers the final stage to the frame's first
+    * action, though the shuffles below it still run now (see BUILD-TIME
+    * JOBS above).
     *
-    * Mode space is deliberately smaller than [[intermediate]]'s:
-    * `cache()` is NOT a valid truncation (a cached plan still nests the
-    * full lineage and the per-round plan blow-up returns), so the only
-    * legs are the doctrine's `localCheckpoint(eager)` and reliable
-    * `checkpoint(eager)`. `auto` resolves reliable exactly when dynamic
-    * allocation is enabled AND `spark.checkpoint.dir` is set (see
-    * [[truncateAutoResolve]]) — which makes PORTING.md's "point
+    * Reliable exactly when dynamic allocation is enabled AND
+    * `spark.checkpoint.dir` is set — which makes PORTING.md's "point
     * spark.checkpoint.dir at durable storage for loss-safe iteration"
-    * a true conf-only contract. On dynamic allocation WITHOUT a
-    * checkpoint dir the resolution stays local and the loss-on-
-    * decommission risk stands — documented, since no loss-safe
-    * truncation exists without durable storage.
-    *
-    * THE RELIABLE LEG'S TWO OPERATIONAL COSTS (r17 review):
+    * a conf-only contract (r17: before this helper, the in-loop sites
+    * called `localCheckpoint` unconditionally and the conf was never
+    * read). THE RELIABLE LEG'S TWO OPERATIONAL COSTS (r17 review):
     *
     *   1. '''Retention''': loops write one checkpoint per round and
     *      [[release]]/Bridge cleanup are deliberate no-ops for
     *      reliable files — a reliable-truncation deployment MUST set
     *      `spark.cleaner.referenceTracking.cleanCheckpoints=true` (the
     *      ContextCleaner then deletes each round's files once its
-    *      frame is GC'd) or own `spark.checkpoint.dir` retention,
-    *      exactly as [[intermediate]]'s reliable leg documents.
+    *      frame is GC'd) or own `spark.checkpoint.dir` retention.
     *      Without either, a long iterative session fills the dir
     *      linearly in total rounds.
     *   2. '''Double compute''': `Dataset.checkpoint` does not persist
     *      before the checkpoint-write job, so a bare eager checkpoint
-    *      computes each round's plan twice. The eager leg below
-    *      mitigates with the standard persist-before-checkpoint
-    *      sandwich (persist → checkpoint → unpersist); the LAZY leg
-    *      cannot (the write happens at some later action, after which
-    *      this method has long returned) and pays the documented
-    *      one-extra-compute, the same price [[intermediate]]'s
-    *      reliable leg accepts.
+    *      computes each round's plan twice. The eager leg mitigates
+    *      with the standard persist-before-checkpoint sandwich
+    *      (persist → checkpoint → unpersist); the LAZY leg cannot (the
+    *      write happens at some later action, after which this method
+    *      has long returned) and pays the one extra compute, the same
+    *      price [[intermediate]]'s reliable leg accepts.
     */
-  def truncate[T](ds: Dataset[T], eager: Boolean): Dataset[T] = {
-    val spark = ds.sparkSession
-    val resolved = spark.conf.get(TruncateModeKey, "auto") match {
-      case "auto" => truncateAutoResolve(
-        dyn = spark.conf
-          .get("spark.dynamicAllocation.enabled", "false").toBoolean,
-        hasCheckpointDir = spark.sparkContext.getCheckpointDir.isDefined)
-      case m => m
-    }
-    resolved match {
-      case "local" => ds.localCheckpoint(eager)
-      case "reliable" =>
-        if (spark.sparkContext.getCheckpointDir.isEmpty)
-          throw new IllegalStateException(
-            s"$TruncateModeKey=reliable needs spark.checkpoint.dir " +
-              "(durable storage) — set it, or use local")
-        if (eager) {
-          // persist-before-checkpoint: the materializing job fills the
-          // cache, the checkpoint-write job reads it back instead of
-          // recomputing the round's whole plan (scaladoc cost 2)
-          ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val out = ds.checkpoint(eager = true)
-          ds.unpersist(blocking = false)
-          out
-        } else ds.checkpoint(eager = false)
-      case other =>
-        throw new IllegalArgumentException(
-          s"$TruncateModeKey=$other — expected auto|local|reliable")
-    }
-  }
-
-  /** The [[truncate]] `auto` rule, as data: reliable checkpoint only
-    * when BOTH dynamic allocation is on (executor decommission makes
-    * localCheckpoint blocks unrecoverable) and a checkpoint dir exists
-    * (there is nowhere durable to write otherwise).
-    */
-  private[ops] def truncateAutoResolve(dyn: Boolean,
-      hasCheckpointDir: Boolean): String =
-    if (dyn && hasCheckpointDir) "reliable" else "local"
+  def truncate[T](ds: Dataset[T], eager: Boolean): Dataset[T] =
+    pin(ds, resolved(ds).truncate, eager)
 
   /** `frame.persistIntermediate` chaining syntax for [[intermediate]]. */
   implicit final class PersistOps[T](private val ds: Dataset[T])

@@ -123,12 +123,12 @@ object Similarity {
     */
   def cosineNearDupPairs(corpus: DataFrame, threshold: Double,
       blocks: Int = 8): DataFrame = {
-    // persisted (Persist.intermediate — lazy localCheckpoint in the
-    // default mode): BOTH sides of the self-join scan it (scan +
+    // persisted (Persist.intermediate — localCheckpoint on static
+    // executors): BOTH sides of the self-join scan it (scan +
     // interpreted quantize transform would otherwise run twice).
     // Checkpoint blocks are RDD-owned, so the ContextCleaner frees them
     // when the returned frames drop — no caller clearCache obligation
-    // (the capHubs doctrine; mode caveats in Persist's scaladoc).
+    // (the capHubs doctrine; caveats in Persist's scaladoc).
     val base = corpus.select(
       col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("ns", sqrt(normQ(col("v")).cast("double")))
@@ -766,8 +766,7 @@ object Similarity {
     // iteration plus once for the final assignment — persist it
     // (Persist.intermediate; see object scaladoc) when iterating so
     // the interpreted quantize transform runs once. quant is never
-    // reassigned, so this is reuse, not per-round truncation — the
-    // knob applies
+    // reassigned, so this is reuse, not per-round truncation
     val quant0 = quantizedCorpus(corpus)
     val quant = if (lloydIters > 0) quant0.persistIntermediate else quant0
     for (_ <- 0 until lloydIters) {

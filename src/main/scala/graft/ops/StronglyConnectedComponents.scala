@@ -151,7 +151,7 @@ object StronglyConnectedComponents {
                 .as("color"),
               (coalesce(col("nbrMin"), col("color")) < col("color"))
                 .as("changed"))
-            // truncation-purpose, NOT knob-subject (Persist.intermediate)
+            // truncation-purpose, not reuse (Persist.truncate)
             .truncateLineage(false)
           converged = next
             .agg(count(when(col("changed"), lit(1))).as("c"))
@@ -179,7 +179,7 @@ object StronglyConnectedComponents {
             .select("node", "color")
             .distinct()
             .join(reached.select("node"), Seq("node"), "left_anti")
-            // in-loop: Persist.truncate, not the intermediate knob — a
+            // in-loop: Persist.truncate, not Persist.intermediate — a
             // cached per-round frame would pin one CacheManager entry
             // per iteration for the loop's life (and never truncate)
             .truncateLineage(false)

@@ -63,7 +63,11 @@ import org.apache.spark.sql.types.LongType
 object TwoPassWindow {
   private val Pid = "__tp_pid"
 
-  /** Range-partition by `sortCols` and freeze the row→pid binding. */
+  /** Range-partition by `sortCols` and freeze the row→pid binding. Not
+    * lazy: `eager = false` only defers the final stage, while the range
+    * shuffle below it (boundary sampling included) runs as jobs here,
+    * during the build (Persist's BUILD-TIME JOBS note).
+    */
   private def pidded(df: DataFrame, sortCols: Seq[Column]): DataFrame =
     Persist.truncate(
       df.repartitionByRange(sortCols: _*)

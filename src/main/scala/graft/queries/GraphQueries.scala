@@ -421,18 +421,18 @@ object GraphQueries {
     * adjacency) — reusing it keeps the cap to one broadcast semi
     * filter instead of adding a second degree aggregate (A/B'd:
     * recomputing cost ~0.2–0.5 s of extra exchange per query).
-    * PERSISTED per call via Persist.intermediate (default mode: LAZY
-    * localCheckpoint, not cache()): every
+    * PERSISTED per call via Persist.intermediate (localCheckpoint on
+    * static executors, not cache()): every
     * caller feeds it to BOTH sides of the co-occurrence self-join, and
     * union/join branches get no common-subexpression elimination —
     * unpersisted, each side re-derived the filter chain (the
     * ConnectedComponents fwd-cache doctrine; A/B'd 3.6 → 2.6 s on
-    * neighbor_overlap). Default-mode blocks are owned by the RDD,
+    * neighbor_overlap). Checkpoint blocks are owned by the RDD,
     * not the session CacheManager, so the ContextCleaner frees them as
     * soon as the query's frames are dropped — a long-lived session
     * running the co-occurrence family repeatedly accumulates nothing
     * (cache() leaked one capped adjacency per invocation; r13 VERDICT
-    * item 5; under the knob's explicit cache mode that obligation
+    * item 5; on the dynamic-allocation cache leg that obligation
     * returns and is documented at Persist). The spec overrides `cap`
     * to pin the cut on a synthetic hub and pins the no-cache-growth
     * contract.

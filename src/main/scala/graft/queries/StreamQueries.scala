@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.ops.Persist.PersistOps
+import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.Multimodal
@@ -373,6 +375,24 @@ object StreamQueries {
   private def gateSort(df: DataFrame, cols: String*): DataFrame =
     RefQueries.gateSort(df, cols: _*)
 
+  /** A document as an audio file: its leading UTF-8 bytes (at most 90,
+    * an even count) become the 16-bit PCM data chunk of a RIFF/WAVE
+    * container, mono at 7968 Hz, behind the 44-byte header. Every
+    * audio gate decodes this container through
+    * MediaCodecs.decodeWavBytes.
+    */
+  private def docWav(text: String): Array[Byte] = {
+    val bytes = text.getBytes(StandardCharsets.UTF_8)
+    val dataLen = math.min(90, (bytes.length / 2) * 2)
+    val ascii = (s: String) => s.getBytes(StandardCharsets.US_ASCII)
+    ByteBuffer.allocate(44 + dataLen).order(ByteOrder.LITTLE_ENDIAN)
+      .put(ascii("RIFF")).putInt(36 + dataLen).put(ascii("WAVEfmt "))
+      .putInt(16).putShort(1.toShort).putShort(1.toShort)
+      .putInt(7968).putInt(15936).putShort(2.toShort).putShort(16.toShort)
+      .put(ascii("data")).putInt(dataLen).put(bytes, 0, dataLen)
+      .array()
+  }
+
   /** Binary metadata through pure SQL expressions (oracle-checked). */
   def multimodalMeta(spark: SparkSession, sfDir: String): DataFrame =
     Multimodal.packFromText(table(spark, sfDir, "documents"))
@@ -689,17 +709,7 @@ object StreamQueries {
     table(spark, sfDir, "documents")
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, text) =>
-        val bytes = text.getBytes("UTF-8")
-        val dataLen = math.min(90, (bytes.length / 2) * 2)
-        def le16(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-        def le32(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-          ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-        val wav = "RIFF".getBytes("US-ASCII") ++ le32(36 + dataLen) ++
-          "WAVE".getBytes("US-ASCII") ++
-          "fmt ".getBytes("US-ASCII") ++ le32(16) ++
-          le16(1) ++ le16(1) ++ le32(7968) ++ le32(15936) ++ le16(2) ++ le16(16) ++
-          "data".getBytes("US-ASCII") ++ le32(dataLen) ++ bytes.take(dataLen)
-        val plane = graft.ops.MediaCodecs.decodeWavBytes(wav)
+        val plane = graft.ops.MediaCodecs.decodeWavBytes(docWav(text))
           .getOrElse(Array.empty[Int])
         val doms = plane.grouped(frameLen).filter(_.length == frameLen)
           .map { f =>
@@ -876,17 +886,7 @@ object StreamQueries {
     val media = table(spark, sfDir, "documents")
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .map { case (id, text) =>
-        val bytes = text.getBytes("UTF-8")
-        val dataLen = math.min(90, (bytes.length / 2) * 2)
-        def le16(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-        def le32(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-          ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-        val wav = "RIFF".getBytes("US-ASCII") ++ le32(36 + dataLen) ++
-          "WAVE".getBytes("US-ASCII") ++
-          "fmt ".getBytes("US-ASCII") ++ le32(16) ++
-          le16(1) ++ le16(1) ++ le32(7968) ++ le32(15936) ++ le16(2) ++ le16(16) ++
-          "data".getBytes("US-ASCII") ++ le32(dataLen) ++ bytes.take(dataLen)
-        (id, "audio/wav", wav)
+        (id, "audio/wav", docWav(text))
       }.toDF("doc_id", "media_type", "content")
     Multimodal.extractFeatures(spark, media)
       .toDF()
@@ -1118,17 +1118,8 @@ object StreamQueries {
     val planes = table(spark, sfDir, "documents")
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .map { case (id, text) =>
-        val bytes = text.getBytes("UTF-8")
-        val dataLen = math.min(90, (bytes.length / 2) * 2)
-        def le16(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-        def le32(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-          ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-        val wav = "RIFF".getBytes("US-ASCII") ++ le32(36 + dataLen) ++
-          "WAVE".getBytes("US-ASCII") ++
-          "fmt ".getBytes("US-ASCII") ++ le32(16) ++
-          le16(1) ++ le16(1) ++ le32(7968) ++ le32(15936) ++ le16(2) ++ le16(16) ++
-          "data".getBytes("US-ASCII") ++ le32(dataLen) ++ bytes.take(dataLen)
-        val plane = graft.ops.MediaCodecs.decodeWavBytes(wav).getOrElse(Array.empty[Int])
+        val plane = graft.ops.MediaCodecs.decodeWavBytes(docWav(text))
+          .getOrElse(Array.empty[Int])
         val energies = plane.grouped(frameLen).filter(_.length == frameLen)
           .map(f => f.map(s => (s - 128L) * (s - 128L)).sum).toSeq
         (id, energies)
@@ -1176,17 +1167,8 @@ object StreamQueries {
     val planes = table(spark, sfDir, "documents")
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .map { case (id, text) =>
-        val bytes = text.getBytes("UTF-8")
-        val dataLen = math.min(90, (bytes.length / 2) * 2)
-        def le16(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-        def le32(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-          ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-        val wav = "RIFF".getBytes("US-ASCII") ++ le32(36 + dataLen) ++
-          "WAVE".getBytes("US-ASCII") ++
-          "fmt ".getBytes("US-ASCII") ++ le32(16) ++
-          le16(1) ++ le16(1) ++ le32(7968) ++ le32(15936) ++ le16(2) ++ le16(16) ++
-          "data".getBytes("US-ASCII") ++ le32(dataLen) ++ bytes.take(dataLen)
-        val plane = graft.ops.MediaCodecs.decodeWavBytes(wav).getOrElse(Array.empty[Int])
+        val plane = graft.ops.MediaCodecs.decodeWavBytes(docWav(text))
+          .getOrElse(Array.empty[Int])
         val zcrs = plane.grouped(frameLen).filter(_.length == frameLen)
           .map(f => f.sliding(2)
             .count(p => (p(0) - 128).toLong * (p(1) - 128) < 0).toLong)
@@ -1604,17 +1586,7 @@ object StreamQueries {
       .where(octet_length(col("text")) >= 6)
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .map { case (id, text) =>
-        val bytes = text.getBytes("UTF-8")
-        val dataLen = math.min(90, (bytes.length / 2) * 2)
-        def le16(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-        def le32(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-          ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-        val wav = "RIFF".getBytes("US-ASCII") ++ le32(36 + dataLen) ++
-          "WAVE".getBytes("US-ASCII") ++
-          "fmt ".getBytes("US-ASCII") ++ le32(16) ++
-          le16(1) ++ le16(1) ++ le32(7968) ++ le32(15936) ++ le16(2) ++ le16(16) ++
-          "data".getBytes("US-ASCII") ++ le32(dataLen) ++ bytes.take(dataLen)
-        val plane = graft.ops.MediaCodecs.decodeWavBytes(wav)
+        val plane = graft.ops.MediaCodecs.decodeWavBytes(docWav(text))
           .getOrElse(Array.empty[Int]) // unreachable: valid PCM WAV by construction
         val m = 2 * plane.length / 3
         val out = graft.ops.Multimodal.resampleLinear(plane, m)
@@ -1822,17 +1794,7 @@ object StreamQueries {
     table(spark, sfDir, "documents")
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, text) =>
-        val bytes = text.getBytes("UTF-8")
-        val dataLen = math.min(90, (bytes.length / 2) * 2)
-        def le16(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-        def le32(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-          ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-        val wav = "RIFF".getBytes("US-ASCII") ++ le32(36 + dataLen) ++
-          "WAVE".getBytes("US-ASCII") ++
-          "fmt ".getBytes("US-ASCII") ++ le32(16) ++
-          le16(1) ++ le16(1) ++ le32(7968) ++ le32(15936) ++ le16(2) ++ le16(16) ++
-          "data".getBytes("US-ASCII") ++ le32(dataLen) ++ bytes.take(dataLen)
-        val plane = graft.ops.MediaCodecs.decodeWavBytes(wav)
+        val plane = graft.ops.MediaCodecs.decodeWavBytes(docWav(text))
           .getOrElse(Array.empty[Int])
         plane.grouped(frameLen).filter(_.length == frameLen).zipWithIndex
           .map { case (f, fi) =>

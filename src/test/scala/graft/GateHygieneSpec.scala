@@ -952,4 +952,31 @@ class GateHygieneSpec extends AnyFunSuite {
     val stale = inferringParquetReadExempt.keySet -- sites.map(_._1)
     assert(stale.isEmpty, s"exemption ledger names reads that are gone: $stale")
   }
+
+  /** The engine works its settings out from what the session shows
+    * (Persist reads `spark.dynamicAllocation.enabled` and
+    * `spark.checkpoint.dir`); it defines no conf key of its own. A
+    * `"spark.graft.` literal in src/main is a new user-set knob. The
+    * ledger of such keys, by file name, is empty.
+    */
+  private val graftConfKeyExempt = Set.empty[String]
+
+  test("no spark.graft.* conf key literal occurs in src/main") {
+    val key = "\"spark.graft."
+    val root = Paths.get("src", "main", "scala")
+    assert(Files.isDirectory(root),
+      s"$root missing — run sbt test from the repo root")
+    val s = Files.walk(root)
+    val offenders =
+      try s.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          !graftConfKeyExempt.contains(p.getFileName.toString))
+        .flatMap { p =>
+          repoText(p).linesIterator.zipWithIndex
+            .filter(_._1.contains(key)).map(l => s"$p:${l._2 + 1}")
+        }.toSeq.sorted
+      finally s.close()
+    assert(offenders.isEmpty,
+      s"derive the setting from the session instead of a conf key: $offenders")
+  }
 }

@@ -6,14 +6,14 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
-/** REAL-SESSION legs of the [[Persist]] knob — the paths a production
+/** REAL-SESSION legs of [[Persist]] — the paths a production
   * dynamic-allocation deployment actually takes, which the shared
   * TestSpark context can never execute because BOTH triggering confs
   * are launch-time/irreversible there:
   *
   *   - `spark.dynamicAllocation.enabled` is a core conf, immutable
   *     through RuntimeConfig once the context exists — PersistSpec
-  *     pins the `auto` rules only as pure functions;
+  *     pins the rule only as a pure function;
   *   - `SparkContext.setCheckpointDir` is set-once for a context's
   *     life, so the shared session must never see one (the r16
   *     PersistSpec set it in its last test and leaked the temp dir —
@@ -22,8 +22,8 @@ import org.apache.spark.sql.graft.Bridge
   * This suite therefore boots its OWN SparkSession (dynamic allocation
   * + shuffle tracking on, local master) and runs in its OWN forked JVM
   * — see the `Test / testGrouping` block in build.sbt — so the shared
-  * context never sees either conf. Local-mode limitation, documented
-  * at the knob too: local masters never decommission executors, so
+  * context never sees either conf. Local-mode limitation: local
+  * masters never decommission executors, so
   * what executes here is the full RESOLUTION + MECHANISM path (cache
   * entry vs checkpoint files, release semantics, result equality),
   * not an actual executor-loss recovery.
@@ -115,22 +115,46 @@ class PersistDynAllocSpec extends AnyFunSuite with BeforeAndAfterAll {
       "release() must free the truncation's checkpoint RDD")
   }
 
+  // Gated queries whose pipelines route through Persist (LSH dedup, IVF
+  // similarity, text self-join; dedup_clusters_star's in-loop
+  // truncation) must return the same rows on the dirless cache leg as
+  // on the reliable leg — no operator may depend on a persistence side
+  // effect (materialization barriers, block identity).
+  private val representatives = Seq("dedup_minhash_lsh", "sim_ann_ivf",
+    "text_tfidf", "dedup_clusters_star")
+  private val cacheLegRows =
+    scala.collection.mutable.Map.empty[String, Seq[String]]
+
+  private def run(name: String) = graft.SparkEntry.queries(name)(
+    spark, graft.TestSpark.Sf0001).collect().map(_.toString).sorted.toSeq
+
+  test("the persistence representatives run on the dirless cache leg") {
+    // collected BEFORE the set-once checkpoint dir below
+    for (rep <- representatives) {
+      cacheLegRows(rep) = run(rep)
+      spark.catalog.clearCache()
+    }
+    assert(cacheLegRows.values.forall(_.nonEmpty))
+  }
+
   test("auto + dyn WITH a dir: a real gated query runs end-to-end on " +
       "reliable checkpoints, mode-invariant") {
-    def run() = graft.SparkEntry.queries("dedup_minhash_lsh")(
-      spark, graft.TestSpark.Sf0001).collect().map(_.toString).sorted.toSeq
-    // baseline BEFORE the dir exists: auto resolves to cache here
-    val expected = run()
-    spark.catalog.clearCache()
     spark.sparkContext.setCheckpointDir(ckptDir.toString) // irreversible
-    val got = run() // auto now resolves to reliable checkpoint()
-    assert(got == expected,
+    val got = run("dedup_minhash_lsh") // now reliable checkpoint()
+    assert(got == cacheLegRows("dedup_minhash_lsh"),
       "reliable-checkpoint leg changed a gated query's rows")
     assert(hasFiles(ckptDir.toFile),
       "the reliable leg wrote no checkpoint files — it did not execute")
     assert(Bridge.cacheManagerIsEmpty(spark),
       "the reliable leg must not leave CacheManager entries behind")
   }
+
+  for (rep <- representatives)
+    test(s"$rep rows are persistence-mode-invariant") {
+      assert(run(rep) == cacheLegRows(rep),
+        s"$rep diverged between the cache and reliable legs")
+      assert(Bridge.cacheManagerIsEmpty(spark))
+    }
 
   test("truncate auto + dyn WITH a dir: an iterative operator " +
       "checkpoints reliably end-to-end") {
@@ -145,25 +169,28 @@ class PersistDynAllocSpec extends AnyFunSuite with BeforeAndAfterAll {
       10L -> 10L, 11L -> 10L, 12L -> 10L))
   }
 
-  test("EXPLICIT truncate mode=reliable on the dir-bearing dyn session " +
-      "executes the persist-sandwiched eager checkpoint end-to-end") {
-    // the one combination no other test reaches: mode forced (not
-    // auto-resolved) on a session where the dir exists — exercises the
-    // reliable eager leg's persist→checkpoint→unpersist sandwich for
-    // real (r17 review replaced a test that only re-asserted the pure
-    // resolver rules PersistSpec already pins)
-    spark.conf.set(Persist.TruncateModeKey, "reliable")
-    try {
-      val f = frame()
-      val t = Persist.truncate(f, eager = true)
-      assert(t.collect().map(_.getLong(0)).sorted.toSeq ==
-        (1 to 100).filter(_ % 3 != 0).map(_.toLong))
-      // the sandwich persists the INPUT frame around the checkpoint
-      // write; assert ITS storage was released (not a global
-      // set-cardinality snapshot — the r17 flake class)
-      assert(!Bridge.isPlanCached(f.toDF()),
-        "the persist-before-checkpoint sandwich must unpersist its " +
-          "own cache entry after the checkpoint write")
-    } finally spark.conf.unset(Persist.TruncateModeKey)
+  test("eager truncate on the dir-bearing dyn session executes the " +
+      "persist-sandwiched reliable checkpoint end-to-end") {
+    // exercises the reliable eager leg's persist→checkpoint→unpersist
+    // sandwich for real (r17 review replaced a test that only
+    // re-asserted the pure resolver rule PersistSpec already pins)
+    val f = frame()
+    val t = Persist.truncate(f, eager = true)
+    val id = Bridge.localCheckpointRddId(t).getOrElse(
+      fail("a checkpointed frame must be LogicalRDD-backed"))
+    val walk = java.nio.file.Files.walk(ckptDir)
+    val written =
+      try walk.anyMatch(_.getFileName.toString == s"rdd-$id")
+      finally walk.close()
+    assert(written, "dyn + dir truncation must write a reliable " +
+      s"checkpoint (no rdd-$id under the checkpoint dir)")
+    assert(t.collect().map(_.getLong(0)).sorted.toSeq ==
+      (1 to 100).filter(_ % 3 != 0).map(_.toLong))
+    // the sandwich persists the INPUT frame around the checkpoint
+    // write; assert ITS storage was released (not a global
+    // set-cardinality snapshot — the r17 flake class)
+    assert(!Bridge.isPlanCached(f.toDF()),
+      "the persist-before-checkpoint sandwich must unpersist its " +
+        "own cache entry after the checkpoint write")
   }
 }

@@ -5,24 +5,22 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import graft.TestSpark
 
-/** Pins for the [[Persist]] knob — the one place the engine decides how
-  * a reuse-purpose intermediate frame is pinned (r16, from the r15
-  * advice: the fleet-wide localCheckpoint migration traded fault
-  * tolerance for cache hygiene silently; the knob makes it a documented,
-  * config-gated choice).
+/** Pins for [[Persist]] — the one place the engine decides how a
+  * reused or lineage-truncated frame is pinned, from the session alone.
   *
   * Contract pinned here:
-  *   - every mode returns the same ROWS (persistence must never change
-  *     results);
-  *   - default/auto on a static-executor session = lazy localCheckpoint
-  *     (blocks RDD-owned, NO CacheManager entry — the doctrine);
-  *   - auto + dynamicAllocation resolves to reliable checkpoint when a
-  *     checkpoint dir exists, else lineage-preserving cache();
-  *   - `reliable` without a checkpoint dir fails loudly, never
-  *     silently downgrades;
+  *   - the one resolver, for all four (dynamic allocation, checkpoint
+  *     dir) combinations;
+  *   - on this static-executor session: intermediate =
+  *     localCheckpoint(false) (blocks RDD-owned, NO CacheManager entry —
+  *     the doctrine), intermediateHot = columnar cache(), truncate =
+  *     localCheckpoint, all returning the input's rows;
+  *   - the build-time jobs of a checkpointed frame: one per shuffle
+  *     below it;
   *   - [[Persist.release]] frees the storage of WHICHEVER mechanism was
   *     applied (Dataset.unpersist alone cannot free checkpoint blocks;
   *     Bridge's block path alone cannot free a cache entry).
+  * The dynamic-allocation legs run for real in PersistDynAllocSpec.
   */
 class PersistSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -33,11 +31,8 @@ class PersistSpec extends AnyFunSuite {
       .where(col("id") % 3 =!= 0)
   }
 
-  private def withMode[A](mode: Option[String])(body: => A): A = {
-    mode.foreach(m => spark.conf.set(Persist.ModeKey, m))
-    try body
-    finally spark.conf.unset(Persist.ModeKey)
-  }
+  private def rows(ds: org.apache.spark.sql.Dataset[_]) =
+    ds.toDF().collect().map(_.toString).sorted.toSeq
 
   private def isLogicalRddBacked(df: org.apache.spark.sql.DataFrame) =
     df match {
@@ -48,15 +43,17 @@ class PersistSpec extends AnyFunSuite {
     }
 
   test("every mode returns identical rows") {
-    val expected = frame().collect().map(_.toString).sorted.toSeq
-    for (mode <- Seq(None, Some("local"), Some("cache"), Some("none"))) {
-      val got = withMode(mode) {
-        val p = Persist.intermediate(frame())
-        val rows = p.collect().map(_.toString).sorted.toSeq
-        Persist.release(p)
-        rows
-      }
-      assert(got == expected, s"mode=$mode changed the result rows")
+    // the localCheckpoint spellings this session reaches; the hot
+    // cache() leg's rows are checked by its own test below
+    val expected = rows(frame())
+    for ((name, persist) <- Seq[(String,
+        org.apache.spark.sql.DataFrame => org.apache.spark.sql.Dataset[_])](
+        "intermediate" -> (Persist.intermediate(_)),
+        "truncate(lazy)" -> (Persist.truncate(_, eager = false)),
+        "truncate(eager)" -> (Persist.truncate(_, eager = true)))) {
+      val p = persist(frame())
+      assert(rows(p) == expected, s"$name changed the result rows")
+      Persist.release(p)
     }
   }
 
@@ -64,72 +61,61 @@ class PersistSpec extends AnyFunSuite {
     spark.catalog.clearCache()
     val p = Persist.intermediate(frame()).toDF()
     assert(isLogicalRddBacked(p),
-      "default-mode intermediate must be a (lazy) localCheckpoint plan")
+      "static-session intermediate must be a localCheckpoint plan")
     assert(p.count() == 67)
     assert(!Bridge.isPlanCached(p) && Bridge.cacheManagerIsEmpty(spark),
-      "default mode must not register CacheManager frames")
+      "static-session intermediate must not register CacheManager frames")
     Persist.release(p)
   }
 
   test("auto resolution rule: static → local; dyn → reliable-or-cache") {
     // spark.dynamicAllocation.enabled is a launch-time core conf —
     // RuntimeConfig refuses to modify it, so the rule is pinned as the
-    // pure function intermediate() delegates to
-    assert(Persist.autoResolve(dyn = false, hasCheckpointDir = false) == "local")
-    assert(Persist.autoResolve(dyn = false, hasCheckpointDir = true) == "local")
-    assert(Persist.autoResolve(dyn = true, hasCheckpointDir = true) == "reliable")
-    assert(Persist.autoResolve(dyn = true, hasCheckpointDir = false) == "cache",
-      "no durable checkpoint storage under dynamic allocation must fall " +
-        "back to lineage-preserving cache(), never localCheckpoint")
+    // pure function every helper delegates to: one row per session kind
+    import Persist.{Cache, Local, Mechanisms, Reliable}
+    val table = Seq(
+      (false, false) -> Mechanisms(intermediate = Local, hot = Cache, truncate = Local),
+      (false, true) -> Mechanisms(intermediate = Local, hot = Cache, truncate = Local),
+      (true, false) -> Mechanisms(intermediate = Cache, hot = Cache, truncate = Local),
+      (true, true) -> Mechanisms(intermediate = Reliable, hot = Reliable, truncate = Reliable))
+    for (((dyn, dir), want) <- table)
+      assert(Persist.resolve(dyn, hasCheckpointDir = dir) == want,
+        s"dyn=$dyn dir=$dir: no durable storage under dynamic allocation " +
+          "must fall back to lineage-preserving cache() for reuse, and " +
+          "truncation (which cache cannot do) stays local")
   }
 
   test("hot auto: static → columnar cache; dyn legs unchanged; rows identical") {
     // the r20 per-site rule: hot re-scan frames cache() on static
-    // executors (measured 35-50% on the self-join dedup shapes), and
-    // under dynamic allocation resolve exactly like intermediate()
-    assert(Persist.hotAutoResolve(dyn = false, hasCheckpointDir = false) == "cache")
-    assert(Persist.hotAutoResolve(dyn = false, hasCheckpointDir = true) == "cache")
-    assert(Persist.hotAutoResolve(dyn = true, hasCheckpointDir = true) == "reliable")
-    assert(Persist.hotAutoResolve(dyn = true, hasCheckpointDir = false) == "cache")
+    // executors (measured 35-50% on the self-join dedup shapes); the
+    // dyn legs are rows of the resolver table above
     spark.catalog.clearCache()
-    val expected = frame().collect().map(_.toString).sorted.toSeq
+    val expected = rows(frame())
     val p = Persist.intermediateHot(frame()).toDF()
-    assert(p.collect().map(_.toString).sorted.toSeq == expected,
+    assert(rows(p) == expected,
       "intermediateHot must never change result rows")
     assert(Bridge.isPlanCached(p),
-      "hot auto on a static session must be a CacheManager entry")
+      "hot on a static session must be a CacheManager entry")
     Persist.release(p)
     assert(Bridge.cacheManagerIsEmpty(spark))
   }
 
-  test("hot: an explicit mode wins over the per-site hot choice") {
-    // a deployment that forces ModeKey=local must get localCheckpoint
-    // from BOTH helpers — hot is only a different *auto* resolution
+  test("a checkpointed frame runs the shuffle below it while building; " +
+      "a cached one runs nothing") {
+    // adaptive execution materializes each exchange under the planned
+    // checkpoint RDD as its own job, before any action (the BUILD-TIME
+    // JOBS note in Persist's scaladoc); cache() plans lazily
+    val grouped = frame().groupBy((col("id") % 7).as("k")).count()
+    val (p, checkpointJobs) =
+      TestSpark.withJobs(Persist.intermediate(grouped))
+    assert(checkpointJobs == 1,
+      s"intermediate over one shuffle started $checkpointJobs jobs")
+    assert(p.count() == 7)
+    Persist.release(p)
     spark.catalog.clearCache()
-    withMode(Some("local")) {
-      val p = Persist.intermediateHot(frame()).toDF()
-      assert(isLogicalRddBacked(p),
-        "explicit local mode must reach intermediateHot sites too")
-      assert(p.count() == 67)
-      assert(!Bridge.isPlanCached(p) && Bridge.cacheManagerIsEmpty(spark))
-      Persist.release(p)
-    }
-    withMode(Some("none")) {
-      val f = frame()
-      assert(Persist.intermediateHot(f) eq f,
-        "explicit none mode must pass hot sites through untouched")
-    }
-  }
-
-  test("explicit cache mode: release frees the CacheManager entry") {
-    spark.catalog.clearCache()
-    withMode(Some("cache")) {
-      val p = Persist.intermediate(frame()).toDF()
-      assert(p.count() == 67)
-      assert(Bridge.isPlanCached(p))
-      Persist.release(p)
-      assert(Bridge.cacheManagerIsEmpty(spark))
-    }
+    val (h, cacheJobs) = TestSpark.withJobs(Persist.intermediateHot(grouped))
+    assert(cacheJobs == 0, s"intermediateHot started $cacheJobs jobs")
+    Persist.release(h)
   }
 
   // NOTE (r17 flake, 416/417): these tests must assert on the SPECIFIC
@@ -142,96 +128,26 @@ class PersistSpec extends AnyFunSuite {
   // `blocking = false` (only block deletion is deferred).
   test("local mode: release frees the checkpoint blocks") {
     val sc = spark.sparkContext
-    withMode(Some("local")) {
-      val p = Persist.intermediate(frame()).toDF()
-      assert(p.count() == 67)
-      val id = Bridge.localCheckpointRddId(p).getOrElse(
-        fail("materialized localCheckpoint must be LogicalRDD-backed"))
-      assert(sc.getPersistentRDDs.contains(id),
-        "materialized localCheckpoint must pin its RDD")
-      Persist.release(p)
-      assert(!sc.getPersistentRDDs.contains(id),
-        "release() must drop the checkpoint RDD's blocks " +
-          "(Dataset.unpersist alone cannot — the Bridge contract)")
-    }
+    val p = Persist.intermediate(frame()).toDF()
+    assert(p.count() == 67)
+    val id = Bridge.localCheckpointRddId(p).getOrElse(
+      fail("materialized localCheckpoint must be LogicalRDD-backed"))
+    assert(sc.getPersistentRDDs.contains(id),
+      "materialized localCheckpoint must pin its RDD")
+    Persist.release(p)
+    assert(!sc.getPersistentRDDs.contains(id),
+      "release() must drop the checkpoint RDD's blocks " +
+        "(Dataset.unpersist alone cannot — the Bridge contract)")
   }
 
-  test("none mode: passthrough, nothing persisted, release is a no-op") {
-    spark.catalog.clearCache()
-    withMode(Some("none")) {
-      val f = frame()
-      val p = Persist.intermediate(f)
-      assert(p eq f, "none mode must return the frame untouched")
-      assert(p.count() == 67)
-      assert(Bridge.localCheckpointRddId(p.toDF()).isEmpty,
-        "none mode must not have checkpointed the frame")
-      Persist.release(p) // must not throw on an unpersisted frame
-      assert(Bridge.cacheManagerIsEmpty(spark))
-    }
-  }
-
-  // operator-level invariance: representative gated queries whose
-  // pipelines route through Persist.intermediate (LSH dedup, IVF
-  // similarity, text self-join, skew histogram) must return identical
-  // rows under every mechanism — i.e. no operator silently depends on a
-  // persistence side effect (materialization barriers, block identity).
-  // In-loop truncation sites route through Persist.truncate (local on
-  // this static session) and are exercised unchanged underneath
-  // (dedup_clusters_star).
-  for (rep <- Seq("dedup_minhash_lsh", "sim_ann_ivf", "text_tfidf",
-      "dedup_clusters_star")) {
-    test(s"$rep rows are persistence-mode-invariant") {
-      def run() = graft.SparkEntry.queries(rep)(spark, TestSpark.Sf0001)
-        .collect().map(_.toString).sorted.toSeq
-      val expected = run() // default (local) mode
-      for (mode <- Seq("cache", "none")) {
-        spark.catalog.clearCache()
-        val got = withMode(Some(mode))(run())
-        assert(got == expected, s"$rep diverged under mode=$mode")
-      }
-      spark.catalog.clearCache()
-    }
-  }
-
-  test("reliable mode without a checkpoint dir fails loudly") {
-    assume(spark.sparkContext.getCheckpointDir.isEmpty)
-    withMode(Some("reliable")) {
-      val ex = intercept[IllegalStateException] {
-        Persist.intermediate(frame())
-      }
-      assert(ex.getMessage.contains("spark.checkpoint.dir"))
-    }
-  }
-
-  test("unknown mode names every accepted value") {
-    withMode(Some("eager")) {
-      val ex = intercept[IllegalArgumentException] {
-        Persist.intermediate(frame())
-      }
-      assert(ex.getMessage.contains("auto|local|cache|reliable|none"))
-    }
-  }
-
-  // The reliable-mode EXECUTION legs (checkpoint files actually written,
-  // gated-query equality, the dynamic-allocation cache leg) live in
-  // PersistDynAllocSpec, which boots its OWN SparkContext in its OWN
-  // forked JVM (build.sbt testGrouping): SparkContext.setCheckpointDir
-  // is set-once, so the shared TestSpark context must never see one —
-  // the r16 spelling set it here in a "runs last" test, which made the
-  // assume-guarded test above order-fragile and leaked the temp dir
-  // (the r17 advice item).
-
-  test("truncate auto rule: reliable only under dyn AND a checkpoint dir") {
-    assert(Persist.truncateAutoResolve(dyn = false,
-      hasCheckpointDir = false) == "local")
-    assert(Persist.truncateAutoResolve(dyn = false,
-      hasCheckpointDir = true) == "local")
-    assert(Persist.truncateAutoResolve(dyn = true,
-      hasCheckpointDir = false) == "local",
-      "no durable storage -> nothing loss-safe to write; stays local")
-    assert(Persist.truncateAutoResolve(dyn = true,
-      hasCheckpointDir = true) == "reliable")
-  }
+  // The dynamic-allocation legs (the cache leg, checkpoint files
+  // actually written, gated queries' rows equal across the cache and
+  // reliable legs) live in PersistDynAllocSpec, which boots its OWN
+  // SparkContext in its OWN forked JVM (build.sbt testGrouping):
+  // SparkContext.setCheckpointDir is set-once, so the shared TestSpark
+  // context must never see one — the r16 spelling set it here in a
+  // "runs last" test, which made this suite order-fragile and leaked
+  // the temp dir (the r17 advice item).
 
   test("truncate default resolves to localCheckpoint on this static session") {
     val sc = spark.sparkContext
@@ -247,28 +163,5 @@ class PersistSpec extends AnyFunSuite {
     Persist.release(t)
     assert(!sc.getPersistentRDDs.contains(id),
       "release() must free the truncation's checkpoint RDD")
-  }
-
-  test("truncate mode reliable without a checkpoint dir fails loudly") {
-    assume(spark.sparkContext.getCheckpointDir.isEmpty)
-    spark.conf.set(Persist.TruncateModeKey, "reliable")
-    try {
-      val ex = intercept[IllegalStateException] {
-        Persist.truncate(frame(), eager = false)
-      }
-      assert(ex.getMessage.contains("spark.checkpoint.dir"))
-    } finally spark.conf.unset(Persist.TruncateModeKey)
-  }
-
-  test("truncate unknown mode names every accepted value") {
-    spark.conf.set(Persist.TruncateModeKey, "cache")
-    try {
-      val ex = intercept[IllegalArgumentException] {
-        Persist.truncate(frame(), eager = true)
-      }
-      assert(ex.getMessage.contains("auto|local|reliable"),
-        "cache is deliberately NOT a truncation mode (it never cuts " +
-          "per-round plan growth) and the error must say what is")
-    } finally spark.conf.unset(Persist.TruncateModeKey)
   }
 }
