@@ -48,11 +48,10 @@ object Verify {
         }
         rm(new java.io.File(s"$outDir/$name"))
       }
-      // defensive sweep: operator intermediates are lazy localCheckpoints
-      // now (ContextCleaner-owned — not CacheManager entries), so the
-      // only standing victim is the edgeMemo's sanctioned entry, which
-      // memoEdges re-caches on its next hit; any future cache() stays
-      // bounded per query
+      // frees what the query left in the CacheManager: its hot re-scan
+      // frames (Persist.intermediateHot), and under dynamic allocation
+      // its cached intermediates; on static executors the others are
+      // lazy localCheckpoints the ContextCleaner owns
       spark.catalog.clearCache()
       // same reasoning as Bench's per-query GC: checkpoint/broadcast/
       // shuffle state is reclaimed by the ContextCleaner only when the

@@ -30,8 +30,7 @@ object BpeQueries {
   /** One learned model per (session, sfDir): the three gates (merges,
     * encode, pack) and repeated bench runs share a single 6-round
     * training pass — the types/merges frames are localCheckpointed, so
-    * caching the handles is safe and the re-learn would be pure waste
-    * (same doctrine as GraphQueries.edgeMemo).
+    * caching the handles is safe and the re-learn would be pure waste.
     */
   private val modelMemo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), (DataFrame, DataFrame)]()

@@ -2,8 +2,10 @@ package graft.queries
 
 import graft.ops.Bounded
 import graft.ops.Persist.PersistOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Graph analytics over relational data: PageRank (Page et al. 1999)
   * on the nation-level trade graph derived from
@@ -25,170 +27,121 @@ import org.apache.spark.sql.functions._
   * formulation; nodes with no INCOMING edge settle at the 150000
   * floor.
   *
-  * Scale: each iteration is one join of the edge list with the rank
-  * vector plus one aggregate — the textbook distributed PageRank shape
-  * (edges partition by src; ranks are the small side and broadcast
-  * here). Five fixed iterations keep the gate deterministic; a
-  * convergence-driven loop would `localCheckpoint` per round like
-  * ConnectedComponents.resolve does.
+  * Scale: the threshold also caps the graph at 550 edges at every SF
+  * ([[GraphQueries.TradeEdgeBound]]), so each query fetches it to the
+  * driver once ([[GraphQueries.tradeGraph]]) and joins LocalRelations.
+  * The parameterised operators ([[GraphQueries.pagerank]] and its
+  * siblings) take any graph: under their `localBound` they replay the
+  * rounds on the driver; above it each PageRank iteration is one join
+  * of the edge list with the rank vector plus one aggregate — the
+  * textbook distributed shape (edges partition by src; ranks are the
+  * small side and broadcast). Five fixed iterations keep the gate
+  * deterministic; a convergence-driven loop would `localCheckpoint` per
+  * round like ConnectedComponents.resolve does.
   */
 object GraphQueries {
   import RefQueries.table
 
   private val Iters = 5
 
-  /** Memo for the cached weighted edge DataFrame, keyed (session,
-    * sfDir). Without it every call cached a FRESH copy of the same
-    * ≤625-row derivation and never unpersisted it, so bench sweeps and
-    * repeated query runs accumulated dead cached RDDs. One retained
-    * entry per live (session, sfDir) pair is bounded and tiny, and it
-    * lets every graph query, weighted or not, share one
-    * materialization per sweep.
+  /** The most edges the trade graph can have, at any scale factor. An
+    * edge survives only when `cnt * TradeEdgeBound >= tot`, where `tot`
+    * is the sum of `cnt` over all counted pairs. Summed over the k
+    * surviving edges, `k * tot <= TradeEdgeBound * (their cnt sum) <=
+    * TradeEdgeBound * tot`, and `tot > 0` whenever an edge exists, so
+    * `k <= TradeEdgeBound`. [[tradeGraph]] fetches under exactly this
+    * bound, so every call checks the proof.
     */
-  private val edgeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  private val TradeEdgeBound = 550
 
-  /** One eviction listener per session with live memo entries, so the
-    * static map is bounded by LIVE sessions: on application end
-    * (`spark.stop()`), every entry keyed by that session is dropped —
-    * a harness cycling sessions otherwise retains edge frames whose
-    * contexts are dead for the JVM lifetime (r14 VERDICT item 6). The
-    * map doubles as the has-a-hook-been-installed guard; the spec
-    * fires the registered listener directly (the context-stop EVENT
-    * delivery is Spark's contract; the eviction body is ours to pin —
-    * stopping the suite's one shared local context would kill every
-    * later test in the JVM).
+  /** The trade graph on the driver: the thresholded directed edges
+    * (`src`, `dst`, `cnt`) as one fetch returned them, with the
+    * derivation's schema. Every view below is built from these rows,
+    * so a query derives the graph once and each frame it hands out is
+    * a LocalRelation (re-scanning one runs nothing, so none is
+    * persisted).
     */
-  private[graft] val memoListeners = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, org.apache.spark.scheduler.SparkListener]()
+  private[graft] final class TradeGraph(spark: SparkSession,
+      schema: StructType, rows: Array[Row]) {
 
-  /** Drop `spark`'s memo entries (and their cached blocks, when the
-    * context is still alive — on a genuinely stopped context the
-    * blocks died with it and unpersist would be a dead call). Returns
-    * the number evicted. The listener body; package-visible so the
-    * spec can pin it against the real registered instance.
-    */
-  private[graft] def evictEdgeMemo(spark: SparkSession): Int = {
-    var n = 0
-    val it = edgeMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq spark) {
-        // per-entry guard: this runs on the listener-bus thread during
-        // context stop, where isStopped can flip between the check and
-        // the unpersist (teardown race) — one entry's failure must not
-        // abort the sweep and pin the REMAINING entries for the JVM
-        // lifetime (the exact retention this eviction exists to prevent)
-        try {
-          if (!spark.sparkContext.isStopped)
-            e.getValue.unpersist(blocking = false)
-        } catch { case scala.util.control.NonFatal(_) => () }
-        it.remove(); n += 1
-      }
+    /** The weighted directed edges (`src`, `dst`, `cnt`). */
+    def weighted: DataFrame = spark.createDataFrame(rows.toSeq.asJava, schema)
+
+    /** The directed edges as (src, dst) pairs, in fetch order. */
+    def pairs: Array[(Long, Long)] = rows.map(r => (r.getLong(0), r.getLong(1)))
+
+    /** The weighted directed edges as (src, dst, cnt), in fetch order. */
+    def weightedTriples: Array[(Long, Long, Long)] =
+      rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+
+    /** The undirected graph: each edge between two distinct nations
+      * once, as (least, greatest), ascending. A null endpoint is no
+      * edge, as `src != dst` makes it in SQL.
+      */
+    def undirectedPairs: Array[(Long, Long)] =
+      rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1) &&
+          r.getLong(0) != r.getLong(1))
+        .map { r =>
+          val (s, d) = (r.getLong(0), r.getLong(1))
+          (math.min(s, d), math.max(s, d))
+        }.distinct.sorted
+
+    /** [[undirectedPairs]] as (`a`, `b`). Like `least`/`greatest`, a
+      * column is nullable only when both endpoints are.
+      */
+    def undirected: DataFrame = {
+      val nullable = schema("src").nullable && schema("dst").nullable
+      spark.createDataFrame(
+        undirectedPairs.toSeq.map { case (a, b) => Row(a, b) }.asJava,
+        StructType(Seq(StructField("a", LongType, nullable),
+          StructField("b", LongType, nullable))))
     }
-    // drop the listener from the shared context's bus too (when the
-    // context is still alive — the spec's simulated fire, or any future
-    // non-app-end eviction): an evict + re-use cycle would otherwise
-    // accumulate one dead listener per cycle for the context lifetime
-    val l = memoListeners.remove(spark)
-    try {
-      if (l != null && !spark.sparkContext.isStopped)
-        spark.sparkContext.removeSparkListener(l)
-    } catch { case scala.util.control.NonFatal(_) => () }
-    n
   }
 
-  /** Memoize the derived edge frame per (session, sfDir),
-    * installing the session's eviction listener on first use and
-    * sweeping entries whose context already stopped (covers a session
-    * stopped before its listener registration completed).
+  /** Derive the trade graph and fetch it to the driver: line-level
+    * trade rolled up to (customer_nation → supplier_nation) with the
+    * trade count kept as the edge WEIGHT, thresholded to keep the graph
+    * sparse (see object scaladoc). The fetch runs while the query is
+    * built; at most [[TradeEdgeBound]] rows come back.
     */
-  private def memoEdges(spark: SparkSession, sfDir: String)(
-      derive: => DataFrame): DataFrame = {
-    memoListeners.computeIfAbsent(spark, s => {
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          evictEdgeMemo(s); ()
-        }
-      }
-      s.sparkContext.addSparkListener(l)
-      l
-    })
-    edgeMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    // the listener map must not retain dead sessions either (a context
-    // stopped without its ApplicationEnd reaching our listener — e.g.
-    // a dropped AsyncEventQueue event — would otherwise pin the
-    // session object here for the JVM lifetime)
-    memoListeners.keySet.removeIf(s => s.sparkContext.isStopped)
-    val frame = edgeMemo.computeIfAbsent((spark, sfDir), _ => derive)
-    // re-cache on hit: harness sweeps (Verify/Bench run clearCache per
-    // query) uncache the memo's one sanctioned CacheManager entry, and
-    // without this every later graph query would re-run the 4-way
-    // derivation once per plan reference — the exact recompute the
-    // memo exists to prevent. This also self-heals the shared-plan
-    // seam: sessions of one context share the CacheManager by
-    // canonicalized plan, so another session's eviction uncaching the
-    // shared entry costs one re-cache here, never a silent recompute.
-    if (!org.apache.spark.sql.graft.Bridge.isPlanCached(frame)) frame.cache()
-    frame
+  private[graft] def tradeGraph(spark: SparkSession, sfDir: String): TradeGraph = {
+    val orders = table(spark, sfDir, "orders")
+      .select(col("o_orderkey"), col("o_custkey"))
+    val cust = table(spark, sfDir, "customer")
+      .select(col("c_custkey"), col("c_nationkey").cast("long").as("src"))
+    val li = table(spark, sfDir, "lineitem")
+      .select(col("l_orderkey"), col("l_suppkey"))
+    val supp = table(spark, sfDir, "supplier")
+      .select(col("s_suppkey"), col("s_nationkey").cast("long").as("dst"))
+    val counted = li
+      .join(orders, li("l_orderkey") === orders("o_orderkey"))
+      .join(broadcast(cust), orders("o_custkey") === cust("c_custkey"))
+      .join(broadcast(supp), li("l_suppkey") === supp("s_suppkey"))
+      .groupBy("src", "dst").agg(count(lit(1)).as("cnt"))
+    // total via a 1-row cross join, so one fetch returns the edges
+    val total = counted.agg(sum("cnt").as("tot"))
+    val edges = counted.crossJoin(broadcast(total))
+      .where(col("cnt") * TradeEdgeBound >= col("tot"))
+      .select("src", "dst", "cnt")
+    new TradeGraph(spark, edges.schema,
+      Bounded.rows(edges, TradeEdgeBound, "trade edges"))
   }
 
-  /** Spec probe: memo entries held for `spark`. */
-  private[graft] def edgeMemoEntryCount(spark: SparkSession): Int = {
-    var n = 0
-    edgeMemo.keySet.forEach(k => if (k._1 eq spark) n += 1)
-    n
-  }
+  /** The weighted directed trade edges (`src`, `dst`, `cnt`). */
+  private[graft] def tradeEdgesWeighted(spark: SparkSession, sfDir: String): DataFrame =
+    tradeGraph(spark, sfDir).weighted
 
-  /** The directed trade edges: [[tradeEdgesWeighted]] without the
-    * weight, a projection of the same cached frame, so the unweighted
-    * and weighted graph queries share one derivation per session.
-    */
+  /** The directed trade edges (`src`, `dst`). */
   private[graft] def tradeEdges(spark: SparkSession, sfDir: String): DataFrame =
     tradeEdgesWeighted(spark, sfDir).select("src", "dst")
 
-  /** Spec access to the directed edge list (bounded ≤625 rows) so
-    * brute-force graph recomputes pin the SAME derivation the
-    * operators run on, not a reimplementation that could drift.
+  /** Spec access to the directed edge list, so brute-force graph
+    * recomputes pin the SAME derivation the operators run on, not a
+    * reimplementation that could drift.
     */
   private[graft] def tradeEdgesForSpec(spark: SparkSession,
       sfDir: String): Array[(Long, Long)] =
-    tradeEdges(spark, sfDir).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-
-  /** Shared edge derivation: line-level trade rolled up to
-    * (customer_nation → supplier_nation) with the trade count kept as
-    * the edge WEIGHT, thresholded to keep the graph sparse (see object
-    * scaladoc). Cached, never unpersisted: the returned plans reference
-    * it from several joins deep, so dropping the blocks would force the
-    * 4-way join to re-run per reference when the caller finally
-    * executes. <= 625 rows — the session keeps it (one copy per
-    * (session, sfDir) via [[edgeMemo]], evicted when the session's
-    * context ends).
-    */
-  private[graft] def tradeEdgesWeighted(spark: SparkSession, sfDir: String): DataFrame =
-    memoEdges(spark, sfDir) {
-      val orders = table(spark, sfDir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-      val cust = table(spark, sfDir, "customer")
-        .select(col("c_custkey"), col("c_nationkey").cast("long").as("src"))
-      val li = table(spark, sfDir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val supp = table(spark, sfDir, "supplier")
-        .select(col("s_suppkey"), col("s_nationkey").cast("long").as("dst"))
-      val counted = li
-        .join(orders, li("l_orderkey") === orders("o_orderkey"))
-        .join(broadcast(cust), orders("o_custkey") === cust("c_custkey"))
-        .join(broadcast(supp), li("l_suppkey") === supp("s_suppkey"))
-        .groupBy("src", "dst").agg(count(lit(1)).as("cnt"))
-      // total via a 1-row cross join: never collected to the driver
-      val total = counted.agg(sum("cnt").as("tot"))
-      counted.crossJoin(broadcast(total))
-        .where(col("cnt") * 550 >= col("tot"))
-        .select("src", "dst", "cnt")
-        .cache()
-    }
+    tradeGraph(spark, sfDir).pairs
 
   /** The counted/edges CTE pair shared by every graph oracle.
     *
@@ -246,11 +199,7 @@ object GraphQueries {
     * dimension-sized and broadcast.
     */
   def graphTriangles(spark: SparkSession, sfDir: String): DataFrame = {
-    val edges = tradeEdges(spark, sfDir)
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = tradeGraph(spark, sfDir).undirected
     val e1 = und
     val e2 = und.select(col("a").as("b2"), col("b").as("c"))
     val e3 = und.select(col("a").as("a3"), col("b").as("c3"))
@@ -354,7 +303,6 @@ object GraphQueries {
     */
   private def localRankDf(spark: SparkSession,
       ranks: Array[(Long, Long)]): DataFrame = {
-    import scala.jdk.CollectionConverters._
     spark.createDataFrame(
       ranks.map { case (n, r) => org.apache.spark.sql.Row(n, r) }.toSeq.asJava,
       org.apache.spark.sql.types.StructType(Seq(
@@ -366,20 +314,15 @@ object GraphQueries {
 
   /** Driver bound for an edge list closed on the driver.
     *
-    * The trade graph never comes near it: [[tradeEdges]] and
-    * [[tradeEdgesWeighted]] keep an edge only when `cnt * 550 >= tot`,
-    * where `tot` is the sum of `cnt` over all counted pairs. Summed over
-    * the k surviving edges, `k * tot <= 550 * (their cnt sum) <=
-    * 550 * tot`, and `tot > 0` whenever an edge exists, so `k <= 550`
-    * at every scale factor. `graph_pagerank_weighted`, `graph_hits`,
-    * `graph_katz`, `graph_eigenvector`, `graph_ppr` and the all-pairs
-    * hop closure therefore run on the driver only, fetching through
-    * [[Bounded.rows]], which fails loudly should the invariant ever
-    * break. The parameterised helpers ([[pagerank]], [[betweenness]],
-    * [[lpaLabels]], [[kcoreSurvivors]], [[corenessLabels]]) take any
-    * graph, so for them it is the default split between the driver
-    * replay and the distributed loop, measured per call through
-    * [[Bounded.rowsAtMost]].
+    * The trade graph never comes near it: it has at most
+    * [[TradeEdgeBound]] edges, already on the driver, so
+    * `graph_pagerank_weighted`, `graph_hits`, `graph_katz`,
+    * `graph_eigenvector`, `graph_ppr` and the all-pairs hop closure run
+    * on the driver only, over [[TradeGraph]]'s rows. The parameterised
+    * helpers ([[pagerank]], [[betweenness]], [[lpaLabels]],
+    * [[kcoreSurvivors]], [[corenessLabels]]) take any graph, so for them
+    * it is the default split between the driver replay and the
+    * distributed loop, measured per call through [[Bounded.rowsAtMost]].
     */
   private val LocalRankEdgeBound = 500000
 
@@ -673,15 +616,10 @@ object GraphQueries {
     * cap's scaladoc); reported degrees stay the true degrees.
     */
   def graphNeighborOverlap(spark: SparkSession, sfDir: String): DataFrame = {
-    val edges = tradeEdges(spark, sfDir)
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = tradeGraph(spark, sfDir).undirected
     // bidirectional adjacency: (x, nbr) once per undirected edge end
     val adj = und.select(col("a").as("x"), col("b").as("nbr"))
       .unionByName(und.select(col("b").as("x"), col("a").as("nbr")))
-      .persistIntermediate
     val deg = adj.groupBy("x").agg(count(lit(1)).as("deg"))
     val cadj = capHubs(adj, deg.select(col("x").as("nbr"), col("deg")))
     val common = cadj.select(col("x"), col("nbr"))
@@ -741,14 +679,9 @@ object GraphQueries {
     * anyway; gate-inactive — see the cap's scaladoc).
     */
   def graphResourceAlloc(spark: SparkSession, sfDir: String): DataFrame = {
-    val edges = tradeEdges(spark, sfDir)
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = tradeGraph(spark, sfDir).undirected
     val adj = und.select(col("a").as("x"), col("b").as("nbr"))
       .unionByName(und.select(col("b").as("x"), col("a").as("nbr")))
-      .persistIntermediate
     val deg = adj.groupBy(col("x").as("z")).agg(count(lit(1)).as("deg"))
     val cadj = capHubs(adj, deg.select(col("z").as("nbr"), col("deg")))
     cadj.select(col("x"), col("nbr"))
@@ -796,20 +729,16 @@ object GraphQueries {
     * per-node pre-divide exists when weights differ per edge).
     *
     * Scale: the weighted trade graph has at most 550 edges (see
-    * [[LocalRankEdgeBound]]), so the rounds run on the driver in
+    * [[TradeEdgeBound]]), so the rounds run on the driver in
     * [[dampedRankLocal]] over the fetched edge list, and non-endpoint
     * nations keep the 150000 floor. A graph-sized weighted PageRank
     * would take [[pagerank]]'s distributed shape with the per-edge
     * quotient.
     */
   def graphPagerankWeighted(spark: SparkSession, sfDir: String): DataFrame = {
-    val wedges = tradeEdgesWeighted(spark, sfDir)
     val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
-    val es = Bounded.rows(
-      wedges.select(col("src").cast("long"), col("dst").cast("long"), col("cnt")),
-      LocalRankEdgeBound, "graph_pagerank_weighted trade edges")
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val es = tradeGraph(spark, sfDir).weightedTriples
     val lab = localRankDf(spark,
       dampedRankLocal(es, _ => 1000000L, _ => 150000L, Iters))
     nodes
@@ -866,28 +795,19 @@ object GraphQueries {
     * score 0 via the left join + coalesce.
     *
     * Scale: the trade graph has at most 550 edges (see
-    * [[LocalRankEdgeBound]]), so the half-steps run on the driver in
+    * [[TradeEdgeBound]]), so the half-steps run on the driver in
     * [[hitsScores]] over the fetched edge list.
     */
   def graphHits(spark: SparkSession, sfDir: String): DataFrame = {
-    val edges = tradeEdges(spark, sfDir)
     val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
-    val es = Bounded.rows(
-      edges.select(col("src").cast("long"), col("dst").cast("long")),
-      LocalRankEdgeBound, "graph_hits trade edges")
-      .map(r => (r.getLong(0), r.getLong(1)))
-    import scala.jdk.CollectionConverters._
     val lab = spark.createDataFrame(
-      hitsScores(es).map { case (n, h, a) =>
-        org.apache.spark.sql.Row(n, h, a) }.toSeq.asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("lhub",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("lauth",
-          org.apache.spark.sql.types.LongType, nullable = false))))
+      hitsScores(tradeGraph(spark, sfDir).pairs).map { case (n, h, a) =>
+        Row(n, h, a) }.toSeq.asJava,
+      StructType(Seq(
+        StructField("node", LongType, nullable = false),
+        StructField("lhub", LongType, nullable = false),
+        StructField("lauth", LongType, nullable = false))))
     nodes
       .join(broadcast(lab), Seq("node"), "left")
       .select(col("node").as("nationkey"),
@@ -963,13 +883,9 @@ object GraphQueries {
     * truncated centralities.
     */
   def graphBetweenness(spark: SparkSession, sfDir: String): DataFrame = {
-    val edges = tradeEdges(spark, sfDir)
     val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = tradeGraph(spark, sfDir).undirected
     val bidir = und.select(col("a").as("u"), col("b").as("v"))
       .unionByName(und.select(col("b").as("u"), col("a").as("v")))
     betweenness(nodes, bidir, BetweennessRounds)
@@ -1234,18 +1150,14 @@ object GraphQueries {
     * α·s = (30·s) DIV 1000), the pagerank fixed-iteration doctrine.
     *
     * Scale: the trade graph has at most 550 edges (see
-    * [[LocalRankEdgeBound]]), so the integer rounds run on the driver
+    * [[TradeEdgeBound]]), so the integer rounds run on the driver
     * over the fetched edge list. A graph-sized Katz would take
     * [[pagerank]]'s distributed shape minus the degree pre-divide.
     */
   def graphKatz(spark: SparkSession, sfDir: String): DataFrame = {
-    val edges = tradeEdges(spark, sfDir)
     val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
-    val es = Bounded.rows(
-      edges.select(col("src").cast("long"), col("dst").cast("long")),
-      LocalRankEdgeBound, "graph_katz trade edges")
-      .map(r => (r.getLong(0), r.getLong(1)))
+    val es = tradeGraph(spark, sfDir).pairs
     val endpoints = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
     var x = endpoints.map(_ -> 1000000L).toMap
     for (_ <- 1 to Iters) {
@@ -1298,23 +1210,14 @@ object GraphQueries {
     * engines on the identical prefix.
     *
     * Scale: the undirected trade graph has at most 550 edges (see
-    * [[LocalRankEdgeBound]]), so the rounds run on the driver in
+    * [[TradeEdgeBound]]), so the rounds run on the driver in
     * [[eigenvectorScores]] over the fetched bidirected edge list.
     */
   def graphEigenvector(spark: SparkSession, sfDir: String): DataFrame = {
-    val edges = tradeEdges(spark, sfDir)
     val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-    val bidir = und.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(und.select(col("b").as("u"), col("a").as("v")))
-    val es = Bounded.rows(
-      bidir.select(col("u").cast("long"), col("v").cast("long")),
-      LocalRankEdgeBound, "graph_eigenvector trade edges")
-      .map(r => (r.getLong(0), r.getLong(1)))
+    val es = tradeGraph(spark, sfDir).undirectedPairs
+      .flatMap { case (a, b) => Seq((a, b), (b, a)) }
     nodes
       .join(broadcast(localRankDf(spark, eigenvectorScores(es))),
         Seq("node"), "left")
@@ -1573,12 +1476,7 @@ object GraphQueries {
     * broadcast. No new shuffle shape beyond the triangle query.
     */
   def graphClusteringCoeff(spark: SparkSession, sfDir: String): DataFrame = {
-    val edges = tradeEdges(spark, sfDir)
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .persistIntermediate
+    val und = tradeGraph(spark, sfDir).undirected
     val deg = und.select(col("a").as("x"), col("b").as("nbr"))
       .unionByName(und.select(col("b").as("x"), col("a").as("nbr")))
       .groupBy("x").agg(count(lit(1)).as("deg"))
@@ -1656,11 +1554,7 @@ object GraphQueries {
     * O(1) per round instead of nesting all prior rounds.
     */
   def graphKcore(spark: SparkSession, sfDir: String): DataFrame = {
-    val edges = tradeEdges(spark, sfDir)
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = tradeGraph(spark, sfDir).undirected
     val adj0 = und.select(col("a").as("x"), col("b").as("nbr"))
       .unionByName(und.select(col("b").as("x"), col("a").as("nbr")))
     kcoreSurvivors(adj0, KcoreK, KcoreRounds)
@@ -1765,11 +1659,7 @@ object GraphQueries {
     * shared edge derivation.
     */
   def graphRichClub(spark: SparkSession, sfDir: String): DataFrame = {
-    val edges = tradeEdges(spark, sfDir)
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = tradeGraph(spark, sfDir).undirected
     val adj = und.select(col("a").as("x"))
       .unionByName(und.select(col("b").as("x")))
     val deg = adj.groupBy("x").agg(count(lit(1)).as("deg"))
@@ -1843,11 +1733,7 @@ object GraphQueries {
     */
   def graphCoreness(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val edges = tradeEdges(spark, sfDir)
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = tradeGraph(spark, sfDir).undirected
     val adj0 = und.select(col("a").as("x"), col("b").as("nbr"))
       .unionByName(und.select(col("b").as("x"), col("a").as("nbr")))
     corenessLabels(adj0, CorenessRounds)
@@ -1958,14 +1844,9 @@ object GraphQueries {
     */
   def graphAdamicAdar(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.IntegerLog2
-    val edges = tradeEdges(spark, sfDir)
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = tradeGraph(spark, sfDir).undirected
     val adj = und.select(col("a").as("x"), col("b").as("nbr"))
       .unionByName(und.select(col("b").as("x"), col("a").as("nbr")))
-      .persistIntermediate
     val deg = adj.groupBy(col("x").as("z")).agg(count(lit(1)).as("deg"))
     val cadj = capHubs(adj, deg.select(col("z").as("nbr"), col("deg")))
     cadj.select(col("x"), col("nbr"))
@@ -2056,12 +1937,7 @@ object GraphQueries {
     * keyed by the community domain. Nothing iterates.
     */
   def graphModularity(spark: SparkSession, sfDir: String): DataFrame = {
-    val edges = tradeEdges(spark, sfDir)
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .persistIntermediate
+    val und = tradeGraph(spark, sfDir).undirected
     val nat = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"),
         col("n_regionkey").cast("long").as("community"))
@@ -2150,14 +2026,9 @@ object GraphQueries {
     */
   def graphAssortativity(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.types.DoubleType
-    val edges = tradeEdges(spark, sfDir)
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = tradeGraph(spark, sfDir).undirected
     val adj = und.select(col("a").as("u"), col("b").as("v"))
       .unionByName(und.select(col("b").as("u"), col("a").as("v")))
-      .persistIntermediate
     val deg = adj.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
     val pairs = adj
       .join(broadcast(deg.select(col("node").as("u"), col("deg").as("dx"))), "u")
@@ -2233,7 +2104,6 @@ object GraphQueries {
     val wedges = tradeEdgesWeighted(spark, sfDir)
       .select(col("src"), col("dst"),
         expr("1000000000L DIV cnt").as("cost"))
-      .truncateLineage(true)
     val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
     var dist = nodes
@@ -2410,12 +2280,7 @@ object GraphQueries {
     */
   def graphKtruss(spark: SparkSession, sfDir: String): DataFrame = {
     val KtrussSupport = 10
-    val base = tradeEdges(spark, sfDir).where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .truncateLineage(true)
-    var und = base
+    var und = tradeGraph(spark, sfDir).undirected
     var supp: DataFrame = null
     for (_ <- 1 to 4) {
       val adj = und.select(col("a").as("x"), col("b").as("n"))
@@ -2498,11 +2363,11 @@ object GraphQueries {
         // the one iterative query missing it): without it each union
         // branch nests the whole previous chain, so the t-th step's
         // join+agg plans t times — 10 join+agg subtrees for 4 steps.
-        // Measured NEUTRAL at sf0.1 (r20 probe 1.72 → 1.68 s: edges is
-        // the memo-cached tradeEdges frame, so the nested recompute was
-        // cheap here); kept for the doctrine's real target — an
-        // uncached/expensive edge source, where each step would re-run
-        // the whole chain
+        // Measured NEUTRAL at sf0.1 (r20 probe 1.72 → 1.68 s: the edge
+        // source was already materialized, so the nested recompute was
+        // cheap here, as it is on today's LocalRelation); kept for the
+        // doctrine's real target — an expensive edge source, where
+        // each step would re-run the whole chain
         .truncateLineage(true)
       out = out.unionByName(st.withColumn("step", lit(t.toLong)))
     }
@@ -2666,7 +2531,7 @@ object GraphQueries {
     * equals tele, the standard PPR initialization.
     *
     * Scale: the trade graph has at most 550 edges (see
-    * [[LocalRankEdgeBound]]), so the rounds run on the driver in
+    * [[TradeEdgeBound]]), so the rounds run on the driver in
     * [[dampedRankLocal]] with init = base = the teleport vector, and
     * non-endpoint nations keep exactly their teleport mass. A
     * graph-sized PPR would take [[pagerank]]'s distributed shape with
@@ -2675,12 +2540,8 @@ object GraphQueries {
   def graphPpr(spark: SparkSession, sfDir: String): DataFrame = {
     val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
-    val edges = tradeEdges(spark, sfDir)
     val seeds = Seq(0L, 7L)
-    val es = Bounded.rows(
-      edges.select(col("src").cast("long"), col("dst").cast("long")),
-      LocalRankEdgeBound, "graph_ppr trade edges")
-      .map(r => (r.getLong(0), r.getLong(1), 1L))
+    val es = tradeGraph(spark, sfDir).pairs.map { case (s, d) => (s, d, 1L) }
     // seeds split 15% of n·1e6, everyone else 0
     val nTot = nodes.count()
     val teleOf = (n: Long) =>
@@ -2735,19 +2596,16 @@ object GraphQueries {
     * semantics; previously each carried its own copy of the loop).
     *
     * Scale: the trade graph has at most 550 edges over the nation set
-    * (see [[LocalRankEdgeBound]]), so plain per-root BFS runs on the
+    * (see [[TradeEdgeBound]]), so plain per-root BFS runs on the
     * driver over the fetched edge and node lists and builds the
     * ≤ |nations|²-row answer as a LocalRelation. A graph-sized closure
     * is graph_reachability's frontier-expansion loop with one frontier
     * per root.
     */
-  private def allPairsHops(nodes: DataFrame, edges: DataFrame): DataFrame = {
+  private def allPairsHops(nodes: DataFrame,
+      edges: Array[(Long, Long)]): DataFrame = {
     val spark = nodes.sparkSession
-    val adj = Bounded.rows(
-      edges.select(col("src").cast("long"), col("dst").cast("long")),
-      LocalRankEdgeBound, "all-pairs hop closure trade edges")
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    val adj = edges.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     val ns = Bounded.rows(nodes.select(col("node").cast("long")),
       LocalRankEdgeBound, "all-pairs hop closure nodes")
       .map(_.getLong(0)).sorted
@@ -2765,7 +2623,6 @@ object GraphQueries {
       for ((nd, d) <- dist.toSeq.sortBy(_._1))
         rows += org.apache.spark.sql.Row(root, nd, d)
     }
-    import scala.jdk.CollectionConverters._
     spark.createDataFrame(rows.asJava,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("root",
@@ -2792,9 +2649,8 @@ object GraphQueries {
   def graphCloseness(spark: SparkSession, sfDir: String): DataFrame = {
     val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
-    val edges = tradeEdges(spark, sfDir)
     val n = nodes.count()
-    allPairsHops(nodes, edges).groupBy("root")
+    allPairsHops(nodes, tradeGraph(spark, sfDir).pairs).groupBy("root")
       .agg(count(lit(1)).as("n_reached"), sum("dist").as("total_dist"))
       .select(col("root").as("nationkey"), col("n_reached"),
         col("total_dist"),
@@ -2854,9 +2710,8 @@ object GraphQueries {
     val L = 5354228880L // lcm(1..24)
     val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
-    val edges = tradeEdges(spark, sfDir)
     val n = nodes.count()
-    allPairsHops(nodes, edges).where(col("dist") > 0)
+    allPairsHops(nodes, tradeGraph(spark, sfDir).pairs).where(col("dist") > 0)
       .groupBy("root")
       .agg(sum(expr(s"${L}L div dist")).cast("long").as("harmonic_sc"),
         count(lit(1)).as("n_reached"))
@@ -2906,8 +2761,7 @@ object GraphQueries {
   def graphEccentricity(spark: SparkSession, sfDir: String): DataFrame = {
     val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
-    val edges = tradeEdges(spark, sfDir)
-    val ecc = allPairsHops(nodes, edges).groupBy("root")
+    val ecc = allPairsHops(nodes, tradeGraph(spark, sfDir).pairs).groupBy("root")
       .agg(max("dist").as("ecc"), count(lit(1)).as("n_reached"))
     val bounds = ecc.agg(max("ecc").as("diameter"), min("ecc").as("radius"))
     ecc.crossJoin(broadcast(bounds))

@@ -63,9 +63,7 @@ object Bridge {
     }
 
   /** True when the frame's plan has a live CacheManager entry — the
-    * re-cache-on-hit probe for session-lifetime memo frames (harness
-    * sweeps call `clearCache` per query, which would otherwise leave a
-    * memoized frame permanently uncached).
+    * spec hook behind Persist's cache-leg contracts.
     */
   def isPlanCached(df: org.apache.spark.sql.DataFrame): Boolean = df match {
     case d: org.apache.spark.sql.classic.Dataset[_] =>

@@ -45,13 +45,18 @@ class GraphProfileSpec extends AnyFunSuite {
     // path) must keep the rank vector in executor storage
     // (localCheckpoint'd LogicalRDD) for the whole loop — a per-round
     // driver-resident spelling would surface as a LocalRelation leaf.
-    // The default spelling MAY resolve the schema-bounded trade graph
-    // with the one-shot driver-local fixed point (the Tarjan/union-find
-    // doctrine) — and both paths must agree rank-for-rank.
+    // The trade edges arrive as an RDD (a LogicalRDD leaf), since
+    // tradeEdges itself is a LocalRelation. The default spelling MAY
+    // resolve the schema-bounded trade graph with the one-shot
+    // driver-local fixed point (the Tarjan/union-find doctrine) — and
+    // both paths must agree rank-for-rank.
     import org.apache.spark.sql.functions.col
+    import spark.implicits._
     val nodes = queries.RefQueries.table(spark, TestSpark.Sf001, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
-    val edges = GraphQueries.tradeEdges(spark, TestSpark.Sf001)
+    val edges = spark.sparkContext
+      .parallelize(GraphQueries.tradeEdgesForSpec(spark, TestSpark.Sf001).toSeq)
+      .toDF("src", "dst")
     val dist = GraphQueries.pagerank(nodes, edges, 3, localBound = 0)
     val leaves = dist.queryExecution.optimizedPlan.collectLeaves()
     assert(leaves.nonEmpty)

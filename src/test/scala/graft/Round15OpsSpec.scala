@@ -15,11 +15,10 @@ import graft.queries.GraphQueries
   *    leak class: a long-lived session running `sim_*`/`dedup_*`
   *    repeatedly accumulated one cached frame per invocation). One
   *    representative gated query per migrated family must leave the
-  *    session CacheManager empty. Sanctioned exceptions: the
-  *    session-lifetime [[graft.queries.GraphQueries]] edgeMemo frames
-  *    (probed separately — a migrated graph query may add nothing
-  *    beyond the memo's own entry), and, since r20, the HOT RE-SCAN
-  *    tier ([[graft.ops.Persist.intermediateHot]]): per-site,
+  *    session CacheManager empty, the trade-graph family included (its
+  *    edges are a driver-side LocalRelation). Sanctioned exception,
+  *    since r20: the HOT RE-SCAN tier
+  *    ([[graft.ops.Persist.intermediateHot]]): per-site,
   *    measurement-backed columnar `cache()` whose hygiene contract is
   *    "bounded per query, freed by clearCache", pinned below.
   * 2. SkewJoin.hotKeys must free its histogram checkpoint blocks on
@@ -83,26 +82,19 @@ class Round15OpsSpec extends AnyFunSuite {
         s"clearCache must free every frame $name registered")
     }
 
-  test("graph queries add no CacheManager entries beyond the edgeMemo") {
+  test("a trade-graph query leaves the CacheManager empty") {
     spark.catalog.clearCache()
-    // warm the documented session-lifetime memo first so its own entry
-    // is accounted for, then run a query whose per-query frames were
-    // migrated to localCheckpoint this round (the memo holds the
-    // weighted frame; tradeEdges is a projection of it)
-    val edges = graft.queries.GraphQueries.tradeEdgesWeighted(spark, TestSpark.Sf0001)
-    edges.count()
     val rows = SparkEntry.queries("graph_clustering_coeff")(
       spark, TestSpark.Sf0001).collect()
     assert(rows.nonEmpty)
-    // dropping the memo's one sanctioned entry must leave the manager
-    // empty — i.e. the query itself registered nothing
-    edges.unpersist(blocking = true)
     assert(Bridge.cacheManagerIsEmpty(spark),
-      "graph_clustering_coeff registered CacheManager frames beyond " +
-        "the documented edgeMemo entry")
-    // restore the memoized frame's cache for later suites in this JVM
-    edges.cache()
-    ()
+      "graph_clustering_coeff registered CacheManager frames")
+    // the edges are the fetched rows themselves, not a plan over the
+    // tables: re-scanning them runs nothing, so nothing is pinned
+    val leaves = GraphQueries.tradeEdgesWeighted(spark, TestSpark.Sf0001)
+      .queryExecution.optimizedPlan.collectLeaves()
+    assert(leaves.map(_.getClass.getSimpleName) == Seq("LocalRelation"),
+      s"trade edges are not one LocalRelation: $leaves")
   }
 
   private def seededBidir(seed: Int, n: Int, m: Int) = {
@@ -184,34 +176,6 @@ class Round15OpsSpec extends AnyFunSuite {
     val full = GraphQueries.betweenness(nodes, bidir, 10)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(idFull == full)
-  }
-
-  test("edgeMemo evicts a session's entries when its application ends") {
-    import graft.queries.GraphQueries
-    val s2 = spark.newSession()
-    assert(GraphQueries.edgeMemoEntryCount(s2) == 0)
-    assert(GraphQueries.tradeEdges(s2, TestSpark.Sf0001).count() > 0)
-    assert(GraphQueries.edgeMemoEntryCount(s2) == 1)
-    val listener = GraphQueries.memoListeners.get(s2)
-    assert(listener != null,
-      "first memo use must register the session's eviction listener")
-    // fire the REAL registered listener instance: stopping the suite's
-    // one shared local context would kill every later test in this JVM,
-    // and delivering the event on context stop is Spark's contract —
-    // the eviction body is what is ours to pin
-    listener.onApplicationEnd(
-      org.apache.spark.scheduler.SparkListenerApplicationEnd(0L))
-    assert(GraphQueries.edgeMemoEntryCount(s2) == 0,
-      "application end must evict the session's memo entries")
-    assert(GraphQueries.memoListeners.get(s2) == null,
-      "application end must drop the session's listener bookkeeping")
-    // a fresh use after eviction re-derives and re-hooks
-    assert(GraphQueries.tradeEdges(s2, TestSpark.Sf0001).count() > 0)
-    assert(GraphQueries.edgeMemoEntryCount(s2) == 1)
-    assert(GraphQueries.memoListeners.get(s2) != null,
-      "re-use after eviction must re-register the listener")
-    // drop the synthetic session's state so later suites start clean
-    assert(GraphQueries.evictEdgeMemo(s2) == 1)
   }
 
   test("SkewJoin.hotKeys frees its histogram checkpoint and registers nothing") {
