@@ -120,9 +120,4 @@ object JaroWinkler {
   /** Column API. */
   def jw(a: Column, b: Column): Column =
     Bridge.column(JaroWinkler(Bridge.expression(a), Bridge.expression(b)))
-
-  /** Register as SQL function `jaro_winkler(a, b)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => JaroWinkler(exprs(0), exprs(1)), "scala_udf")
 }

@@ -100,9 +100,4 @@ object LongArrayDot {
   /** Column API: dot product of two long-array columns. */
   def dotQ(a: Column, b: Column): Column =
     Bridge.column(LongArrayDot(Bridge.expression(a), Bridge.expression(b)))
-
-  /** Register as SQL function `long_array_dot(a, b)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "long_array_dot", exprs => LongArrayDot(exprs(0), exprs(1)), "scala_udf")
 }

@@ -239,33 +239,6 @@ object GraphQueries {
        |FROM nation n LEFT JOIN cnt c ON c.node = CAST(n.n_nationkey AS BIGINT)
        |ORDER BY nationkey""".stripMargin
 
-  /** Core fixed-iteration integer PageRank: `nodes(node)`,
-    * `edges(src, dst)` → `(node, rank)` with rank scaled by 1e6.
-    */
-  /** The rank vector is |nodes| rows by construction, so it (and the
-    * per-node contribution/degree frames) broadcast EXPLICITLY — the
-    * planner can't see through five iterations of joins to infer that,
-    * and falling back to sort-merge would shuffle the edge list every
-    * round. At web scale where ranks outgrow a broadcast, the hint
-    * changes to ranks and edges co-partitioned on src (one shuffle to
-    * establish, zero per iteration) — same algebra, different hint.
-    *
-    * Fully distributed: the rank vector lives in executor storage as a
-    * localCheckpoint'd DataFrame for the whole loop — NOTHING is
-    * collected to the driver between iterations (earlier rounds held
-    * the vector driver-side, which is a bottleneck the moment ranks
-    * outgrow one heap). Each round is one distributed job:
-    * edges ⋈ broadcast(rank DIV outdeg) → partial+final agg to |nodes|
-    * groups → left-join nodes → checkpoint the new vector.
-    * localCheckpoint (not cache) truncates lineage so the plan stays
-    * O(1) per round instead of nesting every prior round — the
-    * ConnectedComponents.resolve doctrine; a cluster deployment points
-    * spark.checkpoint.dir at durable storage and uses checkpoint() for
-    * executor-loss recovery. Replaced rounds' blocks are dropped
-    * eagerly or checkpoint storage grows linearly with iterations.
-    * All divisions are integral (DIV), so the result is bit-identical
-    * to the unrolled integer-arithmetic oracle.
-    */
   /** Driver-local damped-rank fixed point over a BOUNDED weighted edge
     * list — the exact integer arithmetic of the distributed loops in
     * [[pagerank]] / [[graphPagerankWeighted]] / [[graphPpr]], replayed
@@ -298,19 +271,20 @@ object GraphQueries {
     nodes.map(n => (n, rank(n)))
   }
 
+  /** A LocalRelation of non-null LONG columns `cols`, one row per
+    * tuple of `rows` (each of arity `cols.size`).
+    */
+  private def longFrame(spark: SparkSession, cols: String*)(
+      rows: Iterable[Product]): DataFrame =
+    spark.createDataFrame(rows.map(Row.fromTuple).toSeq.asJava,
+      StructType(cols.map(StructField(_, LongType, nullable = false))))
+
   /** (node, lrank) LocalRelation from a driver-resolved rank vector —
     * broadcast-joined back onto the full node set by the callers.
     */
   private def localRankDf(spark: SparkSession,
-      ranks: Array[(Long, Long)]): DataFrame = {
-    spark.createDataFrame(
-      ranks.map { case (n, r) => org.apache.spark.sql.Row(n, r) }.toSeq.asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("lrank",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-  }
+      ranks: Array[(Long, Long)]): DataFrame =
+    longFrame(spark, "node", "lrank")(ranks)
 
   /** Driver bound for an edge list closed on the driver.
     *
@@ -386,10 +360,39 @@ object GraphQueries {
     adj.join(broadcast(nbrDeg.where(col("deg") <= cap).select("nbr")),
       Seq("nbr")).select("x", "nbr").persistIntermediate
 
-  /** `localBound` = 0 disables the driver-local fast path — the spec
-    * hook that pins the distributed loop's plan contract (no
+  /** Core fixed-iteration integer PageRank: `nodes(node)`,
+    * `edges(src, dst)` → `(node, rank)` with rank scaled by 1e6.
+    *
+    * Under `localBound` edges the rounds replay on the driver
+    * ([[dampedRankLocal]]); `localBound` = 0 disables that path — the
+    * spec hook that pins the distributed loop's plan contract (no
     * LocalRelation leaves) independently of the default adaptive
     * behavior.
+    *
+    * The rank vector is |nodes| rows by construction, so it (and the
+    * per-node contribution/degree frames) broadcast EXPLICITLY — the
+    * planner can't see through five iterations of joins to infer that,
+    * and falling back to sort-merge would shuffle the edge list every
+    * round. At web scale where ranks outgrow a broadcast, the hint
+    * changes to ranks and edges co-partitioned on src (one shuffle to
+    * establish, zero per iteration) — same algebra, different hint.
+    *
+    * Above it the loop is fully distributed: the rank vector lives in
+    * executor storage as a localCheckpoint'd DataFrame for the whole
+    * loop — NOTHING is collected to the driver between iterations
+    * (earlier rounds held the vector driver-side, which is a
+    * bottleneck the moment ranks outgrow one heap). Each round is one
+    * distributed job:
+    * edges ⋈ broadcast(rank DIV outdeg) → partial+final agg to |nodes|
+    * groups → left-join nodes → checkpoint the new vector.
+    * localCheckpoint (not cache) truncates lineage so the plan stays
+    * O(1) per round instead of nesting every prior round — the
+    * ConnectedComponents.resolve doctrine; a cluster deployment points
+    * spark.checkpoint.dir at durable storage and uses checkpoint() for
+    * executor-loss recovery. Replaced rounds' blocks are dropped
+    * eagerly or checkpoint storage grows linearly with iterations.
+    * All divisions are integral (DIV), so the result is bit-identical
+    * to the unrolled integer-arithmetic oracle.
     */
   private[graft] def pagerank(nodes: DataFrame, edges: DataFrame, iters: Int,
       localBound: Int = LocalRankEdgeBound): DataFrame = {
@@ -503,78 +506,41 @@ object GraphQueries {
   /** `graph_bfs` — single-source shortest HOP distance over the
     * directed trade graph (source = nation 0), the frontier-expansion
     * primitive under reachability, radius, and influence queries.
+    * Every nation is reported; one the source cannot reach has a NULL
+    * distance.
     *
-    * Spelling: min-distance propagation, the BFS twin of
-    * ConnectedComponents.resolve's min-label loop. The distance vector
-    * starts as (source → 0, everything else NULL=∞); each round every
-    * node takes the null-skipping `least` of its own distance and
-    * min(in-neighbor distance) + 1; fixpoint when no distance changed
-    * (`changed` bit carried IN the round's checkpoint, so convergence
-    * is a scan of the node-sized vector, not an extra join job). At
-    * fixpoint the vector IS the exact hop distance; iterations needed
-    * = eccentricity of the source, bounded by maxIters with the same
-    * fail-loudly contract as ConnectedComponents (a silently partial
-    * BFS would undercount reachability).
-    *
-    * Scale: each round is one broadcast-join of the edge list with the
-    * node-sized distance vector + one partial+final min aggregate —
-    * NOTHING driver-side inside the loop, lineage truncated per round
-    * by localCheckpoint. When distances outgrow a broadcast, the hint
-    * flips to ranks⋈edges co-partitioned on src, same algebra (the
-    * pagerank doctrine above).
+    * Scale: the trade graph has at most [[TradeEdgeBound]] edges, so
+    * [[bfsHops]] runs on the driver over the fetched edge list and the
+    * distances join back onto the nation set as a LocalRelation.
     */
   def graphBfs(spark: SparkSession, sfDir: String): DataFrame = {
-    val edges = tradeEdges(spark, sfDir)
-    val nodes = table(spark, sfDir, "nation")
-      .select(col("n_nationkey").cast("long").as("node"))
-    // maxIters 30 >= any eccentricity on a 25-node graph
-    bfs(nodes, edges, source = 0L, maxIters = 30)
-      .select(col("node").as("nationkey"), col("dist"))
+    val hops = longFrame(spark, "node", "dist")(
+      bfsHops(tradeGraph(spark, sfDir).pairs, source = 0L))
+    table(spark, sfDir, "nation")
+      .select(col("n_nationkey").cast("long").as("nationkey"))
+      .join(broadcast(hops), col("nationkey") === col("node"), "left")
+      .select(col("nationkey"), col("dist"))
       .orderBy("nationkey")
   }
 
-  /** Core min-distance loop: `nodes(node)`, `edges(src, dst)` →
-    * `(node, dist)` with dist NULL for nodes unreachable from
-    * `source`. See graphBfs for the contract and scale notes.
+  /** Single-source BFS over directed `edges`: the hop distance of every
+    * node `source` reaches, the source itself at 0. Each level is the
+    * unvisited successors of the previous one, so a cycle ends the
+    * walk rather than extending it.
     */
-  private[graft] def bfs(nodes: DataFrame, edges: DataFrame,
-      source: Long, maxIters: Int): DataFrame = {
-    var dist = nodes.select(col("node").cast("long").as("node"))
-      .withColumn("dist", when(col("node") === source, 0L))
-      .truncateLineage(true)
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIters) {
-      val nbrMin = edges
-        .join(broadcast(dist.where(col("dist").isNotNull)
-          .select(col("node").as("src"), col("dist").as("dSrc"))), "src")
-        .groupBy(col("dst").as("node"))
-        .agg((min(col("dSrc")) + 1L).as("cand"))
-      val next = dist.join(broadcast(nbrMin), Seq("node"), "left")
-        // least/greatest skip NULLs: an unreached node (NULL) adopts
-        // cand outright, an unreachable one stays NULL
-        .select(col("node"),
-          least(col("dist"), col("cand")).as("dist"),
-          // parenthesize the NOT: `!x.as(...)` aliases first and negates
-          // the aliased column, leaving the output unnamed
-          (!(least(col("dist"), col("cand")) <=> col("dist"))).as("changed"))
-        // LAZY checkpoint: the ungrouped count-if below touches every
-        // partition, filling the checkpoint and answering convergence
-        // in ONE job per round instead of eager-checkpoint + isEmpty
-        // (the ConnectedComponents doctrine — isEmpty short-circuits
-        // and would leave a partial lazy checkpoint). Truncation-
-        // purpose, NOT Persist.intermediate-subject.
-        .truncateLineage(false)
-      converged = next
-        .agg(count(when(col("changed"), lit(1))).as("c"))
-        .head.getLong(0) == 0L
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(dist)
-      dist = next
-      it += 1
+  private[graft] def bfsHops(edges: Array[(Long, Long)],
+      source: Long): Map[Long, Long] = {
+    val adj = edges.groupMap(_._1)(_._2)
+    var dist = Map(source -> 0L)
+    var frontier = Seq(source)
+    var d = 0L
+    while (frontier.nonEmpty) {
+      d += 1
+      frontier = frontier.flatMap(adj.getOrElse(_, Array.empty[Long]))
+        .distinct.filterNot(dist.contains)
+      dist ++= frontier.map(_ -> d)
     }
-    if (!converged) throw new IllegalStateException(
-      s"BFS did not converge in $maxIters rounds")
-    dist.select(col("node"), col("dist"))
+    dist
   }
 
   /** DuckDB twin: textbook recursive-CTE BFS. UNION (not UNION ALL)
@@ -801,13 +767,8 @@ object GraphQueries {
   def graphHits(spark: SparkSession, sfDir: String): DataFrame = {
     val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
-    val lab = spark.createDataFrame(
-      hitsScores(tradeGraph(spark, sfDir).pairs).map { case (n, h, a) =>
-        Row(n, h, a) }.toSeq.asJava,
-      StructType(Seq(
-        StructField("node", LongType, nullable = false),
-        StructField("lhub", LongType, nullable = false),
-        StructField("lauth", LongType, nullable = false))))
+    val lab = longFrame(spark, "node", "lhub", "lauth")(
+      hitsScores(tradeGraph(spark, sfDir).pairs))
     nodes
       .join(broadcast(lab), Seq("node"), "left")
       .select(col("node").as("nationkey"),
@@ -1663,7 +1624,6 @@ object GraphQueries {
     val adj = und.select(col("a").as("x"))
       .unionByName(und.select(col("b").as("x")))
     val deg = adj.groupBy("x").agg(count(lit(1)).as("deg"))
-      .truncateLineage(true)
     val pairMin = und
       .join(deg.select(col("x").as("a"), col("deg").as("da")), "a")
       .join(deg.select(col("x").as("b"), col("deg").as("db")), "b")
@@ -2090,40 +2050,33 @@ object GraphQueries {
     * source node 0. Edge cost is 10⁹ DIV cnt — heavier trade = cheaper
     * hop — so the result ranks nations by how cheaply goods reach them
     * from nation 0 through the trade network. Integer throughout;
-    * unreachable nodes surface as NULL (both engines agree: the
-    * [[SsspInf]] sentinel never leaves the engine).
+    * unreachable nodes surface as NULL (the twin's [[SsspInf]]
+    * sentinel never leaves it; here an unreached node has no
+    * distance).
     *
-    * Scale: per round ONE join of the directed edge list against the
-    * distance vector plus a min-aggregate — the textbook distributed
-    * Bellman–Ford; the distance vector is node-sized and broadcast,
-    * localCheckpoint'd per round (the pagerank doctrine). Fixed rounds
-    * bound the gate; a convergence loop would test "any dist changed"
-    * per round at cluster scale.
+    * Scale: the trade graph has at most [[TradeEdgeBound]] edges, so
+    * the rounds run on the driver over the fetched edge list and the
+    * distances join back onto the nation set as a LocalRelation. Each
+    * round reads only the previous round's distances (synchronous, as
+    * the unrolled twin does); fixed rounds bound the gate, so the
+    * result is the ≤ [[SsspRounds]]-hop distance, not the fixpoint.
     */
   def graphSsspWeighted(spark: SparkSession, sfDir: String): DataFrame = {
-    val wedges = tradeEdgesWeighted(spark, sfDir)
-      .select(col("src"), col("dst"),
-        expr("1000000000L DIV cnt").as("cost"))
-    val nodes = table(spark, sfDir, "nation")
-      .select(col("n_nationkey").cast("long").as("node"))
-    var dist = nodes
-      .withColumn("dist",
-        when(col("node") === 0L, lit(0L)).otherwise(lit(SsspInf)))
-      .truncateLineage(true)
+    val wedges = tradeGraph(spark, sfDir).weightedTriples
+      .map { case (s, d, cnt) => (s, d, 1000000000L / cnt) }
+    var dist = Map(0L -> 0L)
     for (_ <- 1 to SsspRounds) {
-      val relax = wedges
-        .join(broadcast(dist.select(col("node").as("src"), col("dist"))), "src")
-        .where(col("dist") < SsspInf)
-        .groupBy(col("dst")).agg(min(col("dist") + col("cost")).as("via"))
-      dist = dist
-        .join(broadcast(relax), col("node") === col("dst"), "left")
-        .select(col("node"),
-          least(col("dist"), coalesce(col("via"), lit(SsspInf))).as("dist"))
-        .truncateLineage(true)
+      val via = wedges.collect {
+        case (s, d, cost) if dist.contains(s) => d -> (dist(s) + cost)
+      }.groupMapReduce(_._1)(_._2)(math.min)
+      dist = via.foldLeft(dist) { case (m, (v, c)) =>
+        m.updated(v, math.min(c, m.getOrElse(v, c))) }
     }
-    dist
-      .select(col("node").as("nationkey"),
-        when(col("dist") < SsspInf, col("dist")).as("dist_cost"))
+    table(spark, sfDir, "nation")
+      .select(col("n_nationkey").cast("long").as("nationkey"))
+      .join(broadcast(longFrame(spark, "node", "dist_cost")(dist)),
+        col("nationkey") === col("node"), "left")
+      .select(col("nationkey"), col("dist_cost"))
       .orderBy("nationkey")
   }
 
@@ -2273,28 +2226,25 @@ object GraphQueries {
     * so removals cascade exactly like the vertex peeling in k-core's
     * fixed-round doctrine.
     *
-    * Scale: per round one triangle join (edge ⋈ both endpoints'
-    * adjacency — the `graph_triangles` shape) and one filter;
-    * localCheckpoint per round. Fixed 4 rounds is the gateable
-    * restatement of run-to-fixpoint, same contract as k-core/SSSP.
+    * Scale: the trade graph has at most [[TradeEdgeBound]] edges, so
+    * the rounds run on the driver over [[TradeGraph.undirectedPairs]]:
+    * an edge's support is |N(a) ∩ N(b)| over the surviving edges, and
+    * an edge in no triangle drops out, as the twin's inner joins drop
+    * it. Fixed 4 rounds is the gateable restatement of
+    * run-to-fixpoint, same contract as k-core/SSSP.
     */
   def graphKtruss(spark: SparkSession, sfDir: String): DataFrame = {
     val KtrussSupport = 10
-    var und = tradeGraph(spark, sfDir).undirected
-    var supp: DataFrame = null
+    var und = tradeGraph(spark, sfDir).undirectedPairs
+    var supp = Array.empty[(Long, Long, Long)]
     for (_ <- 1 to 4) {
-      val adj = und.select(col("a").as("x"), col("b").as("n"))
-        .unionByName(und.select(col("b").as("x"), col("a").as("n")))
-      supp = und
-        .join(adj.select(col("x").as("a"), col("n")), "a")
-        .join(adj.select(col("x").as("b"), col("n")), Seq("b", "n"))
-        .groupBy("a", "b").agg(count(lit(1)).as("support"))
-        .truncateLineage(true)
-      und = supp.where(col("support") >= KtrussSupport)
-        .select("a", "b").truncateLineage(true)
+      val nbrs = (und ++ und.map(_.swap)).groupMap(_._1)(_._2)
+        .view.mapValues(_.toSet).toMap
+      supp = und.map { case (a, b) =>
+        (a, b, nbrs(a).intersect(nbrs(b)).size.toLong) }.filter(_._3 > 0)
+      und = supp.collect { case (a, b, n) if n >= KtrussSupport => (a, b) }
     }
-    supp.where(col("support") >= KtrussSupport)
-      .select("a", "b", "support")
+    longFrame(spark, "a", "b", "support")(supp.filter(_._3 >= KtrussSupport))
       .orderBy("a", "b")
   }
 
@@ -2339,39 +2289,33 @@ object GraphQueries {
     * never-random()-at-query-time rule as `analytics_abtest`. Walks
     * stop early at out-degree-0 dead ends.
     *
-    * Scale: one walker per start node, each step ONE join of the
-    * walker vector against the edge list + one per-walker struct-min —
-    * walks of length L are L edge joins regardless of graph size, the
-    * standard distributed walk shape (embedding pipelines batch
-    * thousands of walkers through the identical plan).
+    * Scale: the trade graph has at most [[TradeEdgeBound]] edges, so
+    * the walks run on the driver from every node with an out-edge and
+    * join back onto the nation set as a LocalRelation; every nation
+    * keeps its step-0 row. The mix runs in exact arithmetic, so an
+    * overflow fails as the twin's BIGINT would.
     */
   def graphRandomWalk(spark: SparkSession, sfDir: String): DataFrame = {
+    val succ = tradeGraph(spark, sfDir).pairs
+      .filter { case (s, d) => s != d }.groupMap(_._1)(_._2)
+    def mix(cur: Long, dst: Long, t: Long): Long =
+      Math.addExact(Math.addExact(Math.multiplyExact(cur, 1315423911L),
+        Math.multiplyExact(dst, 2654435761L)), t * 97L) % 1000003L
+    // (step, node) from `cur` on: the least (mix, dst) successor, until
+    // step 4 or a dead end
+    def walk(cur: Long, t: Long): List[(Long, Long)] =
+      if (t > 4) Nil
+      else succ.get(cur).fold(List.empty[(Long, Long)]) { ds =>
+        val next = ds.minBy(d => (mix(cur, d, t), d))
+        (t, next) :: walk(next, t + 1)
+      }
+    val steps = succ.keys.toSeq.flatMap(start =>
+      walk(start, 1).map { case (t, n) => (start, t, n) })
     val nodes = table(spark, sfDir, "nation")
-      .select(col("n_nationkey").cast("long").as("node"))
-    val edges = tradeEdges(spark, sfDir).where(col("src") =!= col("dst"))
-    var st = nodes.select(col("node").as("start"), col("node").as("cur"))
-    var out = st.withColumn("step", lit(0L))
-    for (t <- 1 to 4) {
-      st = st.join(edges, st("cur") === edges("src"))
-        .withColumn("mix",
-          (col("cur") * 1315423911L + col("dst") * 2654435761L +
-            lit(t.toLong) * 97L) % 1000003L)
-        .groupBy("start")
-        .agg(min(struct(col("mix"), col("dst"))).as("m"))
-        .select(col("start"), col("m.dst").as("cur"))
-        // per-round truncation (the pagerank doctrine — this walk was
-        // the one iterative query missing it): without it each union
-        // branch nests the whole previous chain, so the t-th step's
-        // join+agg plans t times — 10 join+agg subtrees for 4 steps.
-        // Measured NEUTRAL at sf0.1 (r20 probe 1.72 → 1.68 s: the edge
-        // source was already materialized, so the nested recompute was
-        // cheap here, as it is on today's LocalRelation); kept for the
-        // doctrine's real target — an expensive edge source, where
-        // each step would re-run the whole chain
-        .truncateLineage(true)
-      out = out.unionByName(st.withColumn("step", lit(t.toLong)))
-    }
-    out.select(col("start"), col("step"), col("cur").as("node"))
+      .select(col("n_nationkey").cast("long").as("start"))
+    nodes.select(col("start"), lit(0L).as("step"), col("start").as("node"))
+      .unionByName(nodes.join(
+        broadcast(longFrame(spark, "start", "step", "node")(steps)), "start"))
       .orderBy("start", "step")
   }
 
@@ -2404,24 +2348,50 @@ object GraphQueries {
   // ---- minimum spanning tree ------------------------------------------
 
   /** `graph_mst` — minimum spanning tree of the weighted trade graph
-    * (cost = 10⁹ DIV trade count, the SSSP scaling) via distributed
-    * BORŮVKA ([[graft.ops.Mst.boruvka]]): O(log n) rounds of
-    * per-component cheapest-edge picks + CC merges, the parallel-MST
-    * algorithm (Prim/Kruskal are sequential by construction). Weights
-    * are uniquified by endpoint-packing, so the MST is UNIQUE and the
-    * gate deterministic; the oracle computes the same unique tree with
-    * a one-row-per-step recursive Prim — a spelling that only works
-    * because the oracle graph is small, which is the point of shipping
-    * the log-round distributed operator.
+    * (cost = 10⁹ DIV trade count, the SSSP scaling) via Kruskal
+    * ([[mst]]) over the fetched edge list: the trade graph has at most
+    * [[TradeEdgeBound]] edges, so the tree is built on the driver and
+    * handed out as a LocalRelation. Ties break on the canonical
+    * endpoints, so the MST is UNIQUE and the gate deterministic; the
+    * oracle computes the same unique tree with a one-row-per-step
+    * recursive Prim.
     */
   def graphMst(spark: SparkSession, sfDir: String): DataFrame = {
-    val nodes = table(spark, sfDir, "nation")
-      .select(col("n_nationkey").cast("long").as("node"))
-    val edges = tradeEdgesWeighted(spark, sfDir)
-      .select(col("src"), col("dst"),
-        expr("CAST(1000000000 DIV cnt AS BIGINT)").as("cost"))
-    graft.ops.Mst.boruvka(nodes, edges)
-      .orderBy("a", "b")
+    val edges = tradeGraph(spark, sfDir).weightedTriples
+      .map { case (s, d, cnt) => (s, d, 1000000000L / cnt) }
+    longFrame(spark, "a", "b", "cost")(mst(edges)).orderBy("a", "b")
+  }
+
+  /** The minimum spanning forest of `edges` (src, dst, cost) as
+    * (a, b, cost) with a < b: direction is ignored, self-loops dropped
+    * and parallel edges collapse to their min cost. Kruskal takes the
+    * edges in (cost, a, b) order — the twin's packed
+    * `cost·2²⁰ + a·2¹⁰ + b` order wherever that packing fits — and
+    * keeps each one that joins two union-find trees. The order is
+    * total, so the forest is unique.
+    */
+  private[graft] def mst(
+      edges: Seq[(Long, Long, Long)]): Seq[(Long, Long, Long)] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = parent.get(x) match {
+      case Some(p) if p != x =>
+        val root = find(p)
+        parent(x) = root
+        root
+      case _ => x
+    }
+    edges.collect { case (s, d, c) if s != d =>
+        (math.min(s, d), math.max(s, d)) -> c }
+      .groupMapReduce(_._1)(_._2)(math.min)
+      .toSeq.map { case ((a, b), c) => (c, a, b) }.sorted
+      .flatMap { case (c, a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra == rb) None
+        else {
+          parent(ra) = rb
+          Some((a, b, c))
+        }
+      }
   }
 
   val graphMstSql: String =
@@ -2596,41 +2566,18 @@ object GraphQueries {
     * semantics; previously each carried its own copy of the loop).
     *
     * Scale: the trade graph has at most 550 edges over the nation set
-    * (see [[TradeEdgeBound]]), so plain per-root BFS runs on the
+    * (see [[TradeEdgeBound]]), so one [[bfsHops]] per root runs on the
     * driver over the fetched edge and node lists and builds the
-    * ≤ |nations|²-row answer as a LocalRelation. A graph-sized closure
-    * is graph_reachability's frontier-expansion loop with one frontier
-    * per root.
+    * ≤ |nations|²-row answer as a LocalRelation.
     */
   private def allPairsHops(nodes: DataFrame,
       edges: Array[(Long, Long)]): DataFrame = {
-    val spark = nodes.sparkSession
-    val adj = edges.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     val ns = Bounded.rows(nodes.select(col("node").cast("long")),
       LocalRankEdgeBound, "all-pairs hop closure nodes")
       .map(_.getLong(0)).sorted
-    val rows = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.Row]
-    for (root <- ns) {
-      val dist = scala.collection.mutable.Map(root -> 0L)
-      var frontier = Seq(root)
-      while (frontier.nonEmpty) {
-        val next = frontier.flatMap(v => adj.getOrElse(v, Array.empty[Long])
-          .filterNot(dist.contains)).distinct
-        next.foreach(w => dist(w) = dist(frontier.head) + 1)
-        frontier = next
-      }
-      for ((nd, d) <- dist.toSeq.sortBy(_._1))
-        rows += org.apache.spark.sql.Row(root, nd, d)
-    }
-    spark.createDataFrame(rows.asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("root",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("dist",
-          org.apache.spark.sql.types.LongType, nullable = false))))
+    longFrame(nodes.sparkSession, "root", "node", "dist")(
+      ns.toSeq.flatMap(root => bfsHops(edges, root).toSeq.sorted
+        .map { case (nd, d) => (root, nd, d) }))
   }
 
   /** `graph_closeness` — out-closeness centrality of every nation on the
@@ -2852,63 +2799,42 @@ object GraphQueries {
     * reach the core and BE core.
     *
     * Composition: the FB-coloring SCC resolution
-    * ([[graft.ops.StronglyConnectedComponents]]) does the distributed
-    * heavy lifting; reachability then runs on the SCC CONDENSATION —
-    * one distinct-aggregated (scc, scc) edge list, collected and closed
-    * on the driver (plain BFS, no per-round Spark jobs). The
-    * condensation of this graph is bounded (≤ |nations| components,
-    * ≤ |nations|² edges — derived by one hash-agg from lineitem), so
-    * the collect is a bounded model artifact like the IVF centroids;
+    * ([[graft.ops.StronglyConnectedComponents]]) labels every nation;
+    * the node-sized labels come back in one bounded fetch, and
+    * reachability runs on the SCC CONDENSATION — the distinct
+    * (scc, scc) pairs of the trade graph's rows — with [[bfsHops]] on
+    * the driver, one BFS per side. The condensation of this graph is
+    * bounded (≤ |nations| components, ≤ [[TradeEdgeBound]] edges);
     * the earlier spelling ran two 40-round frontier-BFS loops on the
     * full node set and paid ~40 tiny Spark jobs' fixed overhead for
-    * the same answer (5.8 s → the condensation closure is one job per
-    * side). For a graph whose condensation is NOT driver-bounded
-    * (web-scale crawls), swap the closure back to the frontier-BFS
-    * doctrine of `graph_reachability` — the labels join is unchanged.
-    * The oracle restates the DEFINITION via one transitive closure
-    * used four ways — fine at oracle scale, impossible at 100 TB.
+    * the same answer (5.8 s). For a graph whose condensation is NOT
+    * driver-bounded (web-scale crawls), the closure becomes a
+    * distributed frontier-expansion loop — the labels join is
+    * unchanged. The oracle restates the DEFINITION via one transitive
+    * closure used four ways — fine at oracle scale, impossible at
+    * 100 TB.
     */
   def graphBowtie(spark: SparkSession, sfDir: String): DataFrame = {
     val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
-    val edges = tradeEdges(spark, sfDir)
-    val scc = graft.ops.StronglyConnectedComponents.resolve(nodes, edges)
-      .truncateLineage(true)
-    // condensation: distinct (scc(src), scc(dst)) pairs, self-loops
-    // dropped — a bounded artifact (≤ |sccs|² rows)
-    val lab = scc.withColumnRenamed("node", "src")
-      .withColumnRenamed("scc_id", "s1")
-    val lab2 = scc.withColumnRenamed("node", "dst")
-      .withColumnRenamed("scc_id", "s2")
+    val graph = tradeGraph(spark, sfDir)
+    val scc = graft.ops.StronglyConnectedComponents.resolve(nodes,
+      graph.weighted.select("src", "dst"))
     // guard the driver-bounded assumption instead of just documenting
     // it: overflow fails loudly rather than silently ballooning the
-    // driver (past it, close reachability with graph_reachability's
-    // frontier-BFS spelling instead)
-    val condensation = Bounded.rows(
-      edges.join(lab, "src").join(lab2, "dst")
-        .where(col("s1") =!= col("s2"))
-        .select("s1", "s2").distinct(),
-      1000000, "graph_bowtie SCC condensation")
-      .map(r => (r.getLong(0), r.getLong(1)))
-    // core scc: most members, ties to the smaller id — one tiny agg
-    val coreId = scc.groupBy("scc_id").agg(count(lit(1)).as("n"))
-      .orderBy(desc("n"), col("scc_id")).limit(1)
-      .collect().head.getLong(0)
-    def closure(adj: Map[Long, Seq[Long]]): Set[Long] = {
-      var seen = Set(coreId)
-      var frontier = Seq(coreId)
-      while (frontier.nonEmpty) {
-        val next = frontier.flatMap(adj.getOrElse(_, Nil)).distinct
-          .filterNot(seen)
-        seen ++= next
-        frontier = next
-      }
-      seen
-    }
-    val fwdScc = closure(condensation.groupBy(_._1)
-      .view.mapValues(_.map(_._2).toSeq).toMap)
-    val bwdScc = closure(condensation.groupBy(_._2)
-      .view.mapValues(_.map(_._1).toSeq).toMap)
+    // driver
+    val lab = Bounded.rows(scc, LocalRankEdgeBound, "graph_bowtie SCC labels")
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // condensation: distinct (scc(src), scc(dst)) pairs between
+    // labelled nodes, self-loops dropped
+    val condensation = graph.pairs.flatMap { case (s, d) =>
+      for (a <- lab.get(s); b <- lab.get(d) if a != b) yield (a, b)
+    }.distinct
+    // core scc: most members, ties to the smaller id
+    val coreId = lab.values.groupMapReduce(identity)(_ => 1L)(_ + _)
+      .minBy { case (id, n) => (-n, id) }._1
+    val fwdScc = bfsHops(condensation, coreId).keySet
+    val bwdScc = bfsHops(condensation.map(_.swap), coreId).keySet
     scc
       .select(col("node").as("nationkey"), col("scc_id"),
         when(col("scc_id") === coreId, "core")

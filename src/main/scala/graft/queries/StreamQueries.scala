@@ -3,7 +3,7 @@ package graft.queries
 import graft.ops.Persist.PersistOps
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.Multimodal
 import graft.streaming.EventAnalytics
@@ -408,6 +408,34 @@ object StreamQueries {
       |       sha256(text) AS digest
       |FROM documents ORDER BY doc_id""".stripMargin
 
+  /** The gated feature columns every multimodal decode query ends
+    * with: the plane mean, the first 8 samples as JSON and the four
+    * bucket means (see [[multimodalFeatures]] for why the arrays are
+    * serialized).
+    */
+  private val FeatureTail: Seq[Column] = Seq(
+    col("mean_byte"),
+    to_json(col("frame_samples")).as("frame_samples_json")) ++
+    (0 to 3).map(b => element_at(col("thumb"), b + 1).as(s"thumb_$b"))
+
+  /** The twins' [[FeatureTail]] over the sample list `list`. Bucket
+    * bounds replicate Multimodal.resampleBytes' integer floor division
+    * (DuckDB `//`; list slices are 1-based inclusive vs Scala's
+    * 0-based exclusive, hence the +1 shifts). COALESCE(..., 0.0): an
+    * empty plane gives Spark 0.0 means, while the raw SQL divisions
+    * would go NULL (list_sum of an empty slice).
+    */
+  private def featureTailSql(list: String): String = {
+    def thumb(b: Int): String = {
+      val lo = s"($b*len($list))//4"
+      val hi = s"greatest((${b + 1}*len($list))//4, $lo + 1)"
+      s"""COALESCE(CAST(list_sum($list[$lo + 1 : $hi]) AS DOUBLE) / ($hi - $lo), 0.0) AS thumb_$b"""
+    }
+    (Seq(s"COALESCE(CAST(list_sum($list) AS DOUBLE) / NULLIF(len($list), 0), 0.0) AS mean_byte",
+      s"CAST(to_json($list[1:8]) AS VARCHAR) AS frame_samples_json") ++
+      (0 to 3).map(thumb)).mkString(",\n       ")
+  }
+
   /** Full mapPartitions feature-extraction path (stubbed decode).
     * The GATED projection serializes the array outputs — `frame_samples`
     * to a compact JSON string (int formatting is engine-stable; the
@@ -421,14 +449,7 @@ object StreamQueries {
     Multimodal.extractFeatures(spark,
         Multimodal.packFromText(table(spark, sfDir, "documents")))
       .toDF()
-      .select(
-        col("doc_id"), col("media_type"), col("n_bytes"), col("digest"),
-        col("mean_byte"),
-        to_json(col("frame_samples")).as("frame_samples_json"),
-        element_at(col("thumb"), 1).as("thumb_0"),
-        element_at(col("thumb"), 2).as("thumb_1"),
-        element_at(col("thumb"), 3).as("thumb_2"),
-        element_at(col("thumb"), 4).as("thumb_3"))
+      .select(Seq("doc_id", "media_type", "n_bytes", "digest").map(col) ++ FeatureTail: _*)
       .transform(gateSort(_, "doc_id"))
 
   /** The REAL decoder path under the gate: pack each document's bytes
@@ -455,14 +476,7 @@ object StreamQueries {
       }.toDF("doc_id", "media_type", "content")
     Multimodal.extractFeatures(spark, media)
       .toDF()
-      .select(
-        col("doc_id"), col("media_type"), col("n_bytes"), col("digest"),
-        col("mean_byte"),
-        to_json(col("frame_samples")).as("frame_samples_json"),
-        element_at(col("thumb"), 1).as("thumb_0"),
-        element_at(col("thumb"), 2).as("thumb_1"),
-        element_at(col("thumb"), 3).as("thumb_2"),
-        element_at(col("thumb"), 4).as("thumb_3"))
+      .select(Seq("doc_id", "media_type", "n_bytes", "digest").map(col) ++ FeatureTail: _*)
       .transform(gateSort(_, "doc_id"))
   }
 
@@ -472,12 +486,7 @@ object StreamQueries {
     * plane-mean / first-8 / 4-bucket features over it. Sha256/length
     * run on the container VARCHAR — identical bytes.
     */
-  val multimodalPpmSql: String = {
-    def thumb(b: Int): String = {
-      val lo = s"($b*len(luma))//4"
-      val hi = s"greatest((${b + 1}*len(luma))//4, $lo + 1)"
-      s"""COALESCE(CAST(list_sum(luma[$lo + 1 : $hi]) AS DOUBLE) / ($hi - $lo), 0.0) AS thumb_$b"""
-    }
+  val multimodalPpmSql: String =
     s"""WITH m AS MATERIALIZED (
        |  SELECT doc_id, text, length(text)//3 AS w FROM documents
        |  WHERE octet_length(encode(text)) >= 3
@@ -496,14 +505,8 @@ object StreamQueries {
        |SELECT doc_id, 'image/ppm' AS media_type,
        |       octet_length(encode(container)) AS n_bytes,
        |       sha256(container) AS digest,
-       |       COALESCE(CAST(list_sum(luma) AS DOUBLE) / NULLIF(len(luma), 0), 0.0) AS mean_byte,
-       |       CAST(to_json(luma[1:8]) AS VARCHAR) AS frame_samples_json,
-       |       ${thumb(0)},
-       |       ${thumb(1)},
-       |       ${thumb(2)},
-       |       ${thumb(3)}
+       |       ${featureTailSql("luma")}
        |FROM l ORDER BY doc_id""".stripMargin
-  }
 
   /** The COMPRESSED-raster decoder under the gate: pack each document's
     * bytes as a REAL spec-complete PNG (gray, w×1 — signature, IHDR,
@@ -531,13 +534,7 @@ object StreamQueries {
       }.toDF("doc_id", "media_type", "content")
     Multimodal.extractFeatures(spark, media)
       .toDF()
-      .select(
-        col("doc_id"), col("media_type"), col("n_bytes"), col("mean_byte"),
-        to_json(col("frame_samples")).as("frame_samples_json"),
-        element_at(col("thumb"), 1).as("thumb_0"),
-        element_at(col("thumb"), 2).as("thumb_1"),
-        element_at(col("thumb"), 3).as("thumb_2"),
-        element_at(col("thumb"), 4).as("thumb_3"))
+      .select(Seq("doc_id", "media_type", "n_bytes").map(col) ++ FeatureTail: _*)
       .transform(gateSort(_, "doc_id"))
   }
 
@@ -545,12 +542,7 @@ object StreamQueries {
     * byte sequence (ASCII ⇒ unicode() codes), so features restate over
     * codes; container size is the stored-block closed form len+69.
     */
-  val multimodalPngSql: String = {
-    def thumb(b: Int): String = {
-      val lo = s"($b*len(codes))//4"
-      val hi = s"greatest((${b + 1}*len(codes))//4, $lo + 1)"
-      s"""COALESCE(CAST(list_sum(codes[$lo + 1 : $hi]) AS DOUBLE) / ($hi - $lo), 0.0) AS thumb_$b"""
-    }
+  val multimodalPngSql: String =
     s"""WITH m AS MATERIALIZED (
        |  SELECT doc_id, text,
        |         list_transform(range(1, length(text)+1), i -> unicode(text[i])) AS codes
@@ -559,14 +551,8 @@ object StreamQueries {
        |)
        |SELECT doc_id, 'image/png' AS media_type,
        |       length(text) + 69 AS n_bytes,
-       |       COALESCE(CAST(list_sum(codes) AS DOUBLE) / NULLIF(len(codes), 0), 0.0) AS mean_byte,
-       |       CAST(to_json(codes[1:8]) AS VARCHAR) AS frame_samples_json,
-       |       ${thumb(0)},
-       |       ${thumb(1)},
-       |       ${thumb(2)},
-       |       ${thumb(3)}
+       |       ${featureTailSql("codes")}
        |FROM m ORDER BY doc_id""".stripMargin
-  }
 
   /** The RAW-DIB raster gate: pack each document's bytes as a real
     * 24-bit BMP (w×1, BGR triples, 4-byte row padding — see
@@ -590,25 +576,14 @@ object StreamQueries {
       }.toDF("doc_id", "media_type", "content")
     Multimodal.extractFeatures(spark, media)
       .toDF()
-      .select(
-        col("doc_id"), col("media_type"), col("n_bytes"), col("mean_byte"),
-        to_json(col("frame_samples")).as("frame_samples_json"),
-        element_at(col("thumb"), 1).as("thumb_0"),
-        element_at(col("thumb"), 2).as("thumb_1"),
-        element_at(col("thumb"), 3).as("thumb_2"),
-        element_at(col("thumb"), 4).as("thumb_3"))
+      .select(Seq("doc_id", "media_type", "n_bytes").map(col) ++ FeatureTail: _*)
       .transform(gateSort(_, "doc_id"))
   }
 
   /** DuckDB twin of the BMP decode: the decoded plane IS the text's
     * byte sequence; container size is 54 + the padded stride.
     */
-  val multimodalBmpSql: String = {
-    def thumb(b: Int): String = {
-      val lo = s"($b*len(codes))//4"
-      val hi = s"greatest((${b + 1}*len(codes))//4, $lo + 1)"
-      s"""COALESCE(CAST(list_sum(codes[$lo + 1 : $hi]) AS DOUBLE) / ($hi - $lo), 0.0) AS thumb_$b"""
-    }
+  val multimodalBmpSql: String =
     s"""WITH m AS MATERIALIZED (
        |  SELECT doc_id, text,
        |         list_transform(range(1, length(text)+1), i -> unicode(text[i])) AS codes
@@ -617,14 +592,8 @@ object StreamQueries {
        |)
        |SELECT doc_id, 'image/bmp' AS media_type,
        |       54 + (3 * length(text) + 3) // 4 * 4 AS n_bytes,
-       |       COALESCE(CAST(list_sum(codes) AS DOUBLE) / NULLIF(len(codes), 0), 0.0) AS mean_byte,
-       |       CAST(to_json(codes[1:8]) AS VARCHAR) AS frame_samples_json,
-       |       ${thumb(0)},
-       |       ${thumb(1)},
-       |       ${thumb(2)},
-       |       ${thumb(3)}
+       |       ${featureTailSql("codes")}
        |FROM m ORDER BY doc_id""".stripMargin
-  }
 
   /** The COMPRESSION-arm raster gate: pack each document's bytes as a
     * real GIF87a (gray palette, w×1) through MediaCodecs.encodeGrayGif's
@@ -651,13 +620,7 @@ object StreamQueries {
       }.toDF("doc_id", "media_type", "content")
     Multimodal.extractFeatures(spark, media)
       .toDF()
-      .select(
-        col("doc_id"), col("media_type"), col("mean_byte"),
-        to_json(col("frame_samples")).as("frame_samples_json"),
-        element_at(col("thumb"), 1).as("thumb_0"),
-        element_at(col("thumb"), 2).as("thumb_1"),
-        element_at(col("thumb"), 3).as("thumb_2"),
-        element_at(col("thumb"), 4).as("thumb_3"))
+      .select(Seq("doc_id", "media_type").map(col) ++ FeatureTail: _*)
       .transform(gateSort(_, "doc_id"))
   }
 
@@ -665,12 +628,7 @@ object StreamQueries {
     * text's byte sequence (identity palette), so features restate over
     * unicode() codes exactly as the PNG twin does.
     */
-  val multimodalGifSql: String = {
-    def thumb(b: Int): String = {
-      val lo = s"($b*len(codes))//4"
-      val hi = s"greatest((${b + 1}*len(codes))//4, $lo + 1)"
-      s"""COALESCE(CAST(list_sum(codes[$lo + 1 : $hi]) AS DOUBLE) / ($hi - $lo), 0.0) AS thumb_$b"""
-    }
+  val multimodalGifSql: String =
     s"""WITH m AS MATERIALIZED (
        |  SELECT doc_id, text,
        |         list_transform(range(1, length(text)+1), i -> unicode(text[i])) AS codes
@@ -678,14 +636,8 @@ object StreamQueries {
        |  WHERE octet_length(encode(text)) BETWEEN 1 AND 65535
        |)
        |SELECT doc_id, 'image/gif' AS media_type,
-       |       COALESCE(CAST(list_sum(codes) AS DOUBLE) / NULLIF(len(codes), 0), 0.0) AS mean_byte,
-       |       CAST(to_json(codes[1:8]) AS VARCHAR) AS frame_samples_json,
-       |       ${thumb(0)},
-       |       ${thumb(1)},
-       |       ${thumb(2)},
-       |       ${thumb(3)}
+       |       ${featureTailSql("codes")}
        |FROM m ORDER BY doc_id""".stripMargin
-  }
 
   /** `multimodal_audio_fingerprint` — Shazam-family landmark
     * fingerprinting over the REAL WAV decode + integer WHT spectra:
@@ -890,13 +842,7 @@ object StreamQueries {
       }.toDF("doc_id", "media_type", "content")
     Multimodal.extractFeatures(spark, media)
       .toDF()
-      .select(
-        col("doc_id"), col("media_type"), col("n_bytes"), col("mean_byte"),
-        to_json(col("frame_samples")).as("frame_samples_json"),
-        element_at(col("thumb"), 1).as("thumb_0"),
-        element_at(col("thumb"), 2).as("thumb_1"),
-        element_at(col("thumb"), 3).as("thumb_2"),
-        element_at(col("thumb"), 4).as("thumb_3"))
+      .select(Seq("doc_id", "media_type", "n_bytes").map(col) ++ FeatureTail: _*)
       .transform(gateSort(_, "doc_id"))
   }
 
@@ -1206,12 +1152,7 @@ object StreamQueries {
     * the even-truncated ≤90-byte data window; container size is header
     * (44) + data, computed arithmetically.
     */
-  val multimodalWavSql: String = {
-    def thumb(b: Int): String = {
-      val lo = s"($b*len(plane))//4"
-      val hi = s"greatest((${b + 1}*len(plane))//4, $lo + 1)"
-      s"""COALESCE(CAST(list_sum(plane[$lo + 1 : $hi]) AS DOUBLE) / ($hi - $lo), 0.0) AS thumb_$b"""
-    }
+  val multimodalWavSql: String =
     s"""WITH m AS MATERIALIZED (
        |  SELECT doc_id, text, least(90, (length(text)//2)*2) AS dl FROM documents
        |), l AS (
@@ -1221,14 +1162,8 @@ object StreamQueries {
        |)
        |SELECT doc_id, 'audio/wav' AS media_type,
        |       44 + dl AS n_bytes,
-       |       COALESCE(CAST(list_sum(plane) AS DOUBLE) / NULLIF(len(plane), 0), 0.0) AS mean_byte,
-       |       CAST(to_json(plane[1:8]) AS VARCHAR) AS frame_samples_json,
-       |       ${thumb(0)},
-       |       ${thumb(1)},
-       |       ${thumb(2)},
-       |       ${thumb(3)}
+       |       ${featureTailSql("plane")}
        |FROM l ORDER BY doc_id""".stripMargin
-  }
 
   /** `multimodal_resize` — the real 2-D box-filter resize over a real
     * decoded raster: pack each document as a 12-wide PPM (h = pixels/12
@@ -1626,21 +1561,10 @@ object StreamQueries {
 
   /** DuckDB twin of the stubbed decode: documents text is pure ASCII in
     * the testdata (verified max codepoint 121), so per-char `unicode()`
-    * codes ARE the UTF-8 bytes; bucket boundaries replicate
-    * Multimodal.resampleBytes' integer floor-division arithmetic
-    * (DuckDB `//`; list slices are 1-based inclusive vs Scala's 0-based
-    * exclusive, hence the +1 shifts).
+    * codes ARE the UTF-8 bytes; [[featureTailSql]] restates the
+    * features over them.
     */
-  val multimodalFeaturesSql: String = {
-    // COALESCE(..., 0.0): an empty document gives Spark's decodeStub /
-    // resampleBytes 0.0 means, while the raw SQL divisions would go
-    // NULL (list_sum of an empty slice) — guard the seam even though
-    // the current corpus has no empty docs
-    def thumb(b: Int): String = {
-      val lo = s"($b*len(codes))//4"
-      val hi = s"greatest((${b + 1}*len(codes))//4, $lo + 1)"
-      s"""COALESCE(CAST(list_sum(codes[$lo + 1 : $hi]) AS DOUBLE) / ($hi - $lo), 0.0) AS thumb_$b"""
-    }
+  val multimodalFeaturesSql: String =
     s"""WITH m AS MATERIALIZED (
        |  SELECT doc_id, 'text/utf-8' AS media_type, text,
        |         list_transform(range(1, length(text)+1), i -> unicode(text[i])) AS codes
@@ -1649,14 +1573,8 @@ object StreamQueries {
        |SELECT doc_id, media_type,
        |       octet_length(encode(text)) AS n_bytes,
        |       sha256(text) AS digest,
-       |       COALESCE(CAST(list_sum(codes) AS DOUBLE) / NULLIF(len(codes), 0), 0.0) AS mean_byte,
-       |       CAST(to_json(codes[1:8]) AS VARCHAR) AS frame_samples_json,
-       |       ${thumb(0)},
-       |       ${thumb(1)},
-       |       ${thumb(2)},
-       |       ${thumb(3)}
+       |       ${featureTailSql("codes")}
        |FROM m ORDER BY doc_id""".stripMargin
-  }
 
   /** `multimodal_audio_vad` — energy-threshold voice-activity
     * segmentation over the decoded WAV frame energies: a frame is

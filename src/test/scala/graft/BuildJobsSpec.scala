@@ -14,7 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *     checkpointed RDD at once, and adaptive execution materializes
   *     each exchange under it as its own job;
   *   - the shuffles plus one result job for a bounded fetch to the
-  *     driver (kendall_tau, theil_sen, markov_stationary).
+  *     driver (kendall_tau, theil_sen, markov_stationary);
+  *   - 7 for the trade-graph fetch (the 4-way lineitem join's shuffles
+  *     and the result job), which is all a graph query whose rounds
+  *     run on the fetched rows starts; graph_bowtie adds the SCC
+  *     resolver's edge fetch and one fetch of its labels.
   * A rise means a range shuffle, checkpoint or collect crept back in
   * ahead of planning.
   *
@@ -41,7 +45,14 @@ class BuildJobsSpec extends AnyFunSuite {
     "analytics_kendall_tau" -> 2,
     "analytics_theil_sen" -> 2,
     "analytics_posthoc_pairs" -> 1,
-    "analytics_mann_kendall" -> 1)
+    "analytics_mann_kendall" -> 1,
+    "graph_bfs" -> 7,
+    "graph_sssp_weighted" -> 7,
+    "graph_ktruss" -> 7,
+    "graph_random_walk" -> 7,
+    "graph_mst" -> 7,
+    "graph_rich_club" -> 7,
+    "graph_bowtie" -> 12)
 
   for ((name, jobs) <- expected)
     test(s"$name starts its pinned job count while building") {

@@ -1016,4 +1016,47 @@ class GateHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"pin frames through graft.ops.Persist instead: $offenders")
   }
+
+  /** The trade graph has at most 550 edges and reaches every query as
+    * driver rows, so a graph query over it needs no persist and no
+    * checkpoint: re-scanning a LocalRelation runs nothing. In
+    * GraphQueries.scala a `truncateLineage`, `persistIntermediate`,
+    * `persistHotIntermediate` or `Bridge.unpersistLocalCheckpoint`
+    * occurs only inside a member def of this ledger, each with its
+    * reason.
+    */
+  private val graphPersistLedger = Map(
+    "pagerank" -> "parameterised operator: its distributed loop runs past localBound and is the specs' reference",
+    "betweenness" -> "parameterised operator: its distributed loop runs past localBound and is the specs' reference",
+    "lpaLabels" -> "parameterised operator: its distributed loop runs past localBound and is the specs' reference",
+    "kcoreSurvivors" -> "parameterised operator: its distributed loop runs past localBound and is the specs' reference",
+    "corenessLabels" -> "parameterised operator: its distributed loop runs past localBound and is the specs' reference",
+    "capHubs" -> "A/B'd when the edges were distributed; re-measure on the driver-fetched graph before removing",
+    "copurchasePairs" -> "the basket self-join grows with lineitem, not with the trade graph")
+
+  test("a persist or checkpoint in GraphQueries.scala occurs only in a ledgered def") {
+    val pin = """\.(?:truncateLineage|persistIntermediate|persistHotIntermediate)\b|Bridge\.unpersistLocalCheckpoint\(""".r
+    assert(pin.findFirstIn("x.truncateLineage(true)").isDefined &&
+      pin.findFirstIn("  .persistIntermediate").isDefined &&
+      pin.findFirstIn(".persistHotIntermediate\n").isDefined &&
+      pin.findFirstIn("org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(d)").isDefined &&
+      pin.findFirstIn("[[Persist.truncate]]").isEmpty,
+      "the persistence pattern no longer matches its own spellings")
+    val path = Paths.get("src", "main", "scala", "graft", "queries", "GraphQueries.scala")
+    val text = repoText(path)
+    // the object member around the site (two-space indent), so a def
+    // nested inside a ledgered operator counts as that operator
+    val defName = """(?m)^  (?:private(?:\[\w+\])?\s+)?def\s+(\w+)""".r
+    val sites = pin.findAllMatchIn(text).map { m =>
+      val before = text.substring(0, m.start)
+      val enclosing = defName.findAllMatchIn(before).toSeq.lastOption
+        .map(_.group(1)).getOrElse("")
+      (enclosing, s"$path:${before.count(_ == '\n') + 1} ($enclosing)")
+    }.toSeq
+    val offenders = sites.filterNot(x => graphPersistLedger.contains(x._1)).map(_._2)
+    assert(offenders.isEmpty,
+      s"the trade graph is driver rows; drop the persist or ledger its def: $offenders")
+    val stale = graphPersistLedger.keySet -- sites.map(_._1)
+    assert(stale.isEmpty, s"ledger names defs that no longer persist: $stale")
+  }
 }

@@ -19,7 +19,7 @@ class LongArrayDotSpec extends AnyFunSuite {
 
   test("null in either side yields null; SQL registration works") {
     import spark.implicits._
-    LongArrayDot.register(spark)
+    graft.functions.registerAll(spark)
     Seq((Seq(1L, 2L), Option(Seq(3L, 4L))), (Seq(1L), None))
       .toDF("a", "b").createOrReplaceTempView("dot_in")
     val out = spark.sql("SELECT long_array_dot(a, b) AS d FROM dot_in ORDER BY d NULLS LAST")
@@ -28,7 +28,7 @@ class LongArrayDotSpec extends AnyFunSuite {
   }
 
   test("bad argument types fail analysis with the expression's message") {
-    LongArrayDot.register(spark)
+    graft.functions.registerAll(spark)
     import spark.implicits._
     Seq(("x", 1L)).toDF("s", "n").createOrReplaceTempView("dot_bad")
     val e = intercept[Exception] {
