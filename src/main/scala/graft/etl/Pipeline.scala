@@ -20,10 +20,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * Scale notes: stage boundaries as parquet keep each stage restartable
   * and let 1000 executors re-read with full partition pruning on the
-  * date directory. The extract step (browser scrape / Excel read in the
-  * reference, load_data.py:23-45,282-286) is out of engine scope; raw
-  * parquet is the canonical source of record, exactly as the reference
-  * itself persists it before any cleaning.
+  * date directory. Raw parquet is the canonical source of record,
+  * exactly as the reference itself persists it before any cleaning.
   */
 final case class PipelineConfig(baseDir: String, runDate: LocalDate) {
   def stageDir(name: String): String = s"$baseDir/$name/$runDate"

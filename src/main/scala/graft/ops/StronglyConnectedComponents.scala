@@ -79,22 +79,8 @@ object StronglyConnectedComponents {
           col("dst").cast("long").as("dst"))
         .where(col("src") =!= col("dst")).distinct(),
       localThreshold)
-    if (grabbed.isDefined) {
-      val lab = tarjanLabels(grabbed.get.map(r => (r.getLong(0), r.getLong(1))))
-      import scala.jdk.CollectionConverters._
-      val labDf = spark.createDataFrame(
-        lab.toArray.sortBy(_._1)
-          .map { case (n, s) => org.apache.spark.sql.Row(n, s) }.toSeq.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("lab_scc",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-      return nodes.select(col("node")).distinct()
-        .join(labDf, Seq("node"), "left")
-        .select(col("node"),
-          coalesce(col("lab_scc"), col("node")).as("scc_id"))
-    }
+    if (grabbed.isDefined)
+      return resolveLocal(nodes, grabbed.get.map(r => (r.getLong(0), r.getLong(1))))
     var remaining = nodes.select(col("node")).distinct().truncateLineage(true)
     var out = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -211,6 +197,28 @@ object StronglyConnectedComponents {
     if (nRemaining > 0) throw new IllegalStateException(
       s"SCC did not converge in $maxOuter peeling rounds")
     out
+  }
+
+  /** [[resolve]]'s contract over a directed edge list already on the
+    * driver: [[tarjanLabels]] over its distinct pairs, self-loops
+    * dropped, joined back onto `nodes`, so a node on no edge keeps
+    * `scc_id = node`. Starts no job; the node set is never collected.
+    */
+  def resolveLocal(nodes: DataFrame, edges: Array[(Long, Long)]): DataFrame = {
+    val lab = tarjanLabels(edges.filter { case (s, d) => s != d }.distinct)
+    import scala.jdk.CollectionConverters._
+    val labDf = nodes.sparkSession.createDataFrame(
+      lab.toArray.sortBy(_._1)
+        .map { case (n, s) => org.apache.spark.sql.Row(n, s) }.toSeq.asJava,
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("node",
+          org.apache.spark.sql.types.LongType, nullable = false),
+        org.apache.spark.sql.types.StructField("lab_scc",
+          org.apache.spark.sql.types.LongType, nullable = false))))
+    nodes.select(col("node")).distinct()
+      .join(labDf, Seq("node"), "left")
+      .select(col("node"),
+        coalesce(col("lab_scc"), col("node")).as("scc_id"))
   }
 
   /** Iterative Tarjan over a DRIVER-BOUNDED edge list: (node → scc_id)

@@ -2750,20 +2750,20 @@ object GraphQueries {
     * back to A) are the directed structure none of the undirected
     * operators (`dedup_clusters`' CC, label propagation) can see.
     *
-    * Runs [[graft.ops.StronglyConnectedComponents.resolve]] — the
-    * FB/coloring peeling algorithm with trivial-SCC trimming, fully
-    * distributed, `localCheckpoint` per round (see the op's scaladoc
-    * for the doctrine and why double min-propagation is WRONG). The
-    * oracle restates the DEFINITION, not the algorithm: a recursive-CTE
-    * transitive closure, scc_id(v) = min(w : v→*w ∧ w→*v, plus v) —
-    * fine at oracle scale, impossible at 100 TB, which is exactly the
-    * point of shipping the iterative operator.
+    * Labels the fetched trade graph's pairs with Tarjan on the driver
+    * ([[graft.ops.StronglyConnectedComponents.resolveLocal]]); the
+    * operator's FB/coloring peeling loop is for edge lists that are not
+    * already driver rows (see its scaladoc for why double
+    * min-propagation is WRONG). The oracle restates the DEFINITION, not
+    * the algorithm: a recursive-CTE transitive closure,
+    * scc_id(v) = min(w : v→*w ∧ w→*v, plus v) — fine at oracle scale,
+    * impossible at 100 TB.
     */
   def graphScc(spark: SparkSession, sfDir: String): DataFrame = {
     val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
-    val edges = tradeEdges(spark, sfDir)
-    graft.ops.StronglyConnectedComponents.resolve(nodes, edges)
+    graft.ops.StronglyConnectedComponents.resolveLocal(nodes,
+      tradeGraph(spark, sfDir).pairs)
       .select(col("node").as("nationkey"), col("scc_id"))
       .orderBy("nationkey")
   }
@@ -2798,10 +2798,10 @@ object GraphQueries {
     * OUT are disjoint by construction: a node in both would mutually
     * reach the core and BE core.
     *
-    * Composition: the FB-coloring SCC resolution
-    * ([[graft.ops.StronglyConnectedComponents]]) labels every nation;
-    * the node-sized labels come back in one bounded fetch, and
-    * reachability runs on the SCC CONDENSATION — the distinct
+    * Composition: Tarjan over the fetched trade graph's pairs
+    * ([[graft.ops.StronglyConnectedComponents.resolveLocal]]) labels
+    * every nation; the node-sized labels come back in one bounded
+    * fetch, and reachability runs on the SCC CONDENSATION — the distinct
     * (scc, scc) pairs of the trade graph's rows — with [[bfsHops]] on
     * the driver, one BFS per side. The condensation of this graph is
     * bounded (≤ |nations| components, ≤ [[TradeEdgeBound]] edges);
@@ -2818,8 +2818,7 @@ object GraphQueries {
     val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
     val graph = tradeGraph(spark, sfDir)
-    val scc = graft.ops.StronglyConnectedComponents.resolve(nodes,
-      graph.weighted.select("src", "dst"))
+    val scc = graft.ops.StronglyConnectedComponents.resolveLocal(nodes, graph.pairs)
     // guard the driver-bounded assumption instead of just documenting
     // it: overflow fails loudly rather than silently ballooning the
     // driver

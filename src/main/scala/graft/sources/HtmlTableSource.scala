@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** HTML table extraction (SURVEY.md §2.1 S2) — a dependency-free
   * re-implementation of the reference's `DataExtractor.extract_table`
@@ -111,8 +110,6 @@ object HtmlTableSource {
   def toDataFrame(spark: SparkSession, html: String,
       marker: String = "Occupation (SOC code)"): DataFrame = {
     val t = extractTable(html, marker)
-    val schema = StructType(t.columns.map(c => StructField(c, StringType)))
-    spark.createDataFrame(
-      java.util.Arrays.asList(t.rows.map(r => Row(r: _*)): _*), schema)
+    DriverRows.stringFrame(spark, t.columns, t.rows.map(_.toArray))
   }
 }

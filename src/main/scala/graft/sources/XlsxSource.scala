@@ -2,9 +2,9 @@ package graft.sources
 
 import java.util.zip.ZipFile
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, GenericInternalRow}
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable.ArrayBuffer
 
@@ -20,15 +20,28 @@ import scala.collection.mutable.ArrayBuffer
   * Cell handling: shared strings (`t="s"`), inline strings
   * (`t="inlineStr"`), literal strings (`t="str"`), booleans (`t="b"` →
   * TRUE/FALSE) and raw numeric text; absent cells stay null (sparse
-  * rows are common in SpreadsheetML). Values are surfaced as the RAW
-  * stored strings — type inference is downstream's job (the engine's
-  * cleaners coerce with try_cast, mirroring how the pandas frame's
-  * dtypes are re-imposed by the DDL on load).
+  * rows are common in SpreadsheetML). A string's phonetic runs
+  * (`<rPh>`, furigana) are dropped, as openpyxl's `Text.content` drops
+  * them. Values are surfaced as the RAW stored strings — type inference
+  * is downstream's job (the engine's cleaners coerce with try_cast,
+  * mirroring how the pandas frame's dtypes are re-imposed by the DDL on
+  * load).
   *
   * Scale note: like the HTML extract, this is a driver-side ingest step
   * for one workbook per run — the canonical analytical source stays the
   * parquet it lands in. A corpus of workbooks would instead be read in
   * parallel via binaryFile + mapPartitions over this same parser.
+  *
+  * The parsed rows reach Spark as a parallelized RDD
+  * ([[DriverRows.stringFrame]]), not as a local relation. A local
+  * relation of the Skills sheet's 62,580 rows is converted row by row
+  * on the driver when it is built; `ConvertToLocalRelation` then folds
+  * `readTyped`'s casts into it, evaluating them row by row, interpreted;
+  * and every optimizer rule that maps a plan's expressions maps the
+  * relation's row vector again (about 250 ms per planning of the bare
+  * relation at `local[4]` on a 4-CPU host). Over an RDD the plan's size does not depend on the row
+  * count, and the rows are converted and cast in tasks, the casts as
+  * generated code.
   *
   * Golden-tested cell-for-cell against the reference's shipped
   * `onet_skills_raw` parquet (62,580 × 15).
@@ -61,17 +74,23 @@ object XlsxSource {
     val out = ArrayBuffer.empty[String]
     val cur = new StringBuilder
     var inSi = false
+    var inPhonetic = false
     try {
       while (r.hasNext) {
         r.next() match {
           case XMLStreamConstants.START_ELEMENT =>
             r.getLocalName match {
               case "si" => inSi = true; cur.clear()
-              case "t" if inSi => cur.append(r.getElementText)
+              case "rPh" => inPhonetic = true
+              case "t" if inSi && !inPhonetic => cur.append(r.getElementText)
               case _ =>
             }
-          case XMLStreamConstants.END_ELEMENT if r.getLocalName == "si" =>
-            inSi = false; out += cur.toString
+          case XMLStreamConstants.END_ELEMENT =>
+            r.getLocalName match {
+              case "si" => inSi = false; out += cur.toString
+              case "rPh" => inPhonetic = false
+              case _ =>
+            }
           case _ =>
         }
       }
@@ -79,7 +98,11 @@ object XlsxSource {
     out.toIndexedSeq
   }
 
-  /** First worksheet: header row + data rows, cells as raw strings. */
+  /** First worksheet: header row + data rows, cells as raw strings. The
+    * header row is read first and fixes the width (its last valued cell);
+    * every later cell is written straight into its row's array, and a
+    * cell past the width is dropped.
+    */
   def readRaw(path: String): Sheet = {
     val zip = new ZipFile(path)
     try {
@@ -87,58 +110,69 @@ object XlsxSource {
       val entry = zip.getEntry("xl/worksheets/sheet1.xml")
       require(entry != null, s"no xl/worksheets/sheet1.xml in $path")
       val r = newReader(zip.getInputStream(entry))
-      val rows = ArrayBuffer.empty[ArrayBuffer[(Int, String)]]
-      var cur: ArrayBuffer[(Int, String)] = null
+      val header = ArrayBuffer.empty[String]
+      var width = -1 // -1 until the header row has ended
+      val rows = ArrayBuffer.empty[Array[String]]
+      var cur: Array[String] = null
+      var inRow = false
       var cellCol = -1
       var lastCol = -1
+      var lastValued = -1
       var cellType = ""
+      var inPhonetic = false
+      // rich-text inline cells carry one <t> per formatting run —
+      // concatenate runs of the SAME cell instead of letting the last run
+      // overwrite the others
+      def put(i: Int, value: String): Unit = {
+        if (width < 0) {
+          while (header.length <= i) header += null
+          header(i) = if (i == lastValued) header(i) + value else value
+        } else if (i < width)
+          cur(i) = if (i == lastValued) cur(i) + value else value
+        lastValued = i
+      }
       try {
         while (r.hasNext) {
           r.next() match {
             case XMLStreamConstants.START_ELEMENT =>
               r.getLocalName match {
-                case "row" => cur = ArrayBuffer.empty; lastCol = -1
+                case "row" =>
+                  inRow = true; lastCol = -1; lastValued = -1
+                  if (width >= 0) cur = new Array[String](width)
                 case "c" =>
                   // a cell without `r` sits right after the previous <c>,
                   // valued or not (SpreadsheetML §18.3.1.4)
-                  cellCol = if (cur == null) -1 else
-                    Option(r.getAttributeValue(null, "r")).map(colIndex).getOrElse(lastCol + 1)
+                  val ref = r.getAttributeValue(null, "r")
+                  cellCol = if (!inRow) -1 else if (ref == null) lastCol + 1 else colIndex(ref)
                   lastCol = cellCol
-                  cellType = Option(r.getAttributeValue(null, "t")).getOrElse("")
-                case "v" | "t" if cur != null && cellCol >= 0 =>
+                  val t = r.getAttributeValue(null, "t")
+                  cellType = if (t == null) "" else t
+                case "rPh" => inPhonetic = true
+                case "v" | "t" if inRow && cellCol >= 0 && !inPhonetic =>
                   val raw = r.getElementText
-                  val value = cellType match {
+                  put(cellCol, cellType match {
                     case "s" => sst(raw.trim.toInt)
                     case "b" => if (raw.trim == "1") "TRUE" else "FALSE"
                     case _ => raw // "str", "inlineStr" <t>, or numeric text
-                  }
-                  // rich-text inline cells carry one <t> per formatting
-                  // run — concatenate runs of the SAME cell instead of
-                  // letting the last run overwrite the others
-                  if (cur.nonEmpty && cur.last._1 == cellCol)
-                    cur(cur.length - 1) = (cellCol, cur.last._2 + value)
-                  else cur += ((cellCol, value))
+                  })
                 case _ =>
               }
             case XMLStreamConstants.END_ELEMENT =>
               r.getLocalName match {
-                case "row" => rows += cur; cur = null
+                case "row" =>
+                  inRow = false
+                  if (width < 0) width = header.length else rows += cur
                 case "c" => cellCol = -1; cellType = ""
+                case "rPh" => inPhonetic = false
                 case _ =>
               }
             case _ =>
           }
         }
       } finally r.close()
-      require(rows.nonEmpty, s"empty worksheet in $path")
-      val headerCells = rows.head
-      val width = headerCells.map(_._1).max + 1
-      def dense(cells: ArrayBuffer[(Int, String)]): Array[String] = {
-        val a = new Array[String](width)
-        cells.foreach { case (i, v) => if (i < width) a(i) = v }
-        a
-      }
-      Sheet(dense(headerCells).toSeq, rows.iterator.drop(1).map(dense).toIndexedSeq)
+      require(width >= 0, s"empty worksheet in $path")
+      require(width > 0, s"no valued header cell in $path")
+      Sheet(header.toIndexedSeq, rows.toIndexedSeq)
     } finally zip.close()
   }
 
@@ -147,12 +181,8 @@ object XlsxSource {
     */
   def read(spark: SparkSession, path: String): DataFrame = frame(spark, readRaw(path))
 
-  private def frame(spark: SparkSession, sheet: Sheet): DataFrame = {
-    val schema = StructType(sheet.header.map(c => StructField(c, StringType)))
-    spark.createDataFrame(
-      java.util.Arrays.asList(sheet.rows.map(r => Row(r.toIndexedSeq: _*)): _*),
-      schema)
-  }
+  private def frame(spark: SparkSession, sheet: Sheet): DataFrame =
+    DriverRows.stringFrame(spark, sheet.header, sheet.rows)
 
   /** Typed read with pandas' inference rules (what `pd.read_excel`
     * produces and the reference persists): a column is int64 only when

@@ -14,6 +14,16 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** A frame over rows already in Catalyst's internal format, with no
+    * encoder between them and the plan (`internalCreateDataFrame` is
+    * `private[sql]`). Every row must match `schema`.
+    */
+  def internalFrame(spark: org.apache.spark.sql.SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
+
   /** Free the block-manager storage behind a `localCheckpoint(eager)`
     * frame. `Dataset.unpersist` goes through the CacheManager and does
     * NOT release checkpoint blocks (the checkpointed rows live on the

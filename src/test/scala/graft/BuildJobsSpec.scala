@@ -17,8 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     driver (kendall_tau, theil_sen, markov_stationary);
   *   - 7 for the trade-graph fetch (the 4-way lineitem join's shuffles
   *     and the result job), which is all a graph query whose rounds
-  *     run on the fetched rows starts; graph_bowtie adds the SCC
-  *     resolver's edge fetch and one fetch of its labels.
+  *     run on the fetched rows starts; graph_bowtie labels the fetched
+  *     rows with Tarjan and adds one fetch of the labelled nation set
+  *     (its scan, the distinct's shuffle and the result job).
   * A rise means a range shuffle, checkpoint or collect crept back in
   * ahead of planning.
   *
@@ -52,7 +53,8 @@ class BuildJobsSpec extends AnyFunSuite {
     "graph_random_walk" -> 7,
     "graph_mst" -> 7,
     "graph_rich_club" -> 7,
-    "graph_bowtie" -> 12)
+    "graph_scc" -> 7,
+    "graph_bowtie" -> 10)
 
   for ((name, jobs) <- expected)
     test(s"$name starts its pinned job count while building") {

@@ -1059,4 +1059,47 @@ class GateHygieneSpec extends AnyFunSuite {
     val stale = graphPersistLedger.keySet -- sites.map(_._1)
     assert(stale.isEmpty, s"ledger names defs that no longer persist: $stale")
   }
+
+  /** Rows parsed on the driver enter Spark through
+    * `graft.sources.DriverRows.stringFrame`, an RDD-backed frame. In
+    * src/main/scala/graft/sources, a `createDataFrame(java.util…` or an
+    * `Arrays.asList` (the local-relation spelling, which converts every
+    * row on the driver and is re-mapped by every optimizer rule) is a
+    * second way in. Returns the 1-based line of each site in `text`.
+    */
+  private[graft] def localRelationSources(text: String): Seq[Int] = {
+    val site = """createDataFrame\(\s*java\.util\b|\bArrays\.asList\b""".r
+    site.findAllMatchIn(text)
+      .map(m => text.substring(0, m.start).count(_ == '\n') + 1).toSeq
+  }
+
+  test("a local-relation frame occurs nowhere in src/main/scala/graft/sources") {
+    val root = Paths.get("src", "main", "scala", "graft", "sources")
+    assert(Files.isDirectory(root),
+      s"$root missing — run sbt test from the repo root")
+    val s = Files.walk(root)
+    val offenders =
+      try s.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap(p => localRelationSources(repoText(p)).map(l => s"$p:$l"))
+        .toSeq.sorted
+      finally s.close()
+    assert(offenders.isEmpty,
+      s"build driver-parsed rows with DriverRows.stringFrame instead: $offenders")
+  }
+
+  test("the local-relation auditor fires on both spellings (bad fixture)") {
+    val bad =
+      """val df = spark.createDataFrame(
+        |  java.util.Arrays.asList(rows: _*), schema)
+        |val other = spark.createDataFrame(java.util.List.of(row), schema)
+        |val list = Arrays.asList(a, b)
+        |""".stripMargin
+    assert(localRelationSources(bad) == Seq(1, 2, 3, 4))
+    val good =
+      """DriverRows.stringFrame(spark, t.columns, t.rows.map(_.toArray))
+        |spark.createDataFrame(sc.parallelize(rows, n), schema)
+        |""".stripMargin
+    assert(localRelationSources(good).isEmpty)
+  }
 }

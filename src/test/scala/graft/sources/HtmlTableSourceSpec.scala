@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.TestSpark
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalatest.funsuite.AnyFunSuite
 
 /** S2 golden check: render the reference's shipped `oews_raw` parquet
@@ -90,5 +91,16 @@ class HtmlTableSourceSpec extends AnyFunSuite {
       "Sales & Related")
     assert(HtmlTableSource.text(" &#36;26.61&nbsp; ") == "$26.61")
     assert(HtmlTableSource.text("&#x28;5&#x29;-") == "(5)-")
+  }
+
+  test("toDataFrame's analyzed plan holds no LocalRelation") {
+    val html = render(Seq("Occupation (SOC code)", "Employment"),
+      Seq(Seq("Chief Executives(111011)", "1,000"), Seq("Legislators(111031)", "(8)")),
+      Seq("() Estimates not released.", "(8) Estimate not available."))
+    val df = HtmlTableSource.toDataFrame(spark, html)
+    val plan = df.queryExecution.analyzed
+    assert(plan.collect { case l: LocalRelation => l }.isEmpty, plan.treeString)
+    assert(df.collect().map(_.toSeq).toSeq == Seq(
+      Seq("Chief Executives(111011)", "1,000"), Seq("Legislators(111031)", "(8)")))
   }
 }

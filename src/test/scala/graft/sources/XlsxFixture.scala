@@ -23,6 +23,12 @@ object XlsxFixture {
   final case class Bool(value: Boolean) extends Cell
   /** A `<c/>` element that holds no value. */
   case object Blank extends Cell
+  /** A string with a phonetic run (`<rPh>`, furigana): `reading` over
+    * the whole `text`. Stored as a shared string, or inline when
+    * `inline` is set.
+    */
+  final case class Phonetic(text: String, reading: String, inline: Boolean = false)
+      extends Cell
 
   /** Writes `header` (as shared strings) and `rows` to `path`. A null
     * cell is left out of its row (a sparse row). With `refs = false` no
@@ -31,8 +37,14 @@ object XlsxFixture {
     */
   def write(path: String, header: Seq[String], rows: Seq[Seq[Cell]],
       refs: Boolean = true): Unit = {
+    // shared strings keyed by their <si> body
     val sst = mutable.LinkedHashMap.empty[String, Int]
-    def shared(s: String): Int = sst.getOrElseUpdate(s, sst.size)
+    def shared(body: String): Int = sst.getOrElseUpdate(body, sst.size)
+    def plain(s: String): String = s"""<t xml:space="preserve">${esc(s)}</t>"""
+    def phonetic(text: String, reading: String): String =
+      s"<t>${esc(text)}</t>" +
+        s"""<rPh sb="0" eb="${text.length}"><t>${esc(reading)}</t></rPh>""" +
+        """<phoneticPr fontId="1" type="noConversion"/>"""
     val sheet = new StringBuilder(
       """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
         s"""<worksheet xmlns="$Ns"><sheetData>""")
@@ -42,7 +54,7 @@ object XlsxFixture {
         val ref = if (refs) s""" r="${column(ci)}${ri + 1}"""" else ""
         cell match {
           case null =>
-          case Shared(s) => sheet.append(s"""<c$ref t="s"><v>${shared(s)}</v></c>""")
+          case Shared(s) => sheet.append(s"""<c$ref t="s"><v>${shared(plain(s))}</v></c>""")
           case Inline(runs @ _*) =>
             val body =
               if (runs.length == 1) s"<t>${esc(runs.head)}</t>"
@@ -51,12 +63,16 @@ object XlsxFixture {
           case Num(raw) => sheet.append(s"<c$ref><v>${esc(raw)}</v></c>")
           case Bool(b) => sheet.append(s"""<c$ref t="b"><v>${if (b) 1 else 0}</v></c>""")
           case Blank => sheet.append(s"<c$ref/>")
+          case Phonetic(text, reading, true) =>
+            sheet.append(s"""<c$ref t="inlineStr"><is>${phonetic(text, reading)}</is></c>""")
+          case Phonetic(text, reading, false) =>
+            sheet.append(s"""<c$ref t="s"><v>${shared(phonetic(text, reading))}</v></c>""")
         }
       }
       sheet.append("</row>")
     }
     sheet.append("</sheetData></worksheet>")
-    val strings = sst.keys.map(s => s"""<si><t xml:space="preserve">${esc(s)}</t></si>""")
+    val strings = sst.keys.map(body => s"<si>$body</si>")
       .mkString(s"""<sst xmlns="$Ns" count="${sst.size}" uniqueCount="${sst.size}">""", "", "</sst>")
 
     val zip = new ZipOutputStream(new FileOutputStream(path))

@@ -1,10 +1,13 @@
 package graft.sources
 
 import graft.TestSpark
+import graft.etl.{Pipeline, PipelineConfig}
 import java.nio.file.Files
+import java.time.LocalDate
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -112,6 +115,15 @@ class XlsxTypedReadSpec extends AnyFunSuite {
       Seq("only a", null, null, null)))
   }
 
+  test("reader: phonetic runs (<rPh>) are dropped from shared and inline strings") {
+    val path = workbook(Seq("kanji", "inline"), Seq(
+      Seq(Phonetic("漢字", "かんじ"), Phonetic("東京", "とうきょう", inline = true)),
+      Seq(Shared("plain"), Inline("a", "b"))))
+    assert(XlsxSource.readRaw(path).rows.map(_.toSeq) == Seq(
+      Seq("漢字", "東京"),
+      Seq("plain", "ab")))
+  }
+
   test("readTyped equals the aggregate rule on cast edge cases, alone and among integers") {
     val edge = Seq(" 12 ", "+5", "-0", "1e3", "1.0", "NaN", "Infinity", "inf",
       "1d", "0x10", "", "9223372036854775808")
@@ -152,5 +164,22 @@ class XlsxTypedReadSpec extends AnyFunSuite {
       (1 to 200).map(i => Seq(Shared(s"11-$i"), Num(s"$i.25"), Num(i.toString))))
     assert(jobsDuring(XlsxSource.readTyped(spark, path)) == 0)
     assert(jobsDuring(oracle(spark, path)) == 4)
+  }
+
+  test("readTyped's analyzed plan holds no LocalRelation") {
+    val path = workbook(Seq("code", "n"),
+      (1 to 50).map(i => Seq(Shared(s"11-$i"), Num(i.toString))))
+    val plan = XlsxSource.readTyped(spark, path).queryExecution.analyzed
+    assert(plan.collect { case l: LocalRelation => l }.isEmpty, plan.treeString)
+  }
+
+  test("a header-only workbook writes a raw stage that reads back as 0 rows") {
+    val path = workbook(Seq("a", "b"), Seq.empty)
+    val cfg = PipelineConfig(Files.createTempDirectory("graft-xlsx-stage").toString,
+      LocalDate.of(2024, 1, 1))
+    Pipeline.extractOnet(spark, cfg, path)
+    val back = Pipeline.readStage(spark, cfg, "onet_skills_raw")
+    assert(back.schema == XlsxSource.readTyped(spark, path).schema)
+    assert(types(back) == Seq(StringType, StringType) && back.count() == 0L)
   }
 }
