@@ -47,8 +47,4 @@ object Bounded {
   def rows(df: DataFrame, max: Long, what: String): Array[Row] =
     rowsAtMost(df, max).getOrElse(throw new IllegalStateException(
       s"$what: more than $max rows, past its driver bound"))
-
-  /** Whether `df` has at most `max` rows, counted without fetching them. */
-  def atMost(df: DataFrame, max: Long): Boolean =
-    max > 0 && complete(df.limit(fetchLimit(max) + 1).count(), max)
 }

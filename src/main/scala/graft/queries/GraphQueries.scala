@@ -4,7 +4,7 @@ import graft.ops.Bounded
 import graft.ops.Persist.PersistOps
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 
 /** Graph analytics over relational data: PageRank (Page et al. 1999)
@@ -30,14 +30,12 @@ import scala.jdk.CollectionConverters._
   * Scale: the threshold also caps the graph at 550 edges at every SF
   * ([[GraphQueries.TradeEdgeBound]]), so each query fetches it to the
   * driver once ([[GraphQueries.tradeGraph]]) and joins LocalRelations.
-  * The parameterised operators ([[GraphQueries.pagerank]] and its
-  * siblings) take any graph: under their `localBound` they replay the
-  * rounds on the driver; above it each PageRank iteration is one join
-  * of the edge list with the rank vector plus one aggregate — the
-  * textbook distributed shape (edges partition by src; ranks are the
-  * small side and broadcast). Five fixed iterations keep the gate
-  * deterministic; a convergence-driven loop would `localCheckpoint` per
-  * round like ConnectedComponents.resolve does.
+  * Every iterative operator ([[GraphQueries.pagerank]],
+  * [[GraphQueries.betweenness]], [[GraphQueries.lpaLabels]], the k-core
+  * and coreness peels, Tarjan SCC) is a plain driver function over the
+  * fetched rows that returns arrays; the query wraps them with
+  * [[GraphQueries.longFrame]]. Five fixed iterations keep the gate
+  * deterministic.
   */
 object GraphQueries {
   import RefQueries.table
@@ -172,11 +170,14 @@ object GraphQueries {
       |)""".stripMargin
 
   def graphPagerank(spark: SparkSession, sfDir: String): DataFrame = {
-    val edges = tradeEdges(spark, sfDir)
     val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
-    pagerank(nodes, edges, Iters)
-      .select(col("node").as("nationkey"), col("rank"))
+    val lab = localRankDf(spark, pagerank(tradeGraph(spark, sfDir).pairs, Iters))
+    nodes
+      .join(broadcast(lab), Seq("node"), "left")
+      // a node that is no edge endpoint receives no rank: the floor
+      .select(col("node").as("nationkey"),
+        coalesce(col("lrank"), lit(150000L)).as("rank"))
       .orderBy(desc("rank"), col("nationkey"))
   }
 
@@ -240,10 +241,10 @@ object GraphQueries {
        |ORDER BY nationkey""".stripMargin
 
   /** Driver-local damped-rank fixed point over a BOUNDED weighted edge
-    * list — the exact integer arithmetic of the distributed loops in
-    * [[pagerank]] / [[graphPagerankWeighted]] / [[graphPpr]], replayed
-    * on the driver: per edge (s, d, w) the contribution is
-    * (rank(s)·w) DIV totw(s); next(v) = base(v) + (850·Σc) DIV 1000.
+    * list — the integer arithmetic behind [[pagerank]] /
+    * [[graphPagerankWeighted]] / [[graphPpr]]: per edge (s, d, w) the
+    * contribution is (rank(s)·w) DIV totw(s); next(v) = base(v) +
+    * (850·Σc) DIV 1000.
     * Unweighted is the w = 1 special case ((rank·1) DIV deg =
     * rank DIV deg, the pre-divide spelling — same floors). Only
     * edge-ENDPOINT ranks are computed; callers coalesce non-endpoint
@@ -286,37 +287,21 @@ object GraphQueries {
       ranks: Array[(Long, Long)]): DataFrame =
     longFrame(spark, "node", "lrank")(ranks)
 
-  /** Driver bound for an edge list closed on the driver.
-    *
-    * The trade graph never comes near it: it has at most
-    * [[TradeEdgeBound]] edges, already on the driver, so
-    * `graph_pagerank_weighted`, `graph_hits`, `graph_katz`,
-    * `graph_eigenvector`, `graph_ppr` and the all-pairs hop closure run
-    * on the driver only, over [[TradeGraph]]'s rows. The parameterised
-    * helpers ([[pagerank]], [[betweenness]], [[lpaLabels]],
-    * [[kcoreSurvivors]], [[corenessLabels]]) take any graph, so for them
-    * it is the default split between the driver replay and the
-    * distributed loop, measured per call through [[Bounded.rowsAtMost]].
+  /** Driver bound for a node set fetched next to the trade graph: the
+    * nation ids that [[betweenness]] takes as its pivots, that
+    * [[allPairsHops]] takes as its roots and that `graph_bowtie`
+    * labels. The nation table is a dimension (25 rows at every scale
+    * factor), so a fetch past this bound is a broken invariant and
+    * fails loudly ([[nodeIds]]).
     */
-  private val LocalRankEdgeBound = 500000
+  private val NodeFetchBound = 500000
 
-  /** Node-count bound for the distributed [[pagerank]] loop's
-    * per-round NODE-SIZED broadcasts (contrib/sums/rank frames): two
-    * longs per node is ~100 MB of hash relation at this bound — a safe
-    * executor-memory footprint. Above it the same joins run as plain
-    * shuffle joins (AQE still upgrades them back if runtime stats
-    * allow). The guard is MEASURED per call ([[Bounded.atMost]]), never
-    * assumed — a generic caller with a billion-node graph must not
-    * broadcast O(nodes) every round.
+  /** The `node` column of `nodes` on the driver, under
+    * [[NodeFetchBound]]; `what` names the fetch if it overflows.
     */
-  private val BroadcastNodeBound = 2000000
-
-  /** The measured guard: returns `broadcast` when the node set fits
-    * [[BroadcastNodeBound]], identity otherwise. One bounded count job
-    * per distributed-loop invocation — negligible next to the loop.
-    */
-  private def nodeSideHint(nodeIds: DataFrame): DataFrame => DataFrame =
-    if (Bounded.atMost(nodeIds, BroadcastNodeBound)) broadcast else identity
+  private def nodeIds(nodes: DataFrame, what: String): Array[Long] =
+    Bounded.rows(nodes.select(col("node").cast("long")),
+      NodeFetchBound, what).map(_.getLong(0))
 
   /** Shared-neighbor hub cap for the co-occurrence link-prediction
     * family (neighbor_overlap / resource_alloc / adamic_adar): the
@@ -337,113 +322,30 @@ object GraphQueries {
     * re-keyed (degree by nbr == degree by x on a bidirected
     * adjacency) — reusing it keeps the cap to one broadcast semi
     * filter instead of adding a second degree aggregate (A/B'd:
-    * recomputing cost ~0.2–0.5 s of extra exchange per query).
-    * PERSISTED per call via Persist.intermediate (localCheckpoint on
-    * static executors, not cache()): every
-    * caller feeds it to BOTH sides of the co-occurrence self-join, and
-    * union/join branches get no common-subexpression elimination —
-    * unpersisted, each side re-derived the filter chain (the
-    * ConnectedComponents fwd-cache doctrine; A/B'd 3.6 → 2.6 s on
-    * neighbor_overlap). Checkpoint blocks are owned by the RDD,
-    * not the session CacheManager, so the ContextCleaner frees them as
-    * soon as the query's frames are dropped — a long-lived session
-    * running the co-occurrence family repeatedly accumulates nothing
-    * (cache() leaked one capped adjacency per invocation; r13 VERDICT
-    * item 5; on the dynamic-allocation cache leg that obligation
-    * returns and is documented at Persist). The spec overrides `cap`
-    * to pin the cut on a synthetic hub and pins the no-cache-growth
-    * contract.
+    * recomputing cost ~0.2–0.5 s of extra exchange per query). Not
+    * persisted: the adjacency is built from the fetched trade graph's
+    * rows, so each side of the co-occurrence self-join re-derives it
+    * from a LocalRelation. The spec overrides `cap` to pin the cut on
+    * a synthetic hub.
     */
   private[graft] def capHubs(adj: DataFrame, nbrDeg: DataFrame,
       cap: Long = HubNeighborCap): DataFrame =
     // re-project (x, nbr): the USING join puts the key column first
     adj.join(broadcast(nbrDeg.where(col("deg") <= cap).select("nbr")),
-      Seq("nbr")).select("x", "nbr").persistIntermediate
+      Seq("nbr")).select("x", "nbr")
 
-  /** Core fixed-iteration integer PageRank: `nodes(node)`,
-    * `edges(src, dst)` → `(node, rank)` with rank scaled by 1e6.
-    *
-    * Under `localBound` edges the rounds replay on the driver
-    * ([[dampedRankLocal]]); `localBound` = 0 disables that path — the
-    * spec hook that pins the distributed loop's plan contract (no
-    * LocalRelation leaves) independently of the default adaptive
-    * behavior.
-    *
-    * The rank vector is |nodes| rows by construction, so it (and the
-    * per-node contribution/degree frames) broadcast EXPLICITLY — the
-    * planner can't see through five iterations of joins to infer that,
-    * and falling back to sort-merge would shuffle the edge list every
-    * round. At web scale where ranks outgrow a broadcast, the hint
-    * changes to ranks and edges co-partitioned on src (one shuffle to
-    * establish, zero per iteration) — same algebra, different hint.
-    *
-    * Above it the loop is fully distributed: the rank vector lives in
-    * executor storage as a localCheckpoint'd DataFrame for the whole
-    * loop — NOTHING is collected to the driver between iterations
-    * (earlier rounds held the vector driver-side, which is a
-    * bottleneck the moment ranks outgrow one heap). Each round is one
-    * distributed job:
-    * edges ⋈ broadcast(rank DIV outdeg) → partial+final agg to |nodes|
-    * groups → left-join nodes → checkpoint the new vector.
-    * localCheckpoint (not cache) truncates lineage so the plan stays
-    * O(1) per round instead of nesting every prior round — the
-    * ConnectedComponents.resolve doctrine; a cluster deployment points
-    * spark.checkpoint.dir at durable storage and uses checkpoint() for
-    * executor-loss recovery. Replaced rounds' blocks are dropped
-    * eagerly or checkpoint storage grows linearly with iterations.
-    * All divisions are integral (DIV), so the result is bit-identical
-    * to the unrolled integer-arithmetic oracle.
+  /** Fixed-iteration integer PageRank over a directed edge list:
+    * (node, rank) for every edge endpoint, ascending, rank scaled by
+    * 1e6. Each round is rank' = 150000 + 850·Σ(rank_src DIV outdeg_src)
+    * DIV 1000 ([[dampedRankLocal]] with unit weights, so the per-edge
+    * quotient is the twin's `rank // deg`). A node that is no endpoint
+    * receives nothing and sits at the 150000 floor after the first
+    * round; the caller coalesces it.
     */
-  private[graft] def pagerank(nodes: DataFrame, edges: DataFrame, iters: Int,
-      localBound: Int = LocalRankEdgeBound): DataFrame = {
-    val nodeIds = nodes.select(col("node").cast("long").as("node"))
-    val grabbed = Bounded.rowsAtMost(
-      edges.select(col("src").cast("long"), col("dst").cast("long")), localBound)
-    if (grabbed.isDefined) {
-      val es = grabbed.get.map(r => (r.getLong(0), r.getLong(1), 1L))
-      val lab = localRankDf(nodes.sparkSession,
-        dampedRankLocal(es, _ => 1000000L, _ => 150000L, iters))
-      return nodeIds
-        .join(broadcast(lab), Seq("node"), "left")
-        .select(col("node"), coalesce(col("lrank"),
-          lit(if (iters == 0) 1000000L else 150000L)).as("rank"))
-    }
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      .select(col("src").cast("long").as("src"), col("deg"))
-      .truncateLineage(true)
-    // contrib/sums are O(nodes) per round: broadcast only while the
-    // measured node count fits (nodeSideHint) — a generic caller with
-    // a node set past the bound gets plain shuffle joins instead
-    val side = nodeSideHint(nodeIds)
-    var rank = nodeIds.withColumn("rank", lit(1000000L)).truncateLineage(true)
-    for (_ <- 1 to iters) {
-      // pre-divide: each edge contributes rank_src DIV deg_src, so the
-      // broadcast side carries the quotient directly (one row per
-      // source node, not per edge)
-      val contrib = rank.join(deg, rank("node") === deg("src"))
-        .select(col("src"), expr("rank DIV deg").as("c"))
-      val sums = edges.select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("node"))
-        .join(side(contrib), "src")
-        .groupBy("node").agg(sum(col("c")).as("s"))
-      val next = nodeIds
-        .join(side(sums), Seq("node"), "left")
-        .select(col("node"),
-          expr("150000L + (850L * coalesce(s, 0L)) DIV 1000L").as("rank"))
-        .truncateLineage(true)
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(rank)
-      rank = next
-    }
-    // deg's checkpoint blocks are dead once the last round is
-    // materialized — drop them or every pagerank invocation leaks a
-    // degree table into executor storage for the session lifetime
-    // (catalog.clearCache() does not touch RDD-level persists). The
-    // FINAL rank checkpoint must stay: the returned plan reads it and
-    // its lineage is truncated — it is the result, node-sized by
-    // contract.
-    org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(deg)
-    rank
-  }
+  private[graft] def pagerank(edges: Array[(Long, Long)],
+      iters: Int): Array[(Long, Long)] =
+    dampedRankLocal(edges.map { case (s, d) => (s, d, 1L) },
+      _ => 1000000L, _ => 150000L, iters)
 
   /** r1..r5 are mechanically unrolled (DuckDB supports recursive CTEs
     * with aggregates, but five explicit rounds read as exactly the
@@ -697,9 +599,7 @@ object GraphQueries {
     * Scale: the weighted trade graph has at most 550 edges (see
     * [[TradeEdgeBound]]), so the rounds run on the driver in
     * [[dampedRankLocal]] over the fetched edge list, and non-endpoint
-    * nations keep the 150000 floor. A graph-sized weighted PageRank
-    * would take [[pagerank]]'s distributed shape with the per-edge
-    * quotient.
+    * nations keep the 150000 floor.
     */
   def graphPagerankWeighted(spark: SparkSession, sfDir: String): DataFrame = {
     val nodes = table(spark, sfDir, "nation")
@@ -828,17 +728,10 @@ object GraphQueries {
     * doctrine) keeps both engines bit-identical with no float
     * accumulation order.
     *
-    * Scale: the all-pairs table is |sources|·|nodes| — exact
-    * betweenness is quadratic BY DEFINITION, so at 100 TB you sample
-    * pivots (in the spirit of Brandes & Pich 2007; see
-    * [[betweenness]] for the PAIR-RESTRICTED estimator this engine
-    * actually computes): the `sources` parameter IS that sample (the
-    * gate passes all 25 nations, where the estimator IS exact
-    * betweenness; a billion-node caller passes K random pivots and
-    * rescales by C(n,2)/C(K,2) if magnitudes matter). Each BFS
-    * round is one frontier ⋈ edges join + σ aggregate + anti-join —
-    * all keyed on (source, node), nothing driver-side; the bounded
-    * trade graph takes the measured driver-local replay instead.
+    * Scale: exact betweenness is quadratic BY DEFINITION (one BFS per
+    * source, one term per pair). The trade graph has at most
+    * [[TradeEdgeBound]] edges over the 25 nations, so [[betweenness]]
+    * runs on the driver over the fetched edges and nation ids.
     * Fail-loudly (the bfs doctrine): a frontier still alive after
     * [[BetweennessRounds]] throws rather than returning silently
     * truncated centralities.
@@ -846,201 +739,61 @@ object GraphQueries {
   def graphBetweenness(spark: SparkSession, sfDir: String): DataFrame = {
     val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
-    val und = tradeGraph(spark, sfDir).undirected
-    val bidir = und.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(und.select(col("b").as("u"), col("a").as("v")))
-    betweenness(nodes, bidir, BetweennessRounds)
+    val und = tradeGraph(spark, sfDir).undirectedPairs
+    longFrame(spark, "nationkey", "btw_1e6")(
+      betweenness(nodeIds(nodes, "betweenness pivots"),
+        und ++ und.map(_.swap), BetweennessRounds))
       .orderBy("nationkey")
   }
 
   /** The engine behind [[graphBetweenness]]: `bidir` is the bidirected
-    * neighbor list (`u`, `v` long); `sources` (default = `nodes`) is
-    * the pivot set — the estimator is PAIR-RESTRICTED: B(v) sums over
-    * pairs s&lt;t with BOTH endpoints drawn from `sources` (so a K-pivot
-    * sample scores C(K,2)/C(n,2) of the pair terms; pass
-    * `rescale = true` for the unbiased magnitude — see the factor's
-    * derivation and variance bound at the `finish` helper below; ranks
-    * concentrate without it). This is deliberately NOT the Brandes–Pich one-sided pivot
-    * estimator (sources × all-targets): pair restriction is what the
-    * σ-product identity computes with one join, and with
-    * sources = nodes the two coincide exactly. The output always
-    * covers all of `nodes`. Returns (`nationkey`, `btw_1e6`).
-    * `localBound` = 0 forces the distributed loop (the pagerank spec
-    * hook); Round13OpsSpec pins local == distributed on seeded random
-    * graphs and sampled(sources = nodes) == full.
+    * neighbor list, `nodes` the pivot set, which is also the output's
+    * node set: (node, btw_1e6) for each distinct node, ascending. B(v)
+    * sums over pairs s&lt;t of `nodes` with d(s,v) + d(v,t) = d(s,t) the
+    * floored term (σ_sv·σ_tv·10⁶) DIV σ_st. A BFS whose frontier is
+    * still growing after `maxRounds` levels throws; one that fills its
+    * last level exactly is complete (one step of lookahead proves it).
     */
-  private[graft] def betweenness(nodes: DataFrame, bidir: DataFrame,
-      maxRounds: Int, localBound: Int = LocalRankEdgeBound,
-      sources: DataFrame = null, rescale: Boolean = false): DataFrame = {
-    val spark = nodes.sparkSession
-    // distinct: the local replay dedups its collected pivot list, so
-    // the distributed seed must too — a pivot sampled twice (sampling
-    // with replacement) would otherwise seed sigma = 2 at its own
-    // source row and inflate every pair term through it
-    val srcFrame = Option(sources).getOrElse(nodes)
-      .select(col("node").cast("long").as("node"))
-      .distinct()
-    // `rescale`: multiply the pair-restricted estimate by
-    // C(n,2)/C(K,2) — a K-pivot sample scores C(K,2) of the C(n,2)
-    // pair terms, so for pivots drawn uniformly without replacement
-    // every pair has inclusion probability C(K,2)/C(n,2) and the
-    // rescaled sum is UNBIASED in expectation (Horvitz–Thompson with
-    // equal inclusion probabilities; linearity of expectation needs no
-    // pair independence). Per-node spread concentrates as
-    // O(1/√C(K,2)) of the node's max pair contribution (Hoeffding over
-    // the sampled bounded pair terms) — ranks concentrate much faster,
-    // magnitudes carry the stated variance. Applied identically on the
-    // local and distributed exits, AFTER the shared integer pipeline,
-    // as one exact integer multiply + floor-DIV (floor error < 1 unit
-    // of the 1e6 scale). The two counts are a node-frame aggregate and
-    // a pivot-frame aggregate — both driver-bounded by contract.
-    // `kKnown` skips the pivot-count job on the local fast path, where
-    // the complete deduped pivot set was already collected (srcs.length
-    // IS K) — the path exists to avoid per-job overhead on small graphs
-    def finish(res: DataFrame, kKnown: Long = -1L): DataFrame =
-      if (!rescale) res
-      else {
-        val n = nodes.select(col("node")).distinct().count()
-        val k = if (kKnown >= 0) kKnown else srcFrame.count()
-        if (k < 2 || k >= n) res
-        else res.withColumn("btw_1e6", expr(
-          s"CAST((CAST(btw_1e6 AS DECIMAL(38,0)) * ${n * (n - 1)}L) " +
-            s"DIV ${k * (k - 1)}L AS BIGINT)"))
+  private[graft] def betweenness(nodes: Array[Long], bidir: Array[(Long, Long)],
+      maxRounds: Int): Array[(Long, Long)] = {
+    val nbrs = bidir.groupMap(_._1)(_._2)
+    val endpoints = bidir.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+    val srcs = nodes.distinct.sorted
+    // per-source BFS with path counts (dist, sigma)
+    val aps = srcs.map { s =>
+      val dist = scala.collection.mutable.Map(s -> 0)
+      val sigma = scala.collection.mutable.Map(s -> 1L)
+      var frontier = Seq(s)
+      var r = 0
+      while (frontier.nonEmpty && r < maxRounds) {
+        r += 1
+        val sums = scala.collection.mutable.Map.empty[Long, Long]
+          .withDefaultValue(0L)
+        for (u <- frontier; w <- nbrs.getOrElse(u, Array.empty[Long]))
+          if (!dist.contains(w)) sums(w) += sigma(u)
+        frontier = sums.keys.toSeq.sorted
+        for (w <- frontier) { dist(w) = r; sigma(w) = sums(w) }
       }
-    val grabbedB = Bounded.rowsAtMost(
-      bidir.select(col("u").cast("long"), col("v").cast("long")), localBound)
-    // the source set must also fit the driver for the local replay —
-    // same measured bound as the edge list
-    val grabbedS = grabbedB.flatMap(_ => Bounded.rowsAtMost(srcFrame, localBound))
-    if (grabbedB.isDefined && grabbedS.exists(_.nonEmpty)) {
-      val es = grabbedB.get.map(r => (r.getLong(0), r.getLong(1)))
-      val nbrs = es.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      val endpoints = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-      // BFS from exactly the source set — the same seeds as the
-      // distributed loop, so both paths compute the identical
-      // pair-restricted estimator (an isolated source reaches only
-      // itself and contributes no pair terms)
-      val srcs = grabbedS.get.map(_.getLong(0)).distinct.sorted
-      // per-source BFS with path counts (dist, sigma)
-      val aps = srcs.map { s =>
-        val dist = scala.collection.mutable.Map(s -> 0)
-        val sigma = scala.collection.mutable.Map(s -> 1L)
-        var frontier = Seq(s)
-        var r = 0
-        while (frontier.nonEmpty && r < maxRounds) {
-          r += 1
-          val sums = scala.collection.mutable.Map.empty[Long, Long]
-            .withDefaultValue(0L)
-          for (u <- frontier; w <- nbrs.getOrElse(u, Array.empty[Long]))
-            if (!dist.contains(w)) sums(w) += sigma(u)
-          frontier = sums.keys.toSeq.sorted
-          for (w <- frontier) { dist(w) = r; sigma(w) = sums(w) }
-        }
-        if (frontier.nonEmpty && r == maxRounds) {
-          // one more half-step proves (in)completeness, the bfs contract
-          val more = frontier.exists(u =>
-            nbrs.getOrElse(u, Array.empty[Long]).exists(!dist.contains(_)))
-          if (more) throw new IllegalStateException(
-            s"betweenness BFS did not finish in $maxRounds rounds")
-        }
-        s -> ((dist.toMap, sigma.toMap))
-      }.toMap
-      val btw = scala.collection.mutable.Map.empty[Long, Long]
-        .withDefaultValue(0L)
-      // pair loop over SOURCES only (both endpoints) — the same
-      // restriction the distributed tail's i2-join-on-reached imposes
-      for {
-        s <- srcs; t <- srcs if s < t
-        (dst, sigst) <- aps(s)._1.get(t).map(d => (d, aps(s)._2(t))).toSeq
-        v <- endpoints if v != s && v != t
-        dsv <- aps(s)._1.get(v).toSeq
-        dtv <- aps(t)._1.get(v).toSeq
-        if dsv + dtv == dst
-      } btw(v) += aps(s)._2(v) * aps(t)._2(v) * 1000000L / sigst
-      return finish(nodes
-        .join(broadcast(localRankDf(spark,
-          endpoints.map(n => (n, btw(n))))), Seq("node"), "left")
-        .select(col("node").as("nationkey"),
-          coalesce(col("lrank"), lit(0L)).as("btw_1e6")),
-        kKnown = srcs.length.toLong)
-    }
-    // distributed: layered frontier expansion carrying sigma, the
-    // (source, node)-keyed generalization of bfs — seeded from the
-    // SOURCE set (default nodes), matching the local replay
-    var reached = srcFrame
-      .select(col("node").as("s"), col("node").as("v"),
-        lit(0).as("dist"), lit(1L).as("sigma"))
-      .truncateLineage(true)
-    var frontier = reached
-    var r = 0
-    var frontierCount = 1L
-    while (frontierCount > 0 && r < maxRounds) {
-      r += 1
-      val newly = frontier
-        .join(bidir.select(col("u").cast("long").as("v"),
-          col("v").cast("long").as("w")), Seq("v"))
-        .groupBy(col("s"), col("w").as("nv"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .join(reached.select(col("s"), col("v").as("nv")),
-          Seq("s", "nv"), "left_anti")
-        .select(col("s"), col("nv").as("v"), lit(r).as("dist"), col("sigma"))
-        .truncateLineage(true)
-      frontierCount = newly.count()
-      if (frontierCount > 0) {
-        val nextReached = reached.unionByName(newly).truncateLineage(true)
-        // the replaced cumulative frame's blocks are dead once the new
-        // one is materialized — drop them or checkpoint storage grows
-        // linearly with rounds on a |sources|·|nodes|-sized frame (the
-        // ConnectedComponents doctrine). The consumed frontier's blocks
-        // die with it at r == 1 (same checkpoint); later rounds drop
-        // the prior frontier explicitly.
-        org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(reached)
-        if (r > 1)
-          org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(frontier)
-        reached = nextReached
-        frontier = newly
-      } else {
-        // terminal empty frontier: its checkpoint blocks are dead on
-        // arrival — free them now (the loop-leak class r13 closed
-        // elsewhere)
-        org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(newly)
+      if (frontier.nonEmpty && r == maxRounds) {
+        // one more half-step proves (in)completeness, the bfs contract
+        val more = frontier.exists(u =>
+          nbrs.getOrElse(u, Array.empty[Long]).exists(!dist.contains(_)))
+        if (more) throw new IllegalStateException(
+          s"betweenness BFS did not finish in $maxRounds rounds")
       }
-    }
-    if (frontierCount > 0) {
-      // a BFS that filled its LAST legal round is complete, not
-      // truncated — mirror the local replay's one-step lookahead (one
-      // anti-join existence probe) before failing loudly
-      val more = frontier
-        .join(bidir.select(col("u").cast("long").as("v"),
-          col("v").cast("long").as("w")), Seq("v"))
-        .select(col("s"), col("w").as("v"))
-        .join(reached.select(col("s"), col("v")), Seq("s", "v"), "left_anti")
-        .limit(1).count()
-      if (more > 0) throw new IllegalStateException(
-        s"betweenness BFS did not finish in $maxRounds rounds")
-    }
-    // only `reached` feeds the pair-counting tail: the surviving
-    // frontier's blocks (when any productive round ran) are dead here
-    if (frontier ne reached)
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(frontier)
-    val pr = reached.where(col("s") < col("v"))
-      .select(col("s"), col("v").as("t"),
-        col("dist").as("dst"), col("sigma").as("sigst"))
-    val i1 = reached.select(col("s"), col("v"),
-      col("dist").as("d1"), col("sigma").as("g1"))
-    val i2 = reached.select(col("s").as("t"), col("v"),
-      col("dist").as("d2"), col("sigma").as("g2"))
-    val terms = pr
-      .join(i1, Seq("s"))
-      .join(i2, Seq("t", "v"))
-      .where(col("v") =!= col("s") && col("v") =!= col("t") &&
-        col("d1") + col("d2") === col("dst"))
-      .groupBy("v")
-      .agg(sum(expr("(g1 * g2 * 1000000L) DIV sigst")).as("b"))
-    finish(nodes
-      .join(terms.withColumnRenamed("v", "node"), Seq("node"), "left")
-      .select(col("node").as("nationkey"),
-        coalesce(col("b"), lit(0L)).as("btw_1e6")))
+      s -> ((dist.toMap, sigma.toMap))
+    }.toMap
+    val btw = scala.collection.mutable.Map.empty[Long, Long]
+      .withDefaultValue(0L)
+    for {
+      s <- srcs; t <- srcs if s < t
+      (dst, sigst) <- aps(s)._1.get(t).map(d => (d, aps(s)._2(t))).toSeq
+      v <- endpoints if v != s && v != t
+      dsv <- aps(s)._1.get(v).toSeq
+      dtv <- aps(t)._1.get(v).toSeq
+      if dsv + dtv == dst
+    } btw(v) += aps(s)._2(v) * aps(t)._2(v) * 1000000L / sigst
+    srcs.map(n => (n, btw(n)))
   }
 
   val graphBetweennessSql: String = {
@@ -1112,8 +865,7 @@ object GraphQueries {
     *
     * Scale: the trade graph has at most 550 edges (see
     * [[TradeEdgeBound]]), so the integer rounds run on the driver
-    * over the fetched edge list. A graph-sized Katz would take
-    * [[pagerank]]'s distributed shape minus the degree pre-divide.
+    * over the fetched edge list.
     */
   def graphKatz(spark: SparkSession, sfDir: String): DataFrame = {
     val nodes = table(spark, sfDir, "nation")
@@ -1257,95 +1009,52 @@ object GraphQueries {
     * fixed round count sidesteps synchronous LPA's oscillation
     * non-termination, the pagerank fixed-iteration doctrine).
     *
-    * Scale: per round ONE join of the bidirected edge list against the
-    * label vector and one (node, label) hash aggregate with a struct
-    * argmax folded in — all DataFrames, nothing on the driver, label
-    * vector localCheckpoint'd per round so the plan doesn't double.
-    * Argmax by `max(struct(count, −label))` is one aggregate, not a
-    * window — no per-node sort.
+    * Scale: the trade graph has at most [[TradeEdgeBound]] edges, so
+    * the top-2 cut and the rounds ([[lpaLabels]]) run on the driver
+    * over the fetched rows; the twin's argmax is
+    * `max(struct(count, −label))`.
     */
   def graphLabelPropagation(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // the near-complete trade graph collapses LPA to one community in
     // round 1 (min-label floods every neighborhood) — communities only
     // exist in the PREFERRED-PARTNER structure, so propagate over each
     // nation's top-2 trade partners (rank by cnt desc, dst tie-break:
     // deterministic), the standard sparsification for dense graphs
-    val rankW = Window.partitionBy("src").orderBy(desc("cnt"), col("dst"))
-    val e = tradeEdgesWeighted(spark, sfDir)
-      .withColumn("rn", row_number().over(rankW))
-      .where(col("rn") <= 2).select("src", "dst")
+    val top2 = tradeGraph(spark, sfDir).weightedTriples.groupBy(_._1).values
+      .flatMap(_.sortBy { case (_, d, c) => (-c, d) }.take(2))
+      .map { case (s, d, _) => (s, d) }.toArray
     val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
     // undirected neighbor relation: both orientations, deduped so a
     // mutual preferred pair still casts ONE vote per neighbor
-    val bidir0 = e.select(col("src").as("u"), col("dst").as("v"))
-      .union(e.select(col("dst").as("u"), col("src").as("v")))
-      .distinct()
-    lpaLabels(nodes, bidir0, LpaIters)
-      .select(col("node").as("nationkey"), col("lbl").as("community"))
+    val bidir = (top2 ++ top2.map(_.swap)).distinct
+    nodes
+      .join(broadcast(localRankDf(spark, lpaLabels(bidir, LpaIters))),
+        Seq("node"), "left")
+      // a node on no edge receives no vote and keeps its own label
+      .select(col("node").as("nationkey"),
+        coalesce(col("lrank"), col("node")).as("community"))
       .orderBy("nationkey")
   }
 
-  /** Synchronous LPA over a DEDUPED bidirected neighbor list `bidir0`
-    * (`u`, `v` long): each of `iters` rounds every node adopts the
-    * argmax-vote label of its in-neighbors — max count, ties to the
-    * SMALLEST label; nodes receiving no vote keep their label. Returns
-    * (`node`, `lbl`) for every node in `nodes`.
-    *
-    * `localBound` = 0 disables the driver-local fast path (the
-    * [[pagerank]] spec hook) — Round13OpsSpec pins the two paths
-    * label-for-label on seeded random graphs, so the replayed argmax
-    * (maxBy (count, −label)) cannot drift from the distributed
-    * max(struct(c, −lbl)) spelling.
+  /** Synchronous LPA over a DEDUPED bidirected neighbor list `bidir`:
+    * each of `iters` rounds every node adopts the argmax-vote label of
+    * its in-neighbors — max count, ties to the SMALLEST label; a node
+    * receiving no vote keeps its label. Returns (node, label) for every
+    * edge endpoint, ascending; every other node keeps its own id.
     */
-  private[graft] def lpaLabels(nodes: DataFrame, bidir0: DataFrame,
-      iters: Int, localBound: Int = LocalRankEdgeBound): DataFrame = {
-    val spark = nodes.sparkSession
-    // driver-local fast path (the dampedRankLocal doctrine): replay the
-    // argmax rounds over the bounded edge list; non-endpoint nodes
-    // never receive a vote and keep their own id
-    val grabbedL = Bounded.rowsAtMost(
-      bidir0.select(col("u").cast("long"), col("v").cast("long")), localBound)
-    if (grabbedL.isDefined) {
-      val es = grabbedL.get.map(r => (r.getLong(0), r.getLong(1)))
-      val endpoints = es.flatMap(p => Seq(p._1, p._2)).distinct.sorted
-      var lbl = endpoints.map(n => n -> n).toMap
-      for (_ <- 1 to iters) {
-        val votes = es.groupBy(_._2).view.mapValues { in =>
-          in.groupBy(p => lbl(p._1)).view.mapValues(_.length)
-            .toSeq.maxBy { case (l, c) => (c, -l) }._1
-        }.toMap
-        lbl = endpoints.map(n => n -> votes.getOrElse(n, lbl(n))).toMap
-      }
-      return nodes
-        .join(broadcast(localRankDf(spark,
-          endpoints.map(n => (n, lbl(n))))), Seq("node"), "left")
-        .select(col("node"),
-          coalesce(col("lrank"), col("node")).as("lbl"))
-    }
-    val bidir = bidir0.truncateLineage()
-    var labels = nodes.select(col("node"), col("node").as("lbl"))
-      .truncateLineage()
+  private[graft] def lpaLabels(bidir: Array[(Long, Long)],
+      iters: Int): Array[(Long, Long)] = {
+    val endpoints = bidir.flatMap(p => Seq(p._1, p._2)).distinct.sorted
+    var lbl = endpoints.map(n => n -> n).toMap
     for (_ <- 1 to iters) {
-      val votes = bidir
-        .join(labels.select(col("node").as("u"), col("lbl")), "u")
-        .groupBy(col("v"), col("lbl")).agg(count(lit(1)).as("c"))
-        .groupBy(col("v"))
-        .agg(max(struct(col("c").as("c"), (-col("lbl")).as("ml"))).as("m"))
-        .select(col("v").as("node"), (-col("m.ml")).as("win"))
-      val next = labels
-        .join(votes, Seq("node"), "left")
-        .select(col("node"), coalesce(col("win"), col("lbl")).as("lbl"))
-        .truncateLineage()
-      // replaced label vector's blocks are dead once `next` is
-      // materialized (the ConnectedComponents doctrine)
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(labels)
-      labels = next
+      val votes = bidir.groupBy(_._2).view.mapValues { in =>
+        in.groupBy(p => lbl(p._1)).view.mapValues(_.length)
+          .toSeq.maxBy { case (l, c) => (c, -l) }._1
+      }.toMap
+      lbl = endpoints.map(n => n -> votes.getOrElse(n, lbl(n))).toMap
     }
-    // the FINAL labels checkpoint stays — the returned plan reads it
-    org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(bidir)
-    labels
+    endpoints.map(n => (n, lbl(n)))
   }
 
   val graphLabelPropagationSql: String = {
@@ -1508,73 +1217,32 @@ object GraphQueries {
     * the gate can't drift on convergence detection); on this corpus
     * the survivor set reaches its fixpoint well inside 5 rounds.
     *
-    * Scale: per round one join of the adjacency against the survivor
-    * vector (both ends must survive) plus one degree aggregate —
-    * exactly the distributed peeling step; the survivor vector is
-    * node-sized, broadcast here, localCheckpoint'd so the plan stays
-    * O(1) per round instead of nesting all prior rounds.
+    * Scale: the trade graph has at most [[TradeEdgeBound]] edges, so
+    * the peels ([[kcoreSurvivors]]) run on the driver over the fetched
+    * undirected pairs.
     */
   def graphKcore(spark: SparkSession, sfDir: String): DataFrame = {
-    val und = tradeGraph(spark, sfDir).undirected
-    val adj0 = und.select(col("a").as("x"), col("b").as("nbr"))
-      .unionByName(und.select(col("b").as("x"), col("a").as("nbr")))
-    kcoreSurvivors(adj0, KcoreK, KcoreRounds)
-      .select(col("node").as("nationkey"), col("core_deg"))
+    val und = tradeGraph(spark, sfDir).undirectedPairs
+    longFrame(spark, "nationkey", "core_deg")(
+      kcoreSurvivors(und ++ und.map(_.swap), KcoreK, KcoreRounds))
       .orderBy("nationkey")
   }
 
-  /** Synchronous k-core peeling over a bidirected adjacency `adj0`
-    * (`x`, `nbr` long, both orientations of each undirected edge):
-    * `rounds` fixed rounds of "recount degree among survivors, drop
-    * < k". Returns (`node`, `core_deg`) for the surviving members.
-    *
-    * `localBound` = 0 disables the driver-local replay (the
-    * [[pagerank]] spec hook); Round13OpsSpec pins local == distributed
-    * member-for-member on seeded random graphs.
+  /** Synchronous k-core peeling over a bidirected adjacency `adj`
+    * (both orientations of each undirected edge): `rounds` fixed rounds
+    * of "recount degree among survivors, drop < k". Returns
+    * (node, core_deg) for the surviving members, ascending.
     */
-  private[graft] def kcoreSurvivors(adj0: DataFrame, k: Int, rounds: Int,
-      localBound: Int = LocalRankEdgeBound): DataFrame = {
-    val spark = adj0.sparkSession
-    // driver-local fast path (the dampedRankLocal doctrine): replay the
-    // peels over the bounded undirected adjacency
-    val grabbedK = Bounded.rowsAtMost(
-      adj0.select(col("x").cast("long"), col("nbr").cast("long")), localBound)
-    if (grabbedK.isDefined) {
-      val es = grabbedK.get.map(r => (r.getLong(0), r.getLong(1)))
-      var surv = es.map(_._1).distinct.toSet
-      var degL = Map.empty[Long, Long]
-      for (_ <- 1 to rounds) {
-        degL = es.filter(p => surv(p._1) && surv(p._2))
-          .groupBy(_._1).view.mapValues(_.length.toLong).toMap
-        surv = degL.filter(_._2 >= k).keySet
-      }
-      val rows = degL.toSeq.filter(_._2 >= k).sortBy(_._1)
-      return localRankDf(spark, rows.toArray)
-        .select(col("node"), col("lrank").as("core_deg"))
-    }
-    val adj = adj0.truncateLineage(true)
-    var survivors = adj.select("x").distinct().truncateLineage(true)
-    var deg: DataFrame = null
+  private[graft] def kcoreSurvivors(adj: Array[(Long, Long)], k: Int,
+      rounds: Int): Array[(Long, Long)] = {
+    var surv = adj.map(_._1).toSet
+    var deg = Map.empty[Long, Long]
     for (_ <- 1 to rounds) {
-      val nextDeg = adj
-        .join(broadcast(survivors), "x")
-        .join(broadcast(survivors.select(col("x").as("nbr"))), "nbr")
-        .groupBy("x").agg(count(lit(1)).as("deg"))
-        .truncateLineage(true)
-      // replaced rounds' blocks are dead once nextDeg is materialized
-      // (the ConnectedComponents doctrine); the FINAL deg checkpoint
-      // stays — the returned plan reads it
-      if (deg != null)
-        org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(deg)
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(survivors)
-      deg = nextDeg
-      survivors = deg.where(col("deg") >= k).select("x")
-        .truncateLineage(true)
+      deg = adj.filter(p => surv(p._1) && surv(p._2))
+        .groupBy(_._1).view.mapValues(_.length.toLong).toMap
+      surv = deg.filter(_._2 >= k).keySet
     }
-    org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(survivors)
-    org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(adj)
-    deg.where(col("deg") >= k)
-      .select(col("x").cast("long").as("node"), col("deg").as("core_deg"))
+    deg.toArray.filter(_._2 >= k).sortBy(_._1)
   }
 
   val graphKcoreSql: String = {
@@ -1685,75 +1353,36 @@ object GraphQueries {
     * spec proves the fixpoint equals brute-force peeling on this
     * corpus.
     *
-    * Scale: THIS is why the operator exists — sequential peeling is
-    * inherently serial (each peel depends on the last), while the
-    * h-index iteration is one join + one window per round, every round
-    * fully distributed, converging in O(diameter-ish) rounds. The
-    * node-sized core frame broadcasts; the edge frame never reshuffles.
+    * Scale: the h-index iteration needs no sequential peel, so the
+    * twin states it as one join and one window per round. Here the
+    * trade graph has at most [[TradeEdgeBound]] edges and the rounds
+    * ([[corenessLabels]]) run on the driver over the fetched pairs.
     */
   def graphCoreness(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val und = tradeGraph(spark, sfDir).undirected
-    val adj0 = und.select(col("a").as("x"), col("b").as("nbr"))
-      .unionByName(und.select(col("b").as("x"), col("a").as("nbr")))
-    corenessLabels(adj0, CorenessRounds)
-      .select(col("node").as("nationkey"), col("coreness"))
+    val und = tradeGraph(spark, sfDir).undirectedPairs
+    longFrame(spark, "nationkey", "coreness")(
+      corenessLabels(und ++ und.map(_.swap), CorenessRounds))
       .orderBy("nationkey")
   }
 
-  /** The h-index coreness fixpoint over a bidirected adjacency `adj0`
-    * (`x`, `nbr` long): core⁰ = deg, core^{t+1}(x) = max_i min(i, nc_i)
-    * with neighbors sorted (coreness desc, id asc). Returns
-    * (`node`, `coreness`) for every edge endpoint.
-    *
-    * `localBound` = 0 disables the driver-local replay (the
-    * [[pagerank]] spec hook); Round13OpsSpec pins local == distributed
-    * value-for-value on seeded random graphs, so the replayed sort
-    * order can't drift from the window spelling's (desc nc, nbr).
+  /** The h-index coreness fixpoint over a bidirected adjacency `adj`:
+    * core⁰ = deg, core^{t+1}(x) = max_i min(i, nc_i) with neighbors
+    * sorted (coreness desc, id asc), the twin's window order. Returns
+    * (node, coreness) for every edge endpoint, ascending.
     */
-  private[graft] def corenessLabels(adj0: DataFrame, rounds: Int,
-      localBound: Int = LocalRankEdgeBound): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = adj0.sparkSession
-    // driver-local fast path: the h-index iteration — neighbors sorted
-    // by (coreness desc, id), c(x) = max_i min(i, nc_i) — replayed over
-    // the bounded adjacency, identical tie order to the window spelling
-    val grabbedC = Bounded.rowsAtMost(
-      adj0.select(col("x").cast("long"), col("nbr").cast("long")), localBound)
-    if (grabbedC.isDefined) {
-      val es = grabbedC.get.map(r => (r.getLong(0), r.getLong(1)))
-      val nbrs = es.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      var coreL = nbrs.view.mapValues(_.length.toLong).toMap
-      for (_ <- 1 to rounds) {
-        coreL = nbrs.map { case (x, ns) =>
-          val sorted = ns.map(nb => (coreL(nb), nb))
-            .sortBy { case (nc, nb) => (-nc, nb) }
-          x -> sorted.zipWithIndex
-            .map { case ((nc, _), i) => math.min(i + 1L, nc) }.max
-        }
-      }
-      return localRankDf(spark, coreL.toArray.sortBy(_._1))
-        .select(col("node"), col("lrank").as("coreness"))
-    }
-    val adj = adj0.truncateLineage(true)
-    var core = adj.groupBy("x").agg(count(lit(1)).as("c"))
-      .truncateLineage(true)
-    val w = Window.partitionBy("x").orderBy(desc("nc"), col("nbr"))
+  private[graft] def corenessLabels(adj: Array[(Long, Long)],
+      rounds: Int): Array[(Long, Long)] = {
+    val nbrs = adj.groupMap(_._1)(_._2)
+    var core = nbrs.view.mapValues(_.length.toLong).toMap
     for (_ <- 1 to rounds) {
-      val next = adj
-        .join(broadcast(core.select(col("x").as("nbr"), col("c").as("nc"))),
-          "nbr")
-        .withColumn("rn", row_number().over(w))
-        .groupBy("x")
-        .agg(max(least(col("rn").cast("long"), col("nc"))).as("c"))
-        .truncateLineage(true)
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(core)
-      core = next
+      core = nbrs.map { case (x, ns) =>
+        val sorted = ns.map(nb => (core(nb), nb))
+          .sortBy { case (nc, nb) => (-nc, nb) }
+        x -> sorted.zipWithIndex
+          .map { case ((nc, _), i) => math.min(i + 1L, nc) }.max
+      }
     }
-    // the FINAL core checkpoint stays (the returned plan reads it);
-    // the adjacency's blocks are dead once the loop is done
-    org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(adj)
-    core.select(col("x").cast("long").as("node"), col("c").as("coreness"))
+    core.toArray.sortBy(_._1)
   }
 
   val graphCorenessSql: String = {
@@ -2503,9 +2132,7 @@ object GraphQueries {
     * Scale: the trade graph has at most 550 edges (see
     * [[TradeEdgeBound]]), so the rounds run on the driver in
     * [[dampedRankLocal]] with init = base = the teleport vector, and
-    * non-endpoint nations keep exactly their teleport mass. A
-    * graph-sized PPR would take [[pagerank]]'s distributed shape with
-    * the teleport vector as its base.
+    * non-endpoint nations keep exactly their teleport mass.
     */
   def graphPpr(spark: SparkSession, sfDir: String): DataFrame = {
     val nodes = table(spark, sfDir, "nation")
@@ -2572,9 +2199,7 @@ object GraphQueries {
     */
   private def allPairsHops(nodes: DataFrame,
       edges: Array[(Long, Long)]): DataFrame = {
-    val ns = Bounded.rows(nodes.select(col("node").cast("long")),
-      LocalRankEdgeBound, "all-pairs hop closure nodes")
-      .map(_.getLong(0)).sorted
+    val ns = nodeIds(nodes, "all-pairs hop closure nodes").sorted
     longFrame(nodes.sparkSession, "root", "node", "dist")(
       ns.toSeq.flatMap(root => bfsHops(edges, root).toSeq.sorted
         .map { case (nd, d) => (root, nd, d) }))
@@ -2649,9 +2274,8 @@ object GraphQueries {
     * the exact scaled sum at the very end.
     *
     * Scale: identical contract to closeness — O(n·m) exact by
-    * definition, landmark-sampled `roots` at corpus scale, state is
-    * reached pairs only, one join + one min-aggregate per round,
-    * `localCheckpoint` lineage truncation.
+    * definition, state is reached pairs only, one [[bfsHops]] per root
+    * on the driver ([[allPairsHops]]).
     */
   def graphHarmonic(spark: SparkSession, sfDir: String): DataFrame = {
     val L = 5354228880L // lcm(1..24)
@@ -2751,10 +2375,8 @@ object GraphQueries {
     * operators (`dedup_clusters`' CC, label propagation) can see.
     *
     * Labels the fetched trade graph's pairs with Tarjan on the driver
-    * ([[graft.ops.StronglyConnectedComponents.resolveLocal]]); the
-    * operator's FB/coloring peeling loop is for edge lists that are not
-    * already driver rows (see its scaladoc for why double
-    * min-propagation is WRONG). The oracle restates the DEFINITION, not
+    * ([[graft.ops.StronglyConnectedComponents.resolveLocal]]; see its
+    * scaladoc for why double min-propagation is WRONG). The oracle restates the DEFINITION, not
     * the algorithm: a recursive-CTE transitive closure,
     * scc_id(v) = min(w : v→*w ∧ w→*v, plus v) — fine at oracle scale,
     * impossible at 100 TB.
@@ -2799,18 +2421,16 @@ object GraphQueries {
     * reach the core and BE core.
     *
     * Composition: Tarjan over the fetched trade graph's pairs
-    * ([[graft.ops.StronglyConnectedComponents.resolveLocal]]) labels
-    * every nation; the node-sized labels come back in one bounded
-    * fetch, and reachability runs on the SCC CONDENSATION — the distinct
-    * (scc, scc) pairs of the trade graph's rows — with [[bfsHops]] on
-    * the driver, one BFS per side. The condensation of this graph is
-    * bounded (≤ |nations| components, ≤ [[TradeEdgeBound]] edges);
-    * the earlier spelling ran two 40-round frontier-BFS loops on the
-    * full node set and paid ~40 tiny Spark jobs' fixed overhead for
-    * the same answer (5.8 s). For a graph whose condensation is NOT
-    * driver-bounded (web-scale crawls), the closure becomes a
-    * distributed frontier-expansion loop — the labels join is
-    * unchanged. The oracle restates the DEFINITION via one transitive
+    * ([[graft.ops.StronglyConnectedComponents.tarjanLabels]]) labels
+    * every edge endpoint; one bounded fetch of the nation ids gives
+    * every other nation its own label, and reachability runs on the SCC
+    * CONDENSATION — the distinct (scc, scc) pairs of the trade graph's
+    * rows — with [[bfsHops]] on the driver, one BFS per side. The
+    * answer is built on the driver as a LocalRelation. The condensation
+    * of this graph is bounded (≤ |nations| components,
+    * ≤ [[TradeEdgeBound]] edges); the earlier spelling ran two 40-round
+    * frontier-BFS loops on the full node set and paid ~40 tiny Spark
+    * jobs' fixed overhead for the same answer (5.8 s). The oracle restates the DEFINITION via one transitive
     * closure used four ways — fine at oracle scale, impossible at
     * 100 TB.
     */
@@ -2818,12 +2438,9 @@ object GraphQueries {
     val nodes = table(spark, sfDir, "nation")
       .select(col("n_nationkey").cast("long").as("node"))
     val graph = tradeGraph(spark, sfDir)
-    val scc = graft.ops.StronglyConnectedComponents.resolveLocal(nodes, graph.pairs)
-    // guard the driver-bounded assumption instead of just documenting
-    // it: overflow fails loudly rather than silently ballooning the
-    // driver
-    val lab = Bounded.rows(scc, LocalRankEdgeBound, "graph_bowtie SCC labels")
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val tarjan = graft.ops.StronglyConnectedComponents.tarjanLabels(graph.pairs)
+    val ids = nodeIds(nodes, "graph_bowtie nations").distinct.sorted
+    val lab = ids.map(n => n -> tarjan.getOrElse(n, n)).toMap
     // condensation: distinct (scc(src), scc(dst)) pairs between
     // labelled nodes, self-loops dropped
     val condensation = graph.pairs.flatMap { case (s, d) =>
@@ -2834,12 +2451,16 @@ object GraphQueries {
       .minBy { case (id, n) => (-n, id) }._1
     val fwdScc = bfsHops(condensation, coreId).keySet
     val bwdScc = bfsHops(condensation.map(_.swap), coreId).keySet
-    scc
-      .select(col("node").as("nationkey"), col("scc_id"),
-        when(col("scc_id") === coreId, "core")
-          .when(col("scc_id").isin(bwdScc.toSeq: _*), "in")
-          .when(col("scc_id").isin(fwdScc.toSeq: _*), "out")
-          .otherwise("other").as("component"))
+    def component(id: Long): String =
+      if (id == coreId) "core"
+      else if (bwdScc(id)) "in"
+      else if (fwdScc(id)) "out"
+      else "other"
+    spark.createDataFrame(
+      ids.toSeq.map(n => Row(n, lab(n), component(lab(n)))).asJava,
+      StructType(Seq(StructField("nationkey", LongType, nullable = false),
+        StructField("scc_id", LongType, nullable = false),
+        StructField("component", StringType, nullable = false))))
       .orderBy("nationkey")
   }
 

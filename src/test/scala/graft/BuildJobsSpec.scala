@@ -17,9 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     driver (kendall_tau, theil_sen, markov_stationary);
   *   - 7 for the trade-graph fetch (the 4-way lineitem join's shuffles
   *     and the result job), which is all a graph query whose rounds
-  *     run on the fetched rows starts; graph_bowtie labels the fetched
-  *     rows with Tarjan and adds one fetch of the labelled nation set
-  *     (its scan, the distinct's shuffle and the result job).
+  *     run on the fetched rows starts; graph_betweenness and
+  *     graph_bowtie add one job for the fetch of the nation ids (the
+  *     pivot set; the nations Tarjan's labels cover).
   * A rise means a range shuffle, checkpoint or collect crept back in
   * ahead of planning.
   *
@@ -54,7 +54,15 @@ class BuildJobsSpec extends AnyFunSuite {
     "graph_mst" -> 7,
     "graph_rich_club" -> 7,
     "graph_scc" -> 7,
-    "graph_bowtie" -> 10)
+    "graph_bowtie" -> 8,
+    "graph_pagerank" -> 7,
+    "graph_betweenness" -> 8,
+    "graph_label_propagation" -> 7,
+    "graph_kcore" -> 7,
+    "graph_coreness" -> 7,
+    "graph_neighbor_overlap" -> 7,
+    "graph_resource_alloc" -> 7,
+    "graph_adamic_adar" -> 7)
 
   for ((name, jobs) <- expected)
     test(s"$name starts its pinned job count while building") {

@@ -1018,46 +1018,71 @@ class GateHygieneSpec extends AnyFunSuite {
   }
 
   /** The trade graph has at most 550 edges and reaches every query as
-    * driver rows, so a graph query over it needs no persist and no
-    * checkpoint: re-scanning a LocalRelation runs nothing. In
-    * GraphQueries.scala a `truncateLineage`, `persistIntermediate`,
+    * driver rows, so a graph operator over it needs no persist and no
+    * checkpoint: re-scanning a LocalRelation runs nothing, and every
+    * iterative operator is a plain function over the fetched rows. In
+    * each file of this list a `truncateLineage`, `persistIntermediate`,
     * `persistHotIntermediate` or `Bridge.unpersistLocalCheckpoint`
-    * occurs only inside a member def of this ledger, each with its
-    * reason.
+    * occurs only inside a member def of the file's ledger, each with
+    * its reason. StronglyConnectedComponents.scala labels SCCs with
+    * Tarjan on the driver; its ledger is empty.
     */
-  private val graphPersistLedger = Map(
-    "pagerank" -> "parameterised operator: its distributed loop runs past localBound and is the specs' reference",
-    "betweenness" -> "parameterised operator: its distributed loop runs past localBound and is the specs' reference",
-    "lpaLabels" -> "parameterised operator: its distributed loop runs past localBound and is the specs' reference",
-    "kcoreSurvivors" -> "parameterised operator: its distributed loop runs past localBound and is the specs' reference",
-    "corenessLabels" -> "parameterised operator: its distributed loop runs past localBound and is the specs' reference",
-    "capHubs" -> "A/B'd when the edges were distributed; re-measure on the driver-fetched graph before removing",
-    "copurchasePairs" -> "the basket self-join grows with lineitem, not with the trade graph")
+  private val graphPersistLedgers = Seq(
+    Paths.get("src", "main", "scala", "graft", "queries", "GraphQueries.scala") -> Map(
+      "copurchasePairs" -> "the basket self-join grows with lineitem, not with the trade graph"),
+    Paths.get("src", "main", "scala", "graft", "ops", "StronglyConnectedComponents.scala") ->
+      Map.empty[String, String])
 
-  test("a persist or checkpoint in GraphQueries.scala occurs only in a ledgered def") {
+  /** Each persist or checkpoint site in `text` as (enclosing object
+    * member def, 1-based line). The member is the last two-space
+    * indented def before the site, so a def nested inside a member
+    * counts as that member.
+    */
+  private[graft] def graphPersistSites(text: String): Seq[(String, Int)] = {
     val pin = """\.(?:truncateLineage|persistIntermediate|persistHotIntermediate)\b|Bridge\.unpersistLocalCheckpoint\(""".r
-    assert(pin.findFirstIn("x.truncateLineage(true)").isDefined &&
-      pin.findFirstIn("  .persistIntermediate").isDefined &&
-      pin.findFirstIn(".persistHotIntermediate\n").isDefined &&
-      pin.findFirstIn("org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(d)").isDefined &&
-      pin.findFirstIn("[[Persist.truncate]]").isEmpty,
-      "the persistence pattern no longer matches its own spellings")
-    val path = Paths.get("src", "main", "scala", "graft", "queries", "GraphQueries.scala")
-    val text = repoText(path)
-    // the object member around the site (two-space indent), so a def
-    // nested inside a ledgered operator counts as that operator
     val defName = """(?m)^  (?:private(?:\[\w+\])?\s+)?def\s+(\w+)""".r
-    val sites = pin.findAllMatchIn(text).map { m =>
+    pin.findAllMatchIn(text).map { m =>
       val before = text.substring(0, m.start)
       val enclosing = defName.findAllMatchIn(before).toSeq.lastOption
         .map(_.group(1)).getOrElse("")
-      (enclosing, s"$path:${before.count(_ == '\n') + 1} ($enclosing)")
+      (enclosing, before.count(_ == '\n') + 1)
     }.toSeq
-    val offenders = sites.filterNot(x => graphPersistLedger.contains(x._1)).map(_._2)
-    assert(offenders.isEmpty,
-      s"the trade graph is driver rows; drop the persist or ledger its def: $offenders")
-    val stale = graphPersistLedger.keySet -- sites.map(_._1)
-    assert(stale.isEmpty, s"ledger names defs that no longer persist: $stale")
+  }
+
+  for ((path, ledger) <- graphPersistLedgers)
+    test(s"a persist or checkpoint in ${path.getFileName} occurs only in a ledgered def") {
+      val sites = graphPersistSites(repoText(path))
+      val offenders = sites.filterNot(x => ledger.contains(x._1))
+        .map { case (d, l) => s"$path:$l ($d)" }
+      assert(offenders.isEmpty,
+        s"the trade graph is driver rows; drop the persist or ledger its def: $offenders")
+      val stale = ledger.keySet -- sites.map(_._1)
+      assert(stale.isEmpty, s"ledger names defs that no longer persist: $stale")
+    }
+
+  test("the graph persist auditor fires on every spelling (bad fixture)") {
+    val bad =
+      """object StronglyConnectedComponents {
+        |  def resolve(nodes: DataFrame): DataFrame = {
+        |    def round(df: DataFrame) = df.truncateLineage(true)
+        |    val a = nodes.persistIntermediate
+        |    val b = nodes.persistHotIntermediate
+        |    org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(a)
+        |    round(b)
+        |  }
+        |  private[graft] def tarjanLabels(es: Array[(Long, Long)]) =
+        |    es.toSeq.toDF().truncateLineage()
+        |}
+        |""".stripMargin
+    assert(graphPersistSites(bad) == Seq(("resolve", 3), ("resolve", 4),
+      ("resolve", 5), ("resolve", 6), ("tarjanLabels", 10)))
+    val good =
+      """object StronglyConnectedComponents {
+        |  /** see [[Persist.truncate]] */
+        |  def resolveLocal(nodes: DataFrame) = nodes.select("node")
+        |}
+        |""".stripMargin
+    assert(graphPersistSites(good).isEmpty)
   }
 
   /** Rows parsed on the driver enter Spark through

@@ -9,22 +9,28 @@ class GraphProfileSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("pagerank fixpoint on a hand-computed chain and cycle") {
-    import spark.implicits._
     // chain a->b: a has no inflow (floor 150000); b converges to
     // 150000 + 850*150000/1000 = 277500 once a settles (3 iters in)
-    val nodes = Seq(0L, 1L).toDF("node")
-    val chain = Seq((0L, 1L)).toDF("src", "dst")
-    val got = GraphQueries.pagerank(nodes, chain, 5)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = GraphQueries.pagerank(Array((0L, 1L)), 5).toMap
     assert(got(0L) == 150000L)
     assert(got(1L) == 277500L)
 
     // 2-cycle: perfectly symmetric, ranks stay equal and bounded
-    val cycle = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
-    val cyc = GraphQueries.pagerank(nodes, cycle, 5)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val cyc = GraphQueries.pagerank(Array((0L, 1L), (1L, 0L)), 5).toMap
     assert(cyc(0L) == cyc(1L))
     assert(cyc(0L) >= 850000L && cyc(0L) <= 1000000L)
+  }
+
+  test("pagerank: hand-traced integer floors on a fan-out") {
+    // 0 -> {1, 2, 3} and 1 -> 0; 2 and 3 dangle. Round 1: each fan-out
+    // edge carries 1e6 DIV 3 = 333333, so 1..3 get 150000 +
+    // 850*333333 DIV 1000 = 433333 and 0 gets 150000 + 850000. Round 2:
+    // 0 gets 150000 + 850*433333 DIV 1000 = 518333; 1..3 are unchanged.
+    val es = Array((0L, 1L), (0L, 2L), (0L, 3L), (1L, 0L))
+    assert(GraphQueries.pagerank(es, 1).toSeq ==
+      Seq((0L, 1000000L), (1L, 433333L), (2L, 433333L), (3L, 433333L)))
+    assert(GraphQueries.pagerank(es, 2).toSeq ==
+      Seq((0L, 518333L), (1L, 433333L), (2L, 433333L), (3L, 433333L)))
   }
 
   test("hits and eigenvector scores: a hand trace, and an empty edge " +
@@ -38,38 +44,6 @@ class GraphProfileSpec extends AnyFunSuite {
     // every nation as 0 through their coalesce, as the twins do
     assert(GraphQueries.hitsScores(Array.empty).isEmpty)
     assert(GraphQueries.eigenvectorScores(Array.empty).isEmpty)
-  }
-
-  test("pagerank distributed spelling keeps the rank vector off the driver") {
-    // The DISTRIBUTED loop (localBound = 0 disables the bounded fast
-    // path) must keep the rank vector in executor storage
-    // (localCheckpoint'd LogicalRDD) for the whole loop — a per-round
-    // driver-resident spelling would surface as a LocalRelation leaf.
-    // The trade edges arrive as an RDD (a LogicalRDD leaf), since
-    // tradeEdges itself is a LocalRelation. The default spelling MAY
-    // resolve the schema-bounded trade graph with the one-shot
-    // driver-local fixed point (the Tarjan/union-find doctrine) — and
-    // both paths must agree rank-for-rank.
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val nodes = queries.RefQueries.table(spark, TestSpark.Sf001, "nation")
-      .select(col("n_nationkey").cast("long").as("node"))
-    val edges = spark.sparkContext
-      .parallelize(GraphQueries.tradeEdgesForSpec(spark, TestSpark.Sf001).toSeq)
-      .toDF("src", "dst")
-    val dist = GraphQueries.pagerank(nodes, edges, 3, localBound = 0)
-    val leaves = dist.queryExecution.optimizedPlan.collectLeaves()
-    assert(leaves.nonEmpty)
-    val driverLeaves = leaves.filter(
-      _.getClass.getSimpleName.contains("LocalRelation"))
-    assert(driverLeaves.isEmpty,
-      s"rank vector originated on the driver: $driverLeaves")
-    val distRanks = dist.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val fastRanks = GraphQueries.pagerank(nodes, edges, 3).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(distRanks.size == 25)
-    assert(fastRanks == distRanks)
   }
 
   test("nation pagerank: floor respected, total rank never exceeds injection") {

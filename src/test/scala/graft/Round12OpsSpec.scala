@@ -4,12 +4,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.ops.{ConnectedComponents, Similarity, StronglyConnectedComponents}
 
-/** Round-12 operator pins: the driver-local fast paths (union-find CC,
-  * Tarjan SCC) must be label-identical to the distributed loops they
-  * shortcut, and the codegen probe kernel must equal the interpreted
-  * HOF spelling it replaced. These are the STRUCTURAL guarantees the
-  * scaladocs claim; the DuckDB oracle separately checks end-to-end
-  * values.
+/** Round-12 operator pins: the union-find CC fast path must be
+  * label-identical to the distributed loop it shortcuts, Tarjan SCC
+  * must label hand-built shapes by their minimum member (random
+  * digraphs are checked against mutual reachability in
+  * StronglyConnectedComponentsSpec), and the codegen probe kernel must
+  * equal the interpreted HOF spelling it replaced. These are the
+  * STRUCTURAL guarantees the scaladocs claim; the DuckDB oracle
+  * separately checks end-to-end values.
   */
 class Round12OpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -28,21 +30,6 @@ class Round12OpsSpec extends AnyFunSuite {
       val local = ConnectedComponents.resolve(pairs, "d1", "d2")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val dist = ConnectedComponents.resolve(pairs, "d1", "d2",
-          localThreshold = 0)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(local == dist, s"seed $seed")
-    }
-  }
-
-  test("SCC Tarjan fast path == distributed FB-coloring") {
-    import spark.implicits._
-    for (seed <- 1 to 3) {
-      val es = randomEdges(seed, 25, 60)
-      val edges = es.toDF("src", "dst")
-      val nodes = (0L until 25L).toDF("node")
-      val local = StronglyConnectedComponents.resolve(nodes, edges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = StronglyConnectedComponents.resolve(nodes, edges,
           localThreshold = 0)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(local == dist, s"seed $seed")

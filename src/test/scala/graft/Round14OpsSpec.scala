@@ -6,118 +6,29 @@ import graft.queries.GraphQueries
 
 /** Round-14 operator pins.
   *
-  * 1. betweenness()'s `sources` parameter (the sampled-pivot API the
-  *    r13 scaladoc promised without shipping): the estimator is
-  *    pair-restricted — B(v) sums over pairs s&lt;t with BOTH endpoints
-  *    in `sources` — and the local replay and distributed loop must
-  *    agree on it for full AND sampled source sets.
-  * 2. The distributed BFS accepts a graph whose eccentricity equals
-  *    maxRounds exactly (the local replay always did a one-step
-  *    lookahead; the distributed loop previously threw spuriously).
-  * 3. capHubs persists via localCheckpoint, NOT cache(): the session
-  *    CacheManager must hold nothing after a co-occurrence candidate
-  *    pass — the r13 leak class (one cached adjacency per invocation
-  *    for the life of the session).
+  * 1. betweenness's BFS accepts a graph whose eccentricity equals
+  *    maxRounds exactly (a one-step lookahead proves it complete) and
+  *    throws when one round is missing.
+  * 2. capHubs leaves the session CacheManager empty after a
+  *    co-occurrence candidate pass — the r13 leak class (one cached
+  *    adjacency per invocation for the life of the session).
   */
 class Round14OpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def randomUndirectedBidir(seed: Int, n: Int, m: Int) = {
-    import spark.implicits._
-    val rnd = new scala.util.Random(seed)
-    val und = (0 until m)
-      .map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-      .filter { case (a, b) => a != b }
-      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
-      .distinct
-    und.flatMap { case (a, b) => Seq((a, b), (b, a)) }
-      .toDF("u", "v")
-  }
-
-  test("betweenness: explicit sources = nodes equals the default full run") {
-    import spark.implicits._
-    val bidir = randomUndirectedBidir(7, 20, 40)
-    val nodes = (0L until 20L).toDF("node")
-    val full = GraphQueries.betweenness(nodes, bidir, maxRounds = 20)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    for (lb <- Seq(500000, 0)) {
-      val explicit = GraphQueries.betweenness(nodes, bidir, maxRounds = 20,
-          localBound = lb, sources = nodes)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(explicit == full, s"localBound=$lb")
-    }
-  }
-
-  test("betweenness: sampled sources — local == distributed, output covers all nodes") {
-    import spark.implicits._
-    for (seed <- 1 to 3) {
-      val bidir = randomUndirectedBidir(seed, 20, 40)
-      val nodes = (0L until 20L).toDF("node")
-      val sample = (0L until 20L by 3L).toDF("node") // 7 pivots
-      val local = GraphQueries.betweenness(nodes, bidir, maxRounds = 20,
-          sources = sample)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = GraphQueries.betweenness(nodes, bidir, maxRounds = 20,
-          localBound = 0, sources = sample)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(local.keySet == (0L until 20L).toSet, s"seed $seed: output keyed on nodes")
-      assert(local == dist, s"seed $seed")
-    }
-  }
-
-  test("betweenness: duplicated pivots count once (sampling with replacement)") {
-    import spark.implicits._
-    val bidir = randomUndirectedBidir(11, 20, 40)
-    val nodes = (0L until 20L).toDF("node")
-    val sample = (0L until 20L by 3L).toDF("node")
-    val dupSample = sample.unionAll(sample) // every pivot twice
-    for (lb <- Seq(500000, 0)) {
-      val clean = GraphQueries.betweenness(nodes, bidir, maxRounds = 20,
-          localBound = lb, sources = sample)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val duped = GraphQueries.betweenness(nodes, bidir, maxRounds = 20,
-          localBound = lb, sources = dupSample)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(duped == clean, s"localBound=$lb: a pivot sampled twice " +
-        "must not seed sigma=2 or double pair terms")
-    }
-  }
-
-  test("betweenness: pair-restricted estimator hand identity on the star") {
-    import spark.implicits._
-    // star 0-{1..4}: sources = {1,2,3} → C(3,2) = 3 leaf pairs, every
-    // shortest path runs through the center with sigma 1 → btw(0) = 3e6
-    val star = (1L to 4L).flatMap(l => Seq((0L, l), (l, 0L))).toDF("u", "v")
-    val nodes = (0L to 4L).toDF("node")
-    val pivots = Seq(1L, 2L, 3L).toDF("node")
-    for (lb <- Seq(500000, 0)) {
-      val got = GraphQueries.betweenness(nodes, star, maxRounds = 10,
-          localBound = lb, sources = pivots)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got(0L) == 3L * 1000000L, s"localBound=$lb center: ${got(0L)}")
-      (1L to 4L).foreach(l => assert(got(l) == 0L, s"localBound=$lb leaf $l"))
-    }
-  }
-
   test("betweenness: BFS completing exactly on the last round is accepted") {
-    import spark.implicits._
     // path 0-1-2: eccentricity from an endpoint is exactly 2
-    val path = Seq((0L, 1L), (1L, 0L), (1L, 2L), (2L, 1L)).toDF("u", "v")
-    val nodes = (0L to 2L).toDF("node")
+    val path = Array((0L, 1L), (1L, 0L), (1L, 2L), (2L, 1L))
+    val nodes = Array(0L, 1L, 2L)
     val expect = GraphQueries.betweenness(nodes, path, maxRounds = 10)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    for (lb <- Seq(500000, 0)) {
-      val got = GraphQueries.betweenness(nodes, path, maxRounds = 2,
-          localBound = lb)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expect, s"localBound=$lb")
-      // one round short IS truncation — both paths must fail loudly
-      val e = intercept[Exception] {
-        GraphQueries.betweenness(nodes, path, maxRounds = 1,
-          localBound = lb).collect()
-      }
-      assert(e.getMessage.contains("did not finish"), s"localBound=$lb")
+    assert(expect.toSeq == Seq((0L, 0L), (1L, 1000000L), (2L, 0L)))
+    assert(GraphQueries.betweenness(nodes, path, maxRounds = 2).toSeq ==
+      expect.toSeq)
+    // one round short IS truncation — fail loudly
+    val e = intercept[IllegalStateException] {
+      GraphQueries.betweenness(nodes, path, maxRounds = 1)
     }
+    assert(e.getMessage.contains("did not finish"))
   }
 
   test("capHubs leaves the session CacheManager empty") {

@@ -97,87 +97,6 @@ class Round15OpsSpec extends AnyFunSuite {
       s"trade edges are not one LocalRelation: $leaves")
   }
 
-  private def seededBidir(seed: Int, n: Int, m: Int) = {
-    import spark.implicits._
-    val rnd = new scala.util.Random(seed)
-    val und = (0 until m)
-      .map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-      .filter { case (a, b) => a != b }
-      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
-      .distinct
-    und.flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("u", "v")
-  }
-
-  test("betweenness rescale: exactly unbiased over the full pivot-subset space") {
-    import spark.implicits._
-    // n = 6, K = 3: every pair {s,t} lies in C(4,1) = 4 of the C(6,3)
-    // = 20 subsets — inclusion probability 4/20 = C(3,2)/C(6,2), so the
-    // MEAN over ALL subsets of the C(n,2)/C(K,2)-rescaled estimate
-    // equals the full run EXACTLY (Horvitz–Thompson, no tolerance
-    // needed). The only slack is the one floor-DIV per draw per node:
-    // sum-over-20-draws sits in (20·full − 20, 20·full].
-    val n = 6
-    val bidir = seededBidir(13, n, 12)
-    val nodes = (0L until n.toLong).toDF("node")
-    val full = GraphQueries.betweenness(nodes, bidir, 10)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val subsets = (0L until n.toLong).combinations(3).toSeq
-    assert(subsets.size == 20)
-    val sums = scala.collection.mutable.Map.empty[Long, Long]
-      .withDefaultValue(0L)
-    for (sub <- subsets) {
-      GraphQueries.betweenness(nodes, bidir, 10,
-          sources = sub.toDF("node"), rescale = true)
-        .collect().foreach { r =>
-          sums(r.getLong(0)) = sums(r.getLong(0)) + r.getLong(1)
-        }
-    }
-    for (v <- 0L until n.toLong) {
-      val lo = 20L * full(v) - 20L
-      assert(sums(v) > lo && sums(v) <= 20L * full(v),
-        s"node $v: Σ rescaled over all 20 subsets = ${sums(v)}, " +
-          s"full = ${full(v)} — estimator is biased")
-    }
-  }
-
-  test("betweenness rescale: preserves the sampled ranking and both paths agree") {
-    import spark.implicits._
-    val n = 20
-    val bidir = seededBidir(7, n, 60)
-    val nodes = (0L until n.toLong).toDF("node")
-    val pivots = Seq(0L, 2L, 3L, 5L, 8L, 9L, 11L, 14L, 15L, 17L, 18L, 19L)
-      .toDF("node")
-    val raw = GraphQueries.betweenness(nodes, bidir, 10, sources = pivots)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val scaled = GraphQueries.betweenness(nodes, bidir, 10,
-        sources = pivots, rescale = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // rescale is a monotone constant-factor floor-multiply: it may
-    // merge near-ties but can NEVER reorder the sampled estimator
-    for (u <- 0L until n.toLong; v <- 0L until n.toLong) {
-      if (raw(u) < raw(v))
-        assert(scaled(u) <= scaled(v), s"rescale reordered $u vs $v")
-      if (raw(u) == raw(v))
-        assert(scaled(u) == scaled(v), s"rescale split the tie $u vs $v")
-    }
-    // magnitudes actually moved (K < n ⇒ factor > 1 on nonzero nodes)
-    assert((0L until n.toLong).exists(v => scaled(v) > raw(v)))
-    // the distributed loop applies the identical factor
-    val distScaled = GraphQueries.betweenness(nodes, bidir, 10,
-        localBound = 0, sources = pivots, rescale = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(distScaled == scaled,
-      "local and distributed rescaled runs diverged")
-    // sources = nodes (K = n): rescale is the identity — the factor
-    // C(n,2)/C(K,2) is 1 and the full run comes back untouched
-    val idFull = GraphQueries.betweenness(nodes, bidir, 10,
-        sources = nodes, rescale = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val full = GraphQueries.betweenness(nodes, bidir, 10)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(idFull == full)
-  }
-
   test("SkewJoin.hotKeys frees its histogram checkpoint and registers nothing") {
     import spark.implicits._
     spark.catalog.clearCache()

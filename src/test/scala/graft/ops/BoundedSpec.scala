@@ -47,9 +47,6 @@ class BoundedSpec extends AnyFunSuite {
       val (got, jobs) = withJobs(Bounded.rowsAtMost(frame(0), max))
       assert(got.isEmpty, s"max=$max")
       assert(jobs == 0, s"max=$max jobs=$jobs")
-      val (fits, countJobs) = withJobs(Bounded.atMost(frame(0), max))
-      assert(!fits, s"max=$max")
-      assert(countJobs == 0, s"max=$max jobs=$countJobs")
     }
   }
 
@@ -69,16 +66,5 @@ class BoundedSpec extends AnyFunSuite {
     val (got, jobs) = withJobs(Bounded.rowsAtMost(frame(3), Long.MaxValue))
     assert(got.map(ids).contains(Seq(0L, 1L, 2L)))
     assert(jobs == 1, s"jobs=$jobs")
-    assert(Bounded.atMost(frame(3), Long.MaxValue))
-  }
-
-  test("atMost agrees with rowsAtMost(...).isDefined on 0, max and " +
-      "max + 1 rows") {
-    for (n <- Seq(0L, 4L, 5L)) {
-      val (fits, jobs) = withJobs(Bounded.atMost(frame(n), 4))
-      assert(fits == Bounded.rowsAtMost(frame(n), 4).isDefined, s"n=$n")
-      assert(fits == (n <= 4), s"n=$n")
-      assert(jobs == 1, s"n=$n jobs=$jobs")
-    }
   }
 }

@@ -3,17 +3,17 @@ package graft.ops
 import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-/** FB-coloring SCC must implement MUTUAL reachability exactly: the
-  * diamond DAG that fools naive double min-propagation, directed cycles,
-  * chains of SCCs (multiple peeling rounds), and singletons.
+/** SCC labels must implement MUTUAL reachability exactly: the diamond
+  * DAG that fools naive double min-propagation, directed cycles, chains
+  * of SCCs, ids ordered against the edges, singletons, and random
+  * digraphs against a Floyd–Warshall closure.
   */
 class StronglyConnectedComponentsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def run(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
-    StronglyConnectedComponents.resolve(
-      nodes.toDF("node"), edges.toDF("src", "dst"))
+    StronglyConnectedComponents.resolveLocal(nodes.toDF("node"), edges.toArray)
       .as[(Long, Long)].collect().toMap
   }
 
@@ -45,7 +45,7 @@ class StronglyConnectedComponentsSpec extends AnyFunSuite {
 
   test("ids ordered against the peel direction") {
     // edges flow from HIGH ids to LOW: 5→4→3 singleton chain plus a
-    // 2-cycle {1,2} reachable from it; trimming must absorb the DAG part
+    // 2-cycle {1,2} reachable from it; the DAG part stays singletons
     val got = run((1L to 5L),
       Seq((5L, 4L), (4L, 3L), (3L, 2L), (1L, 2L), (2L, 1L)))
     assert(got == Map(5L -> 5L, 4L -> 4L, 3L -> 3L, 2L -> 1L, 1L -> 1L))
