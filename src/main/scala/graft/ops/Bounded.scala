@@ -17,8 +17,8 @@ import org.apache.spark.sql.{DataFrame, Row}
   * `Int.MaxValue` a read that fills the clamped limit is a truncated
   * frame, not a complete one.
   *
-  * A bound of 0 or less fetches nothing and starts no job — callers use
-  * it to force their distributed path.
+  * A bound of 0 or less fetches nothing and starts no job: no frame is
+  * judged to fit it.
   */
 object Bounded {
 

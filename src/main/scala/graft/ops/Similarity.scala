@@ -285,8 +285,7 @@ object Similarity {
       .persistIntermediate
     // persist BEFORE the self-union mirror: union branches get no
     // common-subexpression elimination, so an unpersisted `half` would run
-    // the entire quadratic ε-scoring join TWICE (the
-    // ConnectedComponents.resolve fwd-edges doctrine — measured 2×
+    // the entire quadratic ε-scoring join TWICE (measured 2×
     // wall-clock on the gated corpus)
     val half = blockedEpsHalf(base, eps2Q, blocks).persistIntermediate
     dbscanTail(base.select("vec_id"), half, minPts)

@@ -16,8 +16,7 @@ import org.apache.spark.sql.types.LongType
   * Partition Defined ... this can cause serious performance
   * degradation"), which is exactly the shape that stops scaling first
   * at 100 TB. The two-pass replacement is the classic distributed
-  * prefix construction (used by analyticsTheilSen's above-bound
-  * rank-median selection):
+  * prefix construction:
   *
   *   1. `repartitionByRange(sortCols)` spreads the frame across range
   *      partitions in sort order; the row→partition binding is FROZEN

@@ -2140,7 +2140,7 @@ object GraphQueries {
     val seeds = Seq(0L, 7L)
     val es = tradeGraph(spark, sfDir).pairs.map { case (s, d) => (s, d, 1L) }
     // seeds split 15% of n·1e6, everyone else 0
-    val nTot = nodes.count()
+    val nTot = nodeIds(nodes, "graph_ppr nations").length.toLong
     val teleOf = (n: Long) =>
       if (seeds.contains(n)) 150000L * nTot / seeds.size else 0L
     val lab = localRankDf(spark, dampedRankLocal(es, teleOf, teleOf, Iters))
@@ -2194,16 +2194,20 @@ object GraphQueries {
     *
     * Scale: the trade graph has at most 550 edges over the nation set
     * (see [[TradeEdgeBound]]), so one [[bfsHops]] per root runs on the
-    * driver over the fetched edge and node lists and builds the
+    * driver over the edge list and the roots `ns` (the fetched nation
+    * ids, whose count the callers reuse as n) and builds the
     * ≤ |nations|²-row answer as a LocalRelation.
     */
-  private def allPairsHops(nodes: DataFrame,
-      edges: Array[(Long, Long)]): DataFrame = {
-    val ns = nodeIds(nodes, "all-pairs hop closure nodes").sorted
-    longFrame(nodes.sparkSession, "root", "node", "dist")(
-      ns.toSeq.flatMap(root => bfsHops(edges, root).toSeq.sorted
+  private def allPairsHops(spark: SparkSession, ns: Array[Long],
+      edges: Array[(Long, Long)]): DataFrame =
+    longFrame(spark, "root", "node", "dist")(
+      ns.sorted.toSeq.flatMap(root => bfsHops(edges, root).toSeq.sorted
         .map { case (nd, d) => (root, nd, d) }))
-  }
+
+  /** The nation ids on the driver: the roots of [[allPairsHops]]. */
+  private def nationIds(spark: SparkSession, sfDir: String): Array[Long] =
+    nodeIds(table(spark, sfDir, "nation").select(col("n_nationkey").as("node")),
+      "all-pairs hop closure nodes")
 
   /** `graph_closeness` — out-closeness centrality of every nation on the
     * directed trade graph: reach count, total hop distance, and the
@@ -2219,10 +2223,9 @@ object GraphQueries {
     * (Eppstein–Wang estimation).
     */
   def graphCloseness(spark: SparkSession, sfDir: String): DataFrame = {
-    val nodes = table(spark, sfDir, "nation")
-      .select(col("n_nationkey").cast("long").as("node"))
-    val n = nodes.count()
-    allPairsHops(nodes, tradeGraph(spark, sfDir).pairs).groupBy("root")
+    val ns = nationIds(spark, sfDir)
+    val n = ns.length
+    allPairsHops(spark, ns, tradeGraph(spark, sfDir).pairs).groupBy("root")
       .agg(count(lit(1)).as("n_reached"), sum("dist").as("total_dist"))
       .select(col("root").as("nationkey"), col("n_reached"),
         col("total_dist"),
@@ -2279,10 +2282,9 @@ object GraphQueries {
     */
   def graphHarmonic(spark: SparkSession, sfDir: String): DataFrame = {
     val L = 5354228880L // lcm(1..24)
-    val nodes = table(spark, sfDir, "nation")
-      .select(col("n_nationkey").cast("long").as("node"))
-    val n = nodes.count()
-    allPairsHops(nodes, tradeGraph(spark, sfDir).pairs).where(col("dist") > 0)
+    val ns = nationIds(spark, sfDir)
+    val n = ns.length
+    allPairsHops(spark, ns, tradeGraph(spark, sfDir).pairs).where(col("dist") > 0)
       .groupBy("root")
       .agg(sum(expr(s"${L}L div dist")).cast("long").as("harmonic_sc"),
         count(lit(1)).as("n_reached"))
@@ -2330,9 +2332,8 @@ object GraphQueries {
     * broadcast back over the O(n) eccentricity frame.
     */
   def graphEccentricity(spark: SparkSession, sfDir: String): DataFrame = {
-    val nodes = table(spark, sfDir, "nation")
-      .select(col("n_nationkey").cast("long").as("node"))
-    val ecc = allPairsHops(nodes, tradeGraph(spark, sfDir).pairs).groupBy("root")
+    val ecc = allPairsHops(spark, nationIds(spark, sfDir),
+        tradeGraph(spark, sfDir).pairs).groupBy("root")
       .agg(max("dist").as("ecc"), count(lit(1)).as("n_reached"))
     val bounds = ecc.agg(max("ecc").as("diameter"), min("ecc").as("radius"))
     ecc.crossJoin(broadcast(bounds))

@@ -700,9 +700,9 @@ object SimilarityQueries {
 
   /** `dedup_clusters_star` — the same cluster resolution through the
     * O(log n)-round large-star/small-star algorithm
-    * (ConnectedComponents.resolveStar, Kiveris et al. SoCC'14): the
-    * spelling for adversarial long-chain components where label
-    * propagation needs diameter rounds. Same oracle as
+    * (ConnectedComponents.resolveStar, Kiveris et al. SoCC'14), the
+    * closure `dedup_clusters` runs only above the driver bound; calling
+    * it directly keeps that path under the oracle. Same oracle as
     * `dedup_clusters` — the two algorithms are output-identical by
     * contract (also pinned on random graphs by
     * ConnectedComponentsSpec).

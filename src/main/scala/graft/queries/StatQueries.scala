@@ -2465,10 +2465,11 @@ object StatQueries {
     *
     * Scale: exact Kendall is Ω(days²) BY CONTRACT — but over the DAILY
     * pre-aggregate, never over rows: the fact-table pass is one hash
-    * aggregate, and the pair self-join runs on a calendar-bounded
-    * frame (O(days²) pairs ≈ 3e6/group at 7 TPC-H years, independent
-    * of row count — the same frame at 100 TB). The group key fans the
-    * pair generation across the cluster.
+    * aggregate, and the pairs are counted on the driver over the
+    * calendar-bounded rollup (O(days²) pairs ≈ 3e6/group at 7 TPC-H
+    * years, independent of row count — the same frame at 100 TB). A
+    * rollup past 1e6 rows or 3e7 pairs is a broken invariant and fails
+    * loudly.
     */
   def analyticsKendallTau(spark: SparkSession, sfDir: String): DataFrame = {
     val daily = table(spark, sfDir, "lineitem")
@@ -2479,113 +2480,74 @@ object StatQueries {
           .as("yc"))
       .groupBy("g", "day")
       .agg(sum("xc").as("x"), sum("yc").as("y"))
-    // r20 calendar-bounded fast path (the theil_sen doctrine): the
-    // concordance counts need Ω(days²) pair comparisons, but over the
-    // CALENDAR-bounded daily rollup — ~8.7e6 pairs at 7 TPC-H years,
-    // invariant under row-count scale-up. The distributed spelling
-    // expanded ~17e6 join rows through a 3-key hash aggregate to get
-    // them; below the bound (measured BEFORE anything quadratic runs,
-    // on the fetched rollup) the pairs are counted locally — pure
-    // integer sign comparisons (no arithmetic that can overflow; the
-    // one local multiply under the sqrt keeps the ANSI loud-overflow
-    // contract via multiplyExact), so the counts and the final fixed
-    // double op sequence are bit-identical to the Catalyst spelling.
-    // Same-window A/B at sf0.1/16 cpus: 2.29 → 1.48 s. The distributed
-    // spelling stays, unchanged, above the bound.
+    // The concordance counts need Ω(days²) pair comparisons, but over
+    // the CALENDAR-bounded daily rollup — ~8.7e6 pairs at 7 TPC-H
+    // years, invariant under row-count scale-up — so they run on the
+    // driver: pure integer sign comparisons (no arithmetic that can
+    // overflow; the one multiply under the sqrt keeps the ANSI
+    // loud-overflow contract via multiplyExact), bit-identical to the
+    // twin's counts and final fixed double op sequence.
     //
     // ONE bounded fetch of at most 1e6 rollup rows both carries the
-    // data and bounds the COLLECT as well as the pair count (advice):
-    // the pair bound alone admits unboundedly many small groups — 3e7
-    // pairs can hide 1e9 one-day rows. The checkpoint belongs to the
-    // distributed spelling, which scans the rollup three times.
-    val local = graft.ops.Bounded.rowsAtMost(daily, 1000000L).flatMap { dr =>
-      // r21 (advice): the distributed spelling's inner pair-join emits
-      // NO row for a single-day group (zero d1<d2 pairs) or a NULL key
-      // (an equi-join never matches null), so the fast path must omit
-      // them too — the branches otherwise return different row sets on
-      // inputs no test SF has (the agreement pin runs on pairs-bearing
-      // groups).
-      val groups = dr.filter(!_.isNullAt(0)).groupBy(_.getString(0))
-        .filter(_._2.length >= 2).toArray.sortBy(_._1)
-      val totalPairs = groups.map { case (_, rows) =>
-        rows.length.toLong * (rows.length - 1) / 2 }.sum
-      // null x/y sums need the distributed spelling's SQL three-valued
-      // comparisons — don't re-implement them locally, just defer
-      if (totalPairs > 30000000L ||
-          dr.exists(r => r.isNullAt(2) || r.isNullAt(3))) None
-      else Some(groups.map { case (g, rows) =>
-        val xs = rows.map(_.getLong(2))
-        val ys = rows.map(_.getLong(3))
-        var n0 = 0L; var nc = 0L; var ndis = 0L; var tx = 0L; var ty = 0L
-        var i = 0
-        while (i < xs.length) {
-          var j = i + 1
-          while (j < xs.length) {
-            val cx = java.lang.Long.compare(xs(j), xs(i))
-            val cy = java.lang.Long.compare(ys(j), ys(i))
-            n0 += 1
-            if (cx == 0) tx += 1
-            if (cy == 0) ty += 1
-            if (cx * cy > 0) nc += 1
-            else if (cx * cy < 0) ndis += 1
-            j += 1
-          }
-          i += 1
+    // data and bounds the COLLECT as well as the pair count: the pair
+    // bound alone admits unboundedly many small groups — 3e7 pairs can
+    // hide 1e9 one-day rows.
+    val dr = graft.ops.Bounded.rows(daily, 1000000L, "kendall daily rollup")
+    // the twin's inner pair self-join (`a.day < b.day`) pairs no NULL
+    // day and emits NO row for a group with fewer than two known days
+    // or a NULL key (an equi-join never matches null), so neither comes
+    // back here; n_days still counts a NULL day, as the twin's COUNT(*)
+    val groups = dr.filter(!_.isNullAt(0)).groupBy(_.getString(0))
+      .map { case (g, all) => (g, all.length, all.filter(!_.isNullAt(1))) }
+      .filter(_._3.length >= 2).toArray.sortBy(_._1)
+    val totalPairs = groups.map { case (_, _, rows) =>
+      rows.length.toLong * (rows.length - 1) / 2 }.sum
+    if (totalPairs > 30000000L) throw new IllegalStateException(
+      s"kendall daily rollup: $totalPairs day pairs, past the 3e7 driver bound")
+    val out = groups.map { case (g, nDays, rows) =>
+      // a NULL x or y sum compares as SQL's three-valued logic does: the
+      // pair counts in n0, tx only when both x are known and equal (ty
+      // likewise), nc and nd only when both differences are known —
+      // an unknown side's sign is 0 here, so its product is never ±
+      val xk = rows.map(!_.isNullAt(2))
+      val yk = rows.map(!_.isNullAt(3))
+      val xs = rows.map(r => if (r.isNullAt(2)) 0L else r.getLong(2))
+      val ys = rows.map(r => if (r.isNullAt(3)) 0L else r.getLong(3))
+      val n0 = rows.length.toLong * (rows.length - 1) / 2
+      var nc = 0L; var ndis = 0L; var tx = 0L; var ty = 0L
+      var i = 0
+      while (i < xs.length) {
+        var j = i + 1
+        while (j < xs.length) {
+          val bx = xk(i) && xk(j)
+          val by = yk(i) && yk(j)
+          val cx = if (bx) java.lang.Long.compare(xs(j), xs(i)) else 0
+          val cy = if (by) java.lang.Long.compare(ys(j), ys(i)) else 0
+          if (bx && cx == 0) tx += 1
+          if (by && cy == 0) ty += 1
+          if (cx * cy > 0) nc += 1
+          else if (cx * cy < 0) ndis += 1
+          j += 1
         }
-        val tauB = (nc - ndis).toDouble /
-          math.sqrt(math.multiplyExact(n0 - tx, n0 - ty).toDouble)
-        org.apache.spark.sql.Row(g, rows.length.toLong, nc, ndis, tauB)
-      })
+        i += 1
+      }
+      val tauB = (nc - ndis).toDouble /
+        math.sqrt(math.multiplyExact(n0 - tx, n0 - ty).toDouble)
+      org.apache.spark.sql.Row(g, nDays.toLong, nc, ndis, tauB)
     }
-    local match {
-      case Some(out) =>
-        import scala.jdk.CollectionConverters._
-        spark.createDataFrame(out.toList.asJava,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("returnflag",
-              org.apache.spark.sql.types.StringType, nullable = true),
-            org.apache.spark.sql.types.StructField("n_days",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("nc",
-              org.apache.spark.sql.types.LongType, nullable = true),
-            org.apache.spark.sql.types.StructField("nd",
-              org.apache.spark.sql.types.LongType, nullable = true),
-            org.apache.spark.sql.types.StructField("tau_b",
-              org.apache.spark.sql.types.DoubleType, nullable = true))))
-      case None => kendallTauDistributed(daily.truncateLineage(true))
-    }
-  }
-
-  /** The distributed Kendall pair-count spelling — the branch
-    * [[analyticsKendallTau]] takes above the calendar bound (factored
-    * out so the fast-path/distributed agreement stays test-gated now
-    * that every test SF is below the bound).
-    */
-  private[graft] def kendallTauDistributed(daily: DataFrame): DataFrame = {
-    val nDays = daily.groupBy("g").agg(count(lit(1)).as("n_days"))
-    val a = daily.select(col("g"), col("day").as("d1"),
-      col("x").as("x1"), col("y").as("y1"))
-    val b = daily.select(col("g"), col("day").as("d2"),
-      col("x").as("x2"), col("y").as("y2"))
-    val dx = col("x2") - col("x1")
-    val dy = col("y2") - col("y1")
-    val counts = a.join(b, Seq("g")).where(col("d1") < col("d2"))
-      .groupBy("g").agg(
-        count(lit(1)).as("n0"),
-        sum(when((dx > 0 && dy > 0) || (dx < 0 && dy < 0), 1L)
-          .otherwise(0L)).as("nc"),
-        sum(when((dx > 0 && dy < 0) || (dx < 0 && dy > 0), 1L)
-          .otherwise(0L)).as("nd"),
-        sum(when(dx === 0, 1L).otherwise(0L)).as("tx"),
-        sum(when(dy === 0, 1L).otherwise(0L)).as("ty"))
-    counts.join(broadcast(nDays), "g")
-      .withColumn("tau_b",
-        (col("nc") - col("nd")).cast(DoubleType) /
-          sqrt(((col("n0") - col("tx")) * (col("n0") - col("ty")))
-            .cast(DoubleType)))
-      .select(col("g").as("returnflag"), col("n_days"), col("nc"),
-        col("nd"), col("tau_b"))
-      .orderBy("returnflag")
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(out.toList.asJava,
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("returnflag",
+          org.apache.spark.sql.types.StringType, nullable = true),
+        org.apache.spark.sql.types.StructField("n_days",
+          org.apache.spark.sql.types.LongType, nullable = false),
+        org.apache.spark.sql.types.StructField("nc",
+          org.apache.spark.sql.types.LongType, nullable = true),
+        org.apache.spark.sql.types.StructField("nd",
+          org.apache.spark.sql.types.LongType, nullable = true),
+        org.apache.spark.sql.types.StructField("tau_b",
+          org.apache.spark.sql.types.DoubleType, nullable = true))))
   }
 
   val analyticsKendallTauSql: String =
@@ -2638,10 +2600,9 @@ object StatQueries {
     * Scale: identical contract to [[analyticsKendallTau]] — Ω(days²)
     * pairs over the CALENDAR-bounded daily aggregate (~2.9e6 pairs at
     * 7 years, invariant under row-count scale-up), after one hash
-    * aggregate over the fact table. Up to 2828 days the median is
-    * taken on the driver; above that it runs as a DISTRIBUTED rank
-    * selection ([[theilSenMedian]]), never a single-reducer percentile
-    * buffer.
+    * aggregate over the fact table. The median is taken on the
+    * driver; a rollup past 2828 days is a broken invariant and fails
+    * loudly.
     */
   def analyticsTheilSen(spark: SparkSession, sfDir: String): DataFrame = {
     val daily = table(spark, sfDir, "lineitem")
@@ -2651,131 +2612,70 @@ object StatQueries {
         (col("l_extendedprice").cast(DecimalType(18, 2)) * 100)
           .cast(LongType).as("cents"))
       .groupBy("d").agg(sum("cents").as("rev"))
-    // driver-local fast path: the slope multiset is CALENDAR-bounded —
-    // nDays·(nDays−1)/2 pairs regardless of row count (the property
-    // that makes this operator scale-invariant at 100 TB). ONE bounded
-    // fetch of at most 2828 days (the largest n with n(n−1)/2 ≤ 4e6
-    // pairs) decides the path before anything quadratic runs and
-    // carries the data. Below it, a local sort replaces the range-
-    // shuffle rank selection (the distributed spelling stays,
-    // unchanged, above the bound).
-    graft.ops.Bounded.rowsAtMost(daily, 2828L) match {
-      case Some(dr) =>
-        // the O(days) rollup is ~400× smaller than the pair frame, so
-        // the pairs are expanded here: the slope is the same three IEEE
-        // ops (exact long subtraction → one multiply by the exactly-
-        // representable 1e6 → one divide → floor), bit-identical to
-        // the Catalyst spelling at every magnitude, and the loud-
-        // overflow contract is kept (subtractExact replaces the ANSI
-        // long subtraction; an explicit range check replaces the ANSI
-        // double→long cast error). Same-window A/B at sf0.1/16 cpus:
-        // 2.57 → 1.26 s.
-        val ds = dr.map(_.getLong(0))
-        val rs = dr.map(_.getLong(1))
-        val arr = new Array[Long](ds.length * (ds.length - 1) / 2)
-        var k = 0
-        var i = 0
-        while (i < ds.length) {
-          var j = i + 1
-          while (j < ds.length) {
-            val s = math.floor(
-              math.subtractExact(rs(j), rs(i)).toDouble * 1000000.0d /
-                (ds(j) - ds(i)).toDouble)
-            if (s < -9.223372036854776e18d || s >= 9.223372036854776e18d)
-              throw new ArithmeticException(
-                s"slope_sc overflow: $s — rescale the slope unit")
-            arr(k) = s.toLong
-            k += 1
-            j += 1
-          }
-          i += 1
-        }
-        java.util.Arrays.sort(arr)
-        val n = arr.length.toLong
-        val median: java.lang.Double =
-          if (n == 0) null
-          else {
-            val lo = arr(((n + 1) / 2 - 1).toInt)
-            val hi = arr((n / 2).toInt)
-            // addExact, not `+` (advice): the distributed spelling's ANSI
-            // long addition throws on overflow near ±2^63 — plain Scala
-            // `+` would wrap silently and break the loud-overflow contract
-            math.addExact(lo, hi).toDouble / 2.0d
-          }
-        import scala.jdk.CollectionConverters._
-        spark.createDataFrame(
-          List(org.apache.spark.sql.Row(n, median)).asJava,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("n_pairs",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("median_slope_sc",
-              org.apache.spark.sql.types.DoubleType, nullable = true))))
-      case None =>
-        // materialized once each: both pair sides scan the rollup, and
-        // the range partitioner's sampling pass and the shuffle itself
-        // would otherwise EACH re-run the pair join
-        theilSenMedian(
-          theilSenSlopes(daily.truncateLineage(true)).truncateLineage(true))
+    // the slope multiset is CALENDAR-bounded — nDays·(nDays−1)/2 pairs
+    // regardless of row count (the property that makes this operator
+    // scale-invariant at 100 TB) — so the median is taken on the
+    // driver. ONE bounded fetch of at most 2828 days (the largest n
+    // with n(n−1)/2 ≤ 4e6 pairs) carries the data; past it the
+    // calendar invariant is broken and the fetch fails loudly.
+    //
+    // The slope is the twin's three IEEE ops (exact long subtraction →
+    // one multiply by the exactly-representable 1e6 → one divide →
+    // floor), bit-identical at every magnitude, and the loud-overflow
+    // contract is kept (subtractExact replaces the ANSI long
+    // subtraction; an explicit range check replaces the ANSI
+    // double→long cast error). slope_sc is micro-cents/day in a LONG,
+    // which saturates past adjacent-day swings of ~9.2e12 cents; both
+    // engines fail there rather than wrap.
+    //
+    // The twin's `a.d < b.d` pairs no NULL day, so those rows drop. A
+    // NULL day revenue (every price NULL that day) makes each of its
+    // slopes NULL: the pair still counts in n_pairs, as the twin's
+    // COUNT(*) does, and the median skips it, as median() does.
+    val dr = graft.ops.Bounded.rows(daily, 2828L, "theil-sen daily rollup")
+      .filter(!_.isNullAt(0))
+    val known = dr.filter(!_.isNullAt(1))
+    val ds = known.map(_.getLong(0))
+    val rs = known.map(_.getLong(1))
+    val arr = new Array[Long](ds.length * (ds.length - 1) / 2)
+    var k = 0
+    var i = 0
+    while (i < ds.length) {
+      var j = i + 1
+      while (j < ds.length) {
+        val s = math.floor(
+          math.subtractExact(rs(j), rs(i)).toDouble * 1000000.0d /
+            (ds(j) - ds(i)).toDouble)
+        if (s < -9.223372036854776e18d || s >= 9.223372036854776e18d)
+          throw new ArithmeticException(
+            s"slope_sc overflow: $s — rescale the slope unit")
+        arr(k) = s.toLong
+        k += 1
+        j += 1
+      }
+      i += 1
     }
-  }
-
-  /** Theil–Sen's scaled integer slope `slope_sc` for every day pair
-    * d1 < d2 of a (d, rev) daily rollup — the above-bound pair frame.
-    */
-  private[graft] def theilSenSlopes(daily: DataFrame): DataFrame = {
-    val a = daily.select(col("d").as("d1"), col("rev").as("r1"))
-    val b = daily.select(col("d").as("d2"), col("rev").as("r2"))
-    a.crossJoin(b).where(col("d1") < col("d2"))
-      // the INTERMEDIATE ×10⁶ runs on the DOUBLE route (overflow-free
-      // per the float exemption in GateHygieneSpec): Δrev is a safe
-      // LONG subtraction, its →double cast is correctly rounded, and
-      // ×1e6 (an exactly-representable constant) is one IEEE multiply
-      // — so below 2⁵³ the product is EXACT (identical to the r17
-      // DECIMAL(38,0) intermediate, pinned by the gate), and ABOVE it
-      // both engines perform the SAME two correctly-rounded IEEE ops
-      // and stay bit-identical at every magnitude. The r17 decimal
-      // spelling could not say that: Spark's DECIMAL→DOUBLE rounds
-      // once, DuckDB's HUGEINT→DOUBLE rounds twice (upper·2⁶⁴+lower),
-      // so past 2⁵³ the floored quotients could differ by 1 and break
-      // the gate — the double route retires that seam AND the ~1.1×
-      // per-pair decimal-multiply tax (~3e6 pairs; A/B in
-      // ARCHITECTURE.md). The OUTPUT UNIT keeps its own horizon:
-      // slope_sc is micro-cents/day in a LONG, which saturates when
-      // |Δrev|·10⁶/gap > 2⁶³ — adjacent-day swings above ~9.2e12
-      // cents (~$92 B/day). Both engines fail LOUDLY there (ANSI cast
-      // error / DuckDB conversion error, never silent corruption); a
-      // deployment at that magnitude rescales the slope unit (plain
-      // cents/day keeps 10⁶× headroom and loses resolution the
-      // magnitude doesn't need). Past 2⁵³ micro-cents the slope value
-      // itself drifts ≤ 1 ulp from infinite precision (DOUBLE-ppm
-      // doctrine, [[analyticsMom]]) — identically in both engines.
-      .select(floor(
-        (col("r2") - col("r1")).cast(DoubleType) * lit(1000000.0d) /
-          (col("d2") - col("d1")).cast(DoubleType)).cast(LongType)
-        .as("slope_sc"))
-  }
-
-  /** Exact DISTRIBUTED median of `slopes.slope_sc` as (n_pairs,
-    * median_slope_sc) via rank selection: a plain percentile aggregate
-    * funnels every pair slope into ONE reducer's sort buffer (measured
-    * 10.7 s on the 2.9e6-pair frame — the whole query's cost); here the
-    * global ranks come from [[graft.ops.TwoPassWindow]]'s range-
-    * partitioned row number, and the two middle order statistics come
-    * back from whichever partitions own them. Tied slopes may trade
-    * ranks, but tied ranks hold the same value, so the middle pair is
-    * exact. Its mean (a+b)/2 over exact integer doubles is bit-identical
-    * to the oracle median()'s interpolation.
-    */
-  private[graft] def theilSenMedian(slopes: DataFrame): DataFrame = {
-    val (ranked, n) = graft.ops.TwoPassWindow
-      .withRowNumberAndTotal(slopes, Seq(col("slope_sc")), "grank")
-    val kLo = (n + 1) / 2
-    val kHi = n / 2 + 1
-    ranked.where(col("grank") === kLo || col("grank") === kHi)
-      .agg(min("slope_sc").as("lo"), max("slope_sc").as("hi"))
-      .select(lit(n).as("n_pairs"),
-        ((col("lo") + col("hi")).cast(DoubleType) / lit(2.0d))
-          .as("median_slope_sc"))
+    java.util.Arrays.sort(arr)
+    val m = arr.length.toLong
+    val median: java.lang.Double =
+      if (m == 0) null
+      else {
+        val lo = arr(((m + 1) / 2 - 1).toInt)
+        val hi = arr((m / 2).toInt)
+        // addExact, not `+`: the twin's integer addition fails on
+        // overflow near ±2^63 — plain Scala `+` would wrap silently and
+        // break the loud-overflow contract
+        math.addExact(lo, hi).toDouble / 2.0d
+      }
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(
+      List(org.apache.spark.sql.Row(dr.length.toLong * (dr.length - 1) / 2,
+        median)).asJava,
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("n_pairs",
+          org.apache.spark.sql.types.LongType, nullable = false),
+        org.apache.spark.sql.types.StructField("median_slope_sc",
+          org.apache.spark.sql.types.DoubleType, nullable = true))))
   }
 
   val analyticsTheilSenSql: String =

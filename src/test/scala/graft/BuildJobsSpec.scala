@@ -17,9 +17,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *     driver (kendall_tau, theil_sen, markov_stationary);
   *   - 7 for the trade-graph fetch (the 4-way lineitem join's shuffles
   *     and the result job), which is all a graph query whose rounds
-  *     run on the fetched rows starts; graph_betweenness and
-  *     graph_bowtie add one job for the fetch of the nation ids (the
-  *     pivot set; the nations Tarjan's labels cover).
+  *     run on the fetched rows starts; graph_betweenness,
+  *     graph_bowtie, graph_ppr, graph_closeness, graph_harmonic and
+  *     graph_eccentricity add one job for the fetch of the nation ids
+  *     (the pivot set; the nations Tarjan's labels cover; the node
+  *     count and the all-pairs roots).
   * A rise means a range shuffle, checkpoint or collect crept back in
   * ahead of planning.
   *
@@ -62,7 +64,11 @@ class BuildJobsSpec extends AnyFunSuite {
     "graph_coreness" -> 7,
     "graph_neighbor_overlap" -> 7,
     "graph_resource_alloc" -> 7,
-    "graph_adamic_adar" -> 7)
+    "graph_adamic_adar" -> 7,
+    "graph_ppr" -> 8,
+    "graph_closeness" -> 8,
+    "graph_harmonic" -> 8,
+    "graph_eccentricity" -> 8)
 
   for ((name, jobs) <- expected)
     test(s"$name starts its pinned job count while building") {

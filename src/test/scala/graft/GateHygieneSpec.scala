@@ -1085,6 +1085,85 @@ class GateHygieneSpec extends AnyFunSuite {
     assert(graphPersistSites(good).isEmpty)
   }
 
+  /** A lazy truncation (`truncateLineage(false)`, `Persist.truncate(…,
+    * eager = false)`) is complete only if the frame's next action scans
+    * every partition: an action that short-circuits (a narrow
+    * `isEmpty`, a `take`) leaves a partial checkpoint behind. In
+    * src/main such a call occurs only inside a member def of this
+    * ledger, keyed by file name and def, each naming the action that
+    * completes it.
+    */
+  private val lazyTruncateLedger = Map(
+    ("ConnectedComponents.scala", "resolveStar") ->
+      "each round's convergence groupBy shuffles every partition of `next`",
+    ("TwoPassWindow.scala", "pidded") ->
+      "every caller's per-partition count aggregate scans the pidded frame")
+
+  /** Each lazy truncation in `text` as (enclosing object member def,
+    * 1-based line); the member is found as in [[graphPersistSites]].
+    */
+  private[graft] def lazyTruncateSites(text: String): Seq[(String, Int)] = {
+    // call arguments nest parentheses up to three deep
+    val p1 = """\([^()]*\)"""
+    val p2 = """\((?:[^()]|""" + p1 + """)*\)"""
+    val site = ("""\.truncateLineage\(\s*(?:eager\s*=\s*)?false\s*\)""" +
+      """|\btruncate\((?:[^()]|""" + p2 + """)*?,\s*(?:eager\s*=\s*)?false\s*\)""").r
+    val defName = """(?m)^  (?:private(?:\[\w+\])?\s+)?def\s+(\w+)""".r
+    site.findAllMatchIn(text).map { m =>
+      val before = text.substring(0, m.start)
+      val enclosing = defName.findAllMatchIn(before).toSeq.lastOption
+        .map(_.group(1)).getOrElse("")
+      (enclosing, before.count(_ == '\n') + 1)
+    }.toSeq
+  }
+
+  test("a lazy truncation occurs in src/main only in a ledgered def") {
+    val root = Paths.get("src", "main", "scala")
+    assert(Files.isDirectory(root),
+      s"$root missing — run sbt test from the repo root")
+    val s = Files.walk(root)
+    val sites =
+      try s.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          p.getFileName.toString != "Persist.scala")
+        .flatMap { p =>
+          lazyTruncateSites(repoText(p)).map { case (d, l) =>
+            ((p.getFileName.toString, d), s"$p:$l ($d)")
+          }
+        }.toSeq.sortBy(_._2)
+      finally s.close()
+    val offenders = sites.filterNot(x => lazyTruncateLedger.contains(x._1)).map(_._2)
+    assert(offenders.isEmpty,
+      s"truncate eagerly, or ledger the def with the action that completes it: $offenders")
+    val stale = lazyTruncateLedger.keySet -- sites.map(_._1)
+    assert(stale.isEmpty, s"ledger names defs that no longer truncate lazily: $stale")
+  }
+
+  test("the lazy truncation auditor fires on every spelling (bad fixture)") {
+    val bad =
+      """object TwoPassWindow {
+        |  def a(df: DataFrame) = df.truncateLineage(false)
+        |  private def b(df: DataFrame) = df.truncateLineage(eager = false)
+        |  private[graft] def c(df: DataFrame, cols: Seq[Column]) =
+        |    Persist.truncate(
+        |      df.repartitionByRange(cols: _*)
+        |        .withColumn("p", spark_partition_id()),
+        |      eager = false)
+        |  def d(df: DataFrame) = truncate(df, false)
+        |}
+        |""".stripMargin
+    assert(lazyTruncateSites(bad) == Seq(("a", 2), ("b", 3), ("c", 5), ("d", 9)))
+    val good =
+      """object TwoPassWindow {
+        |  def a(df: DataFrame) = df.truncateLineage(true)
+        |  def b(df: DataFrame) = df.truncateLineage()
+        |  def c(df: DataFrame) = Persist.truncate(df.select("x"), eager = true)
+        |  def d(ds: Dataset[T], eager: Boolean) = truncate(ds, eager)
+        |}
+        |""".stripMargin
+    assert(lazyTruncateSites(good).isEmpty)
+  }
+
   /** Rows parsed on the driver enter Spark through
     * `graft.sources.DriverRows.stringFrame`, an RDD-backed frame. In
     * src/main/scala/graft/sources, a `createDataFrame(java.util…` or an

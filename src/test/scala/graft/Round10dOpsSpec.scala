@@ -52,39 +52,94 @@ class Round10dOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("kendall fast path agrees row-for-row with the distributed spelling") {
-    // r20: every test SF sits below the calendar bound, so the gated
-    // query always takes the driver-local fast path; this pin keeps the
-    // above-bound distributed spelling value-locked to it.
-    val dailyDf = graft.queries.RefQueries.table(spark, sf, "lineitem")
-      .selectExpr("l_returnflag AS g", "l_shipdate AS day",
-        "CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT) AS xc",
-        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS yc")
-      .groupBy("g", "day").agg(sum("xc").as("x"), sum("yc").as("y"))
-    val dist = graft.queries.StatQueries.kendallTauDistributed(dailyDf)
-      .collect().toSeq
-    val fast = graft.queries.StatQueries.analyticsKendallTau(spark, sf)
-      .collect().toSeq
-    assert(dist == fast,
-      s"distributed $dist != fast-path $fast — the two spellings diverged")
+  /** Runs `body` on a temporary scale-factor directory holding one
+    * `lineitem.parquet` of (l_returnflag, l_shipdate, l_quantity,
+    * l_extendedprice) rows, for the NULL and bound contracts no test SF
+    * exercises, and deletes it after. Day `i` is 2020-01-01 plus `i`
+    * days (UTC); `None` is a NULL.
+    */
+  private def withLineitem[T](rows: Seq[(Option[String], Option[Int],
+      Option[Double], Option[Double])])(body: String => T): T = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val dir = java.nio.file.Files.createTempDirectory("lineitem-fixture")
+    val day0 = java.time.LocalDate.of(2020, 1, 1)
+    val schema = StructType(Seq(
+      StructField("l_returnflag", StringType),
+      StructField("l_shipdate", TimestampType),
+      StructField("l_quantity", DoubleType),
+      StructField("l_extendedprice", DoubleType)))
+    val data = rows.map { case (g, d, q, p) =>
+      Row(g.orNull, d.map(i => java.sql.Timestamp.from(
+          day0.plusDays(i.toLong).atStartOfDay(java.time.ZoneOffset.UTC)
+            .toInstant)).orNull,
+        q.map(Double.box).orNull, p.map(Double.box).orNull)
+    }
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm))
+      f.delete(); ()
+    }
+    try {
+      spark.createDataFrame(spark.sparkContext.parallelize(data, 1), schema)
+        .write.parquet(dir.resolve("lineitem.parquet").toString)
+      body(dir.toString)
+    } finally rm(dir.toFile)
   }
 
-  test("theil_sen above-bound median agrees with the driver path") {
-    // every test SF sits below the 2828-day bound, so the gated query
-    // always takes the driver path; this pin keeps the above-bound rank
-    // selection value-locked to it on sf0.001's daily frame
-    val sf0001 = TestSpark.Sf0001
-    val dailyDf = graft.queries.RefQueries.table(spark, sf0001, "lineitem")
-      .selectExpr(
-        "CAST(unix_millis(CAST(l_shipdate AS TIMESTAMP)) DIV 86400000 AS BIGINT) AS d",
-        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents")
-      .groupBy("d").agg(sum("cents").as("rev"))
-    val dist = graft.queries.StatQueries.theilSenMedian(
-      graft.queries.StatQueries.theilSenSlopes(dailyDf)).collect().toSeq
-    val local = graft.queries.StatQueries.analyticsTheilSen(spark, sf0001)
-      .collect().toSeq
-    assert(dist == local,
-      s"distributed $dist != driver path $local — the two spellings diverged")
+  test("analytics_kendall_tau counts NULL daily sums with SQL three-valued logic") {
+    // NULL quantity or price sums, a NULL day, a one-day group and a
+    // NULL returnflag: the pair still counts in n0, a tie only when
+    // both sides are known, and a concordance only when both
+    // differences are; the NULL day counts in n_days and pairs with
+    // nothing; the one-day and NULL-flag groups have no pair row.
+    // Values are the DuckDB twin's, which the former distributed
+    // spelling (taken on any NULL sum) returned too.
+    val A = Some("A"); val B = Some("B")
+    val got = withLineitem(Seq(
+      (A, Some(0), Some(1.0), Some(10.0)), (A, Some(0), Some(1.5), Some(1.0)),
+      (A, Some(1), Some(2.0), Some(30.0)),
+      (A, Some(2), None, Some(20.0)),
+      (A, Some(3), Some(3.0), None),
+      (A, Some(4), Some(2.0), Some(15.0)),
+      (A, Some(5), None, None),
+      (A, None, Some(5.0), Some(50.0)),
+      (B, Some(0), Some(4.0), Some(40.0)), (B, Some(1), Some(3.0), Some(50.0)),
+      (B, Some(2), None, Some(60.0)), (B, Some(3), Some(5.0), Some(60.0)),
+      (Some("N"), Some(0), Some(1.0), Some(1.0)),
+      (None, Some(0), Some(1.0), Some(1.0)), (None, Some(1), Some(2.0), Some(2.0)))) {
+      sf => graft.queries.StatQueries.analyticsKendallTau(spark, sf)
+        .collect().toSeq.map(_.toSeq)
+    }
+    assert(got == Seq(Seq("A", 7L, 0L, 2L, -0.13801311186847084),
+      Seq("B", 4L, 2L, 1L, 0.18257418583505536)), s"got $got")
+  }
+
+  test("analytics_theil_sen pairs a NULL revenue day but skips its slopes") {
+    // day 2's prices are all NULL: its five pairs count in n_pairs (the
+    // twin's COUNT(*)) and its slopes stay out of the median (median()
+    // skips NULLs); the NULL-shipdate row pairs with nothing
+    val got = withLineitem(Seq(
+      (Some("A"), Some(0), Some(1.0), Some(100.0)),
+      (Some("A"), Some(1), Some(1.0), Some(130.0)),
+      (Some("A"), Some(2), Some(1.0), None), (Some("A"), Some(2), Some(1.0), None),
+      (Some("A"), Some(3), Some(1.0), Some(90.0)),
+      (Some("A"), Some(4), Some(1.0), Some(160.0)),
+      (Some("A"), Some(7), Some(1.0), Some(175.5)),
+      (Some("A"), None, Some(1.0), Some(999.0)))) {
+      sf => graft.queries.StatQueries.analyticsTheilSen(spark, sf)
+        .collect().toSeq.map(_.toSeq)
+    }
+    assert(got == Seq(Seq(15L, 1039285714.0)), s"got $got")
+  }
+
+  test("analytics_theil_sen fails loudly on a rollup past its 2828-day bound") {
+    val e = withLineitem((0 until 2829).map(i =>
+        (Some("A"), Some(i), Some(1.0), Some(1.0 + i)))) { sf =>
+      intercept[IllegalStateException] {
+        graft.queries.StatQueries.analyticsTheilSen(spark, sf).collect()
+      }
+    }
+    assert(e.getMessage.contains("theil-sen daily rollup"), e.getMessage)
   }
 
   test("analytics_theil_sen median slope sits inside the slope range") {

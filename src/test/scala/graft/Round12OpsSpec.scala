@@ -2,39 +2,19 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.ops.{ConnectedComponents, Similarity, StronglyConnectedComponents}
+import graft.ops.{Similarity, StronglyConnectedComponents}
 
-/** Round-12 operator pins: the union-find CC fast path must be
-  * label-identical to the distributed loop it shortcuts, Tarjan SCC
-  * must label hand-built shapes by their minimum member (random
-  * digraphs are checked against mutual reachability in
-  * StronglyConnectedComponentsSpec), and the codegen probe kernel must
-  * equal the interpreted HOF spelling it replaced. These are the
-  * STRUCTURAL guarantees the scaladocs claim; the DuckDB oracle
-  * separately checks end-to-end values.
+/** Round-12 operator pins: Tarjan SCC must label hand-built shapes by
+  * their minimum member (random digraphs are checked against mutual
+  * reachability in StronglyConnectedComponentsSpec; union-find CC
+  * against large-star/small-star in ConnectedComponentsSpec), and the
+  * codegen probe kernel must equal the interpreted HOF spelling it
+  * replaced. These are the STRUCTURAL guarantees the scaladocs claim;
+  * the DuckDB oracle separately checks end-to-end values.
   */
 class Round12OpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val sf = TestSpark.Sf001
-
-  private def randomEdges(seed: Int, n: Int, m: Int): Seq[(Long, Long)] = {
-    val rnd = new scala.util.Random(seed)
-    (0 until m).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-      .filter { case (a, b) => a != b }
-  }
-
-  test("CC union-find fast path == distributed min-label loop") {
-    import spark.implicits._
-    for (seed <- 1 to 3) {
-      val pairs = randomEdges(seed, 40, 60).toDF("d1", "d2")
-      val local = ConnectedComponents.resolve(pairs, "d1", "d2")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = ConnectedComponents.resolve(pairs, "d1", "d2",
-          localThreshold = 0)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(local == dist, s"seed $seed")
-    }
-  }
 
   test("Tarjan labels the classic false-positive shape correctly") {
     // 0→3, 3→1, 0→4, 4→1: forward-min and backward-min labels coincide

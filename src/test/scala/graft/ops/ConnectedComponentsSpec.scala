@@ -3,7 +3,8 @@ package graft.ops
 import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Min-label propagation must produce exact transitive closure with
+/** Both closures — driver union-find under the bound, large-star/
+  * small-star above it — must produce exact transitive closure with
   * min-id labels: chains collapse across hops, separate components stay
   * separate, and edge direction/duplication is irrelevant.
   */
@@ -33,15 +34,14 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(got.length == 13 && got.forall(_._2 == 0L))
   }
 
-  test("exhausting maxIters fails loudly instead of returning a split component") {
+  test("exhausting the star rounds fails loudly instead of returning a split component") {
     import spark.implicits._
+    // an 8-hop path is no star forest after one large∘small round
     val pairs = (0L until 8L).map(i => (i, i + 1)).toDF("d1", "d2")
-    // localThreshold = 0 forces the distributed loop — the driver-local
-    // union-find fast path needs no iterations and would succeed
-    intercept[IllegalStateException] {
-      ConnectedComponents.resolve(pairs, "d1", "d2", maxIters = 3,
-        localThreshold = 0)
+    val e = intercept[IllegalStateException] {
+      ConnectedComponents.resolveStar(pairs, "d1", "d2", maxRounds = 1)
     }
+    assert(e.getMessage.contains("did not converge in 1 rounds"))
   }
 
   test("empty pair list yields an empty labeling") {
@@ -51,12 +51,12 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(ConnectedComponents.resolveStar(empty, "d1", "d2").isEmpty)
   }
 
-  test("large-star/small-star == propagation on random graphs and chains") {
+  test("large-star/small-star == union-find on random graphs and chains") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     // three random graphs with different density, plus a 60-hop path
-    // (which propagation's default maxIters=50 could NOT finish — the
-    // log-round algorithm converges in a handful)
+    // (which diameter-bound label propagation would need 60 rounds for
+    // — the log-round algorithm converges in a handful)
     val graphs = (1 to 3).map { g =>
       (1 to 80).map(_ => (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
         .filter(p => p._1 != p._2)
@@ -67,11 +67,11 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       // for one doc_id would be silently collapsed by a map
       val star = ConnectedComponents.resolveStar(df, "d1", "d2")
         .as[(Long, Long)].collect().toSeq.sorted
-      val prop = ConnectedComponents.resolve(df, "d1", "d2", maxIters = 200)
+      val local = ConnectedComponents.resolve(df, "d1", "d2")
         .as[(Long, Long)].collect().toSeq.sorted
       assert(star.map(_._1).distinct.size == star.size,
         s"graph $gi: duplicate doc_id rows in star labeling")
-      assert(star == prop, s"graph $gi: star labels differ from propagation")
+      assert(star == local, s"graph $gi: star labels differ from union-find")
     }
   }
 
@@ -80,9 +80,9 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val pairs = Seq((9L, 9L), (1L, 2L)).toDF("d1", "d2")
     val star = ConnectedComponents.resolveStar(pairs, "d1", "d2")
       .as[(Long, Long)].collect().toSeq.sorted
-    val prop = ConnectedComponents.resolve(pairs, "d1", "d2")
+    val local = ConnectedComponents.resolve(pairs, "d1", "d2")
       .as[(Long, Long)].collect().toSeq.sorted
     assert(star == Seq((1L, 1L), (2L, 1L), (9L, 9L)))
-    assert(prop == star)
+    assert(local == star)
   }
 }

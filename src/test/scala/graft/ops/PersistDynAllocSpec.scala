@@ -73,6 +73,16 @@ class PersistDynAllocSpec extends AnyFunSuite with BeforeAndAfterAll {
       .where(col("id") % 3 =!= 0)
   }
 
+  /** The names of the reliable `rdd-*` checkpoints under the dir. */
+  private def rddDirs(): Set[String] = {
+    val walk = java.nio.file.Files.walk(ckptDir)
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("rdd-")).toSet
+    } finally walk.close()
+  }
+
   private def hasFiles(f: java.io.File): Boolean = {
     val kids = Option(f.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
     kids.exists(k => k.isFile || hasFiles(k))
@@ -159,14 +169,19 @@ class PersistDynAllocSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("truncate auto + dyn WITH a dir: an iterative operator " +
       "checkpoints reliably end-to-end") {
     import spark.implicits._
-    // two components + an isolated chain — enough rounds to exercise
-    // the per-round truncation path for real
+    // two chained components through resolveStar, the distributed
+    // closure: its edges and nodes checkpoints and every round's
+    // lazy truncation are reliable checkpoints on this session (resolve
+    // would close 5 edges with union-find on the driver and write none)
+    val before = rddDirs()
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L))
       .toDF("a", "b")
-    val labels = graft.ops.ConnectedComponents.resolve(edges, "a", "b")
+    val labels = graft.ops.ConnectedComponents.resolveStar(edges, "a", "b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L))
+    assert((rddDirs() -- before).nonEmpty,
+      "resolveStar wrote no reliable rdd-* checkpoint under the dir")
   }
 
   test("eager truncate on the dir-bearing dyn session executes the " +
