@@ -27,8 +27,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * squared mix — the same discrimination as xxhash64 votes). Squaring
   * makes the parity quadratic in the shift, restoring per-bit
   * independence while staying pure integer arithmetic that DuckDB can
-  * restate verbatim — that is the whole point of this family vs
-  * xxhash64 votes (see SimHashDedup for the engine-hash variant).
+  * restate verbatim — which an engine hash such as xxhash64 is not.
   *
   * Overflow audit (ANSI mode throws on Long overflow): h < 1e9+7, so
   * h·668265263 < 6.7e17; (j+1)·2654435761 < 1.7e11; y < 1000003, so

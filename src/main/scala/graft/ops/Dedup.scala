@@ -204,20 +204,17 @@ object Dedup {
         (col("n1") + col("n2") - col("intersect_size"))).as("jaccard"))
 
     if (strategy0 == Bitmap) {
-      bitmapPairIntersections(sh, exploded, blocks, maxVocab)
+      val vocab = vocabAtMost(exploded, maxVocab).getOrElse(
+        throw new IllegalArgumentException(
+          s"Bitmap strategy needs vocabulary ≤ $maxVocab (this corpus has " +
+            "more); use PrefixFilter for large-vocabulary corpora"))
+      bitmapPairIntersections(sh, exploded, blocks, vocab)
         .select(col("d1") +: col("d2") +: jaccardCols: _*)
         .where(col("jaccard") >= threshold)
     } else if (strategy0 == CountJoin && maxShingleBucket.isEmpty) {
       // full index, no cap: the join's pair counts ARE the intersection
       // sizes — cheapest exact spelling on small-vocabulary corpora
-      val sizes = sh.select(col("doc_id"), size(col("shingle_set")).as("n_sh"))
-      val pairs = exploded.as("a").join(exploded.as("b"),
-          col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-        .agg(count(lit(1)).as("intersect_size"))
-      pairs
-        .join(sizes.withColumnRenamed("doc_id", "d1").withColumnRenamed("n_sh", "n1"), "d1")
-        .join(sizes.withColumnRenamed("doc_id", "d2").withColumnRenamed("n_sh", "n2"), "d2")
+      postingPairIntersections(sh, exploded)
         .select(col("d1") +: col("d2") +: jaccardCols: _*)
         .where(col("jaccard") >= threshold)
     } else {
@@ -263,6 +260,32 @@ object Dedup {
     }
   }
 
+  /** The sorted shingle vocabulary when it has at most `maxVocab`
+    * entries: one bounded fetch ([[Bounded.rowsAtMost]]), so at most
+    * maxVocab + 1 shingles reach the driver and an overflow row proves
+    * the vocabulary does not fit without counting it.
+    */
+  private def vocabAtMost(exploded: DataFrame,
+      maxVocab: Int): Option[Array[String]] =
+    Bounded.rowsAtMost(exploded.select("g").distinct().orderBy("g"), maxVocab)
+      .map(_.map(_.getString(0)))
+
+  /** (d1, d2, intersect_size, n1, n2) for every unordered pair
+    * (d1 < d2) sharing ≥ 1 shingle, from the full posting-list
+    * self-join: its pair counts ARE the intersection sizes.
+    */
+  private def postingPairIntersections(sh: DataFrame,
+      exploded: DataFrame): DataFrame = {
+    val sizes = sh.select(col("doc_id"), size(col("shingle_set")).as("n_sh"))
+    exploded.as("a")
+      .join(exploded.as("b"),
+        col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
+      .agg(count(lit(1)).as("intersect_size"))
+      .join(sizes.select(col("doc_id").as("d1"), col("n_sh").as("n1")), "d1")
+      .join(sizes.select(col("doc_id").as("d2"), col("n_sh").as("n2")), "d2")
+  }
+
   /** Shared exact pair-intersection core of the Bitmap strategy:
     * (d1, d2, intersect_size, n1, n2) for every UNORDERED pair
     * (d1 < d2) sharing ≥ 1 shingle. Set-similarity measures (Jaccard,
@@ -270,9 +293,10 @@ object Dedup {
     * integers, so the callers differ only in their final filter.
     *
     * Vocabulary = bounded model artifact (like IVF centroids):
-    * collected sorted for a deterministic id assignment, broadcast
-    * back. Docs with empty shingle sets never join the index — same
-    * exclusion as the inverted-index strategies (an empty set can't
+    * fetched sorted under maxVocab by the caller ([[vocabAtMost]]) for
+    * a deterministic id assignment, broadcast back. Docs with empty
+    * shingle sets never join the index — same exclusion as the
+    * inverted-index strategies (an empty set can't
     * reach any positive threshold). Per-doc bitmaps pack with the
     * codegen'd explode→bit_or aggregate (NOT a per-doc interpreted
     * fold); the pair scan is a blocked all-pairs equi-join — n²
@@ -287,16 +311,9 @@ object Dedup {
     * disjoint similarity-0 pairs they cannot produce.
     */
   private def bitmapPairIntersections(sh: DataFrame, exploded: DataFrame,
-      blocks: Int, maxVocab: Int,
-      vocabOpt: Option[Array[String]] = None): DataFrame = {
+      blocks: Int, vocab: Array[String]): DataFrame = {
     val spark = sh.sparkSession
     import spark.implicits._
-    val vocab = vocabOpt.getOrElse(
-      sh.select(explode(col("shingle_set")).as("g"))
-        .distinct().orderBy("g").collect().map(_.getString(0)))
-    require(vocab.length <= maxVocab,
-      s"Bitmap strategy needs vocabulary ≤ $maxVocab (got ${vocab.length}); " +
-        "use PrefixFilter for large-vocabulary corpora")
     val nWords = math.max(1, (vocab.length + 63) / 64)
     val vocabDf = vocab.zipWithIndex.toSeq.toDF("g", "id")
     // persisted: BOTH sides of the self-join scan it — unpersisted it would
@@ -364,25 +381,11 @@ object Dedup {
     val sh = shingles(docs, n).persistHotIntermediate
     val exploded = sh.select(col("doc_id"), explode(col("shingle_set")).as("g"))
     // ONE bounded vocabulary fetch decides the spelling AND feeds the
-    // bitmap id assignment: at most maxVocab sorted shingles reach the
-    // driver, and an overflow row proves the vocab doesn't fit without
-    // counting it
-    val vocab = Bounded.rowsAtMost(
-      exploded.select("g").distinct().orderBy("g"), maxVocab)
-    val unordered =
-      if (vocab.isDefined)
-        bitmapPairIntersections(sh, exploded, blocks, maxVocab,
-          Some(vocab.get.map(_.getString(0))))
-      else {
-        val sizes = sh.select(col("doc_id"), size(col("shingle_set")).as("n_sh"))
-        exploded.as("a")
-          .join(exploded.as("b"),
-            col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
-          .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-          .agg(count(lit(1)).as("intersect_size"))
-          .join(sizes.select(col("doc_id").as("d1"), col("n_sh").as("n1")), "d1")
-          .join(sizes.select(col("doc_id").as("d2"), col("n_sh").as("n2")), "d2")
-      }
+    // bitmap id assignment
+    val unordered = vocabAtMost(exploded, maxVocab) match {
+      case Some(vocab) => bitmapPairIntersections(sh, exploded, blocks, vocab)
+      case None => postingPairIntersections(sh, exploded)
+    }
     val both = unordered.select(col("d1"), col("d2"), col("intersect_size"),
         col("n1"), col("n2"))
       .unionByName(unordered.select(col("d2").as("d1"), col("d1").as("d2"),

@@ -4,115 +4,45 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-/** The determinism-rule aggregate helpers, in ONE place: summing doubles
+/** The determinism-rule money aggregates, in ONE place: summing doubles
   * directly is order-dependent (floating-point addition is not
-  * associative, and shuffle order varies run to run), so gated sums go
-  * through an exact DECIMAL(18,2) accumulation and cast back — identical
-  * on any partitioning, any engine. Both the relational queries
-  * (RefQueries) and the streaming layer (EventAnalytics) delegate here;
-  * a precision change can no longer drift between them (round-2 review
-  * finding: the rule was encoded twice).
+  * associative, and shuffle order varies run to run), so a gated sum
+  * rounds each value once to cents and adds integers — identical on any
+  * partitioning, any engine. Every query family and the streaming layer
+  * spell money through [[cents]], [[exactSum]] and [[exactAvg]]; no
+  * other code restates the rounding.
   */
 object ExactAgg {
 
-  def exactSum(c: Column): Column =
-    sum(c.cast(DecimalType(18, 2))).cast(DoubleType)
-
-  /** Exact-sum average: decimal-sum ÷ count, the deterministic spelling
-    * of AVG for gated outputs.
+  /** The one cents rounding: a DECIMAL(18,2) cast (half-up, as the
+    * DuckDB twins' `CAST(x AS DECIMAL(18,2))`), then ×100 to a long.
     */
-  def exactAvg(c: Column): Column =
-    sum(c.cast(DecimalType(18, 2))).cast(DoubleType) / count(c)
+  def cents(c: Column): Column =
+    (c.cast(DecimalType(18, 2)) * 100).cast(LongType)
 
-  /** [[exactSum]] with a PRIMITIVE LONG sum buffer: the DECIMAL(18,2)
-    * cast still performs the one correct half-up rounding of the double
-    * input, but the value is then scaled to integer CENTS and summed as
-    * a codegen'd long instead of per-row Decimal arithmetic (Spark's
-    * sum over DECIMAL(18,2) widens the buffer to DECIMAL(28,2), off the
-    * compact-long fast path — measured 0.58 → 0.24 s for q3's
-    * two-column aggregate over 600k rows). Bit-identical to
-    * [[exactSum]] while the per-group CENTS TOTAL stays below 2^53
-    * (double(cents) is then exact, so double(cents)/100.0 and
-    * CAST(decimal-sum AS DOUBLE) round the same rational once).
+  /** Exact sum, bit-identical to `CAST(SUM(CAST(x AS DECIMAL(18,2))) AS
+    * DOUBLE)` at every magnitude. Each row's cents split into
+    * quotient/remainder by 2^20 (hi = cents >> 20, an arithmetic shift
+    * that floors negatives; lo = cents & (2^20−1), always in
+    * [0, 2^20)). Each half sums as a codegen'd primitive long, and the
+    * group's total recombines exactly in DECIMAL(38,0) as hi·2^20 + lo
+    * before one ÷100 and one cast to double — the decimal spelling's
+    * single rounding, without its per-row widened-decimal adds.
     *
-    * ROUTING RULE — the bound is 2^53 ≈ 9.0e15 cents ≈ $90 T PER
-    * GROUP, and whether a group can reach it depends on the GROUPING
-    * KEY's cardinality, not the corpus:
-    *  - key cardinality SCALES with the corpus (per-partkey,
-    *    per-custkey, per-document): per-group totals stay roughly
-    *    constant as the data grows — cents-long is safe and fast.
-    *  - key cardinality is FIXED (per-returnflag, per-nation,
-    *    per-mktsegment, per-calendar-month): per-group totals grow
-    *    LINEARLY with the corpus. A 3-group l_returnflag revenue sum is
-    *    ~$23 B/group at sf0.1, so ~2.3e18 cents/group at 100 TB
-    *    (~1e6× the data) — 255× past 2^53 and within 4× of signed-long
-    *    overflow. Those rollups MUST use [[exactSumCentsWide]]
-    *    (primitive-speed, exact to ~1e25 cents per group) or
-    *    [[exactSum]] (DECIMAL(28,2) buffer, exact to 1e26 cents).
-    *
-    * The bound is ENFORCED, not assumed: a finished group whose |cents
-    * total| exceeds 2^53 raises instead of silently rounding through
-    * the double cast (between 2^53 and long overflow the drift would
-    * otherwise be invisible; past long range ANSI sum already fails).
+    * Failure is loud, never drift: the only way out of range is a long
+    * buffer overflowing (lo needs > 2^43 ≈ 8.8e12 rows per group, hi
+    * needs |cents| · rows > 2^83), and ANSI mode fails long-sum
+    * overflow outright.
     */
-  def exactSumCents(c: Column): Column = {
-    val s = sum((c.cast(DecimalType(18, 2)) * 100).cast(LongType))
-    when(abs(s) > lit(CentsExactBound), raise_error(concat(
-        lit("exactSumCents: |cents total| = "), abs(s).cast("string"),
-        lit(" exceeds the 2^53 exactness bound — this grouping's " +
-          "cardinality does not scale with the corpus; route it " +
-          "through ExactAgg.exactSum (decimal buffer)"))))
-      .otherwise(s.cast(DoubleType) / lit(100.0d))
-  }
-
-  /** Largest cents total the long fast path may return: beyond 2^53,
-    * double(cents) is no longer exact and [[exactSumCents]] would
-    * silently diverge from [[exactSum]] — so it raises instead.
-    */
-  val CentsExactBound: Long = 1L << 53
-
-  /** The WIDE cents fast path — for FIXED-CARDINALITY rollups whose
-    * per-group totals grow linearly with the corpus (the groupings the
-    * [[exactSumCents]] routing rule bars from the single-long path).
-    * Two primitive long sum buffers instead of one: each row's cents
-    * value splits into quotient/remainder by 2^20
-    * (hi = cents >> 20, arithmetic shift, floors for negatives;
-    * lo = cents & (2^20−1), always in [0, 2^20)), each half sums as a
-    * codegen'd long, and the group's total recombines EXACTLY in
-    * DECIMAL(38,0): hi·2^20 + lo. One decimal division by 100 and one
-    * cast to double then perform the exact same single rounding
-    * [[exactSum]] performs — bit-identical at EVERY magnitude, not
-    * just below 2^53 (pinned by ParityFastPathSpec up to 1e16-dollar
-    * rows, where the single-long path must already raise).
-    *
-    * Failure mode is LOUD, never drift: the only way to exceed the
-    * representable range is overflowing a long buffer — lo needs
-    * > 2^43 ≈ 8.8e12 rows per group (a 100 TB lineitem holds ~6e11),
-    * hi needs |cents| · rows > 2^83 — and ANSI mode fails long-sum
-    * overflow outright. Net: exact to ~1e25 cents per group (vs the
-    * decimal buffer's 1e26) at roughly the single-long path's speed,
-    * because the per-row work stays in primitive codegen (shift, mask,
-    * two long adds) instead of widened-decimal adds.
-    */
-  def exactSumCentsWide(c: Column): Column = {
-    val cents = (c.cast(DecimalType(18, 2)) * 100).cast(LongType)
-    val hi = sum(shiftright(cents, 20)).cast(DecimalType(38, 0))
-    val lo = sum(cents.bitwiseAND(lit((1L << 20) - 1)))
-      .cast(DecimalType(38, 0))
+  def exactSum(c: Column): Column = {
+    val v = cents(c)
+    val hi = sum(shiftright(v, 20)).cast(DecimalType(38, 0))
+    val lo = sum(v.bitwiseAND(lit((1L << 20) - 1))).cast(DecimalType(38, 0))
     ((hi * lit(1L << 20) + lo) / lit(100)).cast(DoubleType)
   }
 
-  /** [[exactAvg]] through the [[exactSumCentsWide]] path — the same
-    * rounding sequence (one exact-total→double rounding, one ÷count),
-    * so bit-identical to exactAvg wherever the buffers hold.
+  /** Exact mean: [[exactSum]] ÷ count — one exact-total→double rounding,
+    * one division, the deterministic spelling of AVG for gated outputs.
     */
-  def exactAvgCentsWide(c: Column): Column =
-    exactSumCentsWide(c) / count(c)
-
-  /** [[exactAvg]] through the [[exactSumCents]] fast path — identical
-    * rounding sequence (one sum→double rounding, one ÷count), so
-    * bit-identical under the same cents bound.
-    */
-  def exactAvgCents(c: Column): Column =
-    exactSumCents(c) / count(c)
+  def exactAvg(c: Column): Column = exactSum(c) / count(c)
 }

@@ -6,61 +6,27 @@ import org.apache.spark.sql.functions._
 /** SimHash near-duplicate detection (Charikar 2002; used by Manku et al.
   * WWW'07 for web-scale dedup).
   *
-  * 64-bit document signature: bit i is the sign of Σ_tokens (±1 on bit i
-  * of xxhash64(token)). Similar token multisets → small Hamming distance.
-  * Candidate generation uses the pigeonhole banding trick: split the 64
+  * 64-bit document signature: bit i is the sign of Σ_tokens (±1 votes
+  * from each token's hash). Similar token multisets → small Hamming
+  * distance. Candidate generation uses the pigeonhole banding trick: split the 64
   * bits into `bands` chunks; pairs within Hamming distance `maxHamming`
   * must share at least one exact chunk when bands > maxHamming. Verify
   * with bit_count(xor) ≤ maxHamming.
   *
   * Scale: signature is one long per doc (narrow map); the candidate join
-  * shuffles O(docs·bands) skinny rows. Two signature families: xxhash64
-  * bit votes (engine-specific, recall-spec-gated) and the engine-neutral
+  * shuffles O(docs·bands) skinny rows. The signature is the engine-neutral
   * squared-LCG votes of functions.StringArraySimHash (oracle-gated — the
-  * whole pipeline restates in DuckDB SQL, and the narrow-map native
-  * kernel makes it the faster spelling too).
+  * whole pipeline restates in DuckDB SQL). [[neutralVoteCols]] and
+  * [[simFromVotes]] are its built-in-expression reference spelling,
+  * which the specs pin the native kernel against.
   */
 object SimHashDedup {
-
-  /** 64-bit simhash from a PRE-HASHED token array (one xxhash64 per
-    * token; the 64 bit-votes then fold over the cached hash array —
-    * hashing inside each vote would cost 64× the hash work).
-    */
-  def simhashFromHashes(hashes: Column): Column = {
-    val bits = (0 until 64).map { i =>
-      val vote = aggregate(hashes, lit(0L),
-        (acc, h) => acc +
-          when(shiftright(h, i).bitwiseAND(1L) === 1L, 1L).otherwise(-1L))
-      when(vote >= 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
-  /** 64-bit simhash of a string-array column, as a long. */
-  def simhash(toks: Column): Column =
-    simhashFromHashes(transform(toks, t => xxhash64(t)))
-
-  /** The 64 bit-vote `sum` aggregate columns over a token-hash column
-    * `h` — the codegen'd explode+aggregate spelling of `simhash`
-    * (SimilaritySpec pins the spellings equal against drift).
-    */
-  def aggVoteCols: Seq[Column] = (0 until 64).map { i =>
-    sum(when(shiftright(col("h"), i).bitwiseAND(1L) === 1L, 1L)
-      .otherwise(-1L)).as(s"v$i")
-  }
 
   /** Fold the 64 vote columns into the signature long. */
   def simFromVotes: Column =
     (0 until 64).map(i =>
       when(col(s"v$i") >= 0, lit(1L << i)).otherwise(lit(0L)))
       .reduce(_ + _)
-
-  /** Engine-neutral per-token base hash — delegates to the single
-    * definition in TextOps (one source of truth for the 131 / 1e9+7
-    * constants every oracle twin restates). Interpreted HOF; the
-    * REFERENCE spelling for the native kernel below.
-    */
-  def polyTokenHash(t: Column): Column = TextOps.polyTokenHash(t)
 
   /** Engine-neutral bit-vote sums over a base-hash column `h` — the
     * built-in-expression reference spelling of the
@@ -78,7 +44,7 @@ object SimHashDedup {
   }
 
   /** Near-dup pairs from a precomputed (doc_id, sim) signature frame —
-    * the banding + verify half, shared by both signature families.
+    * the banding + verify half, shared by every signature caller.
     */
   def pairsFromSignatures(sh: DataFrame, maxHamming: Int,
       bands: Int): DataFrame = {
@@ -118,34 +84,12 @@ object SimHashDedup {
       .select("d1", "d2", "sim1", "sim2", "hamming")
   }
 
-  /** Near-dup pairs by simhash Hamming distance ≤ maxHamming, xxhash64
-    * bit votes. Output: (d1, d2, sim1, sim2, hamming).
-    *
-    * Signature build is explode-then-aggregate (same rationale as
-    * MinHashDedup): one xxhash64 per token row, then a codegen'd
-    * HashAggregate with 64 bit-vote sums, folded into the signature.
-    * Engine-specific hash → spec-gated by recall tests; the ORACLE-gated
-    * spelling is `nearDupPairsNeutral` below.
-    */
-  def nearDupPairs(docs: DataFrame, maxHamming: Int = 3,
-      bands: Int = 4): DataFrame = {
-    val ex = docs
-      .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("t"))
-      .withColumn("h", xxhash64(col("t")))
-    val sh = ex.groupBy("doc_id").agg(aggVoteCols.head, aggVoteCols.tail: _*)
-      .withColumn("sim", simFromVotes)
-      .select("doc_id", "sim")
-    pairsFromSignatures(sh, maxHamming, bands)
-  }
-
   /** Near-dup pairs with the ENGINE-NEUTRAL signature
     * (functions.StringArraySimHash): same banding + verify, but the
     * signature is one narrow-map native kernel call per document — no
-    * explode and no 64-column vote aggregate, so this spelling drops the
-    * signature-build shuffle entirely (docs with an empty token array
-    * are excluded, matching the explode path's semantics). Pure integer
-    * arithmetic end to end → restatable in DuckDB SQL; this is the
-    * oracle-gated AND the fastest spelling.
+    * explode and no 64-column vote aggregate, so the signature build
+    * has no shuffle (docs with an empty token array are excluded). Pure
+    * integer arithmetic end to end → restatable in DuckDB SQL.
     */
   def nearDupPairsNeutral(docs: DataFrame, maxHamming: Int = 3,
       bands: Int = 4): DataFrame = {

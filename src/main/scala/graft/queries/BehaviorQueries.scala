@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.ExactAgg
 import graft.ops.Persist.PersistOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -386,8 +387,7 @@ object BehaviorQueries {
   def analyticsDecileLift(spark: SparkSession, sfDir: String): DataFrame = {
     val perCust = table(spark, sfDir, "orders")
       .groupBy("o_custkey")
-      .agg(sum(col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
-        .as("rev_c"))
+      .agg(sum(ExactAgg.cents(col("o_totalprice"))).as("rev_c"))
     // r21: exact deciles via the two-pass global ntile (the O(customers)
     // frame previously sorted through ONE task; §2 offset correction).
     // The prefix/total over the TEN decile rows is one broadcast
@@ -462,8 +462,7 @@ object BehaviorQueries {
         datediff(to_date(lit("2001-09-01")), max(to_date(col("o_orderdate"))))
           .cast("long").as("rec_days"),
         count(lit(1)).as("freq"),
-        sum(col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
-          .as("mon_cents"))
+        sum(ExactAgg.cents(col("o_totalprice"))).as("mon_cents"))
     // r21: the three exact quintile labels run as two-pass global
     // ntiles (§2 offset correction) — the O(customers) frame previously
     // made three trips through ONE task; each label now costs one range
@@ -551,7 +550,7 @@ object BehaviorQueries {
     */
   def analyticsEwma(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    val cents = (col("value").cast("decimal(18,2)") * 100).cast("long")
+    val cents = ExactAgg.cents(col("value"))
     val e = eventsUs(spark, sfDir)
       .select(col("user_id"), col("event_id"), col("us"), cents.as("cents"))
     val l1 = lag(col("cents"), 1).over(w)
@@ -595,7 +594,7 @@ object BehaviorQueries {
     * data size — the cheapest possible distribution profile at 100 TB.
     */
   def olapHistogram(spark: SparkSession, sfDir: String): DataFrame = {
-    val cents = (col("value").cast("decimal(18,2)") * 100).cast("long")
+    val cents = ExactAgg.cents(col("value"))
     table(spark, sfDir, "events")
       .select(col("event_type"), cents.as("cents"))
       .groupBy(col("event_type"), expr("cents div 5000").as("bucket"))
@@ -860,7 +859,7 @@ object BehaviorQueries {
       .select(
         expr(s"(us div $UsPerDay + 3) % 7").cast("long").as("weekday"),
         col("event_type"),
-        (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
+        ExactAgg.cents(col("value")).as("cents"))
       .groupBy("weekday", "event_type")
       .agg(count(lit(1)).as("n_events"), sum("cents").as("sum_cents"))
       .orderBy("weekday", "event_type")
@@ -942,7 +941,7 @@ object BehaviorQueries {
     * division: under ANSI even double 0/0 errors rather than NaN.
     */
   def analyticsInterpolate(spark: SparkSession, sfDir: String): DataFrame = {
-    val cents = (col("value").cast("decimal(18,2)") * 100).cast("long")
+    val cents = ExactAgg.cents(col("value"))
     val e = eventsUs(spark, sfDir)
       .select(col("user_id"), col("event_id"), col("event_type"), col("us"),
         when(col("event_type") === "purchase", cents).as("pc"))

@@ -1,8 +1,8 @@
 package graft.queries
 
+import graft.ops.ExactAgg.cents
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import graft.etl.OewsCleaner
 
 /** The reference's row-level ETL transforms (SURVEY.md §2.4: R1 cell
@@ -377,8 +377,7 @@ object EtlQueries {
   def etlTableDiff(spark: SparkSession, sfDir: String): DataFrame = {
     val before = graft.queries.RefQueries.table(spark, sfDir, "orders")
       .select(col("o_orderkey"),
-        (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
-          .as("cents"))
+        cents(col("o_totalprice")).as("cents"))
     val after = before.where(col("o_orderkey") % 101 =!= 0)
       .withColumn("cents", when(col("o_orderkey") % 97 === 0,
         col("cents") + 500L).otherwise(col("cents")))
@@ -691,8 +690,7 @@ object EtlQueries {
       .where(col("o_orderdate") > col("wm"))
       .groupBy(date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"))
       .agg(count(lit(1)).as("n_orders"),
-        sum(col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
-          .as("sum_cents"))
+        sum(cents(col("o_totalprice"))).as("sum_cents"))
       .orderBy("day")
   }
 
@@ -728,8 +726,7 @@ object EtlQueries {
       "CAST(unix_millis(CAST(o_orderdate AS TIMESTAMP)) DIV 86400000 AS BIGINT)")
     val orders = table(spark, sfDir, "orders")
       .select(od.as("day"),
-        (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
-          .as("cents"))
+        cents(col("o_totalprice")).as("cents"))
     val perDay = orders.groupBy("day")
       .agg(count(lit(1)).as("n_orders"), sum("cents").as("sum_cents"))
     val range = orders.agg(min("day").as("lo"), max("day").as("hi"))
@@ -787,8 +784,7 @@ object EtlQueries {
     import org.apache.spark.sql.functions._
     def partials(df: DataFrame): DataFrame =
       df.select(col("l_returnflag").as("returnflag"),
-          (col("l_extendedprice").cast("decimal(18,2)") * 100)
-            .cast("long").as("cents"),
+          cents(col("l_extendedprice")).as("cents"),
           expr("CAST(unix_millis(CAST(l_shipdate AS TIMESTAMP)) DIV 86400000 AS BIGINT)")
             .as("day"))
         .groupBy("returnflag")
@@ -943,8 +939,7 @@ object EtlQueries {
     import graft.queries.RefQueries.table
     val base = table(spark, sfDir, "customer")
       .select(col("c_custkey").cast("long").as("k"),
-        (col("c_acctbal").cast(DecimalType(18, 2)) * 100).cast("long")
-          .as("base_bal_c"))
+        cents(col("c_acctbal")).as("base_bal_c"))
     val events = table(spark, sfDir, "orders")
       .select(col("o_custkey").cast("long").as("k"),
         unix_millis(col("o_orderdate").cast("timestamp")).as("ts"),
@@ -952,8 +947,7 @@ object EtlQueries {
         when(col("o_orderkey") % 10 === 0, "D")
           .when(col("o_orderkey") % 10 <= 2, "I")
           .otherwise("U").as("op"),
-        (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long")
-          .as("v"))
+        cents(col("o_totalprice")).as("v"))
     val last = events.groupBy("k")
       .agg(max(struct(col("ts"), col("id"), col("op"), col("v"))).as("m"))
       .select(col("k"), col("m.op").as("op"), col("m.v").as("v"))

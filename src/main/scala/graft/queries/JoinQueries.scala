@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.ExactAgg.{cents, exactSum}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -239,10 +240,7 @@ object JoinQueries {
       .groupBy("band_id", "lo", "hi")
       .agg(
         count(lit(1)).as("n_orders"),
-        // wide cents path: 20 FIXED bands — per-band totals scale with
-        // the corpus past the single-long 2^53 bound (the
-        // ExactAgg.exactSumCents routing rule)
-        graft.ops.ExactAgg.exactSumCentsWide(col("o_totalprice")).as("revenue"))
+        exactSum(col("o_totalprice")).as("revenue"))
       .orderBy("band_id")
   }
 
@@ -306,10 +304,8 @@ object JoinQueries {
       .groupBy("c_custkey", "c_name")
       .agg(
         count(col("o_custkey")).as("n_big_orders"),
-        // cents fast path — per-custkey scales with the corpus (the
-        // exactSumCents routing rule); empty group -> NULL sum ->
-        // coalesce 0.0, as before
-        coalesce(graft.ops.ExactAgg.exactSumCents(col("o_totalprice")), lit(0.0)).as("big_revenue"))
+        // empty group -> NULL sum -> 0.0
+        coalesce(exactSum(col("o_totalprice")), lit(0.0)).as("big_revenue"))
       .orderBy("c_custkey")
   }
 
@@ -379,8 +375,7 @@ object JoinQueries {
       .join(broadcast(region), nation("n_regionkey") === region("r_regionkey"))
       .groupBy(col("r_name"))
       .agg(count(lit(1)).as("n_lines"),
-        sum(col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long")
-          .as("revenue_cents"))
+        sum(cents(col("l_extendedprice"))).as("revenue_cents"))
       .orderBy("r_name")
   }
 
@@ -445,10 +440,7 @@ object JoinQueries {
         .join(spark.table(ot), col("c_custkey") === col("o_custkey"))
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n_orders"),
-          // wide cents path: 5 FIXED market segments — per-group totals
-          // scale with the corpus past the single-long 2^53 bound (the
-          // exactSumCents routing rule)
-          graft.ops.ExactAgg.exactSumCentsWide(col("o_totalprice")).as("revenue"))
+          exactSum(col("o_totalprice")).as("revenue"))
         .orderBy("c_mktsegment")
       // materialize BEFORE dropping: the grouped result is bounded by
       // distinct c_mktsegment (5 in TPC-H-shaped data), so localizing it

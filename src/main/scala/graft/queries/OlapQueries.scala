@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.ExactAgg.{cents, exactSum}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,7 +29,7 @@ import org.apache.spark.sql.functions._
   * user_id.
   */
 object OlapQueries {
-  import RefQueries.{exactSum, table}
+  import RefQueries.table
 
   /** `olap_rollup` — lineitem revenue at detail / returnflag / grand
     * total levels in one pass.
@@ -306,11 +307,7 @@ object OlapQueries {
         month(col("o_orderdate")).as("mo"))
       .agg(
         count(lit(1)).as("n_orders"),
-        // wide cents path: calendar months are a FIXED-cardinality
-        // rollup relative to corpus growth — per-month totals scale
-        // with the data past the single-long 2^53 bound (the
-        // ExactAgg.exactSumCents routing rule)
-        graft.ops.ExactAgg.exactSumCentsWide(col("o_totalprice")).as("revenue"))
+        exactSum(col("o_totalprice")).as("revenue"))
       .orderBy("yr", "mo")
 
   val analyticsCalendarRollupSql: String =
@@ -360,10 +357,7 @@ object OlapQueries {
       .orderBy(col("revenue").desc, col("p_partkey"))
     li.join(broadcast(p), col("l_partkey") === col("p_partkey"))
       .groupBy("p_brand", "p_partkey")
-      // cents-long fast path — per-partkey cardinality scales with the
-      // corpus, so per-group totals stay bounded (exactSumCents routing
-      // rule; its guard raises if the bound is ever breached)
-      .agg(graft.ops.ExactAgg.exactSumCents(col("l_extendedprice")).as("revenue"))
+      .agg(exactSum(col("l_extendedprice")).as("revenue"))
       .withColumn("brand_rank", row_number().over(byBrand))
       .where(col("brand_rank") <= 3)
       .orderBy("p_brand", "brand_rank")
@@ -654,8 +648,7 @@ object OlapQueries {
     import org.apache.spark.sql.expressions.Window
     val li = table(spark, sfDir, "lineitem")
       .select(col("l_returnflag"),
-        (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long")
-          .as("price_c"))
+        cents(col("l_extendedprice")).as("price_c"))
     val w = Window.partitionBy("l_returnflag").orderBy("price_c")
     val n = Window.partitionBy("l_returnflag")
     val ranked = li
@@ -753,8 +746,7 @@ object OlapQueries {
     import org.apache.spark.sql.expressions.Window
     val p = table(spark, sfDir, "part").select(
       col("p_brand"), col("p_partkey"),
-      (col("p_retailprice").cast("decimal(18,2)") * 100).cast("long")
-        .as("price_cents"),
+      cents(col("p_retailprice")).as("price_cents"),
       col("p_size").cast("long").as("psize"))
     val byPrice = Window.partitionBy("p_brand").orderBy("price_cents")
     val cheaper = byPrice.rangeBetween(Window.unboundedPreceding, -1)
@@ -807,8 +799,7 @@ object OlapQueries {
     table(spark, sfDir, "customer")
       .select(col("c_custkey"),
         col("c_mktsegment").as("segment"),
-        (col("c_acctbal").cast("decimal(18,2)") * 100).cast("long")
-          .as("bal_c"))
+        cents(col("c_acctbal")).as("bal_c"))
       .withColumn("rn", row_number().over(w))
       .withColumn("pct_rank", percent_rank().over(w))
       .withColumn("cume", cume_dist().over(w))
@@ -850,11 +841,8 @@ object OlapQueries {
     */
   def olapRatioToParent(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cents = (col("o_totalprice")
-      .cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
-      .cast("long")
     val byCust = table(spark, sfDir, "orders")
-      .select(col("o_custkey"), cents.as("c"))
+      .select(col("o_custkey"), cents(col("o_totalprice")).as("c"))
     val cust = table(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_nationkey"))
     val nat = table(spark, sfDir, "nation")

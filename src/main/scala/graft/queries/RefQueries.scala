@@ -1,8 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.ops.ExactAgg.{exactAvg, exactSum}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** The reference's nine query operators (SURVEY.md §2.5, from
   * airflow_pipeline/views.sql + notebooks/analysis.ipynb) re-expressed over
@@ -10,8 +10,9 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   *
   * Determinism rules (the driver hash-compares against DuckDB):
   *   - every query ends with a total ORDER BY (unique key tie-breaks);
-  *   - double aggregates are computed as exact DECIMAL sums cast back to
-  *     double, so partial-aggregation order can never change a bit;
+  *   - money aggregates are exact cents sums cast back to double
+  *     ([[graft.ops.ExactAgg]]), so partial-aggregation order can never
+  *     change a bit;
   *   - aggregate/computed columns are aliased identically here and in the
   *     oracle SQL.
   *
@@ -88,14 +89,6 @@ object RefQueries {
   private[queries] def barrierSort(df: DataFrame, cols: String*): DataFrame =
     df.repartition(col(cols.head)).orderBy(cols.map(col): _*)
 
-  /** Exact mean: SUM over DECIMAL(18,2) (associative, order-insensitive)
-    * cast to double, divided by COUNT. Bit-identical across engines and
-    * across shuffle orders — unlike AVG(double).
-    */
-  def exactAvg(c: Column): Column = graft.ops.ExactAgg.exactAvg(c)
-
-  def exactSum(c: Column): Column = graft.ops.ExactAgg.exactSum(c)
-
   /** Q1 — split_part (views.sql:5,20: `split_part(onet_soc_code,'.',1)`). */
   def q1SplitPart(spark: SparkSession, sfDir: String): DataFrame =
     table(spark, sfDir, "part")
@@ -129,25 +122,13 @@ object RefQueries {
       |SELECT p_brand, COUNT(*) AS n_parts
       |FROM sized GROUP BY p_brand ORDER BY p_brand""".stripMargin
 
-  /** Q3+Q4 — hash aggregate GROUP BY + AVG + ROUND (views.sql:9-14).
-    * Averages run on the WIDE cents path (ExactAgg.exactAvgCentsWide),
-    * NOT the single-long fast path: l_returnflag has FIXED cardinality
-    * (3 groups), so per-group totals grow linearly with the corpus —
-    * ~$23 B/group at sf0.1 is ~2.3e18 cents/group at 100 TB, 255× past
-    * the single-long path's 2^53-cents exactness bound (the routing
-    * rule at [[graft.ops.ExactAgg.exactSumCents]]). The wide path's
-    * quotient/remainder split keeps the primitive-long aggregation
-    * speed while staying bit-identical to the decimal spelling to
-    * ~1e25 cents per group — exact at 100 TB, ANSI-loud beyond. The
-    * single-long path is reserved for groupings whose key cardinality
-    * scales with the data (q8's per-partkey, q11's per-custkey).
-    */
+  /** Q3+Q4 — hash aggregate GROUP BY + AVG + ROUND (views.sql:9-14). */
   def q3GroupAvg(spark: SparkSession, sfDir: String): DataFrame =
     table(spark, sfDir, "lineitem")
       .groupBy("l_returnflag")
       .agg(
-        round(graft.ops.ExactAgg.exactAvgCentsWide(col("l_quantity")), 2).as("mean_qty"),
-        round(graft.ops.ExactAgg.exactAvgCentsWide(col("l_extendedprice")), 2).as("mean_price"),
+        round(exactAvg(col("l_quantity")), 2).as("mean_qty"),
+        round(exactAvg(col("l_extendedprice")), 2).as("mean_price"),
         count(lit(1)).as("n_rows"))
       .orderBy("l_returnflag")
 
@@ -236,11 +217,7 @@ object RefQueries {
       .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
       .groupBy("n_name")
       .agg(
-        // wide cents path: per-nation is a FIXED 25-group rollup, so
-        // per-group totals scale with the corpus past the single-long
-        // 2^53 bound (the ExactAgg.exactSumCents routing rule); the
-        // quotient/remainder split stays exact to ~1e25 cents
-        round(graft.ops.ExactAgg.exactAvgCentsWide(col("o_totalprice")), 2).as("avg_totalprice"),
+        round(exactAvg(col("o_totalprice")), 2).as("avg_totalprice"),
         count(lit(1)).as("n_orders"))
       .orderBy("n_name")
   }
@@ -268,10 +245,7 @@ object RefQueries {
     // — the classic agg-pushdown Catalyst won't do for you
     // (measured 1.19 → 0.79 s at sf0.1)
     li.groupBy("l_partkey")
-      // cents-long fast path — per-partkey cardinality SCALES with the
-      // corpus, so per-group totals stay bounded (the
-      // ExactAgg.exactSumCents routing rule; enforced by its guard)
-      .agg(graft.ops.ExactAgg.exactSumCents(col("l_extendedprice")).as("revenue"))
+      .agg(exactSum(col("l_extendedprice")).as("revenue"))
       .join(broadcast(p), col("l_partkey") === p("p_partkey"))
       .select(col("p_partkey"), col("p_name"), col("revenue"))
       .orderBy(desc("revenue"), asc("p_partkey"))

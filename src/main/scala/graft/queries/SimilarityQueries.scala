@@ -17,11 +17,10 @@ import graft.ops.{MinHashDedup, SimHashDedup, Similarity}
   * - `sim_ann_lsh` / `sim_ann_ivf` have full DuckDB twins too: the RHP
   *   signature is LCG integer arithmetic and the gated IVF config
   *   (lloydIters=0) is deterministic end to end.
-  * - `dedup_simhash` is gated on the ENGINE-NEUTRAL signature family
+  * - `dedup_simhash` is gated on the ENGINE-NEUTRAL signature
   *   (functions.StringArraySimHash — squared-LCG votes over the
   *   polynomial token hash), so the whole signature+banding+verify
-  *   pipeline restates in DuckDB. The xxhash64 family stays spec-gated
-  *   (recall/coverage in ScalaTest).
+  *   pipeline restates in DuckDB.
   */
 object SimilarityQueries {
   import RefQueries.table

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.ExactAgg.{cents, exactSum}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -258,8 +259,7 @@ object SourceQueries {
         count(lit(1)).as("n_rows"),
         sum(when(good, 1L).otherwise(0L)).as("n_good"),
         sum(when(good.unary_!, 1L).otherwise(0L)).as("n_quarantined"),
-        sum(when(good, (col("s_acctbal").cast(DecimalType(18, 2)) * 100)
-          .cast(LongType)).otherwise(0L)).as("good_bal_c"),
+        sum(when(good, cents(col("s_acctbal"))).otherwise(0L)).as("good_bal_c"),
         sum(when(good, col("s_suppkey")).otherwise(0L)).as("good_key_sum"))
   }
 
@@ -377,9 +377,7 @@ object SourceQueries {
     * roll revenue up per order priority. The value hash gates layout
     * fidelity (bucketed write → catalog read → join must reproduce the
     * plain join's rows exactly); BucketedTablesSpec separately pins the
-    * zero-Exchange plan property the layout exists to buy. Fixed
-    * 5-value priority rollup → wide cents path (the ExactAgg routing
-    * rule).
+    * zero-Exchange plan property the layout exists to buy.
     */
   def sourceBucketedJoin(spark: SparkSession, sfDir: String): DataFrame = {
     graft.sources.BucketedTables.writeBucketed(
@@ -392,8 +390,7 @@ object SourceQueries {
         "graft_bkt_orders", "graft_bkt_lineitem", "o_orderkey", "l_orderkey")
       .groupBy("o_orderpriority")
       .agg(
-        graft.ops.ExactAgg.exactSumCentsWide(col("l_extendedprice"))
-          .as("revenue"),
+        exactSum(col("l_extendedprice")).as("revenue"),
         count(lit(1)).as("n_items"))
       .orderBy("o_orderpriority")
   }
@@ -443,11 +440,7 @@ object SourceQueries {
       .groupBy("o_orderkey", "o_orderpriority")
       .agg(
         count(lit(1)).as("n_items"),
-        // cents-long fast path: per-orderkey cardinality scales with the
-        // corpus, per-group totals stay bounded (exactSumCents routing
-        // rule; its guard raises if the bound is ever breached)
-        graft.ops.ExactAgg.exactSumCents(col("l_extendedprice"))
-          .as("revenue"))
+        exactSum(col("l_extendedprice")).as("revenue"))
 
   val sourceBucketedAggSql: String =
     """SELECT o_orderkey, o_orderpriority, COUNT(*) AS n_items,

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.ExactAgg
 import graft.ops.Persist.PersistOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,7 +36,10 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 object StatQueries {
   import RefQueries.table
 
-  /** Exact integer cents for a 2-decimal money double. */
+  /** Integer cents by rounding the double ×100, as the twins'
+    * `CAST(round(x * 100) AS BIGINT)` (the DECIMAL(18,2) rounding is
+    * [[graft.ops.ExactAgg.cents]]).
+    */
   private def cents(c: Column): Column = round(c * 100, 0).cast(LongType)
 
   private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
@@ -785,8 +789,7 @@ object StatQueries {
     val monthly = table(spark, sfDir, "lineitem")
       .select(col("l_returnflag"),
         date_format(col("l_shipdate"), "yyyy-MM").as("month"),
-        (col("l_extendedprice").cast(DecimalType(18, 2)) * 100).cast("long")
-          .as("cents"))
+        ExactAgg.cents(col("l_extendedprice")).as("cents"))
       .groupBy("l_returnflag", "month")
       .agg(sum("cents").as("month_cents"))
     val w = Window.partitionBy("l_returnflag").orderBy("month")
@@ -973,8 +976,7 @@ object StatQueries {
     val monthly = table(spark, sfDir, "lineitem")
       .select(col("l_returnflag").as("returnflag"),
         date_format(col("l_shipdate"), "yyyy-MM").as("month"),
-        (col("l_extendedprice").cast(DecimalType(18, 2)) * 100)
-          .cast(LongType).as("cents"))
+        ExactAgg.cents(col("l_extendedprice")).as("cents"))
       .groupBy("returnflag", "month")
       .agg(sum("cents").as("rev_c"))
     val w = Window.partitionBy("returnflag").orderBy("month")
@@ -1025,7 +1027,7 @@ object StatQueries {
     val daily = table(spark, sfDir, "events")
       .select(col("event_type"),
         expr("(ts div 1000) div 86400000000").cast("long").as("day"),
-        (col("value").cast(DecimalType(18, 2)) * 100).cast(LongType).as("cents"))
+        ExactAgg.cents(col("value")).as("cents"))
       .groupBy("event_type", "day")
       .agg(sum("cents").as("c"))
     val w = Window.partitionBy("event_type").orderBy("day")
@@ -1159,7 +1161,7 @@ object StatQueries {
     val daily = table(spark, sfDir, "events")
       .select(col("event_type"),
         expr("(ts div 1000) div 86400000000").cast("long").as("day"),
-        (col("value").cast(DecimalType(18, 2)) * 100).cast(LongType).as("cents"))
+        ExactAgg.cents(col("value")).as("cents"))
       .groupBy("event_type", "day")
       .agg(sum("cents").as("c"))
       .persistIntermediate
@@ -1311,7 +1313,7 @@ object StatQueries {
     val daily = table(spark, sfDir, "events")
       .select(col("event_type"),
         expr("(ts div 1000) div 86400000000").cast("long").as("day"),
-        (col("value").cast(DecimalType(18, 2)) * 100).cast(LongType).as("cents"))
+        ExactAgg.cents(col("value")).as("cents"))
       .groupBy("event_type", "day")
       .agg(sum("cents").as("level_c"))
     val w = Window.partitionBy("event_type").orderBy("day")
@@ -1390,7 +1392,7 @@ object StatQueries {
     val daily = table(spark, sfDir, "events")
       .select(col("event_type"),
         expr("(ts div 1000) div 86400000000").cast("long").as("day"),
-        (col("value").cast(DecimalType(18, 2)) * 100).cast(LongType).as("cents"))
+        ExactAgg.cents(col("value")).as("cents"))
       .groupBy("event_type", "day")
       .agg(sum("cents").as("y"))
     val w = Window.partitionBy("event_type").orderBy("day")
@@ -1462,7 +1464,7 @@ object StatQueries {
     val daily = table(spark, sfDir, "events")
       .select(col("event_type"),
         expr("(ts div 1000) div 86400000000").cast("long").as("day"),
-        (col("value").cast(DecimalType(18, 2)) * 100).cast("long").as("cents"))
+        ExactAgg.cents(col("value")).as("cents"))
       .groupBy("event_type", "day")
       .agg(sum("cents").as("actual_c"))
     val fc = daily.select(col("event_type"),
@@ -1985,8 +1987,7 @@ object StatQueries {
       .select(
         expr("CAST(unix_millis(CAST(l_shipdate AS TIMESTAMP)) DIV 86400000 AS BIGINT)")
           .as("day"),
-        (col("l_extendedprice").cast(DecimalType(18, 2)) * 100).cast("long")
-          .as("cents"))
+        ExactAgg.cents(col("l_extendedprice")).as("cents"))
       .groupBy("day").agg(sum("cents").as("rev_c"))
     // the series is calendar-bounded, so the centered 7-row frame is the
     // twin's plain window (TwoPassWindow's size rule)
@@ -2306,8 +2307,7 @@ object StatQueries {
     import org.apache.spark.sql.expressions.Window
     val daily0 = table(spark, sfDir, "lineitem")
       .select(col("l_shipdate").as("day"),
-        (col("l_extendedprice").cast(DecimalType(18, 2)) * 100).cast("long")
-          .as("cents"))
+        ExactAgg.cents(col("l_extendedprice")).as("cents"))
       .groupBy("day").agg(expr("sum(cents) DIV 100000L").as("rev"))
     // the series index over the calendar-bounded rollup is the twin's
     // plain row_number window (TwoPassWindow's size rule)
@@ -2474,10 +2474,8 @@ object StatQueries {
   def analyticsKendallTau(spark: SparkSession, sfDir: String): DataFrame = {
     val daily = table(spark, sfDir, "lineitem")
       .select(col("l_returnflag").as("g"), col("l_shipdate").as("day"),
-        (col("l_quantity").cast(DecimalType(18, 2)) * 100).cast(LongType)
-          .as("xc"),
-        (col("l_extendedprice").cast(DecimalType(18, 2)) * 100).cast(LongType)
-          .as("yc"))
+        ExactAgg.cents(col("l_quantity")).as("xc"),
+        ExactAgg.cents(col("l_extendedprice")).as("yc"))
       .groupBy("g", "day")
       .agg(sum("xc").as("x"), sum("yc").as("y"))
     // The concordance counts need Ω(days²) pair comparisons, but over
@@ -2609,8 +2607,7 @@ object StatQueries {
       .select(
         expr("CAST(unix_millis(CAST(l_shipdate AS TIMESTAMP)) DIV 86400000 AS BIGINT)")
           .as("d"),
-        (col("l_extendedprice").cast(DecimalType(18, 2)) * 100)
-          .cast(LongType).as("cents"))
+        ExactAgg.cents(col("l_extendedprice")).as("cents"))
       .groupBy("d").agg(sum("cents").as("rev"))
     // the slope multiset is CALENDAR-bounded — nDays·(nDays−1)/2 pairs
     // regardless of row count (the property that makes this operator
@@ -3043,8 +3040,7 @@ object StatQueries {
       .select((year(col("l_shipdate")) * 100 + month(col("l_shipdate")))
           .as("mkey"),
         col("l_partkey"),
-        (col("l_extendedprice").cast(DecimalType(18, 2)) * 100)
-          .cast(LongType).as("ec"),
+        ExactAgg.cents(col("l_extendedprice")).as("ec"),
         col("l_quantity").cast(LongType).as("q"))
       .withColumn("unit_c", expr("ec div q"))
     val pm = li.groupBy("mkey", "l_partkey")
@@ -3232,8 +3228,7 @@ object StatQueries {
     import org.apache.spark.sql.expressions.Window
     val daily = table(spark, sfDir, "lineitem")
       .select(col("l_shipdate").as("day"),
-        (col("l_extendedprice").cast(DecimalType(18, 2)) * 100)
-          .cast(LongType).as("cents"))
+        ExactAgg.cents(col("l_extendedprice")).as("cents"))
       .groupBy("day").agg(sum("cents").as("rev"))
     // lag(1) over the calendar-bounded series is the twin's plain
     // window (TwoPassWindow's size rule)
@@ -3297,10 +3292,8 @@ object StatQueries {
     import graft.functions.IntegerLog2.log2s
     val li = table(spark, sfDir, "lineitem")
       .select(col("l_returnflag").as("g"),
-        log2s((col("l_extendedprice").cast(DecimalType(18, 2)) * 100)
-          .cast(LongType)).as("xf"),
-        log2s((col("l_quantity").cast(DecimalType(18, 2)) * 100)
-          .cast(LongType)).as("yf"))
+        log2s(ExactAgg.cents(col("l_extendedprice"))).as("xf"),
+        log2s(ExactAgg.cents(col("l_quantity"))).as("yf"))
       .select(col("g"), expr("xf div 1000L").as("x"),
         expr("yf div 1000L").as("y"))
     val stats = li.groupBy("g").agg(
@@ -3465,8 +3458,7 @@ object StatQueries {
       .select(
         expr("CAST(unix_millis(CAST(l_shipdate AS TIMESTAMP)) DIV 86400000 AS BIGINT)")
           .as("d"),
-        (col("l_extendedprice").cast(DecimalType(18, 2)) * 100)
-          .cast(LongType).as("cents"))
+        ExactAgg.cents(col("l_extendedprice")).as("cents"))
       .groupBy("d").agg(sum("cents").as("rev"))
       .persistIntermediate
     val a = daily.select(col("d").as("d1"), col("rev").as("r1"))
@@ -3547,8 +3539,7 @@ object StatQueries {
       .select(
         expr("CAST(unix_millis(CAST(l_shipdate AS TIMESTAMP)) DIV 86400000 AS BIGINT)")
           .as("d"),
-        (col("l_extendedprice").cast(DecimalType(18, 2)) * 100)
-          .cast(LongType).as("cents"))
+        ExactAgg.cents(col("l_extendedprice")).as("cents"))
       .groupBy("d").agg(sum("cents").as("rev"))
     val w = Window.orderBy("d")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -3617,8 +3608,7 @@ object StatQueries {
     val li = table(spark, sfDir, "lineitem")
       .select(col("l_returnflag").as("g"),
         cents(col("l_extendedprice")).as("price_c"),
-        (col("l_quantity").cast(DecimalType(18, 2)) * 100).cast(LongType)
-          .as("w"))
+        ExactAgg.cents(col("l_quantity")).as("w"))
       .groupBy("g", "price_c").agg(sum("w").as("w"))
     // r21 (§2 skew): the (g)-partitioned running-sum/total windows sent
     // each WHOLE group through one task — 3 returnflags = 3 tasks over

@@ -1006,17 +1006,24 @@ object TextQueries {
     repeatedSpans(docs(spark, sfDir), spanLen = 15)
       .transform(RefQueries.gateSort(_, "span"))
 
-  /** The two-phase core of [[dedupRepeatedSpans]], factored on a docs
-    * frame so the spec can feed fixtures and pin phase-equivalence.
+  /** (doc_id, span): every overlapping `spanLen`-token window of each
+    * document, joined by single spaces; documents shorter than one
+    * window contribute none.
     */
-  private[graft] def repeatedSpans(docsDf: DataFrame,
-      spanLen: Int): DataFrame = {
-    val wins = docsDf
+  private def spanWindows(docsDf: DataFrame, spanLen: Int): DataFrame =
+    docsDf
       .withColumn("toks", TextOps.tokens(col("text")))
       .where(size(col("toks")) >= spanLen)
       .select(col("doc_id"),
         explode(expr(s"transform(sequence(1, size(toks) - ${spanLen - 1})," +
           s" i -> array_join(slice(toks, i, $spanLen), ' '))")).as("span"))
+
+  /** The two-phase core of [[dedupRepeatedSpans]], factored on a docs
+    * frame so the spec can feed fixtures and pin phase-equivalence.
+    */
+  private[graft] def repeatedSpans(docsDf: DataFrame,
+      spanLen: Int): DataFrame = {
+    val wins = spanWindows(docsDf, spanLen)
       .withColumn("h", xxhash64(col("span")))
       // persisted: the phase-1 hash aggregate AND the phase-2 probe
       // both scan the exploded window frame
@@ -1037,12 +1044,7 @@ object TextQueries {
     */
   private[graft] def repeatedSpansDirect(docsDf: DataFrame,
       spanLen: Int): DataFrame =
-    docsDf
-      .withColumn("toks", TextOps.tokens(col("text")))
-      .where(size(col("toks")) >= spanLen)
-      .select(col("doc_id"),
-        explode(expr(s"transform(sequence(1, size(toks) - ${spanLen - 1})," +
-          s" i -> array_join(slice(toks, i, $spanLen), ' '))")).as("span"))
+    spanWindows(docsDf, spanLen)
       .groupBy("span")
       .agg(countDistinct(col("doc_id")).as("n_docs"),
         count(lit(1)).as("n_occurrences"),
@@ -1073,12 +1075,7 @@ object TextQueries {
   /** Core of [[textDupSpanFraction]], factored for fixture specs. */
   private[graft] def dupSpanFraction(docsDf: DataFrame,
       spanLen: Int): DataFrame = {
-    val wins = docsDf
-      .withColumn("toks", TextOps.tokens(col("text")))
-      .where(size(col("toks")) >= spanLen)
-      .select(col("doc_id"),
-        explode(expr(s"transform(sequence(1, size(toks) - ${spanLen - 1})," +
-          s" i -> array_join(slice(toks, i, $spanLen), ' '))")).as("span"))
+    val wins = spanWindows(docsDf, spanLen)
       .withColumn("h", xxhash64(col("span")))
       // persisted: the hash prefilter, the shared-set group, and both
       // per-doc counts all scan the exploded window frame

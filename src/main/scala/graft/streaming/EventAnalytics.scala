@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.ops.ExactAgg.{cents, exactSum}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -55,13 +56,21 @@ object EventAnalytics extends Serializable {
         timestamp_micros(expr("ts div 1000"))
       else col("ts").cast(org.apache.spark.sql.types.TimestampType))
 
-  private def exactSum(c: Column): Column = graft.ops.ExactAgg.exactSum(c)
+  /** The event-time frame, watermarked when `watermark` is set (a
+    * streaming caller's state bound; a no-op on a batch frame).
+    */
+  private def eventTime(events: DataFrame, watermark: Option[String]): DataFrame = {
+    val base = withEventTime(events)
+    watermark.fold(base)(w => base.withWatermark("ts_utc", w))
+  }
 
   /** Tumbling 1-hour window aggregation per event type. Runs unchanged on
-    * a streaming DataFrame (add a watermark upstream for append mode).
+    * a streaming DataFrame, where `watermark` enables append mode; the
+    * caller picks the sink and output mode (see StreamingSpec).
     */
-  def hourlyByType(events: DataFrame): DataFrame =
-    withEventTime(events)
+  def hourlyByType(events: DataFrame,
+      watermark: Option[String] = None): DataFrame =
+    eventTime(events, watermark)
       .groupBy(window(col("ts_utc"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), exactSum(col("value")).as("sum_value"))
       .select(
@@ -95,37 +104,12 @@ object EventAnalytics extends Serializable {
     * its windows map-side (an `Expand`, no extra shuffle vs tumbling);
     * state in the streaming form is bounded by watermark × window count.
     */
-  def hoppingByType(events: DataFrame): DataFrame =
-    withEventTime(events)
+  def hoppingByType(events: DataFrame,
+      watermark: Option[String] = None): DataFrame =
+    eventTime(events, watermark)
       .groupBy(
         window(col("ts_utc"), "2 hours", "30 minutes").as("w"),
         col("event_type"))
-      .agg(count(lit(1)).as("n_events"), exactSum(col("value")).as("sum_value"))
-      .select(
-        date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-        col("event_type"), col("n_events"), col("sum_value"))
-
-  /** Streaming form of `hoppingByType` (see StreamingSpec for the real
-    * run — watermark bounds the per-window state of all 4 live hops).
-    */
-  def hoppingByTypeStream(events: DataFrame, watermark: String): DataFrame =
-    withEventTime(events)
-      .withWatermark("ts_utc", watermark)
-      .groupBy(
-        window(col("ts_utc"), "2 hours", "30 minutes").as("w"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n_events"), exactSum(col("value")).as("sum_value"))
-      .select(
-        date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-        col("event_type"), col("n_events"), col("sum_value"))
-
-  /** Streaming form of `hourlyByType`: event-time watermark + windowed
-    * aggregation. Caller picks the sink/output mode (see StreamingSpec).
-    */
-  def hourlyByTypeStream(events: DataFrame, watermark: String): DataFrame =
-    withEventTime(events)
-      .withWatermark("ts_utc", watermark)
-      .groupBy(window(col("ts_utc"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), exactSum(col("value")).as("sum_value"))
       .select(
         date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
@@ -145,8 +129,7 @@ object EventAnalytics extends Serializable {
   def userSegments(events: DataFrame): DataFrame = {
     val ltv = events.where(col("event_type") === "purchase")
       .groupBy("user_id")
-      .agg(sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2))
-        * 100).cast("long").as("ltv_c"))
+      .agg(sum(cents(col("value"))).as("ltv_c"))
     // r21: exact quintiles via the two-pass global ntile (§2 offset
     // correction) — the per-user frame previously sorted through ONE
     // task. Batch-side only: this dimension is precomputed on a static
@@ -188,12 +171,10 @@ object EventAnalytics extends Serializable {
     */
   def purchaseClickPairs(events: DataFrame, windowMinutes: Int,
       watermark: Option[String] = None): DataFrame = {
-    def side(tpe: String, id: String, user: String, ts: String): DataFrame = {
-      val base = withEventTime(events.where(col("event_type") === tpe))
-      watermark.fold(base)(w => base.withWatermark("ts_utc", w))
+    def side(tpe: String, id: String, user: String, ts: String): DataFrame =
+      eventTime(events.where(col("event_type") === tpe), watermark)
         .select(col("event_id").as(id), col("user_id").as(user),
           col("ts_utc").as(ts))
-    }
     val p = side("purchase", "purchase_id", "p_user", "p_ts")
     val c = side("click", "click_id", "c_user", "c_ts")
     p.join(c,
@@ -323,16 +304,6 @@ object EventAnalytics extends Serializable {
     (out.toSeq, st)
   }
 
-  /** Streaming sessionization via `flatMapGroupsWithState`: per-user
-    * explicit state (open session), emitting a session whenever the gap
-    * rule closes it. The custom-state analog of `sessionize` — see
-    * StreamingSpec for the batch-vs-stream equivalence check on all
-    * sessions closed by end-of-stream.
-    *
-    * State is O(1) per user (one open session), the canonical bounded-
-    * state shape for 100 TB streams; a production deployment adds a
-    * state timeout to flush idle users.
-    */
   /** Production variant of `sessionizeStream`: event-time TIMEOUT flushes
     * idle sessions once the watermark passes last-event + gap. After a
     * flush the per-user state shrinks to a sequence-counter sentinel
@@ -385,6 +356,16 @@ object EventAnalytics extends Serializable {
         GroupStateTimeout.EventTimeTimeout)(fn)
   }
 
+  /** Streaming sessionization via `flatMapGroupsWithState`: per-user
+    * explicit state (open session), emitting a session whenever the gap
+    * rule closes it. The custom-state analog of `sessionize` — see
+    * StreamingSpec for the batch-vs-stream equivalence check on all
+    * sessions closed by end-of-stream.
+    *
+    * State is O(1) per user (one open session), the canonical bounded-
+    * state shape for 100 TB streams; a production deployment adds a
+    * state timeout to flush idle users.
+    */
   def sessionizeStream(spark: SparkSession, events: DataFrame,
       gapMinutes: Int): org.apache.spark.sql.Dataset[Session] = {
     import spark.implicits._

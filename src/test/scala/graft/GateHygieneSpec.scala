@@ -1164,6 +1164,64 @@ class GateHygieneSpec extends AnyFunSuite {
     assert(lazyTruncateSites(good).isEmpty)
   }
 
+  /** Money is rounded to cents in one place: `graft.ops.ExactAgg.cents`
+    * (a DECIMAL(18,2) cast, then ×100), which `exactSum`/`exactAvg`
+    * build on. In src/main a Scala `.cast(DecimalType(18, 2))` or
+    * `.cast("decimal(18,2)")` followed by `* 100` is a second copy of
+    * that rule, and `exactSumCents` names the deleted single-long sum.
+    * Triple-quoted literals (the DuckDB twins' SQL) are skipped; a
+    * DECIMAL(18,2) cast that is not scaled to cents (the rollup/cube
+    * leaf accumulators, StatQueries' regression moments) passes.
+    * Returns the 1-based line of each site in `text`.
+    */
+  private[graft] def centsRoundingSites(text: String): Seq[Int] = {
+    val code = TripleLit.replaceAllIn(text,
+      m => java.util.regex.Matcher.quoteReplacement(
+        m.matched.map(c => if (c == '\n') c else ' ')))
+    val site = ("""\.cast\(\s*(?:(?:org\.apache\.spark\.sql\.types\.)?""" +
+      """DecimalType\(\s*18\s*,\s*2\s*\)|"decimal\(18,\s*2\)")\s*\)\)?""" +
+      """\s*\*\s*(?:lit\(\s*)?100\b|\bexactSumCents\b""").r
+    site.findAllMatchIn(code)
+      .map(m => code.substring(0, m.start).count(_ == '\n') + 1).toSeq
+  }
+
+  test("the cents rounding is spelled in src/main only in ExactAgg.scala") {
+    val root = Paths.get("src", "main", "scala")
+    assert(Files.isDirectory(root),
+      s"$root missing — run sbt test from the repo root")
+    val s = Files.walk(root)
+    val offenders =
+      try s.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          p.getFileName.toString != "ExactAgg.scala")
+        .flatMap(p => centsRoundingSites(repoText(p)).map(l => s"$p:$l"))
+        .toSeq.sorted
+      finally s.close()
+    assert(offenders.isEmpty,
+      s"round money through graft.ops.ExactAgg.cents / exactSum instead: $offenders")
+  }
+
+  test("the cents rounding auditor fires on every spelling (bad fixture)") {
+    val bad =
+      """val a = (col("p").cast(DecimalType(18, 2)) * 100).cast(LongType)
+        |val b = sum(col("p").cast("decimal(18,2)") * 100).cast("long")
+        |val c = sum(col("v").cast(org.apache.spark.sql.types.DecimalType(18, 2))
+        |  * 100).cast("long")
+        |val d = (col("o")
+        |  .cast(DecimalType(18,2)) * lit(100)).cast("long")
+        |val e = ExactAgg.exactSumCents(col("p"))
+        |""".stripMargin
+    assert(centsRoundingSites(bad) == Seq(1, 2, 3, 6, 7))
+    val good =
+      "val a = ExactAgg.cents(col(\"p\"))\n" +
+        "val b = sum(col(\"p\").cast(DecimalType(18, 2))).as(\"__rev\")\n" +
+        "val c = col(\"q\").cast(DecimalType(18, 2)).as(\"x\")\n" +
+        "val sql = \"\"\"SELECT SUM(CAST(p AS DECIMAL(18,2)) * 100),\n" +
+        "  x.cast(\"decimal(18,2)\") * 100 FROM t\"\"\"\n" +
+        "val d = ExactAgg.exactSum(col(\"p\"))\n"
+    assert(centsRoundingSites(good).isEmpty)
+  }
+
   /** Rows parsed on the driver enter Spark through
     * `graft.sources.DriverRows.stringFrame`, an RDD-backed frame. In
     * src/main/scala/graft/sources, a `createDataFrame(java.util…` or an

@@ -1,15 +1,17 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import graft.ops.ExactAgg
 import graft.queries.RefQueries
 
 /** Round-12 parity fast-path pins.
   *
-  * 1. The cents-long aggregates must be BIT-identical to the
-  *    decimal-sum spellings they shortcut (the 2^53-cents bound holds
-  *    comfortably on every gate corpus).
+  * 1. ExactAgg's quotient/remainder cents sum must be BIT-identical to
+  *    the decimal-buffer spelling the DuckDB twins use, at every
+  *    magnitude.
   * 2. q5's pre-join range sort must reproduce, row for row, the order
   *    an explicit post-join ORDER BY produces — the property that makes
   *    the written files a total ORDER BY for the oracle. This is the
@@ -20,14 +22,20 @@ class ParityFastPathSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val sf = TestSpark.Sf001
 
-  test("exactSumCents / exactAvgCents == decimal spellings, bit for bit") {
+  // the decimal-buffer reference: SUM over DECIMAL(18,2) (Spark widens
+  // the buffer to DECIMAL(28,2)) cast once to double, and its ÷count
+  private def decSum(c: Column): Column =
+    sum(c.cast(DecimalType(18, 2))).cast(DoubleType)
+  private def decAvg(c: Column): Column = decSum(c) / count(c)
+
+  test("exactSum / exactAvg == decimal-buffer sums on lineitem groups bit for bit") {
     val li = RefQueries.table(spark, sf, "lineitem")
     val r = li.groupBy("l_returnflag")
       .agg(
-        ExactAgg.exactSum(col("l_extendedprice")).as("s_dec"),
-        ExactAgg.exactSumCents(col("l_extendedprice")).as("s_cents"),
-        ExactAgg.exactAvg(col("l_quantity")).as("a_dec"),
-        ExactAgg.exactAvgCents(col("l_quantity")).as("a_cents"))
+        decSum(col("l_extendedprice")).as("s_dec"),
+        ExactAgg.exactSum(col("l_extendedprice")).as("s_cents"),
+        decAvg(col("l_quantity")).as("a_dec"),
+        ExactAgg.exactAvg(col("l_quantity")).as("a_cents"))
       .collect()
     assert(r.nonEmpty)
     for (row <- r) {
@@ -40,37 +48,34 @@ class ParityFastPathSpec extends AnyFunSuite {
     }
   }
 
-  test("cents == decimal up to the bound; loud failure (not drift) beyond") {
+  test("exactSum / exactAvg == decimal buffer at every signed magnitude past 2^53") {
     import spark.implicits._
     // property sweep: random magnitudes spanning cents totals from a
-    // few dollars up to JUST under 2^53 cents — bit-equality must hold
-    // at every scale where the fast path is allowed to answer
+    // few dollars up to ~1e15 cents (200 × ~0.5e11 dollars)
     val rnd = new scala.util.Random(13)
-    // top scale: 200 × ~0.5e11 dollars ≈ 1e15 cents, just inside 2^53
     for (scalePow <- Seq(2, 6, 9, 11)) {
       val base = math.pow(10.0, scalePow.toDouble)
       val vals = (1 to 200).map(_ => rnd.nextDouble() * base)
       val df = vals.toDF("v")
       val row = df.agg(
-        ExactAgg.exactSum(col("v")).as("dec"),
-        ExactAgg.exactSumCents(col("v")).as("cents")).collect().head
+        decSum(col("v")).as("dec"),
+        ExactAgg.exactSum(col("v")).as("cents")).collect().head
       assert(java.lang.Double.doubleToLongBits(row.getDouble(0)) ==
         java.lang.Double.doubleToLongBits(row.getDouble(1)),
         s"drift at 1e$scalePow: ${row.getDouble(0)} vs ${row.getDouble(1)}")
     }
-    // the WIDE path (quotient/remainder split) must be bit-identical
-    // to the decimal spelling at every magnitude, signed values
-    // included — no 2^53 ceiling
+    // signed values through 1e15-dollar rows: the quotient/remainder
+    // split has no 2^53 ceiling
     for (scalePow <- Seq(2, 6, 11, 13, 15)) {
       val base = math.pow(10.0, scalePow.toDouble)
       val vals = (1 to 200).map(i =>
         (if (i % 3 == 0) -1 else 1) * rnd.nextDouble() * base)
       val df = vals.toDF("v")
       val row = df.agg(
-        ExactAgg.exactSum(col("v")).as("dec"),
-        ExactAgg.exactSumCentsWide(col("v")).as("wide"),
-        ExactAgg.exactAvg(col("v")).as("adec"),
-        ExactAgg.exactAvgCentsWide(col("v")).as("awide")).collect().head
+        decSum(col("v")).as("dec"),
+        ExactAgg.exactSum(col("v")).as("wide"),
+        decAvg(col("v")).as("adec"),
+        ExactAgg.exactAvg(col("v")).as("awide")).collect().head
       assert(java.lang.Double.doubleToLongBits(row.getDouble(0)) ==
         java.lang.Double.doubleToLongBits(row.getDouble(1)),
         s"wide sum drift at 1e$scalePow: ${row.getDouble(0)} vs ${row.getDouble(1)}")
@@ -78,27 +83,18 @@ class ParityFastPathSpec extends AnyFunSuite {
         java.lang.Double.doubleToLongBits(row.getDouble(3)),
         s"wide avg drift at 1e$scalePow")
     }
-    // beyond the bound the SINGLE-LONG fast path must FAIL, not
-    // silently round: 3 × $4e13 = 1.2e16 cents > 2^53 ≈ 9.0e15 (each
-    // row is fine — the GROUP total breaches). exactSum stays exact
-    // there, and so must the wide path.
+    // the whale group: 3 × $4e13 = 1.2e16 cents > 2^53 ≈ 9.0e15 (each
+    // row is fine — the GROUP total is past double's exact-integer
+    // range), and both spellings stay exact there
     val whale = Seq(4.0e13, 4.0e13, 4.0e13).toDF("v")
     val wideWhale = whale.agg(
-      ExactAgg.exactSum(col("v")).as("dec"),
-      ExactAgg.exactSumCentsWide(col("v")).as("wide")).collect().head
+      decSum(col("v")).as("dec"),
+      ExactAgg.exactSum(col("v")).as("wide")).collect().head
     assert(java.lang.Double.doubleToLongBits(wideWhale.getDouble(0)) ==
       java.lang.Double.doubleToLongBits(wideWhale.getDouble(1)),
-      "wide path must stay exact past 2^53")
-    val ex = intercept[Exception] {
-      whale.agg(ExactAgg.exactSumCents(col("v"))).collect()
-    }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Seq.empty
-      else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(ex).exists(_.contains("2^53 exactness bound")),
-      s"wrong failure: ${ex.getMessage}")
-    val dec = whale.agg(ExactAgg.exactSum(col("v"))).collect().head.getDouble(0)
-    assert(dec == 1.2e14, s"decimal path must stay exact: $dec")
+      "exactSum must stay exact past 2^53")
+    assert(wideWhale.getDouble(1) == 1.2e14,
+      s"exactSum must stay exact: ${wideWhale.getDouble(1)}")
   }
 
   test("q5 pre-join range sort == explicit post-join ORDER BY, row for row") {

@@ -16,6 +16,12 @@ class DedupSpec extends AnyFunSuite {
     (5L, "tiny"), // < 2 tokens → empty shingle set
   ).toDF("doc_id", "text")
 
+  // 100 docs: "hot hot" appears in all (df=100 → df²=10⁴ dominates),
+  // 7 unique bigrams each → vocab 701, Σdf²=10700 > 10·Σdf
+  private def hotCorpus = (0 until 100).map { i =>
+    (i.toLong, s"hot hot a$i b$i c$i d$i e$i f$i g$i")
+  }.toDF("doc_id", "text")
+
   test("exact dedup groups identical text, keeps min id") {
     val out = Dedup.exact(docs).orderBy("keep_doc_id")
       .collect().map(r => (r.getLong(1), r.getLong(2)))
@@ -108,19 +114,22 @@ class DedupSpec extends AnyFunSuite {
     // near-uniform rare shingles → the inverted join is linear-ish
     assert(Dedup.chooseJaccardStrategy(nDocs = 1000000, vocab = 50000000,
       sumDf = 60000000, sumDf2 = 80000000, maxVocab = 1 << 16) == CountJoin)
-    // end to end on a synthetic corpus: unique-ish shingles per doc plus
-    // one scorching shingle in every doc; maxVocab forced low so the
-    // dense index is out — Auto must take the PrefixFilter path and
-    // still match the full-index output exactly
-    import spark.implicits._
-    // 100 docs: "hot hot" appears in all (df=100 → df²=10⁴ dominates),
-    // 7 unique bigrams each → vocab 701 > maxVocab, Σdf²=10700 > 10·Σdf
-    val synth = (0 until 100).map { i =>
-      (i.toLong, s"hot hot a$i b$i c$i d$i e$i f$i g$i")
-    }.toDF("doc_id", "text")
-    val auto = Dedup.ngramJaccardPairs(synth, 2, 0.5, strategy = Auto, maxVocab = 16)
-    val full = Dedup.ngramJaccardPairs(synth, 2, 0.5)
+    // end to end on the hot-tailed synthetic corpus; maxVocab forced
+    // low so the dense index is out — Auto must take the PrefixFilter
+    // path and still match the full-index output exactly
+    val auto = Dedup.ngramJaccardPairs(hotCorpus, 2, 0.5, strategy = Auto, maxVocab = 16)
+    val full = Dedup.ngramJaccardPairs(hotCorpus, 2, 0.5)
     assert(full.exceptAll(auto).isEmpty && auto.exceptAll(full).isEmpty)
+  }
+
+  test("forced Bitmap over a vocabulary past maxVocab fails naming the bound") {
+    // 701 distinct bigrams against a bound of 16: the bounded fetch
+    // stops at 17 rows and the strategy refuses before any bitmap work
+    val ex = intercept[IllegalArgumentException] {
+      Dedup.ngramJaccardPairs(hotCorpus, 2, 0.5,
+        strategy = Dedup.JaccardStrategy.Bitmap, maxVocab = 16)
+    }
+    assert(ex.getMessage.contains("vocabulary ≤ 16"), ex.getMessage)
   }
 
   // ---- sampled exact-tier neighbor profiles (r20) ----------------------

@@ -257,28 +257,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(viaArray.exceptAll(viaNative).isEmpty && viaNative.exceptAll(viaArray).isEmpty)
   }
 
-  test("explode-agg simhash equals the array-fold spelling") {
-    import org.apache.spark.sql.functions._
-    val toks = docs.limit(50)
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
-      .where(size(col("toks")) > 0)
-    val viaArray = toks.select(col("doc_id"), SimHashDedup.simhash(col("toks")).as("sim"))
-    val ex = toks.select(col("doc_id"), explode(col("toks")).as("t"))
-      .withColumn("h", xxhash64(col("t")))
-    val viaAgg = ex.groupBy("doc_id")
-      .agg(SimHashDedup.aggVoteCols.head, SimHashDedup.aggVoteCols.tail: _*)
-      .select(col("doc_id"), SimHashDedup.simFromVotes.as("sim"))
-    assert(viaArray.exceptAll(viaAgg).isEmpty && viaAgg.exceptAll(viaArray).isEmpty)
-  }
-
-  test("simhash candidate pairs cover all planted near-dups") {
-    val planted = Dedup.ngramJaccardPairs(docs, 2, 0.5).select("d1", "d2")
-    val sh = SimHashDedup.nearDupPairs(docs, maxHamming = 6, bands = 8)
-      .select("d1", "d2")
-    assert(planted.exceptAll(sh).isEmpty,
-      "a jaccard≥0.5 pair is missing from simhash hamming≤6 pairs")
-  }
-
   test("neutral simhash: native kernel equals the built-in vote spelling") {
     import org.apache.spark.sql.functions._
     val toks = docs.limit(100)
@@ -287,7 +265,7 @@ class SimilaritySpec extends AnyFunSuite {
     val viaNative = toks.select(col("doc_id"),
       graft.functions.StringArraySimHash.simhash(col("toks")).as("sim"))
     val ex = toks.select(col("doc_id"), explode(col("toks")).as("t"))
-      .withColumn("h", SimHashDedup.polyTokenHash(col("t")))
+      .withColumn("h", TextOps.polyTokenHash(col("t")))
     val viaAgg = ex.groupBy("doc_id")
       .agg(SimHashDedup.neutralVoteCols.head, SimHashDedup.neutralVoteCols.tail: _*)
       .select(col("doc_id"), SimHashDedup.simFromVotes.as("sim"))

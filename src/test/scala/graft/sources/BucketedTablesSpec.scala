@@ -213,8 +213,7 @@ class BucketedTablesSpec extends AnyFunSuite {
         col("o_orderkey") === col("l_orderkey"))
       .groupBy("o_orderkey", "o_orderpriority")
       .agg(count(lit(1)).as("n_items"),
-        graft.ops.ExactAgg.exactSumCents(col("l_extendedprice"))
-          .as("revenue"))
+        graft.ops.ExactAgg.exactSum(col("l_extendedprice")).as("revenue"))
       .orderBy("o_orderkey").collect()
     assert(agg.orderBy("o_orderkey").collect().sameElements(want))
   }

@@ -41,7 +41,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming hopping agg (complete mode) == batch hopping agg") {
     val stream = EventAnalytics.readEventsStream(spark, eventsDir)
-    val q = EventAnalytics.hoppingByTypeStream(stream, watermark = "1 hour")
+    val q = EventAnalytics.hoppingByType(stream, watermark = Some("1 hour"))
       .writeStream.outputMode("complete")
       .format("memory").queryName("hopping_out")
       .start()
@@ -220,7 +220,7 @@ class StreamingSpec extends AnyFunSuite {
     stageBatch(all.limit((n / 2).toInt), dir.toString, "b1.parquet")
 
     val stream = EventAnalytics.readEventsStream(spark, dir.toString)
-    val q = EventAnalytics.hourlyByTypeStream(stream, "2 hours")
+    val q = EventAnalytics.hourlyByType(stream, Some("2 hours"))
       .writeStream.outputMode("append")
       .format("memory").queryName("hourly_append")
       .start()
